@@ -20,15 +20,17 @@ from search_engine_spark.operators import events as E
 from search_engine_spark.operators import multimodal as MM
 from search_engine_spark.operators import similarity as SIM
 from search_engine_spark.operators import textstats as TS
-from search_engine_spark.operators.postings import (
-    Index,
-    build_documents_from_testdata,
-    build_index,
+from search_engine_spark.operators.postings import build_documents_from_testdata
+from search_engine_spark.operators.highlight import enrich_ranked
+from search_engine_spark.operators.search import paginate
+from search_engine_spark.operators.segments import (
+    DiskIndex,
+    index_stats,
+    load_index,
+    write_index,
 )
-from search_engine_spark.operators.highlight import enrich_ranked, enrich_topk
-from search_engine_spark.operators.search import paginate, search
-from search_engine_spark.operators.segments import DiskIndex, load_index, write_index
 from search_engine_spark.operators.wand import (
+    fetch_term_segments,
     search_segments,
     topk_bm25_wand,
     topk_scores_many,
@@ -36,15 +38,7 @@ from search_engine_spark.operators.wand import (
 from search_engine_spark.functions.tokenizer import term_to_id
 from search_engine_spark.oracle import sqlgen
 
-_INDEX_CACHE: dict[str, Index] = {}
 _DISK_CACHE: dict[str, DiskIndex] = {}
-
-
-def _index(spark: SparkSession, sf_dir: str) -> Index:
-    if sf_dir not in _INDEX_CACHE:
-        docs = build_documents_from_testdata(spark, sf_dir).cache()
-        _INDEX_CACHE[sf_dir] = build_index(docs)
-    return _INDEX_CACHE[sf_dir]
 
 
 def _disk_index(spark: SparkSession, sf_dir: str) -> DiskIndex:
@@ -89,15 +83,8 @@ def _rounded_rank(r: DataFrame) -> DataFrame:
 
 
 def _search_q(query: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _rounded_rank(search(_index(spark, sf_dir), query))
-
-    return run
-
-
-def _seg_search_q(query: str):
-    """Same query through the compressed blob path (segments + numpy
-    intersection/scoring) — checked against the SAME oracle SQL."""
+    """Reference-semantics search over the compressed disk index
+    (segment blobs + numpy intersection/scoring)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _rounded_rank(search_segments(_disk_index(spark, sf_dir), query))
@@ -121,25 +108,22 @@ def _dist_search_q(query: str):
 
 def _search_enriched_q(query: str, k: int = 10):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        idx = _index(spark, sf_dir)
-        r = _rounded_rank(search(idx, query)).filter(F.col("rank") <= k)
-        docs = idx.documents.select("doc_id", "url")
+        di = _disk_index(spark, sf_dir)
+        r = _rounded_rank(search_segments(di, query)).filter(F.col("rank") <= k)
+        docs = di.documents.select("doc_id", "url")
         return r.join(docs, "doc_id").select("doc_id", "url", "score", "rank")
 
     return run
 
 
 def _lexicon_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _index(spark, sf_dir).lexicon.select("term", "df", "ctf")
+    return _disk_index(spark, sf_dir).lexicon.select("term", "df", "ctf")
 
 
 def _corpus_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = _index(spark, sf_dir)
-    a = idx.documents.agg(F.count("*").alias("n_docs"))
-    b = idx.postings.agg(
-        F.countDistinct("term_id").alias("n_terms"), F.count("*").alias("n_postings")
+    return index_stats(_disk_index(spark, sf_dir)).select(
+        "n_docs", "n_terms", "n_postings"
     )
-    return a.crossJoin(b)
 
 
 def _index_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,21 +133,33 @@ def _index_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     every one of them from the raw documents table. Projected to the
     corpus-derivable columns; layout/codec gauges (blob_bytes, avgdl,
     shards_complete) are pinned by tests/test_segments.py instead."""
-    from search_engine_spark.operators.segments import index_stats
-
     return index_stats(_disk_index(spark, sf_dir)).select(
         "n_docs", "n_terms", "n_postings", "total_ctf", "max_df", "total_dl"
     )
 
 
 def _postings_term_q(term: str):
+    """One term's decoded posting list: tf is the doc's position count,
+    first/last positions come from the doc's own slice of the flat
+    position array."""
+
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        idx = _index(spark, sf_dir)
-        return idx.postings.filter(F.col("term_id") == term_to_id(term)).select(
-            "doc_id",
-            F.size("positions").cast("long").alias("tf"),
-            F.element_at("positions", 1).cast("long").alias("first_pos"),
-            F.element_at("positions", -1).cast("long").alias("last_pos"),
+        import numpy as np
+        import pandas as pd
+
+        tid = term_to_id(term)
+        seg = fetch_term_segments(_disk_index(spark, sf_dir), [tid]).get(tid)
+        if seg is None:
+            doc_ids = npos = first = last = np.empty(0, np.int64)
+        else:
+            doc_ids, _te, npos, flat = seg.decode()
+            starts = seg.pos_starts()
+            first, last = flat[starts], flat[starts + npos - 1]
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {"doc_id": doc_ids, "tf": npos, "first_pos": first, "last_pos": last}
+            ),
+            "doc_id long, tf long, first_pos long, last_pos long",
         )
 
     return run
@@ -256,15 +252,18 @@ def _topk_many_q(scorer: str, k: int = 10):
 
 
 def _search_highlight_q(query: str, k: int = 10):
+    """The H1-H4 highlight pipeline served from the compressed disk index
+    (ranking via segment blobs, enrichment via the index's doc store)."""
+
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from search_engine_spark.functions.tokenizer import tokenize_query
-        from search_engine_spark.operators.search import parse_query, search
+        from search_engine_spark.operators.search import parse_query
 
-        idx = _index(spark, sf_dir)
-        ranked = _rounded_rank(search(idx, query)).filter(F.col("rank") <= k)
+        di = _disk_index(spark, sf_dir)
+        ranked = _rounded_rank(search_segments(di, query)).filter(F.col("rank") <= k)
         pq = parse_query(query)
         term_ids = [t for t, _ in tokenize_query(pq.keywords[0])] if pq.keywords else []
-        return enrich_ranked(idx, ranked, term_ids).select(
+        return enrich_ranked(di, ranked, term_ids).select(
             "doc_id", "score", "rank", "url", "abstract"
         )
 
@@ -309,26 +308,6 @@ def _media_thumbs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _seg_search_highlight_q(query: str, k: int = 10):
-    """The H1-H4 highlight pipeline served from the COMPRESSED disk index
-    (ranking via segment blobs, enrichment via the index's doc store) —
-    same SQL oracle as the logical-index search_highlight row."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from search_engine_spark.functions.tokenizer import tokenize_query
-        from search_engine_spark.operators.search import parse_query
-
-        di = _disk_index(spark, sf_dir)
-        ranked = _rounded_rank(search_segments(di, query)).filter(F.col("rank") <= k)
-        pq = parse_query(query)
-        term_ids = [t for t, _ in tokenize_query(pq.keywords[0])] if pq.keywords else []
-        return enrich_ranked(di, ranked, term_ids).select(
-            "doc_id", "score", "rank", "url", "abstract"
-        )
-
-    return run
-
-
 def _media_frames_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fr = MM.sample_frames(MM.synthesize_media(spark, 64), every_ms=500, dim=4)
     return fr.select(
@@ -360,14 +339,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "search_rare": _search_q("dup"),
         # P9 pagination: page 2 of the ranked result (rank 11..20)
         "search_page2": lambda s, d: paginate(
-            _rounded_rank(search(_index(s, d), "table")), 2
+            _rounded_rank(search_segments(_disk_index(s, d), "table")), 2
         ),
         "search_absent": _search_q("qqqq"),
         "search_enriched": _search_enriched_q("spark"),
-        "seg_search_table": _seg_search_q("table"),
-        "seg_search_and": _seg_search_q("table spark"),
-        "seg_search_not": _seg_search_q("table -dup"),
-        "seg_search_site": _seg_search_q("table site:src3"),
+        "seg_search_table": _search_q("table"),
+        "seg_search_and": _search_q("table spark"),
+        "seg_search_not": _search_q("table -dup"),
+        "seg_search_site": _search_q("table site:src3"),
         # executor-side hot-term plan, forced — same oracle as seg_search_*
         "dist_search_and": _dist_search_q("table spark"),
         "dist_search_site": _dist_search_q("table site:src3"),
@@ -398,7 +377,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 6 dp so ties rank identically in both engines
         "search_highlight": _search_highlight_q("table", k=10),
         # the same H1-H4 pipeline through the compressed disk-index path
-        "seg_search_highlight": _seg_search_highlight_q("table", k=10),
+        "seg_search_highlight": _search_highlight_q("table", k=10),
         # --- training-data pipeline: dedup ---------------------------------
         "dedup_exact": lambda s, d: D.exact_dedup(_documents(s, d)),
         "dedup_jaccard": lambda s, d: D.ngram_jaccard_pairs(_documents(s, d)),

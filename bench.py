@@ -90,11 +90,7 @@ def main() -> None:
     from search_engine_spark.operators import dedup as D
     from search_engine_spark.operators import similarity as SIM
     from search_engine_spark.operators import textstats as TS
-    from search_engine_spark.operators.postings import (
-        build_documents_from_testdata,
-        build_index,
-    )
-    from search_engine_spark.operators.search import search
+    from search_engine_spark.operators.postings import build_documents_from_testdata
     from search_engine_spark.session import get_spark
 
     spark = get_spark(
@@ -218,7 +214,11 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from search_engine_spark.operators.segments import load_index, write_index
+    from search_engine_spark.operators.segments import (
+        index_stats,
+        load_index,
+        write_index,
+    )
     from search_engine_spark.operators.wand import search_segments, topk_wand
 
     docs = build_documents_from_testdata(spark, args.sf_dir).cache()
@@ -257,13 +257,7 @@ def main() -> None:
     for d in build_dirs[1:]:
         shutil.rmtree(os.path.dirname(d), ignore_errors=True)
     di = load_index(spark, index_dir)
-
-    # in-memory logical index (DataFrame query path, for comparison)
-    t0 = time.time()
-    index = build_index(docs)
-    n_postings = index.postings.count()
-    index.lexicon.count()
-    timings["index_build_logical"] = round(time.time() - t0, 3)
+    n_postings = int(index_stats(di).collect()[0]["n_postings"])
 
     # --- query side: compressed blob path (the product query engine) -------
     # Protocol (ADVICE r2): cold and warm are timed SEPARATELY. q_* = cold
@@ -352,7 +346,6 @@ def main() -> None:
         max_reps=2,
         reset=di.clear_caches,
     )
-    timed("q_df_single", lambda: search(index, "table").collect())
 
     # --- FIXTURES.md §4 query latency percentiles (verdict r3 #7) -------
     # Same workload as tools/scale_bench.py (REFERENCE_QUERY_SET over the
@@ -497,6 +490,7 @@ def main() -> None:
             timings[name], entries[name] = old_t, old_e
         else:
             entries[name]["second_chance"] = True
+            entries[name]["first_pass"] = old_e  # keep the rejected evidence
     for d in build_dirs:
         if d != index_dir:
             shutil.rmtree(os.path.dirname(d), ignore_errors=True)

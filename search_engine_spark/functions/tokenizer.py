@@ -19,7 +19,7 @@ materialized only in the lexicon / user-facing outputs.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -123,110 +123,22 @@ def ids_to_terms(term_ids: np.ndarray) -> pd.Series:
     return pd.Series([chr(a) + chr(b) for a, b in zip(hi.tolist(), lo.tolist())])
 
 
-def tokenize_documents_iter(
-    batches: Iterator[pd.DataFrame],
-    text_cols: tuple[str, ...] = ("title", "body"),
-    id_col: str = "doc_id",
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (doc_id, title, body) -> (doc_id, term_id, pos, is_title).
-
-    ``text_cols`` fields are tokenized separately (title first, body second,
-    mirroring indexer.go:85-94); each field's positions restart at 0. For
-    corpora without titles pass ``text_cols=("body",)``.
-    """
-    for pdf in batches:
-        doc_ids = pdf[id_col].to_numpy()
-        outs = []
-        for field in text_cols:
-            texts = pdf[field].fillna("").astype(str)
-            row_idx, term_id, pos = tokenize_batch(texts)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "doc_id": doc_ids[row_idx],
-                        "term_id": term_id,
-                        "pos": pos,
-                        "is_title": np.full(len(term_id), field == "title"),
-                    }
-                )
-            )
-        yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-            {"doc_id": [], "term_id": [], "pos": [], "is_title": []}
-        )
-
-
 _ROW_SHIFT = 42  # term_id < 2^42 (two 21-bit code points)
 _TERM_MASK = (1 << _ROW_SHIFT) - 1
 
 
-def postings_batches_arrow(batches, text_cols=("title", "body"), id_col="doc_id"):
-    """mapInArrow kernel: (doc_id, title, body) -> grouped postings rows
-    (doc_id, term_id, title_end, positions) with NO downstream shuffle.
+def postings_batches_arrow_packed(batches, text_cols=("title", "body"), id_col="doc_id"):
+    """mapInArrow kernel: (doc_id, title, body) -> packed postings rows
+    (doc_id, term_id, title_end, npos, pos_blob) with NO downstream shuffle.
 
     The reference builds a per-doc inverted map in each index worker
     (textToInvertedIndex, indexer.go:85-94); the Spark analog is this
     map-side grouping: each doc's tokens are sorted and run-length
-    grouped in numpy, and the positions lists are emitted as a zero-copy
-    Arrow ListArray. groupBy(term_id, doc_id) becomes unnecessary — the
-    kernel output IS the postings table, so the only shuffles left in an
-    index build are the per-term aggregations that genuinely need them.
-    """
-    import pyarrow as pa
-
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("term_id", pa.int64()),
-            ("title_end", pa.int32()),
-            ("positions", pa.list_(pa.int32())),
-        ]
-    )
-    for batch in batches:
-        doc_ids = batch.column(id_col).to_numpy()
-        keys_parts, pos_parts, flag_parts = [], [], []
-        for fi, field in enumerate(text_cols):
-            texts = batch.column(field).to_pandas().fillna("").astype(str)
-            row_idx, term_id, pos = tokenize_batch(texts)
-            keys_parts.append((row_idx << _ROW_SHIFT) | term_id)
-            pos_parts.append(pos)
-            flag_parts.append(
-                np.full(len(term_id), 1 if field == "title" else 0, np.int64)
-            )
-        keys = np.concatenate(keys_parts)
-        if keys.size == 0:
-            yield pa.RecordBatch.from_pylist([], schema=out_schema)
-            continue
-        pos = np.concatenate(pos_parts)
-        flags = np.concatenate(flag_parts)
-        order = np.argsort(keys, kind="stable")  # title entries stay first
-        keys, pos, flags = keys[order], pos[order], flags[order]
-        starts = np.flatnonzero(np.diff(keys, prepend=keys[0] - 1))
-        group_doc = doc_ids[(keys[starts] >> _ROW_SHIFT)]
-        group_term = keys[starts] & _TERM_MASK
-        title_end = np.add.reduceat(flags, starts).astype(np.int32)
-        offsets = np.append(starts, keys.size).astype(np.int32)
-        positions = pa.ListArray.from_arrays(offsets, pa.array(pos, pa.int32()))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(group_doc, pa.int64()),
-                pa.array(group_term, pa.int64()),
-                pa.array(title_end, pa.int32()),
-                positions,
-            ],
-            schema=out_schema,
-        )
-
-
-def postings_batches_arrow_packed(batches, text_cols=("title", "body"), id_col="doc_id"):
-    """mapInArrow kernel: (doc_id, title, body) -> packed postings rows
-    (doc_id, term_id, title_end, npos, pos_blob).
-
-    Same map-side grouping as ``postings_batches_arrow``, but each
-    posting's positions are delta+varint packed HERE (the exact per-doc
-    pdelta section of the segment blob layout), so the index-build
-    shuffle moves ~1-2 bytes per position instead of a list<int32>
-    element, and the reduce-side encode splices bytes instead of
-    re-encoding (codec.encode_bucket_packed).
+    grouped in numpy. Each posting's positions are delta+varint packed
+    HERE (the exact per-doc pdelta section of the segment blob layout),
+    so the index-build shuffle moves ~1-2 bytes per position, and the
+    reduce-side encode splices bytes instead of re-encoding
+    (codec.encode_bucket_packed).
     """
     import pyarrow as pa
 

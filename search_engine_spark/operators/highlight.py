@@ -25,7 +25,7 @@ Reference semantics (yuanyb/search-engine):
 
 Scale shape: highlighting runs ONLY on the top-k rows (≤ 50 per query,
 ``engine.go:65``) after ranking — a broadcast join of the tiny ranked side
-against ``documents`` followed by one mapInPandas pass whose tokenize step
+against the index's doc store followed by one mapInPandas pass whose tokenize step
 is the same vectorized numpy kernel as the index build. The 100 TB scan
 never touches this code.
 """
@@ -40,8 +40,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import tokenize_batch, tokenize_query
-from .postings import Index
-from .search import parse_query, search
+from .search import parse_query
+from .segments import DiskIndex
+from .wand import search_segments
 
 HIGHLIGHT_PREFIX = "<span style='color:red'>"  # search.go:103
 HIGHLIGHT_SUFFIX = "</span>"  # search.go:104
@@ -184,13 +185,13 @@ def _enrich_kernel(
         )
 
 
-def enrich_ranked(index: Index, ranked: DataFrame, term_ids: list[int]) -> DataFrame:
-    """ranked (doc_id, score, rank) → join documents → highlight+abstract.
+def enrich_ranked(di: DiskIndex, ranked: DataFrame, term_ids: list[int]) -> DataFrame:
+    """ranked (doc_id, score, rank) → join the doc store → highlight+abstract.
 
     The ranked side is ≤ 50 rows, so Catalyst broadcasts it into the
     documents join (no shuffle of the big table); the pandas pass then
     touches only those rows."""
-    docs = index.documents.select("doc_id", "url", "title", "body")
+    docs = di.documents.select("doc_id", "url", "title", "body")
     joined = docs.join(F.broadcast(ranked), "doc_id")
     if not term_ids:
         return joined.sparkSession.createDataFrame([], _ENRICHED_SCHEMA)
@@ -199,16 +200,16 @@ def enrich_ranked(index: Index, ranked: DataFrame, term_ids: list[int]) -> DataF
     ).orderBy("rank")
 
 
-def enrich_topk(index: Index, query: str, k: int = 10) -> DataFrame:
-    """search → top-k → join documents → highlight+abstract.
+def enrich_topk(di: DiskIndex, query: str, k: int = 10) -> DataFrame:
+    """search_segments → top-k → join the doc store → highlight+abstract.
 
     Highlights come from the FIRST keyword's tokens — the reference's AND
     fold keeps the first keyword's items (intended semantics of
     search.go:58-84, SURVEY §7.4.4a).
     """
-    ranked = search(index, query, limit=k)
+    ranked = search_segments(di, query).filter(F.col("rank") <= k)
     pq = parse_query(query)
     term_ids = (
         [tid for tid, _ in tokenize_query(pq.keywords[0])] if pq.keywords else []
     )
-    return enrich_ranked(index, ranked, term_ids)
+    return enrich_ranked(di, ranked, term_ids)

@@ -1,39 +1,34 @@
-"""Posting-list construction as a declarative Spark plan.
+"""Document tables and the map-side postings build.
 
 Reference pipeline (index/core/indexer.go:224-283): 5 tokenizer workers →
 1 merger goroutine folding per-doc maps, flushing every 1000 docs → 5 flush
 workers doing read-merge-write upserts into BoltDB.
 
-Spark re-architecture: the whole write path is ONE logical plan —
-tokenize (vectorized Arrow kernel) → groupBy(term_id, doc_id) position
-collect (Catalyst partial+final hash aggregation replaces the merger's
-fold-and-flush; map-side combine is automatic) → lexicon aggregation.
-Workers ⇢ partitions; channels ⇢ shuffle boundaries; the flush threshold ⇢
-Arrow batch size. No read-merge-write: downstream segment files are
-immutable (see segments.py).
+Spark re-architecture: ONE mapInArrow pass tokenizes each doc and groups
+its tokens into packed postings rows (the per-doc textToInvertedIndex,
+indexer.go:85-94); the merger's fold-and-flush becomes the per-term
+segment encode shuffle in ``segments.build_segments``. Workers ⇢
+partitions; channels ⇢ shuffle boundaries; the flush threshold ⇢ Arrow
+batch size. No read-merge-write: segment files are immutable.
 
 Schemas (FIXTURES.md §2):
   documents: doc_id long, url string, title string, body string, content_sha256 string
-  postings:  term_id long, doc_id long, title_end int, positions array<int>
-             -- positions = sorted title rune-offsets ++ sorted body
-             -- rune-offsets, each field 0-based (indexer.go:129-134)
-  lexicon:   term_id long, term string, df long, ctf long
+  postings:  term_id long, doc_id long, title_end int, npos int, pos_blob binary
+             -- pos_blob = title rune-offsets then body rune-offsets
+             -- (each field 0-based, indexer.go:129-134), delta+varint
+             -- packed per field
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from functools import partial
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.tokenizer import ids_to_terms, tokenize_documents_iter
+from ..functions.tokenizer import ids_to_terms
 from .docids import assign_doc_ids
 from .parse import parse_html_documents
-
-_TOKENS_SCHEMA = "doc_id long, term_id long, pos int, is_title boolean"
 
 
 def build_documents_from_corpus(corpus: DataFrame) -> DataFrame:
@@ -82,54 +77,15 @@ def build_documents_from_testdata(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def tokenize(documents: DataFrame, with_title: bool = True) -> DataFrame:
-    """documents -> token stream (doc_id, term_id, pos, is_title).
-
-    One vectorized Arrow pass (mapInPandas): title field first then body,
-    per-field 0-based rune offsets (indexer.go:85-94). Emitting exploded
-    rows directly from the kernel avoids a JVM-side explode of large
-    arrays.
-    """
-    cols = ("title", "body") if with_title else ("body",)
-    kernel = partial(tokenize_documents_iter, text_cols=cols)
-    inp = documents.select("doc_id", *cols)
-    return inp.mapInPandas(kernel, schema=_TOKENS_SCHEMA)
-
-
-def build_postings(documents: DataFrame, with_title: bool = True) -> DataFrame:
-    """documents -> postings (term_id, doc_id, title_end, positions).
-
-    Map-side construction: ONE mapInArrow pass tokenizes and groups each
-    doc's tokens into postings rows (numpy sort + run-length group, Arrow
-    ListArray output) — no shuffle at all. This is the Spark analog of
-    the reference's per-doc textToInvertedIndex (indexer.go:85-94); the
-    reference's merger/flusher shuffle work (indexer.go:241-283) only
-    remains where it is genuinely needed, in the per-term segment and
-    lexicon aggregations downstream.
-    """
-    from functools import partial as _partial
-
-    from ..functions.tokenizer import postings_batches_arrow
-
-    cols = ("title", "body") if with_title else ("body",)
-    kernel = _partial(postings_batches_arrow, text_cols=cols)
-    inp = documents.select("doc_id", *cols)
-    return inp.mapInArrow(
-        kernel,
-        schema="doc_id long, term_id long, title_end int, positions array<int>",
-    )
-
-
 def build_postings_packed(documents: DataFrame, with_title: bool = True) -> DataFrame:
     """documents -> packed postings (term_id, doc_id, title_end, npos,
     pos_blob).
 
-    Same single mapInArrow pass as ``build_postings`` but positions leave
-    the map side already delta+varint packed (the blob layout's per-doc
-    pdelta section), so the index-build shuffle moves compact bytes and
-    the reduce-side encode splices instead of re-encoding. This is the
-    write-path flavor; the query-facing logical Index keeps the list
-    form.
+    One mapInArrow pass, no shuffle: each doc's tokens are sorted and
+    run-length grouped in numpy, and positions leave the map side already
+    delta+varint packed (the blob layout's per-doc pdelta section), so
+    the index-build shuffle moves compact bytes and the reduce-side
+    encode splices instead of re-encoding.
     """
     from functools import partial as _partial
 
@@ -144,68 +100,7 @@ def build_postings_packed(documents: DataFrame, with_title: bool = True) -> Data
     )
 
 
-def build_postings_shuffle(documents: DataFrame, with_title: bool = True) -> DataFrame:
-    """Shuffle-based postings build (explode -> groupBy) kept as the
-    cross-check twin of the map-side kernel; the analog of the
-    reference's merger buffer (indexer.go:241-260) done by Catalyst
-    partial+final aggregation."""
-    tok = tokenize(documents, with_title=with_title)
-    tpos = F.sort_array(F.collect_list(F.when(F.col("is_title"), F.col("pos"))))
-    bpos = F.sort_array(F.collect_list(F.when(~F.col("is_title"), F.col("pos"))))
-    return (
-        tok.groupBy("term_id", "doc_id")
-        .agg(tpos.alias("_tpos"), bpos.alias("_bpos"))
-        .select(
-            "term_id",
-            "doc_id",
-            F.size("_tpos").alias("title_end"),
-            F.concat(F.col("_tpos"), F.col("_bpos")).alias("positions"),
-        )
-    )
-
-
-from pyspark.sql import types as T
-
-
 @F.pandas_udf(T.StringType())
 def _term_str(term_id: pd.Series) -> pd.Series:
+    """term_id -> 2-char term string (lexicon cardinality only)."""
     return ids_to_terms(term_id.to_numpy())
-
-
-def build_lexicon(postings: DataFrame) -> DataFrame:
-    """postings -> lexicon (term_id, term, df, ctf).
-
-    df = docs containing the term, ctf = total occurrences — the analog of
-    the token_doc_count bucket (indexer.go:276-278). The term string is
-    materialized here (lexicon cardinality ≪ postings cardinality).
-    """
-    return (
-        postings.groupBy("term_id")
-        .agg(F.count("*").alias("df"), F.sum(F.size("positions")).alias("ctf"))
-        .withColumn("term", _term_str(F.col("term_id")))
-        .select("term_id", "term", "df", "ctf")
-    )
-
-
-@dataclass
-class Index:
-    """An in-session logical index: the three core DataFrames + corpus size."""
-
-    documents: DataFrame
-    postings: DataFrame
-    lexicon: DataFrame
-    n_docs: int
-
-
-def build_index(documents: DataFrame, cache: bool = True) -> Index:
-    """End-to-end logical index build. With ``cache=True`` the postings and
-    lexicon are persisted — the analog of the reference's LRU buffers."""
-    with_title = True
-    postings = build_postings(documents, with_title=with_title)
-    if cache:
-        postings = postings.cache()
-    lexicon = build_lexicon(postings)
-    if cache:
-        lexicon = lexicon.cache()
-    n_docs = documents.count()
-    return Index(documents=documents, postings=postings, lexicon=lexicon, n_docs=n_docs)

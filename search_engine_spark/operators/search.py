@@ -1,39 +1,23 @@
-"""Query-side operators: parse, conjunctive retrieval, scoring, ranking.
+"""Query parse and result paging — the query-language half of the engine.
 
-Reference semantics reproduced (SURVEY §2.6-2.7, §7.4):
+Scoring and ranking run over the compressed segment index in
+``wand.py`` (``search_segments`` and the block-max top-k family); this
+module holds what every query path and the reference oracle share:
 
 - query parse (query_preprocess.go:14-34): space-split; ``-x`` → NOT,
   ``site:x`` → site filter (first wins), else AND keyword.
-- per keyword: all its distinct bigram tokens must appear in a doc (J1,
-  leapfrog intersection → expressed as a grouped HAVING count = m; Catalyst
-  plans the hash aggregation; the blob/leapfrog fast path lives in wand.py).
-- TF-IDF (search.go:419-429): S = Σ_t (1+ln tf_t)·ln(N/df_t) over the
-  keyword's distinct tokens, tf = combined title+body occurrences.
-- phrase count per field (search.go:278-339) = |∩_j (positions_f(t_j) − b_j)|
-  over every query-token occurrence j; boost B_f = 3+ln(pc_f) if pc_f>0
-  (search.go:254-257); title pass ×3 (search.go:258-260);
-  Score = 3·S·B_title + S·B_body (search.go:248-267).
-- multi-keyword AND keeps the FIRST keyword's items/scores — the *intended*
-  semantics of search.go:58-84 (the reference has an off-by-variable bug at
-  search.go:83, documented divergence SURVEY §7.4.4).
-- NOT = left_anti join (search.go:87-100); site = host-suffix filter
-  (search.go:240-246).
-- candidates truncated to the 50 lowest docIds (engine.go:65) BEFORE the
-  score sort; final order score desc with doc_id asc tiebreak — the
-  reference's sort is unstable (web/service/search.go:193), the tiebreak is
-  our determinism fix (SURVEY §7.4.4b).
+- the blocked-substring gate (web/service/search.go:48-57).
+- the site host rule (util.UrlToHost, util.go:34-44).
+- pagination (web/service/search.go:165-203): page pn in 1..10,
+  10 items/page.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.tokenizer import tokenize_query
-from .postings import Index
 
 PER_SHARD_LIMIT = 50  # engine.go:65
 PAGE_SIZE = 10  # web/service/search.go:168
@@ -73,113 +57,6 @@ def parse_query(query: str) -> ParsedQuery:
     return pq
 
 
-def _term_dfs(index: Index, term_ids: list[int]) -> dict[int, int]:
-    """df lookup for a handful of query terms — a pruned scan of the (cached)
-    lexicon; the analog of the reference's LRU-fronted token_doc_count reads."""
-    rows = (
-        index.lexicon.filter(F.col("term_id").isin(term_ids))
-        .select("term_id", "df")
-        .collect()
-    )
-    return {r["term_id"]: r["df"] for r in rows}
-
-
-def _field_positions(entry: Column, title: bool) -> Column:
-    """positions[:title_end] or positions[title_end:] (search.go:293-297)."""
-    pos, te = entry["positions"], entry["title_end"]
-    if title:
-        return F.slice(pos, 1, te)
-    return F.slice(pos, te + 1, F.greatest(F.size(pos) - te, F.lit(0)))
-
-
-def _phrase_count(map_col: Column, cursors: list[tuple[int, int]], title: bool) -> Column:
-    """|∩_j (positions_f(t_j) − base_j)| — the set form of the reference's
-    aligned-offset leapfrog (search.go:304-336). cursors = [(term_id, base)]
-    with one entry per query-token OCCURRENCE (duplicate query tokens
-    contribute one cursor per occurrence, search.go:288-301)."""
-    def _shift(base: int):
-        # single-arg lambda: PySpark treats 2-arg lambdas as (element, index)
-        return lambda x: x - F.lit(base)
-
-    shifted = [
-        F.transform(_field_positions(F.element_at(map_col, F.lit(tid)), title), _shift(base))
-        for tid, base in cursors
-    ]
-    return F.size(reduce(F.array_intersect, shifted))
-
-
-def candidates_for_keyword(index: Index, keyword: str) -> DataFrame | None:
-    """Docs containing ALL distinct tokens of the keyword: (doc_id) only.
-    Returns None when the keyword has no tokens or any token is unindexed
-    (reference early-outs empty, search.go:190-211)."""
-    qtokens = tokenize_query(keyword)
-    if not qtokens:
-        return None
-    term_ids = [t for t, _ in qtokens]
-    dfs = _term_dfs(index, term_ids)
-    if any(t not in dfs for t in term_ids):
-        return None
-    m = len(term_ids)
-    return (
-        index.postings.filter(F.col("term_id").isin(term_ids))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("_nt"))
-        .filter(F.col("_nt") == m)
-        .select("doc_id")
-    )
-
-
-def score_keyword(index: Index, keyword: str) -> DataFrame | None:
-    """Full per-keyword retrieval+scoring: (doc_id, score).
-
-    One shuffle: postings pruned to the query's terms → groupBy(doc_id).
-    df values ride in as literals (broadcast of a handful of scalars); the
-    per-doc positions travel once as a map column for the phrase pass.
-    """
-    qtokens = tokenize_query(keyword)
-    if not qtokens:
-        return None
-    term_ids = [t for t, _ in qtokens]
-    dfs = _term_dfs(index, term_ids)
-    if any(t not in dfs or dfs[t] <= 0 for t in term_ids):
-        return None
-    m = len(term_ids)
-    n_docs = index.n_docs
-
-    # (1 + ln tf_t) * ln(N / df_t): df as a literal CASE over term_id.
-    df_expr = F.create_map(
-        *[x for t in term_ids for x in (F.lit(t), F.lit(float(dfs[t])))]
-    )
-    tf = F.size("positions").cast("double")
-    contrib = (F.lit(1.0) + F.log(tf)) * F.log(F.lit(float(n_docs)) / F.element_at(df_expr, F.col("term_id")))
-
-    grouped = (
-        index.postings.filter(F.col("term_id").isin(term_ids))
-        .select(
-            "doc_id",
-            "term_id",
-            contrib.alias("_contrib"),
-            F.struct(F.col("title_end"), F.col("positions")).alias("_entry"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("_contrib").alias("_s"),
-            F.count("*").alias("_nt"),
-            F.map_from_entries(F.collect_list(F.struct(F.col("term_id"), F.col("_entry")))).alias("_m"),
-        )
-        .filter(F.col("_nt") == m)
-    )
-
-    cursors = [(tid, base) for tid, bases in qtokens for base in bases]
-    pc_t = _phrase_count(F.col("_m"), cursors, title=True)
-    pc_b = _phrase_count(F.col("_m"), cursors, title=False)
-    boost_t = F.when(pc_t > 0, F.lit(3.0) + F.log(pc_t.cast("double"))).otherwise(F.lit(1.0))
-    boost_b = F.when(pc_b > 0, F.lit(3.0) + F.log(pc_b.cast("double"))).otherwise(F.lit(1.0))
-    s = F.col("_s")
-    score = F.lit(3.0) * s * boost_t + s * boost_b
-    return grouped.select("doc_id", score.alias("score"))
-
-
 def host_of(url: Column) -> Column:
     """Host of a URL, matching the reference's util.UrlToHost
     (util.go:34-44): authority between ``scheme://`` and the first ``/``,
@@ -189,83 +66,6 @@ def host_of(url: Column) -> Column:
     make ``site:`` match nothing on non-URL corpus ids)."""
     host = F.regexp_extract(url, r"^(?:[A-Za-z][A-Za-z0-9+.-]*://)?([^/]*)", 1)
     return F.regexp_replace(host, r":[^:]*$", "")
-
-
-def _site_filter(index: Index, result: DataFrame, site: str) -> DataFrame:
-    """Keep docs whose parsed host ends with ``site`` (search.go:240-246 +
-    util.UrlToHost). The doc side of the semi join is the top candidates
-    only, so Catalyst broadcasts it."""
-    hosts = index.documents.select("doc_id", host_of(F.col("url")).alias("_host"))
-    return (
-        result.join(hosts, "doc_id", "inner")
-        .filter(F.col("_host").endswith(site))
-        .drop("_host")
-    )
-
-
-def search(
-    index: Index, query: str, limit: int | None = None, num_shards: int = 1
-) -> DataFrame:
-    """Full query pipeline → (doc_id, score, rank), deterministically ranked.
-
-    ``num_shards`` emulates the reference's multi-index-server deployment
-    (SURVEY §7.4.5): docs route to shard ``doc_id % num_shards``, each
-    server truncates to ITS 50 lowest docIds (engine.go:64-65), the web
-    layer concatenates and rank-sorts the union
-    (web/service/search.go:147-151,192-203). num_shards=1 is the
-    single-logical-shard product default (deterministic superset).
-
-    Empty result cases return an empty DataFrame with the same schema.
-    """
-    spark = index.documents.sparkSession
-
-    def empty() -> DataFrame:  # built only on the early-exit paths
-        from .segments import empty_result_df
-
-        return empty_result_df(spark)
-
-    pq = parse_query(query)
-    if not pq.keywords:
-        return empty()
-
-    base = score_keyword(index, pq.keywords[0])
-    if base is None:
-        return empty()
-    if pq.site:
-        base = _site_filter(index, base, pq.site)
-
-    for kw in pq.keywords[1:]:
-        cand = candidates_for_keyword(index, kw)
-        if cand is None:
-            return empty()
-        base = base.join(cand, "doc_id", "left_semi")
-
-    for ex in pq.exclusions:
-        cand = candidates_for_keyword(index, ex)
-        if cand is not None:
-            base = base.join(cand, "doc_id", "left_anti")
-
-    # engine.go:65 — keep the 50 lowest docIds (per emulated shard), THEN
-    # rank by score.
-    from pyspark.sql import Window
-
-    if num_shards <= 1:
-        shard = base.orderBy("doc_id").limit(PER_SHARD_LIMIT)
-    else:
-        ws = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(num_shards))).orderBy(
-            "doc_id"
-        )
-        shard = (
-            base.withColumn("_rn", F.row_number().over(ws))
-            .filter(F.col("_rn") <= PER_SHARD_LIMIT)
-            .drop("_rn")
-        )
-
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = shard.withColumn("rank", F.row_number().over(w).cast("long")).orderBy("rank")
-    if limit is not None:
-        ranked = ranked.limit(limit)
-    return ranked.select("doc_id", "score", "rank")
 
 
 def paginate(ranked: DataFrame, pn: int) -> DataFrame:

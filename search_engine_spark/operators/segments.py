@@ -3,13 +3,14 @@ resume.
 
 Pipeline (SURVEY §3.1 re-architecture):
 
-    postings (term_id, doc_id, title_end, positions)
-      → bucket = murmur3(term_id) % n_buckets     (term-partitioned index)
-      → salt   = murmur3(doc_id) % n_salts for hot terms (df > threshold)
+    packed postings (term_id, doc_id, title_end, npos, pos_blob)
+      → bucket = xxhash64(term_id) % n_buckets    (term-partitioned index)
+      → salt   = xxhash64(doc_id) % n_salts for hot terms (df > threshold)
                  else 0                            (skew defeat, north rule)
-      → groupBy(bucket, salt).applyInPandas(encode kernel)
-           kernel sorts (term_id, doc_id), flattens positions, and calls
-           codec.encode_bucket — ONE vectorized varint pass per group
+      → groupBy(bucket, salt).applyInArrow(encode kernel)
+           kernel sorts (term_id, doc_id), splices the packed position
+           bytes, and calls codec.encode_bucket_packed — ONE vectorized
+           varint pass per group
       → segments rows (term_id, salt, df, ctf, blob, block_* sidecar)
       → merge pass: hot terms' sub-segments sort-merged into one blob
 
@@ -33,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from dataclasses import dataclass
 
@@ -52,67 +54,18 @@ SEGMENT_SCHEMA = (
 )
 
 
-def _encode_kernel_arrow(table: pa.Table) -> pa.Table:
-    """applyInArrow kernel for one (bucket, salt) group.
-
-    Arrow-native on purpose: a pandas kernel materializes one Python list
-    object PER ROW for the ``positions`` column (30M rows → 30M objects →
-    GC collapse); the Arrow ListArray exposes the same data as two flat
-    numpy arrays (values + offsets) with zero object churn. (The real
-    type hints are REQUIRED — applyInArrow infers its eval type from
-    them.)
-    """
-    t = table.combine_chunks()
-    term = t.column("term_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    doc = t.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    te = t.column("title_end").to_numpy(zero_copy_only=False).astype(np.int64)
-    la = t.column("positions")
-    la = la.combine_chunks() if isinstance(la, pa.ChunkedArray) else la
-    offsets = la.offsets.to_numpy().astype(np.int64)
-    values = la.values.to_numpy(zero_copy_only=False).astype(np.int64)
-    counts = offsets[1:] - offsets[:-1]
-
-    order = np.lexsort((doc, term))
-    starts = offsets[:-1][order]
-    counts_o = counts[order]
-    total = int(counts_o.sum())
-    if total:
-        # ragged gather: flat positions in (term, doc) sorted row order
-        shift = np.repeat(
-            starts - np.concatenate(([0], np.cumsum(counts_o)[:-1])), counts_o
-        )
-        flat = values[shift + np.arange(total)]
-    else:
-        flat = np.empty(0, np.int64)
-
-    eb = codec.encode_bucket(term[order], doc[order], te[order], counts_o, flat)
-    n_terms = len(eb.term_ids)
-    bucket = int(t.column("bucket")[0].as_py()) if n_terms else 0
-    salt = int(t.column("salt")[0].as_py()) if n_terms else 0
-    return pa.table(
-        {
-            "bucket": pa.array(np.full(n_terms, bucket, np.int32), pa.int32()),
-            "term_id": pa.array(eb.term_ids, pa.int64()),
-            "salt": pa.array(np.full(n_terms, salt, np.int32), pa.int32()),
-            "df": pa.array(eb.dfs, pa.int64()),
-            "ctf": pa.array(eb.ctfs, pa.int64()),
-            "n_docs": pa.array(eb.dfs, pa.int64()),
-            "blob": pa.array(eb.blobs, pa.binary()),
-            "block_last": pa.array([a.tolist() for a in eb.block_last], pa.list_(pa.int64())),
-            "block_max_tf": pa.array([a.tolist() for a in eb.block_max_tf], pa.list_(pa.int32())),
-            "block_offsets": pa.array([a.tolist() for a in eb.block_offsets], pa.list_(pa.int64())),
-        }
-    )
-
-
 def _encode_kernel_packed(table: pa.Table) -> pa.Table:
-    """applyInArrow kernel for PRE-PACKED postings (pos_blob binary).
+    """applyInArrow kernel for one (bucket, salt) group of PRE-PACKED
+    postings (pos_blob binary).
 
     Positions arrived as per-doc delta+varint byte strings (packed
     map-side in the tokenizer kernel), so this kernel only varint-encodes
     the small integer streams and splices the position bytes — no
     position re-encoding, no list materialization. Output blobs are
-    byte-identical to the list-path kernel (tested)."""
+    byte-identical to ``codec.encode_bucket`` over the same postings
+    (tested against the reference oracle's postings). Arrow-native on
+    purpose: the real type hints are REQUIRED — applyInArrow infers its
+    eval type from them."""
     t = table.combine_chunks()
     term = t.column("term_id").to_numpy(zero_copy_only=False).astype(np.int64)
     doc = t.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -164,7 +117,7 @@ def build_segments(
     n_salts: int = 8,
     salt_threshold: int = 250_000,
 ) -> DataFrame:
-    """postings -> compressed per-term segment rows.
+    """packed postings -> compressed per-term segment rows.
 
     Hot terms (df > salt_threshold) are split into ``n_salts``
     sub-segments by hashed doc_id so no single task encodes an entire
@@ -172,13 +125,9 @@ def build_segments(
     The groupBy keys (bucket, salt) give ~n_buckets×n_salts groups —
     size n_buckets so groups ≈ 2-4× parallelism at the target scale.
 
-    Accepts BOTH postings flavors: list form (``positions array<int>``,
-    from ``build_postings``) and packed form (``pos_blob binary`` from
-    ``build_postings_packed``) — the packed flavor shuffles ~4× fewer
-    bytes and splices instead of re-encoding. Output blobs are
-    byte-identical either way.
+    Input is ``postings.build_postings_packed`` output: positions travel
+    the shuffle as packed bytes and the kernel splices them.
     """
-    packed = "pos_blob" in postings.columns
     df_per_term = postings.groupBy("term_id").agg(F.count("*").alias("_df"))
     hot = df_per_term.filter(F.col("_df") > salt_threshold).select("term_id")
     salted = (
@@ -193,8 +142,9 @@ def build_segments(
         )
         .drop("_hot")
     )
-    kernel = _encode_kernel_packed if packed else _encode_kernel_arrow
-    return salted.groupBy("bucket", "salt").applyInArrow(kernel, SEGMENT_SCHEMA)
+    return salted.groupBy("bucket", "salt").applyInArrow(
+        _encode_kernel_packed, SEGMENT_SCHEMA
+    )
 
 
 def merge_decoded_parts(
@@ -322,15 +272,61 @@ def _manifest_path(index_dir: str) -> str:
     return os.path.join(index_dir, "manifest.jsonl")
 
 
+def _scan_manifest(path: str) -> tuple[list[dict], int]:
+    """(rows, byte length of the intact prefix) of a manifest file.
+
+    Rows are appended one line per write, so a build killed mid-append
+    leaves a torn FINAL line: it is treated as not written. An
+    unparseable line anywhere else is corruption and raises."""
+    if not os.path.exists(path):
+        return [], 0
+    with open(path, "rb") as f:
+        lines = f.read().splitlines(keepends=True)
+    rows: list[dict] = []
+    size = 0
+    for i, line in enumerate(lines):
+        try:
+            rows.append(json.loads(line))
+        except ValueError:
+            if i == len(lines) - 1:
+                break
+            raise ValueError(f"{path}: malformed manifest line {i + 1}") from None
+        size += len(line)
+    return rows, size
+
+
+def manifest_rows(index_dir: str) -> list[dict]:
+    """Every manifest row in append order: batch shard rows (``shard``),
+    streaming generation rows (``gen``) and compaction records
+    (``compact``)."""
+    return _scan_manifest(_manifest_path(index_dir))[0]
+
+
 def read_manifest(index_dir: str) -> dict[int, dict]:
-    out: dict[int, dict] = {}
-    p = _manifest_path(index_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            for line in f:
-                row = json.loads(line)
-                out[row["shard"]] = row
-    return out
+    """Batch-build shard rows keyed by shard; the last row per shard wins."""
+    return {r["shard"]: r for r in manifest_rows(index_dir) if "shard" in r}
+
+
+def append_manifest(index_dir: str, row: dict) -> None:
+    """Append one row, first dropping a torn final line left by a killed
+    writer (so it never becomes a malformed line in the middle)."""
+    path = _manifest_path(index_dir)
+    _rows, size = _scan_manifest(path)
+    with open(path, "a+b") as f:
+        f.truncate(size)
+        f.seek(max(size - 1, 0))
+        sep = b"\n" if size and f.read(1) != b"\n" else b""
+        f.write(sep + json.dumps(row).encode() + b"\n")
+
+
+def write_meta(index_dir: str, meta: dict) -> None:
+    """Publish ``meta.json`` atomically (temp file + ``os.replace``): a
+    kill mid-write leaves the previous meta, never a truncated one."""
+    path = os.path.join(index_dir, "meta.json")
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.replace(tmp, path)
 
 
 def write_index(
@@ -354,8 +350,6 @@ def write_index(
     blob at build time (explicit compaction); the default leaves them
     segmented and lets the query path read-merge.
     """
-    from .postings import build_postings
-
     spark = documents.sparkSession
     os.makedirs(index_dir, exist_ok=True)
 
@@ -550,8 +544,7 @@ def write_index(
                     n_postings=int(stats["n_postings"] or 0),
                     blob_bytes=int(stats["blob_bytes"] or 0),
                 )
-            with open(_manifest_path(index_dir), "a") as f:
-                f.write(json.dumps(entry) + "\n")
+            append_manifest(index_dir, entry)
         # lexicon derives from final segments; hot terms may have one row
         # per salt, so aggregate (exact: a doc lives in exactly one salt)
         seg_all = spark.read.option("basePath", os.path.join(index_dir, "segments")).parquet(
@@ -582,8 +575,7 @@ def write_index(
         "fingerprint": fp,
         "avgdl": avgdl,
     }
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_meta(index_dir, meta)
     # Everything (doc store, segments, lexicon, manifest) is durable now:
     # release the doc-id assignment's persisted intermediates so repeated
     # builds in one app don't accumulate executor storage (ADVICE r2).
@@ -613,28 +605,34 @@ class LruCache:
     """Minimal LRU (reference: util/buffer.go:13-49, 100k entries). No TTL —
     entries are keyed to an immutable index handle, so they never go stale
     (an improvement over the reference's 60 s TTL, which exists only
-    because its store mutates in place)."""
+    because its store mutates in place). Thread-safe: every query on a
+    ``DiskIndex`` shares its caches, and another thread's eviction in the
+    middle of an unlocked ``get`` or ``put`` raises ``KeyError``."""
 
     def __init__(self, maxsize: int = 100_000) -> None:
         from collections import OrderedDict
 
         self._d: "OrderedDict[object, object]" = OrderedDict()
         self._maxsize = maxsize
+        self._lock = threading.Lock()
 
     def __contains__(self, k) -> bool:
-        return k in self._d
+        with self._lock:
+            return k in self._d
 
     def get(self, k):
-        if k not in self._d:
-            return None
-        self._d.move_to_end(k)
-        return self._d[k]
+        with self._lock:
+            if k not in self._d:
+                return None
+            self._d.move_to_end(k)
+            return self._d[k]
 
     def put(self, k, v) -> None:
-        self._d[k] = v
-        self._d.move_to_end(k)
-        if len(self._d) > self._maxsize:
-            self._d.popitem(last=False)
+        with self._lock:
+            self._d[k] = v
+            self._d.move_to_end(k)
+            if len(self._d) > self._maxsize:
+                self._d.popitem(last=False)
 
 
 def _lexicon_dir(index_dir: str) -> str:
@@ -839,8 +837,9 @@ def index_stats(di: DiskIndex) -> DataFrame:
     if complete and all("n_postings" in m for m in complete):
         n_postings = sum(int(m["n_postings"]) for m in complete)
         blob_bytes = sum(int(m.get("blob_bytes", 0)) for m in complete)
-    else:  # index built with collect_stats=False: same number via the
-        # lexicon (df is salt-aggregated, a doc lives in exactly one salt)
+    else:  # collect_stats=False build, or a streaming index (generation
+        # rows, no shard rows): same number via the lexicon (df is
+        # salt-aggregated, a doc lives in exactly one salt)
         n_postings = int(
             di.lexicon.agg(F.sum("df").alias("s")).collect()[0]["s"] or 0
         )

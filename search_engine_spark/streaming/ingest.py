@@ -31,7 +31,6 @@ manifest rather than incremented (no double counting).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -39,12 +38,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.postings import build_postings
 from ..operators.segments import (
+    append_manifest,
     build_segments,
     corpus_fingerprint,
+    manifest_rows,
     merge_salted,
-    _manifest_path,
+    write_meta,
 )
 
 DOCUMENTS_SCHEMA = (
@@ -69,13 +69,8 @@ def stream_documents(
 
 def _write_meta(index_dir: str, n_buckets: int) -> None:
     """Recompute meta.json from the generation manifest (idempotent)."""
-    gens: dict[int, dict] = {}
-    if os.path.exists(_manifest_path(index_dir)):
-        with open(_manifest_path(index_dir)) as f:
-            for line in f:
-                row = json.loads(line)
-                if "gen" in row:
-                    gens[row["gen"]] = row  # last write per gen wins
+    # last write per gen wins
+    gens = {r["gen"]: r for r in manifest_rows(index_dir) if "gen" in r}
     n_docs = sum(g["n_docs"] for g in gens.values())
     meta = {
         "n_docs": n_docs,
@@ -85,8 +80,7 @@ def _write_meta(index_dir: str, n_buckets: int) -> None:
             g.get("fingerprint", "?") for _, g in sorted(gens.items())
         ),
     }
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_meta(index_dir, meta)
 
 
 def _check_doc_store_layout(index_dir: str) -> None:
@@ -175,21 +169,18 @@ def ingest_batch(
     )
     stats = obs.get
     os.makedirs(index_dir, exist_ok=True)
-    with open(_manifest_path(index_dir), "a") as f:
-        f.write(
-            json.dumps(
-                {
-                    "gen": batch_id,
-                    "status": "complete",
-                    "fingerprint": fp,
-                    "n_docs": n,
-                    "n_terms": stats["n_terms"],
-                    "n_postings": int(stats["n_postings"] or 0),
-                    "wall_ms": int((time.time() - t0) * 1000),
-                }
-            )
-            + "\n"
-        )
+    append_manifest(
+        index_dir,
+        {
+            "gen": batch_id,
+            "status": "complete",
+            "fingerprint": fp,
+            "n_docs": n,
+            "n_terms": stats["n_terms"],
+            "n_postings": int(stats["n_postings"] or 0),
+            "wall_ms": int((time.time() - t0) * 1000),
+        },
+    )
     _write_meta(index_dir, n_buckets)
     _write_gen_lexicon(spark, index_dir)
     batch_df.unpersist()
@@ -220,16 +211,11 @@ def _heal_compaction(index_dir: str) -> None:
     documented recovery window)."""
     import shutil
 
-    p = _manifest_path(index_dir)
-    if not os.path.exists(p):
-        return
     folded: set[int] = set()
-    with open(p) as f:
-        for line in f:
-            row = json.loads(line)
-            if "compact" in row:
-                folded.update(row.get("folded", []))
-                folded.discard(row["compact"])  # a base later re-folded
+    for row in manifest_rows(index_dir):
+        if "compact" in row:
+            folded.update(row.get("folded", []))
+            folded.discard(row["compact"])  # a base later re-folded
     seg_root = os.path.join(index_dir, "segments")
     for g in folded:
         d = os.path.join(seg_root, f"gen={g}")
@@ -364,8 +350,7 @@ def compact_index(
     merged.write.mode("overwrite").parquet(os.path.join(tmp, f"gen={base}"))
     os.rename(os.path.join(tmp, f"gen={base}"), os.path.join(seg_root, f"gen={base}"))
     shutil.rmtree(tmp, ignore_errors=True)
-    with open(_manifest_path(index_dir), "a") as f:
-        f.write(json.dumps({"compact": base, "folded": fold}) + "\n")
+    append_manifest(index_dir, {"compact": base, "folded": fold})
     for g in fold:
         shutil.rmtree(os.path.join(seg_root, f"gen={g}"), ignore_errors=True)
     _write_gen_lexicon(spark, index_dir)

@@ -97,38 +97,52 @@ def test_compression_beats_absolute():
     assert len(blob) < 1000 * (1 + 1 + 1 + 1) + 50
 
 
-def test_packed_build_segments_byte_identical(spark):
-    """The packed shuffle path (pos_blob binary) must produce blobs
-    byte-identical to the list path."""
+def test_packed_build_segments_byte_identical(spark, sf_dir):
+    """Every blob of the packed build (map-side pos_blob, spliced in the
+    encode kernel) is byte-identical to the reference encoder,
+    ``codec.encode_bucket``, applied to that term's postings in the
+    pure-Python oracle — per salt for the hot (salted) terms."""
+    from search_engine_spark.functions.tokenizer import id_to_term
+    from search_engine_spark.functions.xxhash import xxhash64_long
     from search_engine_spark.operators.postings import (
         build_documents_from_testdata,
-        build_postings,
         build_postings_packed,
     )
     from search_engine_spark.operators.segments import build_segments
+    from tests.test_search_e2e import oracle_of
 
-    docs = build_documents_from_testdata(spark, "/root/testdata/sf0.001")
-    a = build_segments(build_postings(docs), n_buckets=8, n_salts=2, salt_threshold=50)
-    b = build_segments(
-        build_postings_packed(docs), n_buckets=8, n_salts=2, salt_threshold=50
-    )
+    n_salts, threshold = 2, 50
+    docs = build_documents_from_testdata(spark, sf_dir).cache()
+    oracle = oracle_of(docs)
+    rows = build_segments(
+        build_postings_packed(docs), n_buckets=8, n_salts=n_salts, salt_threshold=threshold
+    ).collect()
 
-    def key(rows):
-        return {
-            (r.term_id, r.salt): (
-                bytes(r.blob),
-                tuple(r.block_last),
-                tuple(r.block_max_tf),
-                tuple(r.block_offsets),
-                r.df,
-                r.ctf,
-            )
-            for r in rows
-        }
+    def salt_of(term: str, doc_id: int) -> int:
+        hot = len(oracle.postings[term]) > threshold
+        return xxhash64_long(doc_id) % n_salts if hot else 0
 
-    ka, kb = key(a.collect()), key(b.collect())
-    assert set(ka) == set(kb)
-    assert ka == kb
+    expected_keys = {
+        (term, salt_of(term, d)) for term, pl in oracle.postings.items() for d in pl
+    }
+    assert {(id_to_term(r.term_id), r.salt) for r in rows} == expected_keys
+    for r in rows:
+        term = id_to_term(r.term_id)
+        pl = oracle.postings[term]
+        plist = [pl[d] for d in sorted(pl) if salt_of(term, d) == r.salt]
+        eb = codec.encode_bucket(
+            np.full(len(plist), r.term_id, np.int64),
+            np.array([p.doc_id for p in plist], np.int64),
+            np.array([p.title_end for p in plist], np.int64),
+            np.array([len(p.positions) for p in plist], np.int64),
+            np.array([x for p in plist for x in p.positions], np.int64),
+        )
+        assert bytes(r.blob) == eb.blobs[0], (term, r.salt)
+        assert list(r.block_last) == eb.block_last[0].tolist()
+        assert list(r.block_max_tf) == eb.block_max_tf[0].tolist()
+        assert list(r.block_offsets) == eb.block_offsets[0].tolist()
+        assert (r.df, r.ctf) == (int(eb.dfs[0]), int(eb.ctfs[0]))
+    docs.unpersist()
 
 
 def test_encode_bucket_packed_matches_reference():

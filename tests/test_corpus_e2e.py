@@ -1,14 +1,19 @@
 """E2E over the synthetic source-code corpus (input_hint shape) — exercises
 the HTML parse path, title boosts (R3), CJK bigrams, and deterministic
-doc_id assignment."""
+doc_id assignment. Queries run through both ``search_segments`` routes."""
 
 import pytest
 
 from search_engine_spark.corpus import generate_corpus
 from search_engine_spark.operators.docids import assign_doc_ids
-from search_engine_spark.operators.postings import build_documents_from_corpus, build_index
-from search_engine_spark.operators.search import search
-from search_engine_spark.oracle.reference import OracleIndex
+from search_engine_spark.operators.postings import build_documents_from_corpus
+from tests.test_search_e2e import (
+    ROUTES,
+    assert_rank_identical,
+    build_disk_index,
+    oracle_of,
+    ranked,
+)
 
 N_DOCS = 240
 
@@ -26,14 +31,11 @@ QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def built(spark):
+def built(spark, tmp_path_factory):
     corpus = generate_corpus(spark, N_DOCS, n_partitions=4).cache()
-    docs = build_documents_from_corpus(corpus)
-    idx = build_index(docs)
-    oracle = OracleIndex()
-    for r in docs.select("doc_id", "url", "title", "body").collect():
-        oracle.add_document(r.doc_id, r.url, r.title, r.body)
-    return corpus, idx, oracle
+    docs = build_documents_from_corpus(corpus).cache()
+    di = build_disk_index(spark, docs, str(tmp_path_factory.mktemp("corpus") / "idx"))
+    return corpus, di, oracle_of(docs)
 
 
 def test_corpus_deterministic(spark, built):
@@ -45,16 +47,16 @@ def test_corpus_deterministic(spark, built):
 
 
 def test_html_docs_parsed_titles(built):
-    _, idx, _ = built
-    titled = idx.documents.filter("title != ''").count()
+    _, di, _ = built
+    titled = di.documents.filter("title != ''").count()
     assert titled == N_DOCS // 6  # one lang in 6 is html, all carry <title>
 
 
 def test_docid_assignment_scalable_matches_window(built):
     from pyspark.sql import functions as F
 
-    _, idx, _ = built
-    base = idx.documents.select(F.col("url").alias("u")).repartition(5)
+    _, di, _ = built
+    base = di.documents.select(F.col("url").alias("u")).repartition(5)
     seq = assign_doc_ids(base, key_cols=["u"], scalable=False).select(
         "u", F.col("doc_id").alias("a")
     )
@@ -68,20 +70,18 @@ def test_docid_assignment_scalable_matches_window(built):
 
 @pytest.mark.parametrize("query", QUERIES)
 def test_corpus_rank_identity(built, query):
-    from tests.test_search_e2e import assert_rank_identical
-
-    _, idx, oracle = built
-    got = [(r.doc_id, r.score) for r in search(idx, query).collect()]
+    _, di, oracle = built
     exp = oracle.search(query)
-    assert_rank_identical(got, exp)
+    for route in ROUTES:
+        assert_rank_identical(ranked(di, query, route), exp)
 
 
 def test_sha256_invariant_corpus(built):
     import hashlib
 
-    corpus, idx, _ = built
-    # invariant survives the parse/docid pipeline end-to-end
-    rows = idx.documents.limit(50).collect()
+    corpus, di, _ = built
+    # invariant survives the parse/docid pipeline and the doc-store write
+    rows = di.documents.limit(50).collect()
     src = {r.content_sha256 for r in corpus.select("content_sha256").collect()}
     for r in rows:
         assert r.content_sha256 in src

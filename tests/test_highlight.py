@@ -16,11 +16,9 @@ from search_engine_spark.operators.highlight import (
     merge_positions,
     select_window,
 )
-from search_engine_spark.operators.postings import (
-    build_documents_from_testdata,
-    build_index,
-)
+from search_engine_spark.operators.postings import build_documents_from_testdata
 from search_engine_spark.oracle.reference import OracleIndex
+from tests.test_search_e2e import build_disk_index, oracle_of
 
 
 def test_interval_merge_matches_go_loop():
@@ -57,19 +55,16 @@ def test_wide_span_keeps_all_intervals():
 
 
 @pytest.fixture(scope="module")
-def built(spark, sf_dir):
-    docs = build_documents_from_testdata(spark, sf_dir)
-    idx = build_index(docs)
-    oracle = OracleIndex()
-    for r in docs.select("doc_id", "url", "title", "body").collect():
-        oracle.add_document(r.doc_id, r.url, r.title, r.body)
-    return idx, oracle
+def built(spark, sf_dir, tmp_path_factory):
+    docs = build_documents_from_testdata(spark, sf_dir).cache()
+    di = build_disk_index(spark, docs, str(tmp_path_factory.mktemp("hl") / "idx"))
+    return di, oracle_of(docs)
 
 
 @pytest.mark.parametrize("query", ["the", "table scan", "spark", "dup"])
 def test_enrich_matches_oracle(built, query):
-    idx, oracle = built
-    rows = enrich_topk(idx, query, k=10).collect()
+    di, oracle = built
+    rows = enrich_topk(di, query, k=10).collect()
     exp_ranked = oracle.search(query)[:10]
     assert [r.doc_id for r in rows] == [d for d, _ in exp_ranked]
     first_kw = query.split()[0]
@@ -89,8 +84,8 @@ _DOC_CACHE: dict[int, tuple[str, str]] = {}
 
 def _doc_text(built, doc_id: int) -> tuple[str, str]:
     if not _DOC_CACHE:
-        idx, _ = built
-        for row in idx.documents.select("doc_id", "title", "body").collect():
+        di, _ = built
+        for row in di.documents.select("doc_id", "title", "body").collect():
             _DOC_CACHE[row.doc_id] = (row.title or "", row.body or "")
     return _DOC_CACHE[doc_id]
 

@@ -1,6 +1,7 @@
 """Segment index tests: build + salted merge equivalence, disk
-round-trip, manifest resume, WAND equivalence, rank-identity of the
-blob path vs the DataFrame path."""
+round-trip, manifest resume and torn-manifest recovery, WAND
+equivalence, rank-identity of the blob path vs the pure-Python
+reference (``oracle.reference.OracleIndex``)."""
 
 import json
 import os
@@ -10,14 +11,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from search_engine_spark.functions.tokenizer import term_to_id
+from search_engine_spark.functions.tokenizer import id_to_term
 from search_engine_spark.operators import wand
 from search_engine_spark.operators.postings import (
     build_documents_from_testdata,
-    build_index,
-    build_postings,
+    build_postings_packed,
 )
-from search_engine_spark.operators.search import search
 from search_engine_spark.operators.segments import (
     build_segments,
     corpus_fingerprint,
@@ -26,6 +25,7 @@ from search_engine_spark.operators.segments import (
     read_manifest,
     write_index,
 )
+from tests.test_search_e2e import assert_rank_identical, oracle_of
 
 QUERIES = ["table", "spark", "table spark", "table -dup", "dup", "spark site:src3"]
 
@@ -38,50 +38,53 @@ def docs(spark, sf_dir):
 
 
 @pytest.fixture(scope="module")
+def oracle(docs):
+    return oracle_of(docs)
+
+
+@pytest.fixture(scope="module")
 def index_dir(tmp_path_factory, docs):
     path = str(tmp_path_factory.mktemp("index"))
     write_index(docs, path, n_buckets=16, n_shards=2, n_salts=4, salt_threshold=50)
     return path
 
 
-def test_segments_match_postings(spark, docs):
-    """Segment blobs decode back to exactly the uncompressed postings."""
-    postings = build_postings(docs).cache()
-    seg = merge_salted(build_segments(postings, n_buckets=8, n_salts=4, salt_threshold=50))
-    rows = {r["term_id"]: r for r in seg.collect()}
-    exp = (
-        postings.groupBy("term_id")
-        .agg(F.count("*").alias("df"), F.sum(F.size("positions")).alias("ctf"))
-        .collect()
-    )
-    assert len(rows) == len(exp)
-    for r in exp:
-        s = rows[r["term_id"]]
-        assert s["df"] == r["df"] and s["ctf"] == r["ctf"]
-    # spot-check one term's full decode against the raw postings
-    tid = max(exp, key=lambda r: r["df"])["term_id"]  # a salted (hot) term
+def _oracle_df_ctf(oracle) -> dict[str, tuple[int, int]]:
+    return {
+        t: (len(pl), sum(len(p.positions) for p in pl.values()))
+        for t, pl in oracle.postings.items()
+    }
+
+
+def test_segments_match_postings(spark, docs, oracle):
+    """Merged segment blobs decode back to exactly the reference postings."""
     from search_engine_spark.functions import codec
 
-    d, te, pc, pos = codec.decode_term_postings(bytes(rows[tid]["blob"]))
-    raw = (
-        postings.filter(F.col("term_id") == tid)
-        .orderBy("doc_id")
-        .select("doc_id", "title_end", "positions")
-        .collect()
+    seg = merge_salted(
+        build_segments(build_postings_packed(docs), n_buckets=8, n_salts=4, salt_threshold=50)
     )
-    assert d.tolist() == [x["doc_id"] for x in raw]
-    assert te.tolist() == [x["title_end"] for x in raw]
-    assert pos.tolist() == [p for x in raw for p in x["positions"]]
-    postings.unpersist()
+    rows = {id_to_term(r["term_id"]): r for r in seg.collect()}
+    exp = _oracle_df_ctf(oracle)
+    assert len(rows) == len(exp)
+    for term, (df, ctf) in exp.items():
+        assert (rows[term]["df"], rows[term]["ctf"]) == (df, ctf), term
+    # full decode of the hottest (salted, then merged) term and a rare one
+    hot = max(exp, key=lambda t: exp[t][0])
+    rare = min(exp, key=lambda t: exp[t][0])
+    for term in (hot, rare):
+        d, te, pc, pos = codec.decode_term_postings(bytes(rows[term]["blob"]))
+        plist = [oracle.postings[term][k] for k in sorted(oracle.postings[term])]
+        assert d.tolist() == [p.doc_id for p in plist]
+        assert te.tolist() == [p.title_end for p in plist]
+        assert pc.tolist() == [len(p.positions) for p in plist]
+        assert pos.tolist() == [x for p in plist for x in p.positions]
 
 
-def test_disk_roundtrip_and_lexicon(spark, index_dir, docs):
+def test_disk_roundtrip_and_lexicon(spark, index_dir, docs, oracle):
     di = load_index(spark, index_dir)
     assert di.meta.n_docs == docs.count()
-    lex = {r["term"]: r["df"] for r in di.lexicon.collect()}
-    idx = build_index(docs, cache=False)
-    exp = {r["term"]: r["df"] for r in idx.lexicon.collect()}
-    assert lex == exp
+    lex = {r["term"]: (r["df"], r["ctf"]) for r in di.lexicon.collect()}
+    assert lex == _oracle_df_ctf(oracle)
 
 
 def _rounded_order(rows):
@@ -92,17 +95,11 @@ def _rounded_order(rows):
 
 
 @pytest.mark.parametrize("query", QUERIES)
-def test_blob_search_rank_identical(spark, index_dir, docs, query):
-    """search_segments (compressed blob path) == search (DataFrame path)."""
+def test_blob_search_rank_identical(spark, index_dir, oracle, query):
+    """search_segments (compressed blob path) == the reference searcher."""
     di = load_index(spark, index_dir)
-    idx = build_index(docs)
-    ra = wand.search_segments(di, query).collect()
-    rb = search(idx, query).collect()
-    assert _rounded_order(ra) == _rounded_order(rb)
-    sa = {r["doc_id"]: r["score"] for r in ra}
-    sb = {r["doc_id"]: r["score"] for r in rb}
-    for d in sa:
-        assert abs(sa[d] - sb[d]) < 1e-9
+    got = [(r.doc_id, r.score) for r in wand.search_segments(di, query).collect()]
+    assert_rank_identical(got, oracle.search(query))
 
 
 def test_wand_equals_exhaustive(spark, index_dir):
@@ -123,7 +120,7 @@ def test_wand_prunes_blocks(spark, index_dir):
     assert st["blocks_decoded"] <= st["blocks_total"]
 
 
-def test_resume_skips_completed_shards(spark, docs, tmp_path):
+def test_resume_skips_completed_shards(spark, docs, oracle, tmp_path):
     path = str(tmp_path / "idx")
     write_index(docs, path, n_buckets=8, n_shards=2, n_salts=2, salt_threshold=50)
     m1 = read_manifest(path)
@@ -144,10 +141,55 @@ def test_resume_skips_completed_shards(spark, docs, tmp_path):
     assert set(m2) == {0, 1}
     # and the resumed index still answers queries identically
     di = load_index(spark, path)
-    idx = build_index(docs)
-    a = wand.search_segments(di, "table").collect()
-    b = search(idx, "table").collect()
-    assert _rounded_order(a) == _rounded_order(b)
+    got = [(r.doc_id, r.score) for r in wand.search_segments(di, "table").collect()]
+    assert_rank_identical(got, oracle.search("table"))
+
+
+def test_torn_manifest_line_rebuilds_only_that_shard(spark, docs, oracle, tmp_path):
+    """A build killed mid-append leaves a torn last manifest line: resume
+    treats that shard as not written, rebuilds only it, and the result
+    matches the reference; later appends leave no malformed line."""
+    from search_engine_spark.operators.segments import manifest_rows
+
+    path = str(tmp_path / "idx")
+    kw = dict(n_buckets=8, n_shards=3, n_salts=2, salt_threshold=50)
+    write_index(docs, path, **kw)
+    man = os.path.join(path, "manifest.jsonl")
+    with open(man) as f:
+        lines = f.readlines()
+    assert len(lines) == 3
+    torn_shard = json.loads(lines[-1])["shard"]
+    with open(man, "w") as f:
+        f.writelines(lines[:-1])
+        f.write(lines[-1][: len(lines[-1]) // 2])  # cut mid-JSON, no newline
+    assert set(read_manifest(path)) == {0, 1, 2} - {torn_shard}
+
+    def success_mtime(shard: int) -> float:
+        return os.path.getmtime(os.path.join(path, "segments", f"shard={shard}", "_SUCCESS"))
+
+    before = {s: success_mtime(s) for s in range(3)}
+    write_index(docs, path, **kw)
+    for s in range(3):
+        if s == torn_shard:
+            assert success_mtime(s) != before[s], "torn shard must be rebuilt"
+        else:
+            assert success_mtime(s) == before[s], f"shard {s} must not be rebuilt"
+    rows = manifest_rows(path)  # parses every line: the torn tail is gone
+    assert [r["shard"] for r in rows] == [json.loads(x)["shard"] for x in lines]
+    di = load_index(spark, path)
+    for q in ["table", "table spark"]:
+        got = [(r.doc_id, r.score) for r in wand.search_segments(di, q).collect()]
+        assert_rank_identical(got, oracle.search(q))
+
+
+def test_manifest_malformed_middle_line_raises(tmp_path):
+    """Only the FINAL line may be torn; damage anywhere else is corruption."""
+    path = str(tmp_path)
+    with open(os.path.join(path, "manifest.jsonl"), "w") as f:
+        f.write('{"shard": 0, "status": "complete"}\n{"shard": 1, "sta\n')
+        f.write('{"shard": 2, "status": "complete"}\n')
+    with pytest.raises(ValueError, match="malformed manifest line 2"):
+        read_manifest(path)
 
 
 def test_fingerprint_invalidates_on_input_change(spark, docs, tmp_path):
@@ -290,3 +332,39 @@ def test_index_stats_without_manifest_stats(spark, docs, tmp_path):
     assert row.n_postings == sdf
     assert row.blob_bytes == 0
     assert row.n_docs == docs.count()
+
+
+def test_lru_cache_thread_safe():
+    """Concurrent queries on one DiskIndex share its LRUs: hits racing
+    evictions from other threads must never raise (Spark-free)."""
+    import sys
+    import threading
+
+    from search_engine_spark.operators.segments import LruCache
+
+    cache = LruCache(maxsize=8)
+    errors: list[Exception] = []
+
+    def hammer(seed: int) -> None:
+        try:
+            for i in range(10000):  # 9 keys over 8 slots: every put evicts
+                k = (seed * 7 + i) % 9
+                cache.put(k, i)
+                cache.get((k + 3) % 9)
+                (k + 5) % 9 in cache
+        except Exception as e:  # noqa: BLE001 - a thread's error is reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(cache._d) == 8

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import build_documents_from_testdata
-from search_engine_spark.operators.segments import load_index, write_index
+from search_engine_spark.operators.segments import index_stats, load_index, write_index
 from search_engine_spark.operators.wand import search_segments
 from search_engine_spark.streaming.ingest import (
     compact_index,
@@ -40,6 +40,13 @@ def built(spark, sf_dir, tmp_root):
     batch_dir = os.path.join(tmp_root, "batch_index")
     write_index(docs, batch_dir, n_buckets=8, n_shards=1, n_salts=2)
     return stream_dir, batch_dir
+
+
+_STATS_COLS = ["n_docs", "n_terms", "n_postings"]
+
+
+def _stats(spark, index_dir):
+    return index_stats(load_index(spark, index_dir)).select(*_STATS_COLS).collect()[0]
 
 
 def _results(spark, index_dir, query):
@@ -82,6 +89,16 @@ def test_compaction_preserves_results(spark, built):
     assert seg.groupBy("term_id").count().filter(F.col("count") > 1).count() == 0
     for query in QUERIES:
         assert _results(spark, compacted, query) == _results(spark, batch_dir, query)
+    # the manifest now also holds a compaction record
+    assert _stats(spark, compacted) == _stats(spark, batch_dir)
+
+
+def test_index_stats_streaming_equals_batch(spark, built):
+    """index_stats reads the manifest's batch shard rows; a streaming
+    index has generation rows instead and must fall back to the lexicon,
+    giving the batch index's corpus gauges."""
+    stream_dir, batch_dir = built
+    assert _stats(spark, stream_dir) == _stats(spark, batch_dir)
 
 
 def test_replayed_batch_is_idempotent(spark, built, sf_dir):

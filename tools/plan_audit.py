@@ -18,12 +18,9 @@ def main() -> None:
     from search_engine_spark.functions.tokenizer import term_to_id
     from search_engine_spark.functions.xxhash import bucket_of_term
     from search_engine_spark.operators import events as E
-    from search_engine_spark.operators.postings import (
-        build_documents_from_testdata,
-        build_index,
-    )
-    from search_engine_spark.operators.search import search
+    from search_engine_spark.operators.postings import build_documents_from_testdata
     from search_engine_spark.operators.segments import load_index, write_index
+    from search_engine_spark.operators.wand import search_segments
     from search_engine_spark.session import get_spark
 
     spark = get_spark(master="local[4]", shuffle_partitions=4)
@@ -45,8 +42,22 @@ def main() -> None:
             F.col("bucket").isin([b]) & F.col("term_id").isin([tid])
         ).select("term_id", "df", "blob"),
     )
-    idx = build_index(docs)
-    cap("search DataFrame path", search(idx, "table scan"))
+    # the executor route collects its plans inside the call (df metadata
+    # scan, candidate decode -> intersect -> TakeOrdered, winners'
+    # positions decode): print each one as it is collected
+    frame = type(di.segments)  # the session's concrete DataFrame class
+    collect = frame.collect
+    step = iter(range(1, 10))
+
+    def explain_then_collect(df):
+        cap(f"search_segments executor route, job {next(step)}", df)
+        return collect(df)
+
+    frame.collect = explain_then_collect
+    try:
+        search_segments(di, "table scan", max_driver_postings=0)
+    finally:
+        frame.collect = collect
     cap(
         "events hourly agg",
         E.hourly_event_stats(spark.read.parquet(f"{sf_dir}/events.parquet")),
