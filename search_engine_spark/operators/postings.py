@@ -21,12 +21,9 @@ Schemas (FIXTURES.md §2):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.tokenizer import ids_to_terms
 from .docids import assign_doc_ids
 from .parse import parse_html_documents
 
@@ -100,7 +97,16 @@ def build_postings_packed(documents: DataFrame, with_title: bool = True) -> Data
     )
 
 
-@F.pandas_udf(T.StringType())
-def _term_str(term_id: pd.Series) -> pd.Series:
-    """term_id -> 2-char term string (lexicon cardinality only)."""
-    return ids_to_terms(term_id.to_numpy())
+def term_str_expr(term_id: F.Column) -> F.Column:
+    """term_id -> 2-char term string as a JVM column expression (no
+    Python worker): the two 21-bit code points become four hex digits
+    each and decode as UTF-16BE. Exact for every indexed character
+    (``[一-龥A-Za-z0-9]``), all in the Basic Multilingual Plane; equal to
+    ``tokenizer.ids_to_terms`` there."""
+
+    def _hex4(cp: F.Column) -> F.Column:
+        return F.lpad(F.hex(cp), 4, "0")
+
+    hi = F.shiftright(term_id, 21).bitwiseAND(0x1FFFFF)
+    lo = term_id.bitwiseAND(0x1FFFFF)
+    return F.decode(F.unhex(F.concat(_hex4(hi), _hex4(lo))), "UTF-16BE")

@@ -111,11 +111,20 @@ def _encode_kernel_packed(table: pa.Table) -> pa.Table:
     )
 
 
+def may_salt(salt_threshold: int, n_docs: int) -> bool:
+    """Whether any term can be hot (df > ``salt_threshold``) in a build
+    over ``n_docs`` documents. No term's df exceeds the doc count, so at
+    ``salt_threshold >= n_docs`` every term has salt 0 and is one row."""
+    return salt_threshold < n_docs
+
+
 def build_segments(
     postings: DataFrame,
     n_buckets: int = 64,
     n_salts: int = 8,
     salt_threshold: int = 250_000,
+    *,
+    n_docs: int,
 ) -> DataFrame:
     """packed postings -> compressed per-term segment rows.
 
@@ -127,20 +136,30 @@ def build_segments(
 
     Input is ``postings.build_postings_packed`` output: positions travel
     the shuffle as packed bytes and the kernel splices them.
+
+    ``n_docs`` is the doc count of ``postings`` and bounds every term's
+    df. Every present term has df >= 1, so a threshold below 1 makes
+    every term hot, and one at or above ``n_docs`` makes none hot
+    (``may_salt``): in both cases the hot set is exact without the
+    df-count exchange. Between the two the count re-reads ``postings``.
     """
-    df_per_term = postings.groupBy("term_id").agg(F.count("*").alias("_df"))
-    hot = df_per_term.filter(F.col("_df") > salt_threshold).select("term_id")
-    salted = (
-        postings.join(F.broadcast(hot.withColumn("_hot", F.lit(True))), "term_id", "left")
-        .withColumn("bucket", F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)).cast("int"))
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("_hot").isNotNull(),
-                F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).cast("int"),
-            ).otherwise(F.lit(0)),
+    doc_salt = F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).cast("int")
+    if not may_salt(salt_threshold, n_docs):
+        salted = postings.withColumn("salt", F.lit(0))
+    elif salt_threshold < 1:
+        salted = postings.withColumn("salt", doc_salt)
+    else:
+        df_per_term = postings.groupBy("term_id").agg(F.count("*").alias("_df"))
+        hot = df_per_term.filter(F.col("_df") > salt_threshold).select("term_id")
+        salted = (
+            postings.join(F.broadcast(hot.withColumn("_hot", F.lit(True))), "term_id", "left")
+            .withColumn(
+                "salt", F.when(F.col("_hot").isNotNull(), doc_salt).otherwise(F.lit(0))
+            )
+            .drop("_hot")
         )
-        .drop("_hot")
+    salted = salted.withColumn(
+        "bucket", F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)).cast("int")
     )
     return salted.groupBy("bucket", "salt").applyInArrow(
         _encode_kernel_packed, SEGMENT_SCHEMA
@@ -346,6 +365,13 @@ def write_index(
     manifest row is complete with a matching fingerprint is skipped on
     re-run (kill-and-resume without recomputation).
 
+    The pending shards share ONE encode exchange and its tokenize pass
+    (a second tokenize feeds the df count when ``salt_threshold`` lies
+    between 1 and the doc count, see ``build_segments``); only each
+    shard's layout shuffle, write and manifest row are its own. A kill
+    during the shared encode therefore loses the in-flight work of every
+    pending shard, while completed shards stay skipped.
+
     ``merge_hot=True`` fuses each hot term's salted sub-segments into one
     blob at build time (explicit compaction); the default leaves them
     segmented and lets the query path read-merge.
@@ -424,16 +450,30 @@ def write_index(
         s: m for s, m in read_manifest(index_dir).items()
         if m.get("status") == "complete" and m.get("fingerprint") == fp
     }
+    pending = [s for s in range(n_shards) if s not in done]
+
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation
 
     from .postings import build_postings_packed
 
-    postings = build_postings_packed(docs, with_title=with_title).withColumn(
-        "_bucket", F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)).cast("int")
-    )
+    # ONE tokenize pass feeds the encode of every pending shard. The shard
+    # of a posting is known only after tokenizing (it is a hash of the
+    # term), so a resumed build filters the tokenizer's output to the
+    # pending shards' buckets before the encode exchange.
+    postings = build_postings_packed(docs, with_title=with_title)
+    if len(pending) < n_shards:
+        shard_of = F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)) % n_shards
+        postings = postings.filter(shard_of.isin(pending))
     # NOT cached: the map-side tokenize recomputes in ~seconds, while
     # caching 10^7+ list-column rows costs far more than the recompute
     # (measured 21.5 s to fill vs 2.7 s to recompute at 320k docs) and
     # reading the row-format cache back is slower than the Arrow pipeline.
+    # Re-measured for packed rows on the df-count path (320k docs,
+    # n_shards=2, salt_threshold n_docs//8, local[4], 4 GB heap): caching
+    # them lost 4 of 5 alternating builds, median 49.3 s vs 46.6 s. So a
+    # threshold between 1 and n_docs still tokenizes twice: once for the
+    # count, once for the encode.
     _mark("postings plan")
 
     # The encode shuffle must be partitioned by DATA VOLUME, not core
@@ -476,54 +516,52 @@ def write_index(
     # low open-cost so many small files pack densely instead of inflating
     # the split count on tiny corpora
     spark.conf.set("spark.sql.files.openCostInBytes", str(256 << 10))
+    # ONE encode exchange for every pending shard
+    encoded = build_segments(postings, n_buckets, n_salts, salt_threshold, n_docs=n_docs)
+    if len(pending) > 1 or merge_hot:
+        # each shard's write (and merge_salted, which refers to its input
+        # three times) reads the encoded rows: compact, already-compressed
+        # blobs, cheap to keep; released in the finally block
+        encoded = encoded.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        for shard in range(n_shards):
-            if shard in done:
-                continue
+        # Layout shuffle before each write: the encode runs WIDE (hundreds
+        # of partitions — see the conf block above), but a point-lookup
+        # query pays a parquet footer read per segment FILE (measured: 256
+        # files pushed query p50 from 25 ms to 230 ms). Re-shuffle the
+        # blobs into a few files keyed by CONTIGUOUS bucket ranges, sorted
+        # by (bucket, term_id), so bucket-pruned fetches touch one file
+        # and row-group/page stats stay tight. At real scale this becomes
+        # a bucketed table (bucketBy) instead.
+        n_files = max(8, min(32, n_buckets))
+        fid = F.expr(f"int(bucket * {n_files} / {n_buckets})")
+        for shard in pending:
             t0 = time.time()
+            # the first pending shard's jobs also run the shared encode
             _phase(f"shard {shard} encode")
-            part = postings.filter(F.col("_bucket") % n_shards == shard).drop("_bucket")
-            encoded = build_segments(part, n_buckets, n_salts, salt_threshold)
-            # Layout shuffle before the write: the encode runs WIDE
-            # (hundreds of partitions — see the conf block above), but a
-            # point-lookup query pays a parquet footer read per segment
-            # FILE (measured: 256 files pushed query p50 from 25 ms to
-            # 230 ms). Re-shuffle the (compact, already-compressed) blobs
-            # into a few files keyed by CONTIGUOUS bucket ranges, sorted
-            # by (bucket, term_id), so bucket-pruned fetches touch one
-            # file and row-group/page stats stay tight. At real scale this
-            # becomes a bucketed table (bucketBy) instead.
-            n_files = max(8, min(32, n_buckets))
-            fid = F.expr(f"int(bucket * {n_files} / {n_buckets})")
-
-            def _layout(df: DataFrame) -> DataFrame:
-                return df.repartition(n_files, fid).sortWithinPartitions(
-                    "bucket", "term_id"
-                )
-
-            out = os.path.join(index_dir, "segments", f"shard={shard}")
+            seg = encoded.filter(F.col("bucket") % n_shards == shard)
+            # Default: salted sub-segments stay on disk as-is (Lucene-style
+            # — indexes need not be fully fused). With this engine's bigram
+            # vocabulary (~4k ASCII pairs), at corpus scale EVERY term is
+            # hot, and fusing a term's sub-segments is a single task of
+            # O(df) — the one non-parallelizable step. The query path
+            # read-merges a term's parts at fetch (LRU-cached), so skipping
+            # the fuse trades a per-term constant at query time for a fully
+            # parallel build. merge_hot fuses them before the layout, which
+            # applies to the written form.
             if merge_hot:
-                # persist between encode and merge: merge_salted's plan
-                # refers to its input three times (multi-term detection
-                # aggregate + both join sides) — without the persist the
-                # encode kernel runs 3x. Layout applies to the MERGED rows
-                # (the written form), not the pre-merge intermediate.
-                from pyspark import StorageLevel
-
-                encoded = encoded.persist(StorageLevel.MEMORY_AND_DISK)
-                _layout(merge_salted(encoded)).write.mode("overwrite").parquet(out)
-                encoded.unpersist()
-            else:
-                # Default: salted sub-segments stay on disk as-is
-                # (Lucene-style — indexes need not be fully fused). With
-                # this engine's bigram vocabulary (~4k ASCII pairs), at
-                # corpus scale EVERY term is hot, and fusing a term's
-                # sub-segments is a single task of O(df) — the one
-                # non-parallelizable step. The query path read-merges a
-                # term's parts at fetch (LRU-cached), so skipping the fuse
-                # trades a per-term constant at query time for a fully
-                # parallel build.
-                _layout(encoded).write.mode("overwrite").parquet(out)
+                seg = merge_salted(seg)
+            if collect_stats:
+                obs = Observation()  # manifest stats ride the write
+                seg = seg.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n_terms"),
+                    F.sum("df").alias("n_postings"),
+                    F.sum(F.length("blob")).alias("blob_bytes"),
+                )
+            out = os.path.join(index_dir, "segments", f"shard={shard}")
+            seg.repartition(n_files, fid).sortWithinPartitions(
+                "bucket", "term_id"
+            ).write.mode("overwrite").parquet(out)
             _mark(f"shard {shard} segments write")
             entry = {
                 "shard": shard,
@@ -532,13 +570,7 @@ def write_index(
                 "wall_ms": int((time.time() - t0) * 1000),
             }
             if collect_stats:
-                # one extra job per shard — skipped on the fast path, the
-                # resume contract only needs status+fingerprint
-                stats = spark.read.parquet(out).agg(
-                    F.count("*").alias("n_terms"),
-                    F.sum("df").alias("n_postings"),
-                    F.sum(F.length("blob")).alias("blob_bytes"),
-                ).collect()[0]
+                stats = obs.get
                 entry.update(
                     n_terms=stats["n_terms"],
                     n_postings=int(stats["n_postings"] or 0),
@@ -550,17 +582,18 @@ def write_index(
         seg_all = spark.read.option("basePath", os.path.join(index_dir, "segments")).parquet(
             os.path.join(index_dir, "segments")
         )
-        from .postings import _term_str
+        from .postings import term_str_expr
 
         _phase("lexicon")
         lex = (
             seg_all.groupBy("term_id", "bucket")
             .agg(F.sum("df").alias("df"), F.sum("ctf").alias("ctf"))
-            .withColumn("term", _term_str(F.col("term_id")))
+            .withColumn("term", term_str_expr(F.col("term_id")))
         )
         lex.write.mode("overwrite").parquet(os.path.join(index_dir, "lexicon"))
         _mark("lexicon write")
     finally:
+        encoded.unpersist()
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce

@@ -43,6 +43,7 @@ from ..operators.segments import (
     build_segments,
     corpus_fingerprint,
     manifest_rows,
+    may_salt,
     merge_salted,
     write_meta,
 )
@@ -144,14 +145,18 @@ def ingest_batch(
     fp = corpus_fingerprint(batch_df)
     from pyspark import StorageLevel
 
-    # persist between encode and merge — merge_salted references its input
-    # 3x (see write_index); without this the encode kernel runs per branch
     from ..operators.postings import build_postings_packed
 
     encoded = build_segments(
-        build_postings_packed(batch_df), n_buckets, n_salts, salt_threshold
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    seg = merge_salted(encoded)
+        build_postings_packed(batch_df), n_buckets, n_salts, salt_threshold, n_docs=n
+    )
+    if may_salt(salt_threshold, n):
+        # persist between encode and merge — merge_salted references its
+        # input 3x; without this the encode kernel runs per branch
+        encoded = encoded.persist(StorageLevel.MEMORY_AND_DISK)
+        seg = merge_salted(encoded)
+    else:
+        seg = encoded  # every term is one salt-0 row: nothing to merge
     gen_dir = os.path.join(index_dir, "segments", f"gen={batch_id}")
     from pyspark.sql import Observation
 
@@ -245,7 +250,7 @@ def _write_gen_lexicon(spark: SparkSession, index_dir: str) -> None:
     pointer at load (falling back to the legacy flat ``lexicon`` dir)."""
     import shutil
 
-    from ..operators.postings import _term_str
+    from ..operators.postings import term_str_expr
 
     seg_all = spark.read.option(
         "basePath", os.path.join(index_dir, "segments")
@@ -253,7 +258,7 @@ def _write_gen_lexicon(spark: SparkSession, index_dir: str) -> None:
     lex = (
         seg_all.groupBy("term_id", "bucket")
         .agg(F.sum("df").alias("df"), F.sum("ctf").alias("ctf"))
-        .withColumn("term", _term_str(F.col("term_id")))
+        .withColumn("term", term_str_expr(F.col("term_id")))
     )
     versions = sorted(
         int(d.split("_v")[-1])

@@ -101,7 +101,8 @@ def test_packed_build_segments_byte_identical(spark, sf_dir):
     """Every blob of the packed build (map-side pos_blob, spliced in the
     encode kernel) is byte-identical to the reference encoder,
     ``codec.encode_bucket``, applied to that term's postings in the
-    pure-Python oracle — per salt for the hot (salted) terms."""
+    pure-Python oracle — per salt for the hot (salted) terms, both where
+    the hot set needs a df count and where every term is hot."""
     from search_engine_spark.functions.tokenizer import id_to_term
     from search_engine_spark.functions.xxhash import xxhash64_long
     from search_engine_spark.operators.postings import (
@@ -111,37 +112,44 @@ def test_packed_build_segments_byte_identical(spark, sf_dir):
     from search_engine_spark.operators.segments import build_segments
     from tests.test_search_e2e import oracle_of
 
-    n_salts, threshold = 2, 50
+    n_salts = 2
     docs = build_documents_from_testdata(spark, sf_dir).cache()
+    n_docs = docs.count()
     oracle = oracle_of(docs)
-    rows = build_segments(
-        build_postings_packed(docs), n_buckets=8, n_salts=n_salts, salt_threshold=threshold
-    ).collect()
 
-    def salt_of(term: str, doc_id: int) -> int:
+    def salt_of(term: str, doc_id: int, threshold: int) -> int:
         hot = len(oracle.postings[term]) > threshold
         return xxhash64_long(doc_id) % n_salts if hot else 0
 
-    expected_keys = {
-        (term, salt_of(term, d)) for term, pl in oracle.postings.items() for d in pl
-    }
-    assert {(id_to_term(r.term_id), r.salt) for r in rows} == expected_keys
-    for r in rows:
-        term = id_to_term(r.term_id)
-        pl = oracle.postings[term]
-        plist = [pl[d] for d in sorted(pl) if salt_of(term, d) == r.salt]
-        eb = codec.encode_bucket(
-            np.full(len(plist), r.term_id, np.int64),
-            np.array([p.doc_id for p in plist], np.int64),
-            np.array([p.title_end for p in plist], np.int64),
-            np.array([len(p.positions) for p in plist], np.int64),
-            np.array([x for p in plist for x in p.positions], np.int64),
-        )
-        assert bytes(r.blob) == eb.blobs[0], (term, r.salt)
-        assert list(r.block_last) == eb.block_last[0].tolist()
-        assert list(r.block_max_tf) == eb.block_max_tf[0].tolist()
-        assert list(r.block_offsets) == eb.block_offsets[0].tolist()
-        assert (r.df, r.ctf) == (int(eb.dfs[0]), int(eb.ctfs[0]))
+    # 50 takes the df-count path; 0 salts every term without a count
+    for threshold in (50, 0):
+        rows = build_segments(
+            build_postings_packed(docs),
+            n_buckets=8,
+            n_salts=n_salts,
+            salt_threshold=threshold,
+            n_docs=n_docs,
+        ).collect()
+        expected_keys = {
+            (term, salt_of(term, d, threshold)) for term, pl in oracle.postings.items() for d in pl
+        }
+        assert {(id_to_term(r.term_id), r.salt) for r in rows} == expected_keys
+        for r in rows:
+            term = id_to_term(r.term_id)
+            pl = oracle.postings[term]
+            plist = [pl[d] for d in sorted(pl) if salt_of(term, d, threshold) == r.salt]
+            eb = codec.encode_bucket(
+                np.full(len(plist), r.term_id, np.int64),
+                np.array([p.doc_id for p in plist], np.int64),
+                np.array([p.title_end for p in plist], np.int64),
+                np.array([len(p.positions) for p in plist], np.int64),
+                np.array([x for p in plist for x in p.positions], np.int64),
+            )
+            assert bytes(r.blob) == eb.blobs[0], (term, r.salt)
+            assert list(r.block_last) == eb.block_last[0].tolist()
+            assert list(r.block_max_tf) == eb.block_max_tf[0].tolist()
+            assert list(r.block_offsets) == eb.block_offsets[0].tolist()
+            assert (r.df, r.ctf) == (int(eb.dfs[0]), int(eb.ctfs[0]))
     docs.unpersist()
 
 

@@ -3,12 +3,14 @@ round-trip, manifest resume and torn-manifest recovery, WAND
 equivalence, rank-identity of the blob path vs the pure-Python
 reference (``oracle.reference.OracleIndex``)."""
 
+import itertools
 import json
 import os
 import shutil
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.functions.tokenizer import id_to_term
@@ -21,6 +23,7 @@ from search_engine_spark.operators.segments import (
     build_segments,
     corpus_fingerprint,
     load_index,
+    may_salt,
     merge_salted,
     read_manifest,
     write_index,
@@ -61,7 +64,13 @@ def test_segments_match_postings(spark, docs, oracle):
     from search_engine_spark.functions import codec
 
     seg = merge_salted(
-        build_segments(build_postings_packed(docs), n_buckets=8, n_salts=4, salt_threshold=50)
+        build_segments(
+            build_postings_packed(docs),
+            n_buckets=8,
+            n_salts=4,
+            salt_threshold=50,
+            n_docs=docs.count(),
+        )
     )
     rows = {id_to_term(r["term_id"]): r for r in seg.collect()}
     exp = _oracle_df_ctf(oracle)
@@ -368,3 +377,91 @@ def test_lru_cache_thread_safe():
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors[:3]
     assert len(cache._d) == 8
+
+
+def test_write_index_tokenizes_once(spark, docs, tmp_path, monkeypatch):
+    """Every build reads each document into the tokenizer once for the
+    encode of all its shards, whatever the shard count: exactly once when
+    the threshold alone decides the hot set (0 and the default), and once
+    more for the df count at threshold 50; a resumed build too. Each
+    extra shard adds only its layout exchange and its write job (plus one
+    cache fill once shards share the encode), never a tokenize pass."""
+    from search_engine_spark.functions import tokenizer
+
+    sc = spark.sparkContext
+    n_docs = docs.count()
+    rows = sc.accumulator(0)
+    inner = tokenizer.postings_batches_arrow_packed
+
+    def counting(batches, **kw):
+        def tally(it):
+            for b in it:
+                rows.add(b.num_rows)
+                yield b
+
+        return inner(tally(batches), **kw)
+
+    monkeypatch.setattr(tokenizer, "postings_batches_arrow_packed", counting)
+
+    seq = itertools.count()
+
+    def build(path: str, **kw) -> tuple[float, int]:
+        rows.value = 0
+        group = f"tokenize-once-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            write_index(docs, path, n_buckets=8, n_salts=2, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return rows.value / n_docs, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for threshold, expected in ((0, 1), (50, 2), (250_000, 1)):
+        jobs = {}
+        for n_shards in (1, 2, 4):
+            path = str(tmp_path / f"t{threshold}_s{n_shards}")
+            passes, jobs[n_shards] = build(path, n_shards=n_shards, salt_threshold=threshold)
+            assert passes == expected, (threshold, n_shards, passes)
+        for n_shards in (2, 4):
+            assert jobs[n_shards] - jobs[1] <= 2 * (n_shards - 1) + 1, (threshold, jobs)
+
+    # resume: drop shard 1 of a 2-shard build; the rebuild is one pass too
+    path = str(tmp_path / "t0_s2")
+    keep = [r for s, r in read_manifest(path).items() if s == 0]
+    with open(os.path.join(path, "manifest.jsonl"), "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in keep)
+    shutil.rmtree(os.path.join(path, "segments", "shard=1"))
+    passes, _ = build(path, n_shards=2, salt_threshold=0)
+    assert passes == 1
+    assert set(read_manifest(path)) == {0, 1}
+
+
+def test_build_segments_threshold_shortcut_byte_identical(spark, docs):
+    """A threshold at or above the doc count salts nothing: given the doc
+    count, ``build_segments`` skips the df count (no broadcast of a hot
+    set in its plan) and gives rows and blobs byte-identical to the
+    counted path, reached here with a looser bound on the doc count."""
+    n_docs = docs.count()
+    assert not may_salt(n_docs, n_docs) and may_salt(n_docs, n_docs + 1)
+
+    def build(bound: int) -> DataFrame:
+        return build_segments(
+            build_postings_packed(docs), n_buckets=8, n_salts=4,
+            salt_threshold=n_docs, n_docs=bound,
+        )
+
+    def rows(df: DataFrame) -> list[tuple]:
+        return sorted(
+            (r.bucket, r.term_id, r.salt, r.df, r.ctf, r.n_docs, bytes(r.blob),
+             tuple(r.block_last), tuple(r.block_max_tf), tuple(r.block_offsets))
+            for r in df.collect()
+        )
+
+    def plan(df: DataFrame) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    counted, shortcut = build(n_docs + 1), build(n_docs)
+    assert "BroadcastExchange" in plan(counted)
+    assert "BroadcastExchange" not in plan(shortcut)
+    expected = rows(counted)
+    assert expected and all(r[2] == 0 for r in expected)
+    assert rows(shortcut) == expected

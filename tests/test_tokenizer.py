@@ -83,3 +83,26 @@ def test_query_tokens_dedupe_with_positions():
     # accumulating query positions (query "abab": ab@{0,2}, ba@{1})
     q = tokenize_query("abab")
     assert q == [(term_to_id("ab"), [0, 2]), (term_to_id("ba"), [1])]
+
+
+def test_term_str_expr_matches_ids_to_terms(spark):
+    """The lexicon's JVM term-string expression equals the numpy unpack
+    on every pair over all ASCII alnum, sampled CJK and both CJK bounds
+    (280 chars, 78,400 ids)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from search_engine_spark.functions.tokenizer import ids_to_terms
+    from search_engine_spark.operators.postings import term_str_expr
+
+    alnum = [c for c in range(0x30, 0x7B) if chr(c).isascii() and chr(c).isalnum()]
+    cjk = np.linspace(0x4E00, 0x9FA5, 280 - len(alnum)).astype(np.int64).tolist()
+    chars = np.array(alnum + cjk, np.int64)
+    assert len(alnum) == 62 and cjk[0] == 0x4E00 and cjk[-1] == 0x9FA5
+    ids = ((chars[:, None] << 21) | chars[None, :]).ravel()
+    df = spark.createDataFrame(pd.DataFrame({"term_id": ids}))
+    got = df.select("term_id", term_str_expr(F.col("term_id")).alias("term")).toPandas()
+    got = got.sort_values("term_id")
+    order = np.sort(ids)
+    assert got["term_id"].tolist() == order.tolist()
+    assert got["term"].tolist() == ids_to_terms(order).tolist()
