@@ -388,6 +388,9 @@ def write_index(
             print(f"[write_index] {label}: {now - _t[0]:.1f}s", flush=True)
             _t[0] = now
 
+    # the caller's job label, restored when the build ends
+    prev_desc = spark.sparkContext.getLocalProperty("spark.job.description")
+
     def _phase(label: str) -> None:
         # labels jobs in the Spark UI / event log (profiling self-ID)
         spark.sparkContext.setJobDescription(f"write_index:{label}")
@@ -594,6 +597,7 @@ def write_index(
         _mark("lexicon write")
     finally:
         encoded.unpersist()
+        spark.sparkContext.setJobDescription(prev_desc)
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce
@@ -703,6 +707,10 @@ class DiskIndex:
         ).parquet(os.path.join(self.index_dir, "segments"))
         self.segment_cache = LruCache(100_000)
         self.df_cache = LruCache(1_000_000)  # term_id -> df (metadata only)
+        # term_id -> wand._TermMeta: block metadata for the executor top-k
+        # prune setup, ≤ ~100 KB per term (see wand.SMALL_TERM_POSTINGS),
+        # so ≤ ~400 MB even if every entry were a near-limit term
+        self.prune_meta_cache = LruCache(4_096)
         self.site_cache = LruCache(10_000)
         self.site_count_cache = LruCache(100_000)  # site -> doc count (one long)
         self.result_cache = LruCache(10_000)
@@ -710,37 +718,43 @@ class DiskIndex:
         self._dl = None
 
     def clear_caches(self) -> None:
-        """Drop the per-query LRUs (segments, df metadata, site filters,
-        results) so the next query pays the cold fetch path. Load-time
-        state survives: the DataFrame handles, meta, and the dl sidecar
-        (``_dl``) are index-load costs, not per-query costs. Used by
-        bench.py to time COLD queries between reps (ADVICE r2)."""
+        """Drop the per-query LRUs (segments, df and prune metadata, site
+        filters, results) so the next query pays the cold fetch path.
+        Load-time state survives: the DataFrame handles, meta, and the dl
+        sidecar (``_dl``) are index-load costs, not per-query costs. Used
+        by bench.py to time COLD queries between reps (ADVICE r2)."""
         self.segment_cache = LruCache(100_000)
         self.df_cache = LruCache(1_000_000)
+        self.prune_meta_cache = LruCache(4_096)
         self.site_cache = LruCache(10_000)
         self.site_count_cache = LruCache(100_000)
         self.result_cache = LruCache(10_000)
 
     def prime(self, term_ids: list[int] | None = None) -> int:
-        """Prefetch term df metadata into the driver LRU in ONE
-        metadata-only job (verdict r4 #7 — the cold-query floor).
+        """Prefetch term metadata into the driver LRUs at index-load time
+        (verdict r4 #7 — the cold-query floor).
 
-        A cold query pays two Spark jobs: the df metadata scan
-        (``wand._df_of_terms``) and the blob fetch; both are dominated by
-        fixed job overhead at serving latency. Priming moves the first
-        one to index-load time, so a cold query's critical path is the
-        blob fetch alone.
+        A cold search pays two Spark jobs: the term metadata scan
+        (``wand._scan_term_meta``, one job with no shuffle) and the blob
+        fetch; both are dominated by fixed job overhead at serving
+        latency. Priming moves the first one to index-load time, so a
+        cold query's critical path is the blob fetch alone.
+
+        ``term_ids`` routes through that same bucket-pruned scan (ONE
+        job) and fills both the df and the prune-metadata LRUs, so a
+        primed executor top-k also skips its metadata job. Pass the
+        term_ids of the serving query log at a 100-TB lexicon.
 
         ``term_ids=None`` primes the ENTIRE lexicon's (term_id, df)
         pairs — one groupBy over the segment METADATA columns (the
-        parquet reader never touches blob bytes). Viable while the
-        lexicon fits the 1M-entry LRU (sf0.1: ~100k bigrams; the CJK
-        bigram space itself is bounded); at a 100-TB lexicon pass the
-        term_ids of the serving query log instead, which routes through
-        the same bucket-pruned scan as a query. Returns the number of
-        terms primed. Absent terms still miss (only present terms have
-        metadata rows); ``clear_caches`` drops primed state like any
-        other cache."""
+        parquet reader never touches blob bytes), TWO jobs (the
+        aggregate's shuffle map stage, then the collect). It fills the
+        df LRU only: an executor top-k on such a handle still runs the
+        metadata scan once for its terms. Viable while the lexicon fits
+        the 1M-entry LRU (sf0.1: ~100k bigrams; the CJK bigram space
+        itself is bounded). Returns the number of terms primed. Absent
+        terms still miss (only present terms have metadata rows);
+        ``clear_caches`` drops primed state like any other cache."""
         if term_ids is not None:
             from .wand import _df_of_terms
 

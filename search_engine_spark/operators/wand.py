@@ -141,30 +141,104 @@ def _rows_to_segment(tid: int, rs: list) -> TermSegment | None:
     )
 
 
-def _df_of_terms(di: DiskIndex, term_ids: list[int]) -> dict[int, int]:
-    """Per-term df via a bucket-pruned METADATA scan (df column only — the
-    parquet reader never touches the blob bytes), LRU-cached. Absent terms
-    cache as 0."""
-    if not term_ids:
-        return {}
+@dataclass
+class _TermMeta:
+    """Query-independent metadata of one term, folded over its segment
+    rows (salts, generations). ``lo``/``hi``/``bmax`` hold every block of
+    the term, sorted by ``hi``, and are set only for SMALL terms
+    (df ≤ ``SMALL_TERM_POSTINGS``); an absent term has df = 0."""
+
+    df: int
+    max_tf: int = 0  # largest block_max_tf: the term's single-posting bound
+    min_tf: int = 0  # smallest block_max_tf: its weakest block's bound
+    lo: np.ndarray | None = None  # block start, widened (``_block_lo``)
+    hi: np.ndarray | None = None  # block_last
+    bmax: np.ndarray | None = None  # block_max_tf
+
+
+def _block_lo(blast: np.ndarray) -> np.ndarray:
+    """Block doc-range starts of one segment row: the previous block's end
+    + 1. The first block's true start is unknown without a decode, so it
+    widens to 0 (widening only weakens pruning)."""
+    lo = np.empty_like(blast)
+    if blast.size:
+        lo[0] = 0
+        lo[1:] = blast[:-1] + 1
+    return lo
+
+
+def _fold_term_meta(rs: list) -> _TermMeta:
+    """Collected metadata rows of one term -> _TermMeta."""
+    df = sum(int(r["df"]) for r in rs)
+    if df == 0:
+        return _TermMeta(0)
+    max_tf = max(int(r["max_tf"]) for r in rs)
+    min_tf = min(int(r["min_tf"]) for r in rs)
+    if df > SMALL_TERM_POSTINGS:
+        return _TermMeta(df, max_tf, min_tf)
+    his = [np.asarray(r["block_last"], np.int64) for r in rs]
+    lo = np.concatenate([_block_lo(h) for h in his])
+    hi = np.concatenate(his)
+    bmax = np.concatenate([np.asarray(r["block_max_tf"], np.int64) for r in rs])
+    order = np.argsort(hi, kind="mergesort")
+    return _TermMeta(df, max_tf, min_tf, lo[order], hi[order], bmax[order])
+
+
+def _scan_term_meta(di: DiskIndex, term_ids: list[int]) -> dict[int, _TermMeta]:
+    """The ONE metadata job of a cold query: a bucket-pruned, term-filtered
+    collect of per-ROW metadata — df and the block_max_tf extremes, plus
+    the block arrays of rows with df ≤ ``SMALL_TERM_POSTINGS``. No
+    aggregate, hence no shuffle: the driver folds a term's rows itself.
+    The parquet reader never touches blob bytes. Fills ``di.df_cache``
+    and ``di.prune_meta_cache``; absent terms cache as df = 0."""
     from ..functions.xxhash import bucket_of_term
 
-    cache = di.df_cache
-    missing = [t for t in term_ids if t not in cache]
-    if missing:
-        buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in missing})
-        rows = (
-            di.segments.filter(
-                F.col("bucket").isin(buckets) & F.col("term_id").isin(missing)
-            )
-            .groupBy("term_id")
-            .agg(F.sum("df").alias("df"))
-            .collect()
+    buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in term_ids})
+    small = F.col("df") <= SMALL_TERM_POSTINGS
+    rows = (
+        di.segments.filter(
+            F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
         )
-        found = {r["term_id"]: int(r["df"]) for r in rows}
-        for t in missing:
-            cache.put(t, found.get(t, 0))
-    return {t: cache.get(t) or 0 for t in term_ids}
+        .select(
+            "term_id",
+            "df",
+            F.array_max("block_max_tf").alias("max_tf"),
+            F.array_min("block_max_tf").alias("min_tf"),
+            F.when(small, F.col("block_last")).alias("block_last"),
+            F.when(small, F.col("block_max_tf")).alias("block_max_tf"),
+        )
+        .collect()
+    )
+    per_tid: dict[int, list] = {t: [] for t in term_ids}
+    for r in rows:
+        per_tid[int(r["term_id"])].append(r)
+    out = {t: _fold_term_meta(rs) for t, rs in per_tid.items()}
+    for t, m in out.items():
+        di.df_cache.put(t, m.df)
+        di.prune_meta_cache.put(t, m)
+    return out
+
+
+def _term_meta(di: DiskIndex, term_ids: list[int]) -> dict[int, _TermMeta]:
+    """Per-term metadata, LRU-cached; scans only the terms not cached."""
+    cache = di.prune_meta_cache
+    got = {t: m for t in term_ids if (m := cache.get(t)) is not None}
+    missing = [t for t in term_ids if t not in got]
+    if missing:
+        got.update(_scan_term_meta(di, missing))
+    return got
+
+
+def _df_of_terms(di: DiskIndex, term_ids: list[int]) -> dict[int, int]:
+    """Per-term df (0 for absent terms), LRU-cached. A miss runs the
+    metadata scan (``_scan_term_meta``), which also fills the prune
+    metadata the executor top-k plans read next."""
+    cache = di.df_cache
+    got = {t: v for t in term_ids if (v := cache.get(t)) is not None}
+    missing = [t for t in term_ids if t not in got]
+    if missing:
+        got.update((t, m.df) for t, m in _scan_term_meta(di, missing).items())
+    return got
 
 
 def _decode_docids_df(seg_rows: DataFrame) -> DataFrame:
@@ -234,13 +308,17 @@ def _decode_tf_df(seg_rows: DataFrame) -> DataFrame:
 # the k-th winner's and can never tie into the oracle's top k.
 PRUNE_EPS = 1e-6
 
-# Terms with at most this many postings ship their block doc-range
-# metadata (block_last boundaries — ≤ df/128 int64s) into the pruning
-# kernel's closure, so hot terms' blocks only receive "help" from a rare
-# term where the rare term actually has postings. Terms above the limit
-# contribute their max help unconditionally (their idf — hence their
-# help — is small by construction). Keeps the driver structure bounded:
-# ≤ 4096 int64s per query term, independent of corpus size.
+# Terms with at most this many postings ship their block metadata
+# (block_last and block_max_tf) to the driver, and their block doc ranges
+# into the pruning kernel's closure, so hot terms' blocks only receive
+# "help" from a rare term where the rare term actually has postings.
+# Terms above the limit contribute their max help unconditionally (their
+# idf — hence their help — is small by construction). A segment row of
+# df postings has ceil(df/128) blocks, so a small term holds at most
+# 4096 + (rows − 1) blocks (rows = salts × generations), 24 bytes each
+# in ``_TermMeta``: ~100 KB per term at worst, independent of corpus
+# size. Only rows with df ≤ the limit ship arrays, so a big term's salted
+# rows cost at most the same per row.
 SMALL_TERM_POSTINGS = 524_288
 
 
@@ -255,6 +333,35 @@ class _OverlapMeta:
     H: np.ndarray  # block_last, sorted asc (across generations)
     Lsuf: np.ndarray
     ub: float  # the term's max single-posting contribution
+
+
+def _keep_rule(
+    ub: np.ndarray,
+    lo: np.ndarray,
+    hi: np.ndarray,
+    rest: float,
+    helpers: list[_OverlapMeta],
+    theta: float,
+) -> np.ndarray:
+    """The block keep rule of every pruned decode (one and many queries),
+    of their stats twins and of the void-probe check: block [lo, hi] of
+    term t, with single-posting bound ``ub``, is kept iff::
+
+        ub + rest + Σ_{h ∈ helpers, h has a block overlapping [lo, hi]} h.ub
+          >= theta − PRUNE_EPS
+
+    ``rest`` is the unconditional help of t's big co-terms (``big_rest``)
+    and ``helpers`` the overlap metadata of its small co-terms, in term-id
+    order so every caller sums in the same order."""
+    helpv = np.full(hi.size, float(rest))
+    for om in helpers:
+        if om.H.size == 0:
+            continue
+        j = np.searchsorted(om.H, lo, side="left")
+        ex = j < om.H.size
+        ex &= om.Lsuf[np.minimum(j, om.H.size - 1)] <= hi
+        helpv += np.where(ex, om.ub, 0.0)
+    return (ub + helpv) >= theta - PRUNE_EPS
 
 
 def _block_upper_bounds(bmax: np.ndarray, idf: float, scorer: str) -> np.ndarray:
@@ -335,21 +442,14 @@ def _decode_tf_pruned_df(
     import pyarrow as pa
 
     def _keep_mask(tid: int, bmax: np.ndarray, blast: np.ndarray) -> np.ndarray:
-        ub = _block_upper_bounds(bmax, idfs[tid], scorer)
-        lo = np.empty_like(blast)
-        if blast.size:
-            lo[0] = 0  # first block's true start is unknown pre-decode;
-            lo[1:] = blast[:-1] + 1  # widening only weakens pruning
-        helpv = np.full(blast.size, float(big_rest[tid]))
-        for t2, om in overlap.items():
-            if t2 == tid or om.H.size == 0:
-                continue
-            j = np.searchsorted(om.H, lo, side="left")
-            ex = j < om.H.size
-            jc = np.minimum(j, om.H.size - 1)
-            ex &= om.Lsuf[jc] <= blast
-            helpv += np.where(ex, om.ub, 0.0)
-        return (ub + helpv) >= theta - PRUNE_EPS
+        return _keep_rule(
+            _block_upper_bounds(bmax, idfs[tid], scorer),
+            _block_lo(blast),
+            blast,
+            big_rest[tid],
+            [om for t2, om in sorted(overlap.items()) if t2 != tid],
+            theta,
+        )
 
     def kernel(batches):
         for batch in batches:
@@ -425,13 +525,13 @@ def _decode_tf_pruned_many_df(
                       >= theta_q − PRUNE_EPS ]
 
     ``term_specs[t]`` lists one spec per query using t:
-    ``{"theta": float, "big_rest": {t: float}, "small": set[int]}`` —
-    theta_q from the per-query rarest-term probe
+    ``{"theta": float, "big_rest": {t: float}, "small": [t, ...]}`` (small
+    in term-id order) — theta_q from the per-query rarest-term probe
     (``_theta_probe_many``), big_rest_q / small(q) from the SHARED
     ``_collect_prune_meta`` pass (ub is query-independent, so metadata is
     collected once for the union of terms). A spec with theta = −inf
-    (single-term query, or rarest term thinner than k) keeps every block
-    of its terms.
+    (single-term query, or a probe ``_plan_probe`` rules out) keeps
+    every block of its terms.
 
     Soundness per query is exactly the single-query argument
     (``_decode_tf_pruned_df``): q's winners keep all their blocks under
@@ -451,19 +551,14 @@ def _decode_tf_pruned_many_df(
     def _q_keep(
         tid: int, ub: np.ndarray, lo: np.ndarray, blast: np.ndarray, spec: dict
     ) -> np.ndarray:
-        helpv = np.full(blast.size, float(spec["big_rest"][tid]))
-        for t2 in spec["small"]:
-            if t2 == tid:
-                continue
-            om = overlap.get(t2)
-            if om is None or om.H.size == 0:
-                continue
-            j = np.searchsorted(om.H, lo, side="left")
-            ex = j < om.H.size
-            jc = np.minimum(j, om.H.size - 1)
-            ex &= om.Lsuf[jc] <= blast
-            helpv += np.where(ex, om.ub, 0.0)
-        return (ub + helpv) >= spec["theta"] - PRUNE_EPS
+        return _keep_rule(
+            ub,
+            lo,
+            blast,
+            spec["big_rest"][tid],
+            [overlap[t2] for t2 in spec["small"] if t2 != tid],
+            spec["theta"],
+        )
 
     def kernel(batches):
         for batch in batches:
@@ -486,10 +581,7 @@ def _decode_tf_pruned_many_df(
                 else:
                     bmax = np.asarray(bmaxs[i].as_py(), np.int64)
                     ub = _block_upper_bounds(bmax, idfs[tid], scorer)
-                    lo = np.empty_like(blast)
-                    if blast.size:
-                        lo[0] = 0  # first block's true start unknown pre-decode
-                        lo[1:] = blast[:-1] + 1
+                    lo = _block_lo(blast)
                     keep = np.zeros(blast.size, bool)
                     for spec in specs:
                         keep |= _q_keep(tid, ub, lo, blast, spec)
@@ -1049,87 +1141,96 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _build_prune_meta(
-    seg_rows: DataFrame,
-    tids: list[int],
-    dfs: dict[int, int],
-    idfs: dict[int, float],
-    scorer: str,
-) -> tuple[dict[int, float], dict[int, _OverlapMeta]]:
-    """Pruning metadata for ``_decode_tf_pruned_df`` (single query).
-
-    Returns (big_rest, overlap): ``big_rest[t]`` = Σ ub of the OTHER terms
-    too big to ship ranges for (their help is granted unconditionally —
-    high df ⇒ low idf ⇒ small help); ``overlap[t]`` = the range metadata
-    + ub of each small term. See ``_collect_prune_meta`` for the two
-    metadata jobs and their cost bounds."""
-    ub, overlap = _collect_prune_meta(seg_rows, tids, dfs, idfs, scorer)
-    big_rest = {
-        t: sum(ub[u] for u in tids if u != t and u not in overlap) for t in tids
-    }
-    return big_rest, overlap
-
-
 def _collect_prune_meta(
-    seg_rows: DataFrame,
+    meta: dict[int, _TermMeta],
     tids: list[int],
-    dfs: dict[int, int],
     idfs: dict[int, float],
     scorer: str,
 ) -> tuple[dict[int, float], dict[int, _OverlapMeta]]:
-    """Shared prune metadata — two tiny METADATA-only jobs over the
-    already-pruned scan (blob bytes untouched):
+    """Shared prune metadata, folded from the cached term metadata the
+    query's df lookup already collected (``_scan_term_meta``) — no job of
+    its own. Returns (ub, overlap):
 
-    1. per-term max single-posting contribution ub[t], from
-       max(array_max(block_max_tf));
-    2. for SMALL terms (df ≤ ``SMALL_TERM_POSTINGS``), the block doc-range
-       intervals (block_last boundaries) folded into an ``_OverlapMeta``
-       so hot terms' blocks only get a small term's help where it actually
-       has postings.
+    - ub[t], the term's max single-posting contribution, from its largest
+      block_max_tf;
+    - overlap[t], for SMALL terms (df ≤ ``SMALL_TERM_POSTINGS``), the
+      block doc-range intervals as an ``_OverlapMeta``, so hot terms'
+      blocks only get a small term's help where it actually has postings.
 
     ub is query-independent (idf depends only on (N, df)), so the batched
-    plan computes this ONCE for the union of all queries' terms. Driver
-    memory: ≤ df/128 ≤ 4096 int64s per small term — bounded like the
-    query-term dfs, independent of corpus size."""
-    rows = (
-        seg_rows.groupBy("term_id")
-        .agg(F.max(F.array_max("block_max_tf")).alias("_g"))
-        .collect()
-    )
-    gmax = {int(r["term_id"]): int(r["_g"]) for r in rows}
+    plan computes this ONCE for the union of all queries' terms."""
     ub = {
         t: float(
-            _block_upper_bounds(
-                np.array([gmax.get(t, 1)], np.int64), idfs[t], scorer
-            )[0]
+            _block_upper_bounds(np.array([meta[t].max_tf]), idfs[t], scorer)[0]
         )
         for t in tids
     }
-    small = [t for t in tids if dfs[t] <= SMALL_TERM_POSTINGS]
-    overlap: dict[int, _OverlapMeta] = {}
-    if small:
-        per_tid: dict[int, list[tuple[np.ndarray, np.ndarray]]] = {t: [] for t in small}
-        for r in (
-            seg_rows.filter(F.col("term_id").isin(small))
-            .select("term_id", "block_last")
-            .collect()
-        ):
-            h = np.asarray(r["block_last"], np.int64)
-            lo = np.empty_like(h)
-            if h.size:
-                lo[0] = 0  # first block's true start unknown without decode
-                lo[1:] = h[:-1] + 1
-            per_tid[int(r["term_id"])].append((lo, h))
-        for t, parts in per_tid.items():
-            if not parts:
-                continue
-            L = np.concatenate([p[0] for p in parts])
-            H = np.concatenate([p[1] for p in parts])
-            order = np.argsort(H, kind="mergesort")
-            L, H = L[order], H[order]
-            lsuf = np.minimum.accumulate(L[::-1])[::-1]
-            overlap[t] = _OverlapMeta(H=H, Lsuf=lsuf, ub=ub[t])
+    overlap = {
+        t: _OverlapMeta(
+            H=m.hi, Lsuf=np.minimum.accumulate(m.lo[::-1])[::-1], ub=ub[t]
+        )
+        for t in tids
+        if (m := meta[t]).hi is not None
+    }
     return ub, overlap
+
+
+def _plan_probe(
+    tids: list[int],
+    k: int,
+    meta: dict[int, _TermMeta],
+    idfs: dict[int, float],
+    ub: dict[int, float],
+    overlap: dict[int, _OverlapMeta],
+    scorer: str,
+) -> tuple[dict[int, float], int | None]:
+    """Per-query half of the prune setup: (big_rest, probe term).
+
+    ``big_rest[t]`` = Σ ub of t's co-terms too big to ship ranges for:
+    their help is granted unconditionally (high df ⇒ low idf ⇒ small
+    help). The probe term is the rarest query term, or None when the
+    theta probe provably cannot prune, so the plan skips it (theta = −inf)
+    with identical results:
+
+    - the probe returns −inf below k postings;
+    - otherwise its theta is one contribution of the rarest term, so it
+      never exceeds ub[rarest], and the keep rule only keeps more blocks
+      as theta falls. If ``_keep_rule`` keeps every block of every query
+      term at theta = ub[rarest], it keeps them all at the probed theta.
+      Small terms are checked block by block from their cached arrays; a
+      big term through its weakest block's bound and big_rest alone (its
+      overlap help is ≥ 0, so leaving it out keeps fewer blocks: sound).
+    """
+    big_rest = {
+        t: sum(ub[u] for u in tids if u != t and u not in overlap) for t in tids
+    }
+    rarest = min(tids, key=lambda t: meta[t].df)
+    if meta[rarest].df < k:
+        return big_rest, None
+    one = np.zeros(1, np.int64)
+    for t in tids:
+        m = meta[t]
+        if t in overlap:
+            keep = _keep_rule(
+                _block_upper_bounds(m.bmax, idfs[t], scorer),
+                m.lo,
+                m.hi,
+                big_rest[t],
+                [overlap[u] for u in tids if u != t and u in overlap],
+                ub[rarest],
+            )
+        else:
+            keep = _keep_rule(
+                _block_upper_bounds(np.array([m.min_tf]), idfs[t], scorer),
+                one,
+                one,
+                big_rest[t],
+                [],
+                ub[rarest],
+            )
+        if not keep.all():
+            return big_rest, rarest
+    return big_rest, None
 
 
 def _theta_probe(
@@ -1227,27 +1328,39 @@ def _theta_probe_many(
     return thetas
 
 
-def _distributed_query_setup(di: DiskIndex, query: str, scorer: str):
+def _distributed_query_setup(di: DiskIndex, query: str, k: int, scorer: str):
     """Shared front half of the distributed top-k and its stats twin:
-    (tids, idfs, pruned seg_rows scan) or None when no term matches."""
+    (tids, idfs, pruned seg_rows scan, theta, big_rest, overlap), or None
+    when no term matches. The df/idf and prune metadata come from ONE
+    metadata scan (none when cached); the theta probe runs only for a
+    multi-term query that ``_plan_probe`` cannot rule out. theta = −inf
+    means nothing can be pruned."""
     from ..functions.xxhash import bucket_of_term
 
     qtokens = tokenize_query(query)
     tids = sorted({t for t, _ in qtokens})
-    dfs = _df_of_terms(di, tids)
-    tids = [t for t in tids if dfs.get(t, 0) > 0]
+    meta = _term_meta(di, tids)
+    tids = [t for t in tids if meta[t].df > 0]
     if not tids:
         return None
     n = di.meta.n_docs
     if scorer == "bm25":
-        idfs = {t: _bm25_idf(n, dfs[t]) for t in tids}
+        idfs = {t: _bm25_idf(n, meta[t].df) for t in tids}
     else:
-        idfs = {t: math.log(n / dfs[t]) for t in tids}
+        idfs = {t: math.log(n / meta[t].df) for t in tids}
     buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in tids})
     seg_rows = di.segments.filter(
         F.col("bucket").isin(buckets) & F.col("term_id").isin(tids)
     )
-    return tids, dfs, idfs, seg_rows
+    theta = -math.inf
+    big_rest = {t: 0.0 for t in tids}
+    overlap: dict[int, _OverlapMeta] = {}
+    if len(tids) > 1:  # a single term's probe would be the whole job
+        ub, overlap = _collect_prune_meta(meta, tids, idfs, scorer)
+        big_rest, probe = _plan_probe(tids, k, meta, idfs, ub, overlap, scorer)
+        if probe is not None:
+            theta = _theta_probe(di, seg_rows, probe, idfs[probe], k, scorer)
+    return tids, idfs, seg_rows, theta, big_rest, overlap
 
 
 def distributed_pruning_stats(
@@ -1257,17 +1370,10 @@ def distributed_pruning_stats(
     shipped): {"blocks_total", "blocks_decoded", "theta"} — the executor
     twin of ``topk_wand.last_stats``, driven through the SAME selection
     kernel (``_decode_tf_pruned_df(stats_only=True)``)."""
-    setup = _distributed_query_setup(di, query, scorer)
+    setup = _distributed_query_setup(di, query, k, scorer)
     if setup is None:
         return {"blocks_total": 0, "blocks_decoded": 0, "theta": -math.inf}
-    tids, dfs, idfs, seg_rows = setup
-    theta = -math.inf
-    big_rest = {t: 0.0 for t in tids}
-    overlap: dict[int, _OverlapMeta] = {}
-    if len(tids) > 1:
-        big_rest, overlap = _build_prune_meta(seg_rows, tids, dfs, idfs, scorer)
-        rarest = min(tids, key=lambda t: dfs[t])
-        theta = _theta_probe(di, seg_rows, rarest, idfs[rarest], k, scorer)
+    _, idfs, seg_rows, theta, big_rest, overlap = setup
     rows = _decode_tf_pruned_df(
         seg_rows, idfs, big_rest, overlap, theta, scorer, stats_only=True
     ).agg(
@@ -1292,18 +1398,22 @@ def topk_scores_distributed(
     - pruned segment scan (bucket partition pruning + term_id pushdown)
       → mapInArrow BLOCK-MAX-PRUNED blob decode to (term_id, doc_id, tf):
       theta is seeded by a driver probe of the rarest term's top-k
-      contributions (one small job), each other term's "maximal help" is
-      a metadata-only max over block_max_tf, and the kernel skips every
+      contributions (one small job), each other term's "maximal help"
+      comes from the cached block metadata, and the kernel skips every
       block whose bound cannot reach theta − ε before varint-decoding it
       (``_decode_tf_pruned_df`` — the result stays EXACT, see its
-      soundness note). Single-term queries skip the probe (it would be
-      the whole job);
+      soundness note). The probe is skipped, and every block decoded by
+      the plain kernel, for single-term queries (it would be the whole
+      job) and whenever the metadata proves it cannot prune
+      (``_plan_probe``). Before the plan, ONE shuffle-free metadata scan
+      (``_scan_term_meta``) serves the route's df, the idfs and the
+      prune metadata, and none runs when the terms are cached;
     - ``scorer='bm25'``: join the doc-partitioned dl sidecar
       (``DiskIndex.doc_length_df`` — a column of the doc store, NEVER
       collected) on doc_id — a skew-free shuffle join;
       ``scorer='tfidf'``: no join at all (S = (1+ln tf)·ln(N/df));
     - per-row contribution as a column expression (idf is a tiny CASE
-      over the query's terms, built from the pruned METADATA df scan);
+      over the query's terms);
     - groupBy(doc_id).sum → orderBy(round(score,6) desc, doc_id).limit(k),
       which Catalyst executes as TakeOrderedAndProject: each partition
       emits its local k, the driver merges k-sized heaps.
@@ -1311,27 +1421,17 @@ def topk_scores_distributed(
     Returns a DataFrame (doc_id, score) — identical rows to the
     exhaustive plan (winners' sums are never truncated by the pruning).
     """
-    setup = _distributed_query_setup(di, query, scorer)
+    setup = _distributed_query_setup(di, query, k, scorer)
     empty = di.empty_result().select("doc_id", "score")
     if setup is None:
         return empty
-    tids, dfs, idfs, seg_rows = setup
-
-    if len(tids) > 1:
-        # multi-term: pay three small jobs (metadata max, small-term
-        # ranges, rarest-term theta probe) to skip whole blocks of the
-        # hot terms' O(df) decode
-        big_rest, overlap = _build_prune_meta(seg_rows, tids, dfs, idfs, scorer)
-        rarest = min(tids, key=lambda t: dfs[t])
-        theta = _theta_probe(di, seg_rows, rarest, idfs[rarest], k, scorer)
-        if math.isinf(theta):
-            tf_rows = _decode_tf_df(seg_rows)
-        else:
-            tf_rows = _decode_tf_pruned_df(
-                seg_rows, idfs, big_rest, overlap, theta, scorer
-            )
-    else:
+    tids, idfs, seg_rows, theta, big_rest, overlap = setup
+    if math.isinf(theta):
         tf_rows = _decode_tf_df(seg_rows)
+    else:
+        tf_rows = _decode_tf_pruned_df(
+            seg_rows, idfs, big_rest, overlap, theta, scorer
+        )
     idf_col = F.lit(0.0)
     for t in tids:
         idf_col = F.when(F.col("term_id") == t, F.lit(idfs[t])).otherwise(idf_col)
@@ -1591,22 +1691,24 @@ def _batched_prune_setup(
 ):
     """Shared front half of ``topk_scores_many`` and
     ``batched_pruning_stats``: tokenize every query, resolve df/idf for
-    the UNION of terms, build the pruned scan, and assemble the per-query
-    prune specs (shared metadata pass + batched theta probe).
+    the UNION of terms from ONE metadata scan (none when cached), build
+    the pruned scan, and assemble the per-query prune specs (shared
+    metadata, one batched theta probe for the queries ``_plan_probe``
+    cannot rule out; none when it rules out all).
 
     Returns None when no query has an indexed term, else
     (per_q, idfs, seg_rows, term_specs, overlap, thetas_by_qid) where
     ``term_specs[t]`` feeds ``_decode_tf_pruned_many_df`` and is empty
-    when nothing can be pruned (all queries single-term or thinner than
-    k)."""
+    when nothing can be pruned (every query single-term, void or thinner
+    than k)."""
     from ..functions.xxhash import bucket_of_term
 
     per_q = {
         qid: sorted({t for t, _ in tokenize_query(q)}) for qid, q in queries
     }
     union = sorted({t for tids in per_q.values() for t in tids})
-    dfs = _df_of_terms(di, union) if union else {}
-    union = [t for t in union if dfs.get(t, 0) > 0]
+    meta = _term_meta(di, union)
+    union = [t for t in union if meta[t].df > 0]
     if not union:
         return None
     per_q = {
@@ -1614,42 +1716,39 @@ def _batched_prune_setup(
     }
     n = di.meta.n_docs
     if scorer == "bm25":
-        idfs = {t: _bm25_idf(n, dfs[t]) for t in union}
+        idfs = {t: _bm25_idf(n, meta[t].df) for t in union}
     else:
-        idfs = {t: math.log(n / dfs[t]) for t in union}
+        idfs = {t: math.log(n / meta[t].df) for t in union}
     buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in union})
     seg_rows = di.segments.filter(
         F.col("bucket").isin(buckets) & F.col("term_id").isin(union)
     )
+    # single-term queries keep all their blocks (theta = -inf): the probe
+    # WOULD be the whole job, same routing as the single-query plan
     multi = {qid: tids for qid, tids in per_q.items() if len(tids) > 1}
     term_specs: dict[int, list[dict]] = {}
     overlap: dict[int, _OverlapMeta] = {}
     thetas_by_qid: dict[str, float] = {qid: -math.inf for qid in per_q}
     if multi:
-        ub, overlap = _collect_prune_meta(seg_rows, union, dfs, idfs, scorer)
-        probe_tid = {
-            qid: min(tids, key=lambda t: dfs[t]) for qid, tids in multi.items()
+        ub, overlap = _collect_prune_meta(meta, union, idfs, scorer)
+        plans = {
+            qid: _plan_probe(tids, k, meta, idfs, ub, overlap, scorer)
+            for qid, tids in multi.items()
         }
-        thetas = _theta_probe_many(
-            di, seg_rows, sorted(set(probe_tid.values())), idfs, k, scorer
+        probes = sorted({p for _, p in plans.values() if p is not None})
+        thetas = (
+            _theta_probe_many(di, seg_rows, probes, idfs, k, scorer)
+            if probes
+            else {}
         )
         for qid, tids in per_q.items():
-            if not tids:
-                continue
-            # single-term queries keep all their blocks (theta = -inf):
-            # the probe WOULD be the whole job, same routing as the
-            # single-query plan
-            theta = thetas[probe_tid[qid]] if qid in multi else -math.inf
+            big_rest, probe = plans.get(qid, ({}, None))
+            theta = -math.inf if probe is None else thetas[probe]
             thetas_by_qid[qid] = theta
             spec = {
                 "theta": theta,
-                "big_rest": {
-                    t: sum(
-                        ub[u] for u in tids if u != t and u not in overlap
-                    )
-                    for t in tids
-                },
-                "small": {t for t in tids if t in overlap},
+                "big_rest": big_rest,
+                "small": [t for t in tids if t in overlap],
             }
             for t in tids:
                 term_specs.setdefault(t, []).append(spec)

@@ -435,6 +435,20 @@ def test_write_index_tokenizes_once(spark, docs, tmp_path, monkeypatch):
     assert set(read_manifest(path)) == {0, 1}
 
 
+def test_write_index_restores_job_description(spark, docs, tmp_path):
+    """``write_index`` labels its jobs by phase and hands the caller's own
+    job description back when it returns, so the caller's later jobs are
+    not filed under the build's last phase."""
+    sc = spark.sparkContext
+    sc.setJobDescription("caller label")
+    try:
+        assert sc.getLocalProperty("spark.job.description") == "caller label"
+        write_index(docs, str(tmp_path / "idx"), n_buckets=8, n_shards=1, n_salts=2)
+        assert sc.getLocalProperty("spark.job.description") == "caller label"
+    finally:
+        sc.setJobDescription(None)
+
+
 def test_build_segments_threshold_shortcut_byte_identical(spark, docs):
     """A threshold at or above the doc count salts nothing: given the doc
     count, ``build_segments`` skips the df count (no broadcast of a hot

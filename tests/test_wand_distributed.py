@@ -8,12 +8,19 @@ stays None) and no postings blobs fetched into the driver LRU
 (/root/reference/index/core/search.go:187-273) at cluster scale.
 """
 
+import itertools
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators import wand
 from search_engine_spark.operators.postings import build_documents_from_testdata
 from search_engine_spark.operators.segments import load_index, write_index
+from search_engine_spark.streaming.ingest import (
+    start_incremental_index,
+    stream_documents,
+)
 
 QUERIES = ["table", "table spark", "customer query", "dup", "qqqq"]
 
@@ -330,3 +337,110 @@ def test_prime_drops_the_df_job_from_cold_queries(spark, index_dir):
     tids = sorted({t for t, _ in tokenize_query("table")})
     di3.prime(tids)
     assert all(t in di3.df_cache for t in tids)
+
+
+_GROUPS = itertools.count()
+
+
+def _cold_jobs(spark, di, fn) -> int:
+    """Spark jobs one call launches on cleared caches."""
+    sc = spark.sparkContext
+    di.clear_caches()
+    group = f"cold-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# 'x1' (x1, x10, x11, x12) sits in every block of 'common', so at the
+# probe's best theta every block keeps its help: nothing to prune
+VOID_QUERY = "common x1"
+
+
+def test_executor_topk_job_counts(spark, hot_rare_index):
+    """Cold-call job budgets: the df lookup and the prune metadata are ONE
+    shuffle-free metadata job, and the theta probe runs only when the
+    metadata cannot rule it out. A second cold call after
+    ``clear_caches()`` launches exactly as many jobs as the first."""
+    di = load_index(spark, hot_rare_index)
+    # the probe runs (and prunes) for 'common needle', not for VOID_QUERY
+    assert math.isfinite(wand.distributed_pruning_stats(di, "common needle")["theta"])
+    assert wand.distributed_pruning_stats(di, VOID_QUERY)["theta"] == -math.inf
+
+    def exec_topk(q):
+        return lambda: wand.topk_bm25_wand(di, q, 10, max_driver_postings=0)
+
+    def batch_topk(q):
+        return lambda: wand.topk_scores_many(di, [("q", q)], 10).collect()
+
+    cases = [
+        ("search", lambda: wand.search_segments(di, "common needle").collect(), 2),
+        ("exec probe", exec_topk("common needle"), 6),
+        ("exec void", exec_topk(VOID_QUERY), 4),
+        ("batch probe", batch_topk("common needle"), 9),
+        ("batch void", batch_topk(VOID_QUERY), 6),
+    ]
+    for name, fn, bound in cases:
+        first, second = _cold_jobs(spark, di, fn), _cold_jobs(spark, di, fn)
+        assert first == second, (name, first, second)
+        assert first <= bound, (name, first, bound)
+
+
+@pytest.fixture(scope="module")
+def stream_index(tmp_path_factory, spark, sf_dir):
+    """The testdata corpus ingested as three streaming generations, so a
+    term's metadata folds several segment rows."""
+    root = tmp_path_factory.mktemp("stream_void")
+    arrivals = str(root / "arrivals")
+    build_documents_from_testdata(spark, sf_dir).repartition(3).write.parquet(arrivals)
+    path = str(root / "idx")
+    start_incremental_index(
+        stream_documents(spark, arrivals), path, n_buckets=8, n_salts=2
+    ).awaitTermination(300)
+    return path
+
+
+SF_QUERIES = [
+    "table spark", "customer query", "join window", "vector merge",
+    "slow batch", "hash filter", "order key", "stream group",
+]
+HOT_RARE_QUERIES = [
+    VOID_QUERY, "x1 x2", "common x5", "x3 x12", "common x2 x3", "x4 x11",
+    "common needle", "common w3",
+]
+
+
+def test_void_probe_check_is_sound(spark, monkeypatch, index_dir, hot_rare_index,
+                                   stream_index):
+    """Wherever ``_plan_probe`` rules the theta probe out, running the
+    probe anyway yields a theta at which the stats kernel keeps every
+    block — on a batch, the hot/rare and a multi-generation streaming
+    index, for both scorers on the hot/rare one."""
+    verdicts = []
+    plan_probe = wand._plan_probe
+
+    def probe_always(tids, k, meta, *rest):
+        big_rest, probe = plan_probe(tids, k, meta, *rest)
+        verdicts.append(probe is None)
+        return big_rest, min(tids, key=lambda t: meta[t].df)
+
+    monkeypatch.setattr(wand, "_plan_probe", probe_always)
+    voids = {}
+    for name, path, queries, scorers in (
+        ("batch", index_dir, SF_QUERIES, ["bm25"]),
+        ("stream", stream_index, SF_QUERIES, ["bm25"]),
+        ("hot_rare", hot_rare_index, HOT_RARE_QUERIES, ["bm25", "tfidf"]),
+    ):
+        di = load_index(spark, path)
+        for scorer in scorers:
+            for q in queries:
+                verdicts.clear()
+                st = wand.distributed_pruning_stats(di, q, 10, scorer)
+                if verdicts != [True]:
+                    continue
+                voids[name] = voids.get(name, 0) + 1
+                assert st["blocks_decoded"] == st["blocks_total"] > 0, (name, q, st)
+    assert sum(voids.values()) >= 20 and len(voids) == 3, voids

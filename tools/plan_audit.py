@@ -42,22 +42,30 @@ def main() -> None:
             F.col("bucket").isin([b]) & F.col("term_id").isin([tid])
         ).select("term_id", "df", "blob"),
     )
-    # the executor route collects its plans inside the call (df metadata
-    # scan, candidate decode -> intersect -> TakeOrdered, winners'
-    # positions decode): print each one as it is collected
     frame = type(di.segments)  # the session's concrete DataFrame class
     collect = frame.collect
-    step = iter(range(1, 10))
 
-    def explain_then_collect(df):
-        cap(f"search_segments executor route, job {next(step)}", df)
-        return collect(df)
+    def explain_collects(label: str, fn):
+        """Run ``fn``, printing the plan of every DataFrame it collects."""
+        step = iter(range(1, 10))
 
-    frame.collect = explain_then_collect
-    try:
-        search_segments(di, "table scan", max_driver_postings=0)
-    finally:
-        frame.collect = collect
+        def explain_then_collect(df):
+            cap(f"{label}, collect {next(step)}", df)
+            return collect(df)
+
+        frame.collect = explain_then_collect
+        try:
+            return fn()
+        finally:
+            frame.collect = collect
+
+    # the executor route collects its plans inside the call (term metadata
+    # scan, candidate decode -> intersect -> TakeOrdered, winners'
+    # positions decode): print each one as it is collected
+    explain_collects(
+        "search_segments executor route",
+        lambda: search_segments(di, "table scan", max_driver_postings=0),
+    )
     cap(
         "events hourly agg",
         E.hourly_event_stats(spark.read.parquet(f"{sf_dir}/events.parquet")),
@@ -68,10 +76,36 @@ def main() -> None:
     from search_engine_spark.operators import dedup as D
     from search_engine_spark.operators.wand import topk_scores_distributed
 
-    cap(
-        "distributed BM25 top-k (decode -> dl join -> sum -> TakeOrdered)",
-        topk_scores_distributed(di, "table spark", 10, "bm25"),
-    )
+    # the executor score-ordered top-k (PLANS.md "Score-ordered top-k
+    # (executor route)"): its driver-side collects (the term metadata
+    # scan, then the theta probe when it runs) and the scoring plan it
+    # returns. "table spark" on this corpus is a void probe; the hot/rare
+    # index's "common needle" is one the probe prunes.
+    from search_engine_spark.operators import wand
+
+    rows = [
+        (i + 1, f"https://h{i % 7}/p{i}", "",
+         ("needle " if i < 15 else "") + f"common w{i} x{i % 13}")
+        for i in range(2000)
+    ]
+    hot = spark.createDataFrame(
+        rows, "doc_id long, url string, title string, body string"
+    ).withColumn("content_sha256", F.sha2(F.col("body"), 256))
+    hd = tempfile.mkdtemp() + "/hot_rare"
+    write_index(hot, hd, n_buckets=8, n_shards=1, n_salts=2, salt_threshold=500)
+    for index, query in ((di, "table spark"), (load_index(spark, hd), "common needle")):
+        index.clear_caches()
+        plan = explain_collects(
+            f"executor BM25 top-k {query!r}",
+            lambda: topk_scores_distributed(index, query, 10, "bm25"),
+        )
+        theta = wand.distributed_pruning_stats(index, query, 10, "bm25")["theta"]
+        print(
+            f"\n{query!r}: theta probe "
+            + ("skipped: the metadata proves it cannot prune" if theta == float("-inf")
+               else f"ran, theta = {theta:.6f}")
+        )
+        cap(f"executor BM25 top-k {query!r}, scoring plan", plan)
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cap("simhash (bit-sliced, 1 Generate)", D.simhash(raw))
     cap("minhash band keys (1 shuffle, no distinct)", D.minhash_band_keys(raw))
