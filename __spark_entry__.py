@@ -25,6 +25,7 @@ from search_engine_spark.operators.highlight import enrich_ranked
 from search_engine_spark.operators.search import paginate
 from search_engine_spark.operators.segments import (
     DiskIndex,
+    empty_result_df,
     index_stats,
     load_index,
     write_index,
@@ -72,13 +73,26 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rounded_rank(r: DataFrame) -> DataFrame:
     """Re-rank on the 6-dp-rounded score (doc_id tiebreak) so exact score
     ties — broken only by sub-ULP float-sum-order noise — rank identically
-    in any engine."""
-    from pyspark.sql import Window
+    in any engine. The rows are a ranked result (at most 50 per shard),
+    so they are ranked on the driver: an unpartitioned Window would move
+    them to one partition with a warning per query."""
+    import pandas as pd
 
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        r.select("doc_id", F.round("score", 6).alias("score"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
+    rows = sorted(
+        r.select("doc_id", F.round("score", 6).alias("score")).collect(),
+        key=lambda x: (-x["score"], x["doc_id"]),
+    )
+    if not rows:
+        return empty_result_df(r.sparkSession)
+    return r.sparkSession.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [x["doc_id"] for x in rows],
+                "score": [x["score"] for x in rows],
+                "rank": range(1, len(rows) + 1),
+            }
+        ),
+        "doc_id long, score double, rank long",
     )
 
 

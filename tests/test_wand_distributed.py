@@ -1,15 +1,17 @@
-"""Executor-side score-ordered query family (topk_scores_distributed).
+"""Executor-side score-ordered query family (``topk_scores_many``, run
+on a one-query set by the driver entry points above their valves).
 
 The driver block-max routes (topk_wand / topk_bm25_wand / *_exhaustive)
 and the distributed plan must agree rank-identically, and the distributed
 route must keep the DRIVER at O(k): no doc-length collect (DiskIndex._dl
 stays None) and no postings blobs fetched into the driver LRU
 (segment_cache stays empty). Mirrors the reference read path
-(/root/reference/index/core/search.go:187-273) at cluster scale.
+(search.go:187-273) at cluster scale.
 """
 
 import itertools
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +39,13 @@ def _assert_rank_identical(got, exp, tol=1e-9):
     assert [d for d, _ in got] == [d for d, _ in exp]
     for (d, s), (_, es) in zip(got, exp):
         assert abs(s - es) < tol, (d, s, es)
+
+
+def _one_query_stats(di, query, scorer="bm25", k=10):
+    """Block-selection stats of the executor route of one query: the
+    executor top-k plan on a one-query set, with that query's theta."""
+    st = wand.batched_pruning_stats(di, [(query, query)], k, scorer)
+    return {**st, "theta": st["theta"].get(query, -math.inf)}
 
 
 @pytest.mark.parametrize("query", QUERIES)
@@ -90,6 +99,17 @@ def test_ndocs_valve_routes_distributed(spark, index_dir, monkeypatch):
     _assert_rank_identical(dist, driver)
 
 
+# 'x1' (x1, x10, x11, x12) sits in every block of 'common', so at the
+# probe's best theta every block keeps its help: nothing to prune
+VOID_QUERY = "common x1"
+
+# a hot/rare batch: a probing query, a second hot one, a void probe and a
+# single-term query
+BATCH_OF_FOUR = [
+    ("a", "common needle"), ("b", "common w3"), ("c", VOID_QUERY), ("d", "w3"),
+]
+
+
 @pytest.fixture(scope="module")
 def hot_rare_index(tmp_path_factory, spark):
     """2000 docs; 'common' in every doc (a stop-word-ish hot term spanning
@@ -121,7 +141,7 @@ def test_distributed_blockmax_prunes_hot_term(spark, hot_rare_index, scorer):
     pruning-stats assertion (VERDICT r3 next-round #2) — while staying
     rank-identical to the exhaustive driver route."""
     di = load_index(spark, hot_rare_index)
-    stats = wand.distributed_pruning_stats(di, "common needle", 10, scorer)
+    stats = _one_query_stats(di, "common needle", scorer)
     assert stats["blocks_total"] > 20, stats  # the hot term really is multi-block
     assert 0 < stats["blocks_decoded"] < stats["blocks_total"] // 2, stats
     fn = wand.topk_bm25_wand if scorer == "bm25" else wand.topk_wand
@@ -230,7 +250,7 @@ def test_topk_many_prune_or_is_superset_per_query(spark, hot_rare_index):
     a second query that also uses the hot term can only DECODE MORE
     blocks than the single-query plan, never fewer."""
     di = load_index(spark, hot_rare_index)
-    single = wand.distributed_pruning_stats(di, "common needle", 10)
+    single = _one_query_stats(di, "common needle")
     batch = wand.batched_pruning_stats(
         di, [("a", "common needle"), ("b", "common w3")], k=10
     )
@@ -238,39 +258,86 @@ def test_topk_many_prune_or_is_superset_per_query(spark, hot_rare_index):
     assert batch["blocks_decoded"] >= single["blocks_decoded"], (single, batch)
 
 
+def _executed_nodes(df):
+    """Nodes of ``df``'s executed physical plan, query stages opened (the
+    final adaptive plan once ``df`` has run)."""
+    nodes, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            todo.append(node.plan())
+            continue
+        if name == "ReusedExchange":
+            todo.append(node.child())
+            continue
+        nodes.append(node)
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+def _final_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
 def test_topk_many_no_full_candidate_window_sort(spark, hot_rare_index):
-    """Verdict r4 #3: the per-qid rank window must see only the partial
-    top-k kernel's output (<= k rows per qid per upstream partition),
-    never the full candidate set. The optimized plan's Window must sit
-    ABOVE the ArrowEvalPython/mapInArrow boundary introduced by
-    _partial_topk_df, and the partial kernel itself must emit <= k rows
-    per (qid, partition)."""
+    """The per-qid rank window must never sort a query's full candidate
+    set: Spark plans the row_number <= k filter as a WindowGroupLimit
+    Partial BELOW the qid exchange (each partition keeps its k best per
+    qid), and at most k·partitions rows per qid cross that exchange into
+    the final window — measured on the exchange's records written."""
     di = load_index(spark, hot_rare_index)
     qset = [("hot", "common needle"), ("w3", "common w3")]
     df = wand.topk_scores_many(di, qset, k=10)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # exactly one Window node (WindowGroupLimit is Spark's rank-limit
-    # pushdown BELOW it — a further per-partition pre-filter, not a
-    # sort), and it consumes the partial-top-k map output: MapInArrow
-    # must appear BELOW the Window node in the tree
+    rows = df.collect()
+    plan = _final_plan(df)
+    # exactly one Window node above the group limits
     assert plan.count("Window") - plan.count("WindowGroupLimit") == 1, plan
-    w_at = plan.index("Window")
-    assert "MapInArrow" in plan[w_at:], plan
-    # kernel output bound: run the aggregation half, feed it through the
-    # kernel, and check per-qid row count <= k * n_partitions
-    from search_engine_spark.operators.wand import _partial_topk_df
-    agg = spark.createDataFrame(
-        [("q", i, float(i % 97)) for i in range(5000)],
-        "qid string, doc_id long, score double",
-    ).repartition(8)
-    reduced = _partial_topk_df(agg, 10)
-    cnt = reduced.groupBy("qid").count().collect()[0]["count"]
-    assert cnt <= 10 * 8, cnt
-    # and the reduced set still contains the true top-10
-    top = [r["doc_id"] for r in reduced.orderBy(
-        F.round(F.col("score"), 6).desc(), F.asc("doc_id")).limit(10).collect()]
-    exp = sorted(range(5000), key=lambda i: (-(i % 97), i))[:10]
-    assert top == exp
+    qid_ex = re.search(r"Exchange hashpartitioning\(qid#\d+, \d+\)", plan)
+    partial = re.search(r"WindowGroupLimit \[qid#\d+\].*, 10, Partial", plan)
+    agg_ex = re.search(r"Exchange hashpartitioning\(qid#\d+, doc_id#\d+L, \d+\)", plan)
+    assert qid_ex and partial and agg_ex, plan
+    assert qid_ex.start() < partial.start() < agg_ex.start(), plan
+    # measured: rows through the qid exchange vs the candidate set
+    (ex,) = [
+        n for n in _executed_nodes(df)
+        if n.nodeName() == "Exchange"
+        and re.fullmatch(r"hashpartitioning\(qid#\d+, \d+\)",
+                         n.outputPartitioning().toString())
+    ]
+    crossed = ex.metrics().apply("shuffleRecordsWritten").value()
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert 0 < crossed <= 10 * parts * len(qset), crossed
+    assert len(rows) == 10 * len(qset)
+    # 'common' is in all 2000 docs: each qid has 2000 candidates
+    assert crossed * 20 < 2000 * len(qset), crossed
+
+
+PYTHON_NODES = ("MapInArrow", "FlatMapGroupsInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+@pytest.mark.parametrize("qset", [[("q", "common needle")], BATCH_OF_FOUR],
+                         ids=["one_query", "four_queries"])
+def test_scoring_plan_python_boundary(spark, hot_rare_index, qset):
+    """The executed scoring plan evaluates Python exactly once — the
+    blob decode (one MapInArrow) — and scans no driver-built RDD: no
+    Python stage above the decode, no routing table shipped from the
+    driver."""
+    di = load_index(spark, hot_rare_index)
+    df = wand.topk_scores_many(di, qset, k=10)
+    assert df.collect()
+    names = [n.nodeName() for n in _executed_nodes(df)]
+    counts = {p: names.count(p) for p in PYTHON_NODES}
+    assert counts == {"MapInArrow": 1, "FlatMapGroupsInArrow": 0,
+                      "ArrowEvalPython": 0, "BatchEvalPython": 0}, names
+    assert not [n for n in names if "ExistingRDD" in n], names
 
 
 def test_site_valve_never_collects_site_rows(spark, index_dir):
@@ -355,20 +422,19 @@ def _cold_jobs(spark, di, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# 'x1' (x1, x10, x11, x12) sits in every block of 'common', so at the
-# probe's best theta every block keeps its help: nothing to prune
-VOID_QUERY = "common x1"
 
 
 def test_executor_topk_job_counts(spark, hot_rare_index):
     """Cold-call job budgets: the df lookup and the prune metadata are ONE
     shuffle-free metadata job, and the theta probe runs only when the
-    metadata cannot rule it out. A second cold call after
-    ``clear_caches()`` launches exactly as many jobs as the first."""
+    metadata cannot rule it out. A one-query batch is the executor route's
+    own plan, so it gets the same budget; a batch of four adds only the
+    qid exchange. A second cold call after ``clear_caches()`` launches
+    exactly as many jobs as the first."""
     di = load_index(spark, hot_rare_index)
     # the probe runs (and prunes) for 'common needle', not for VOID_QUERY
-    assert math.isfinite(wand.distributed_pruning_stats(di, "common needle")["theta"])
-    assert wand.distributed_pruning_stats(di, VOID_QUERY)["theta"] == -math.inf
+    assert math.isfinite(_one_query_stats(di, "common needle")["theta"])
+    assert _one_query_stats(di, VOID_QUERY)["theta"] == -math.inf
 
     def exec_topk(q):
         return lambda: wand.topk_bm25_wand(di, q, 10, max_driver_postings=0)
@@ -376,12 +442,16 @@ def test_executor_topk_job_counts(spark, hot_rare_index):
     def batch_topk(q):
         return lambda: wand.topk_scores_many(di, [("q", q)], 10).collect()
 
+    def batch_four():
+        return wand.topk_scores_many(di, BATCH_OF_FOUR, 10).collect()
+
     cases = [
         ("search", lambda: wand.search_segments(di, "common needle").collect(), 2),
         ("exec probe", exec_topk("common needle"), 6),
         ("exec void", exec_topk(VOID_QUERY), 4),
-        ("batch probe", batch_topk("common needle"), 9),
-        ("batch void", batch_topk(VOID_QUERY), 6),
+        ("batch probe", batch_topk("common needle"), 6),
+        ("batch void", batch_topk(VOID_QUERY), 4),
+        ("batch of four", batch_four, 8),
     ]
     for name, fn, bound in cases:
         first, second = _cold_jobs(spark, di, fn), _cold_jobs(spark, di, fn)
@@ -438,7 +508,7 @@ def test_void_probe_check_is_sound(spark, monkeypatch, index_dir, hot_rare_index
         for scorer in scorers:
             for q in queries:
                 verdicts.clear()
-                st = wand.distributed_pruning_stats(di, q, 10, scorer)
+                st = _one_query_stats(di, q, scorer)
                 if verdicts != [True]:
                     continue
                 voids[name] = voids.get(name, 0) + 1

@@ -71,18 +71,15 @@ def main() -> None:
         E.hourly_event_stats(spark.read.parquet(f"{sf_dir}/events.parquet")),
     )
 
-    # round-3: the executor-side score-ordered plan and the explode-free
-    # dedup plans (PLANS.md "Round-3 additions")
     from search_engine_spark.operators import dedup as D
-    from search_engine_spark.operators.wand import topk_scores_distributed
-
-    # the executor score-ordered top-k (PLANS.md "Score-ordered top-k
-    # (executor route)"): its driver-side collects (the term metadata
-    # scan, then the theta probe when it runs) and the scoring plan it
-    # returns. "table spark" on this corpus is a void probe; the hot/rare
-    # index's "common needle" is one the probe prunes.
     from search_engine_spark.operators import wand
 
+    # the executor score-ordered top-k (PLANS.md "Score-ordered top-k
+    # (executor route)"): one plan for one query or many. Print its
+    # driver-side collects (the term metadata scan, then the theta probe
+    # when it runs) and the scoring plan it returns, for a one-query set
+    # and for four queries. "table spark" on this corpus is a void probe;
+    # the hot/rare index's "common needle" is one the probe prunes.
     rows = [
         (i + 1, f"https://h{i % 7}/p{i}", "",
          ("needle " if i < 15 else "") + f"common w{i} x{i % 13}")
@@ -93,19 +90,28 @@ def main() -> None:
     ).withColumn("content_sha256", F.sha2(F.col("body"), 256))
     hd = tempfile.mkdtemp() + "/hot_rare"
     write_index(hot, hd, n_buckets=8, n_shards=1, n_salts=2, salt_threshold=500)
-    for index, query in ((di, "table spark"), (load_index(spark, hd), "common needle")):
+    hot_rare = load_index(spark, hd)
+    four = [("a", "common needle"), ("b", "common w3"), ("c", "common x1"), ("d", "w3")]
+    for index, qset in (
+        (di, [("q", "table spark")]),
+        (hot_rare, [("q", "common needle")]),
+        (hot_rare, four),
+    ):
+        label = f"executor BM25 top-k {[q for _, q in qset]}"
         index.clear_caches()
         plan = explain_collects(
-            f"executor BM25 top-k {query!r}",
-            lambda: topk_scores_distributed(index, query, 10, "bm25"),
+            label, lambda: wand.topk_scores_many(index, qset, 10, "bm25")
         )
-        theta = wand.distributed_pruning_stats(index, query, 10, "bm25")["theta"]
-        print(
-            f"\n{query!r}: theta probe "
-            + ("skipped: the metadata proves it cannot prune" if theta == float("-inf")
-               else f"ran, theta = {theta:.6f}")
-        )
-        cap(f"executor BM25 top-k {query!r}, scoring plan", plan)
+        thetas = wand.batched_pruning_stats(index, qset, 10, "bm25")["theta"]
+        for qid, query in qset:
+            theta = thetas.get(qid, float("-inf"))
+            print(
+                f"\n{query!r}: theta probe "
+                + ("skipped: a single term, or the metadata proves it cannot prune"
+                   if theta == float("-inf")
+                   else f"ran, theta = {theta:.6f}")
+            )
+        cap(f"{label}, scoring plan", plan)
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cap("simhash (bit-sliced, 1 Generate)", D.simhash(raw))
     cap("minhash band keys (1 shuffle, no distinct)", D.minhash_band_keys(raw))
