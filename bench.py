@@ -232,8 +232,7 @@ def main() -> None:
     # largely interpreted while the C2 compile queue drains).
     warm_d = tempfile.mkdtemp(prefix="bench_warm_") + "/idx"
     write_index(docs.limit(500), warm_d, n_buckets=32, n_shards=1,
-                n_salts=4, salt_threshold=max(n_docs // 8, 100),
-                collect_stats=False)
+                n_salts=4, salt_threshold=max(n_docs // 8, 100))
     shutil.rmtree(os.path.dirname(warm_d), ignore_errors=True)
 
     build_dirs: list[str] = []
@@ -249,7 +248,6 @@ def main() -> None:
             n_shards=2,
             n_salts=4,
             salt_threshold=max(n_docs // 8, 100),
-            collect_stats=False,
         )
 
     timed("index_build", build_once, max_reps=6)
@@ -370,7 +368,6 @@ def main() -> None:
         n_shards=1,
         n_salts=8,
         salt_threshold=max(args.p50_docs // 8, 1000),
-        collect_stats=False,
     )
     fx_di = load_index(spark, fx_idx)
     for _, q in REFERENCE_QUERY_SET:  # warmup (JIT + parquet footer cache)

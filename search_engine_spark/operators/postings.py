@@ -74,7 +74,7 @@ def build_documents_from_testdata(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def build_postings_packed(documents: DataFrame, with_title: bool = True) -> DataFrame:
+def build_postings_packed(documents: DataFrame) -> DataFrame:
     """documents -> packed postings (term_id, doc_id, title_end, npos,
     pos_blob).
 
@@ -84,15 +84,10 @@ def build_postings_packed(documents: DataFrame, with_title: bool = True) -> Data
     the index-build shuffle moves compact bytes and the reduce-side
     encode splices instead of re-encoding.
     """
-    from functools import partial as _partial
-
     from ..functions.tokenizer import postings_batches_arrow_packed
 
-    cols = ("title", "body") if with_title else ("body",)
-    kernel = _partial(postings_batches_arrow_packed, text_cols=cols)
-    inp = documents.select("doc_id", *cols)
-    return inp.mapInArrow(
-        kernel,
+    return documents.select("doc_id", "title", "body").mapInArrow(
+        postings_batches_arrow_packed,
         schema="doc_id long, term_id long, title_end int, npos int, pos_blob binary",
     )
 

@@ -1,5 +1,5 @@
 """Compressed global index: salted segment build, disk layout, manifest,
-resume.
+resume, and the write core shared by batch builds and streaming ingest.
 
 Pipeline (SURVEY §3.1 re-architecture):
 
@@ -12,17 +12,25 @@ Pipeline (SURVEY §3.1 re-architecture):
            bytes, and calls codec.encode_bucket_packed — ONE vectorized
            varint pass per group
       → segments rows (term_id, salt, df, ctf, blob, block_* sidecar)
-      → merge pass: hot terms' sub-segments sort-merged into one blob
+      → optional merge pass (``merge_salted``): a term's sub-segments
+        sort-merged into one blob
 
 Disk layout (all parquet + a JSON manifest):
 
-    index_dir/meta.json            n_docs, n_buckets, n_salts, fingerprint
-    index_dir/documents/           doc store
+    index_dir/meta.json            n_docs, n_buckets, n_shards, fingerprint,
+                                   avgdl
+    index_dir/documents/           doc store, with a per-doc token count dl
     index_dir/lexicon/             term_id, term, df, ctf, bucket
     index_dir/segments/shard=K/    bucket, term_id, df, ctf, n_docs, blob,
                                    block_last, block_max_tf, block_offsets
     index_dir/manifest.jsonl       one row per completed shard: lineage
                                    (input fingerprint) + metrics
+
+Batch builds (``write_index``) and streaming micro-batches
+(``streaming.ingest.ingest_batch``) share one write core:
+``_write_doc_store``, ``_write_segments`` and ``_lexicon_of``. So every
+doc store has ``dl`` and every ``meta.json`` has ``avgdl``; ``load_index``
+rejects an older directory without them (rebuild it).
 
 Shards are the resume unit: ``write_index`` skips shards whose manifest
 row is complete AND matches the input fingerprint, so an interrupted
@@ -41,7 +49,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
@@ -95,6 +103,13 @@ def _encode_kernel_packed(table: pa.Table) -> pa.Table:
     n_terms = len(eb.term_ids)
     bucket = int(t.column("bucket")[0].as_py()) if n_terms else 0
     salt = int(t.column("salt")[0].as_py()) if n_terms else 0
+    return _segment_table(eb, bucket, salt)
+
+
+def _segment_table(eb: codec.EncodedBucket, bucket: int, salt: int) -> pa.Table:
+    """Segment rows (``SEGMENT_SCHEMA``) of the encoded terms of one
+    (bucket, salt) group."""
+    n_terms = len(eb.term_ids)
     return pa.table(
         {
             "bucket": pa.array(np.full(n_terms, bucket, np.int32), pa.int32()),
@@ -199,37 +214,25 @@ def merge_decoded_parts(
     return doc_ids[order], te[order], npos[order], gather
 
 
-def _merge_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Merge one term's salted sub-segments (partition-local sort-merge:
-    decode each, argsort-merge by doc_id, re-encode)."""
-    if len(pdf) == 1:
-        return pdf
-    parts = [codec.decode_term_postings(b) for b in pdf["blob"]]
+def _merge_kernel(table: pa.Table) -> pa.Table:
+    """applyInArrow kernel: merge one term's segment rows (salts or
+    generations) into one salt-0 row — decode each, argsort-merge by
+    doc_id, re-encode."""
+    parts = [codec.decode_term_postings(b) for b in table.column("blob").to_pylist()]
     doc_ids, te, npos, gather = merge_decoded_parts(parts)
-    term = np.full(doc_ids.size, int(pdf["term_id"].iloc[0]), np.int64)
+    term = np.full(doc_ids.size, table.column("term_id")[0].as_py(), np.int64)
     eb = codec.encode_bucket(term, doc_ids, te, npos, gather)
-    return pd.DataFrame(
-        {
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "term_id": eb.term_ids,
-            "salt": np.zeros(1, np.int32),
-            "df": eb.dfs,
-            "ctf": eb.ctfs,
-            "n_docs": eb.dfs,
-            "blob": eb.blobs,
-            "block_last": [eb.block_last[0].tolist()],
-            "block_max_tf": [eb.block_max_tf[0].tolist()],
-            "block_offsets": [eb.block_offsets[0].tolist()],
-        }
-    )
+    return _segment_table(eb, table.column("bucket")[0].as_py(), 0)
 
 
 def merge_salted(segments: DataFrame) -> DataFrame:
-    """Fuse multi-salt terms into single global blobs.
+    """Fuse every term with more than one segment row into one global
+    blob.
 
-    Only terms with >1 sub-segment (the hot, salted ones — a handful)
-    pass through the merge kernel; everything else is a zero-cost
-    passthrough, so this stage costs one broadcast semi/anti join."""
+    Only terms with >1 row (the hot, salted ones, or terms spread over
+    several streaming generations) pass through the merge kernel;
+    everything else is a zero-cost passthrough, so this stage costs one
+    broadcast semi/anti join."""
     multi = (
         segments.groupBy("term_id")
         .agg(F.count("*").alias("_n"))
@@ -238,7 +241,7 @@ def merge_salted(segments: DataFrame) -> DataFrame:
     )
     singles = segments.join(F.broadcast(multi), "term_id", "left_anti")
     multis = segments.join(F.broadcast(multi), "term_id", "left_semi")
-    merged = multis.groupBy("term_id").applyInPandas(_merge_kernel, SEGMENT_SCHEMA)
+    merged = multis.groupBy("term_id").applyInArrow(_merge_kernel, SEGMENT_SCHEMA)
     return singles.unionByName(merged)
 
 
@@ -248,7 +251,7 @@ class IndexMeta:
     n_buckets: int
     n_shards: int
     fingerprint: str
-    avgdl: float = 0.0  # mean token (bigram) count per doc — BM25 length norm
+    avgdl: float  # mean token (bigram) count per doc — BM25 length norm
 
 
 def doc_length_expr(title_col: str = "title", body_col: str = "body") -> F.Column:
@@ -271,20 +274,48 @@ def doc_length_expr(title_col: str = "title", body_col: str = "body") -> F.Colum
     return (_count(title_col) + _count(body_col)).alias("dl")
 
 
-def corpus_fingerprint(documents: DataFrame) -> str:
-    """Order-independent corpus lineage id: count + XOR-free sum of 60-bit
-    sha256 prefixes of content (the per-row invariant column)."""
-    return _fingerprint_and_count(documents)[0]
+@dataclass(frozen=True)
+class DocStats:
+    """What a doc-store write observes: the lineage id (count + order-free
+    sum of 60-bit content sha256 prefixes), the doc count, and Σdl."""
+
+    fingerprint: str
+    n_docs: int
+    sum_dl: int
 
 
-def _fingerprint_and_count(documents: DataFrame) -> tuple[str, int]:
-    """Fingerprint + row count in ONE job (each Spark job costs fixed
-    scheduling time that otherwise lands in the serial fraction)."""
-    row = documents.agg(
-        F.count("*").alias("n"),
-        F.sum(F.conv(F.substring("content_sha256", 1, 15), 16, 10).cast("decimal(38,0)")).alias("s"),
-    ).collect()[0]
-    return f"{row['n']}:{row['s']}", int(row["n"])
+def _doc_stats_columns() -> list[F.Column]:
+    """One definition for the observation on a doc-store write and the
+    aggregate of a resumed build, so both give the same fingerprint."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.conv(F.substring("content_sha256", 1, 15), 16, 10).cast("decimal(38,0)")
+        ).alias("s"),
+        F.sum("dl").alias("sdl"),
+    ]
+
+
+def _doc_stats(row) -> DocStats:
+    return DocStats(f"{row['n']}:{row['s']}", int(row["n"]), int(row["sdl"] or 0))
+
+
+def _read_doc_stats(docs: DataFrame) -> DocStats:
+    """``DocStats`` of a written doc store, in one job."""
+    return _doc_stats(docs.agg(*_doc_stats_columns()).collect()[0])
+
+
+def _write_doc_store(docs: DataFrame, path: str) -> DocStats:
+    """Commit documents to ``path`` with their token count ``dl``; the
+    count, fingerprint and Σdl ride the write job (``observe``), so no
+    job re-reads them. 8 MB parquet row groups: later map stages split
+    files at row-group granularity, so split sizing stays data-adaptive
+    even if the file count is wrong for a future cluster size."""
+    obs = Observation()
+    docs.withColumn("dl", doc_length_expr()).observe(obs, *_doc_stats_columns()).write.mode(
+        "overwrite"
+    ).option("parquet.block.size", str(8 << 20)).parquet(path)
+    return _doc_stats(obs.get)
 
 
 def _manifest_path(index_dir: str) -> str:
@@ -348,146 +379,65 @@ def write_meta(index_dir: str, meta: dict) -> None:
     os.replace(tmp, path)
 
 
-def write_index(
-    documents: DataFrame,
-    index_dir: str,
-    n_buckets: int = 64,
-    n_shards: int = 4,
-    n_salts: int = 8,
-    salt_threshold: int = 250_000,
-    with_title: bool = True,
-    merge_hot: bool = False,
-    collect_stats: bool = True,
-) -> IndexMeta:
-    """Full persisted index build with shard-level resume.
-
-    Each shard covers buckets {b : b % n_shards == shard}; a shard whose
-    manifest row is complete with a matching fingerprint is skipped on
-    re-run (kill-and-resume without recomputation).
-
-    The pending shards share ONE encode exchange and its tokenize pass
-    (a second tokenize feeds the df count when ``salt_threshold`` lies
-    between 1 and the doc count, see ``build_segments``); only each
-    shard's layout shuffle, write and manifest row are its own. A kill
-    during the shared encode therefore loses the in-flight work of every
-    pending shard, while completed shards stay skipped.
-
-    ``merge_hot=True`` fuses each hot term's salted sub-segments into one
-    blob at build time (explicit compaction); the default leaves them
-    segmented and lets the query path read-merge.
-    """
-    spark = documents.sparkSession
-    os.makedirs(index_dir, exist_ok=True)
-
-    profile = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-    _t = [time.time()]
-
-    def _mark(label: str) -> None:
-        if profile:
-            now = time.time()
-            print(f"[write_index] {label}: {now - _t[0]:.1f}s", flush=True)
-            _t[0] = now
-
-    # the caller's job label, restored when the build ends
-    prev_desc = spark.sparkContext.getLocalProperty("spark.job.description")
-
-    def _phase(label: str) -> None:
-        # labels jobs in the Spark UI / event log (profiling self-ID)
-        spark.sparkContext.setJobDescription(f"write_index:{label}")
-
-    # Write the doc store FIRST, then fingerprint from the written parquet:
-    # fingerprinting the logical input would recompute the whole upstream
-    # pipeline (corpus gen + parse + doc_id assignment — measured 22 s at
-    # 80k docs), while the parquet scan prunes to the content_sha256
-    # column. The manifest fingerprint therefore guards the doc STORE's
-    # lineage; re-running against a changed input with a stale index_dir
-    # requires clearing the directory (documented resume contract).
-    docs_path = os.path.join(index_dir, "documents")
-    if not os.path.exists(os.path.join(docs_path, "_SUCCESS")):
-        # fingerprint+count ride on the write job via observe() — one job
-        # instead of two (every job is fixed driver time in the serial
-        # fraction of the 2-vs-8-core scaling measurement)
-        from pyspark.sql import Observation
-
-        obs = Observation("fp")
-        _phase("doc-store write")
-        # Even doc-store files sized to the CLUSTER: the postings map
-        # stage reads these files as its splits (parquet row-groups don't
-        # sub-split), so few/uneven files = few/straggler map tasks no
-        # matter how many cores exist (measured: a range-partitioned
-        # 8-file store gave a 7-task map with one 40 s straggler at 160k
-        # docs — the dominant term in the 2-vs-8-core scaling gap). The
-        # count scales with parallelism, not a constant: a fixed 256 made
-        # a local[2] build pay ~700 task overheads for nothing.
-        n_doc_files = max(4 * spark.sparkContext.defaultParallelism, 16)
-        documents = documents.repartition(n_doc_files)
-        writer = documents.withColumn("dl", doc_length_expr()).observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.conv(F.substring("content_sha256", 1, 15), 16, 10).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("s"),
-            F.sum("dl").alias("sdl"),  # BM25 avgdl, same job
+def read_meta(index_dir: str) -> dict:
+    """``meta.json`` of an index; one without ``avgdl`` predates the
+    ``dl`` column in every doc store and is rejected."""
+    path = os.path.join(index_dir, "meta.json")
+    with open(path) as f:
+        meta = json.load(f)
+    if "avgdl" not in meta:
+        raise ValueError(
+            f"{path} has no avgdl: the index predates per-document lengths "
+            "(dl) in its doc store. Rebuild the index directory."
         )
-        # 8 MB parquet row groups: later map stages split files at
-        # row-group granularity, so split sizing stays data-adaptive even
-        # if the file count is wrong for a future cluster size
-        writer.write.mode("overwrite").option(
-            "parquet.block.size", str(8 * 1024 * 1024)
-        ).parquet(docs_path)
-        fp, n_docs = f"{obs.get['n']}:{obs.get['s']}", int(obs.get["n"])
-        avgdl = float(obs.get["sdl"] or 0) / max(n_docs, 1)
-        docs = spark.read.parquet(docs_path)
-        _mark("documents write (+observed fingerprint/avgdl)")
-    else:
-        docs = spark.read.parquet(docs_path)
-        fp, n_docs = _fingerprint_and_count(docs)
-        if "dl" in docs.columns:
-            avgdl = (docs.agg(F.sum("dl")).collect()[0][0] or 0) / max(n_docs, 1)
-        else:  # pre-dl index dir
-            avgdl = 0.0
-        _mark("fingerprint+count (resume)")
-    done = {
-        s: m for s, m in read_manifest(index_dir).items()
-        if m.get("status") == "complete" and m.get("fingerprint") == fp
-    }
-    pending = [s for s in range(n_shards) if s not in done]
+    return meta
 
-    from pyspark import StorageLevel
-    from pyspark.sql import Observation
 
-    from .postings import build_postings_packed
+def _read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
+    """Every segment row of an index: batch ``shard=K`` or streaming
+    ``gen=N`` directories (the partition column comes along)."""
+    root = os.path.join(index_dir, "segments")
+    return spark.read.option("basePath", root).parquet(root)
 
-    # ONE tokenize pass feeds the encode of every pending shard. The shard
-    # of a posting is known only after tokenizing (it is a hash of the
-    # term), so a resumed build filters the tokenizer's output to the
-    # pending shards' buckets before the encode exchange.
-    postings = build_postings_packed(docs, with_title=with_title)
-    if len(pending) < n_shards:
-        shard_of = F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)) % n_shards
-        postings = postings.filter(shard_of.isin(pending))
-    # NOT cached: the map-side tokenize recomputes in ~seconds, while
-    # caching 10^7+ list-column rows costs far more than the recompute
-    # (measured 21.5 s to fill vs 2.7 s to recompute at 320k docs) and
-    # reading the row-format cache back is slower than the Arrow pipeline.
-    # Re-measured for packed rows on the df-count path (320k docs,
-    # n_shards=2, salt_threshold n_docs//8, local[4], 4 GB heap): caching
-    # them lost 4 of 5 alternating builds, median 49.3 s vs 46.6 s. So a
-    # threshold between 1 and n_docs still tokenizes twice: once for the
-    # count, once for the encode.
-    _mark("postings plan")
 
-    # The encode shuffle must be partitioned by DATA VOLUME, not core
-    # count: at shuffle.partitions == 8 a 320k-doc build spills every
-    # reduce task (291 s); at >= n_buckets each (bucket, salt) group lands
-    # in its own small task (70 s). AQE coalesces the excess on small
-    # inputs, so over-partitioning is free.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    prev_open = spark.conf.get("spark.sql.files.openCostInBytes")
+def _write_segments(seg: DataFrame, path: str) -> dict[str, int]:
+    """Write segment rows to ``path``. Returns the manifest stats
+    (n_terms, n_postings, blob_bytes), observed on the write job."""
+    obs = Observation()
+    seg.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_terms"),
+        F.sum("df").alias("n_postings"),
+        F.sum(F.length("blob")).alias("blob_bytes"),
+    ).write.mode("overwrite").parquet(path)
+    return {k: int(v or 0) for k, v in obs.get.items()}
+
+
+def _lexicon_of(segments: DataFrame) -> DataFrame:
+    """Lexicon rows (term_id, bucket, df, ctf, term) of segment rows. A
+    term may have one row per salt and per generation, so df and ctf are
+    sums (exact: a doc lives in exactly one salt and one generation)."""
+    from .postings import term_str_expr
+
+    return (
+        segments.groupBy("term_id", "bucket")
+        .agg(F.sum("df").alias("df"), F.sum("ctf").alias("ctf"))
+        .withColumn("term", term_str_expr(F.col("term_id")))
+    )
+
+
+def _build_session(
+    spark: SparkSession, docs_path: str, n_buckets: int, n_salts: int
+) -> SparkSession:
+    """A session for a build's encode, layout and lexicon plans: the
+    caller's runtime settings plus the build's task sizing. Set on the
+    caller's session instead, the sizing would also apply to every query
+    planned there during the build. ``newSession`` inherits the builder's
+    settings but not runtime ``conf.set`` values, hence the copy."""
+    build = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            build.conf.set(key, value)
 
     # --- task granularity, adaptive to cluster size AND data size --------
     # Both knobs below were measured to dominate 2-vs-8-core scaling when
@@ -501,26 +451,123 @@ def write_index(
     for root, _dirs, files in os.walk(docs_path):
         docs_bytes += sum(os.path.getsize(os.path.join(root, f)) for f in files)
     split_bytes = min(max(docs_bytes // max(4 * cores, 1), 4 << 20), 128 << 20)
-    # Upper bound: one (bucket, salt) group is the unsplittable encode
-    # unit, so partitions beyond n_buckets*n_salts cannot add parallelism.
+    # The encode shuffle must be partitioned by DATA VOLUME, not core
+    # count: at shuffle.partitions == 8 a 320k-doc build spills every
+    # reduce task (291 s); at >= n_buckets each (bucket, salt) group lands
+    # in its own small task (70 s). Upper bound: one (bucket, salt) group
+    # is the unsplittable encode unit, so partitions beyond
+    # n_buckets*n_salts cannot add parallelism.
     n_enc = int(
         min(
             max(4 * cores, (docs_bytes * 2) >> 26),  # ~2x text bytes / 64 MB
             max(n_buckets * n_salts, 4 * cores),
         )
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_enc))
+    build.conf.set("spark.sql.shuffle.partitions", str(n_enc))
     # The encode shuffle is deliberately partitioned as computed above; AQE
     # coalescing would fold it back to ~core-count partitions (measured: 9
     # tasks from 256 configured at 160k docs, one 28 s straggler), which
     # destroys scaling. Skew-join splitting stays on.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split_bytes))
+    build.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    build.conf.set("spark.sql.files.maxPartitionBytes", str(split_bytes))
     # low open-cost so many small files pack densely instead of inflating
     # the split count on tiny corpora
-    spark.conf.set("spark.sql.files.openCostInBytes", str(256 << 10))
+    build.conf.set("spark.sql.files.openCostInBytes", str(256 << 10))
+    return build
+
+
+def write_index(
+    documents: DataFrame,
+    index_dir: str,
+    n_buckets: int = 64,
+    n_shards: int = 4,
+    n_salts: int = 8,
+    salt_threshold: int = 250_000,
+    merge_hot: bool = False,
+) -> IndexMeta:
+    """Full persisted index build with shard-level resume.
+
+    Each shard covers buckets {b : b % n_shards == shard}; a shard whose
+    manifest row is complete with a matching fingerprint is skipped on
+    re-run (kill-and-resume without recomputation).
+
+    The pending shards share ONE encode exchange and its tokenize pass
+    (a second tokenize feeds the df count when ``salt_threshold`` lies
+    between 1 and the doc count, see ``build_segments``); only each
+    shard's layout shuffle, write and manifest row are its own. A kill
+    during the shared encode therefore loses the in-flight work of every
+    pending shard, while completed shards stay skipped. The encode,
+    layout and lexicon plans run on a session of their own
+    (``_build_session``), so the caller's session keeps its settings.
+
+    ``merge_hot=True`` fuses each hot term's salted sub-segments into one
+    blob at build time (explicit compaction); the default leaves them
+    segmented and lets the query path read-merge.
+    """
+    from pyspark import StorageLevel
+
+    from .postings import build_postings_packed
+
+    spark = documents.sparkSession
+    sc = spark.sparkContext
+    os.makedirs(index_dir, exist_ok=True)
+    # the caller's job label, restored when the build ends
+    prev_desc = sc.getLocalProperty("spark.job.description")
+
+    def _phase(label: str) -> None:
+        # labels jobs in the Spark UI / event log (profiling self-ID)
+        sc.setJobDescription(f"write_index:{label}")
+
+    # Write the doc store FIRST, then tokenize the written parquet:
+    # re-reading the logical input would recompute the whole upstream
+    # pipeline (corpus gen + parse + doc_id assignment — measured 22 s at
+    # 80k docs). The manifest fingerprint therefore guards the doc STORE's
+    # lineage; re-running against a changed input with a stale index_dir
+    # requires clearing the directory (documented resume contract).
+    docs_path = os.path.join(index_dir, "documents")
+    if os.path.exists(os.path.join(docs_path, "_SUCCESS")):
+        stats = _read_doc_stats(spark.read.parquet(docs_path))
+    else:
+        _phase("doc-store write")
+        # Even doc-store files sized to the CLUSTER: the postings map
+        # stage reads these files as its splits (parquet row-groups don't
+        # sub-split), so few/uneven files = few/straggler map tasks no
+        # matter how many cores exist (measured: a range-partitioned
+        # 8-file store gave a 7-task map with one 40 s straggler at 160k
+        # docs — the dominant term in the 2-vs-8-core scaling gap). The
+        # count scales with parallelism, not a constant: a fixed 256 made
+        # a local[2] build pay ~700 task overheads for nothing.
+        n_doc_files = max(4 * sc.defaultParallelism, 16)
+        stats = _write_doc_store(documents.repartition(n_doc_files), docs_path)
+    done = {
+        s: m for s, m in read_manifest(index_dir).items()
+        if m.get("status") == "complete" and m.get("fingerprint") == stats.fingerprint
+    }
+    pending = [s for s in range(n_shards) if s not in done]
+
+    build = _build_session(spark, docs_path, n_buckets, n_salts)
+    # ONE tokenize pass feeds the encode of every pending shard. The shard
+    # of a posting is known only after tokenizing (it is a hash of the
+    # term), so a resumed build filters the tokenizer's output to the
+    # pending shards' buckets before the encode exchange.
+    postings = build_postings_packed(build.read.parquet(docs_path))
+    if len(pending) < n_shards:
+        shard_of = F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)) % n_shards
+        postings = postings.filter(shard_of.isin(pending))
+    # NOT cached: the map-side tokenize recomputes in ~seconds, while
+    # caching 10^7+ list-column rows costs far more than the recompute
+    # (measured 21.5 s to fill vs 2.7 s to recompute at 320k docs) and
+    # reading the row-format cache back is slower than the Arrow pipeline.
+    # Re-measured for packed rows on the df-count path (320k docs,
+    # n_shards=2, salt_threshold n_docs//8, local[4], 4 GB heap): caching
+    # them lost 4 of 5 alternating builds, median 49.3 s vs 46.6 s. So a
+    # threshold between 1 and n_docs still tokenizes twice: once for the
+    # count, once for the encode.
+
     # ONE encode exchange for every pending shard
-    encoded = build_segments(postings, n_buckets, n_salts, salt_threshold, n_docs=n_docs)
+    encoded = build_segments(
+        postings, n_buckets, n_salts, salt_threshold, n_docs=stats.n_docs
+    )
     if len(pending) > 1 or merge_hot:
         # each shard's write (and merge_salted, which refers to its input
         # three times) reads the encoded rows: compact, already-compressed
@@ -528,7 +575,7 @@ def write_index(
         encoded = encoded.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # Layout shuffle before each write: the encode runs WIDE (hundreds
-        # of partitions — see the conf block above), but a point-lookup
+        # of partitions — see ``_build_session``), but a point-lookup
         # query pays a parquet footer read per segment FILE (measured: 256
         # files pushed query p50 from 25 ms to 230 ms). Re-shuffle the
         # blobs into a few files keyed by CONTIGUOUS bucket ranges, sorted
@@ -553,65 +600,24 @@ def write_index(
             # applies to the written form.
             if merge_hot:
                 seg = merge_salted(seg)
-            if collect_stats:
-                obs = Observation()  # manifest stats ride the write
-                seg = seg.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_terms"),
-                    F.sum("df").alias("n_postings"),
-                    F.sum(F.length("blob")).alias("blob_bytes"),
-                )
-            out = os.path.join(index_dir, "segments", f"shard={shard}")
-            seg.repartition(n_files, fid).sortWithinPartitions(
-                "bucket", "term_id"
-            ).write.mode("overwrite").parquet(out)
-            _mark(f"shard {shard} segments write")
-            entry = {
-                "shard": shard,
-                "status": "complete",
-                "fingerprint": fp,
-                "wall_ms": int((time.time() - t0) * 1000),
-            }
-            if collect_stats:
-                stats = obs.get
-                entry.update(
-                    n_terms=stats["n_terms"],
-                    n_postings=int(stats["n_postings"] or 0),
-                    blob_bytes=int(stats["blob_bytes"] or 0),
-                )
-            append_manifest(index_dir, entry)
-        # lexicon derives from final segments; hot terms may have one row
-        # per salt, so aggregate (exact: a doc lives in exactly one salt)
-        seg_all = spark.read.option("basePath", os.path.join(index_dir, "segments")).parquet(
-            os.path.join(index_dir, "segments")
-        )
-        from .postings import term_str_expr
-
+            seg_stats = _write_segments(
+                seg.repartition(n_files, fid).sortWithinPartitions("bucket", "term_id"),
+                os.path.join(index_dir, "segments", f"shard={shard}"),
+            )
+            wall_ms = int((time.time() - t0) * 1000)
+            append_manifest(index_dir, {"shard": shard, "status": "complete",
+                                        "fingerprint": stats.fingerprint,
+                                        "wall_ms": wall_ms, **seg_stats})
         _phase("lexicon")
-        lex = (
-            seg_all.groupBy("term_id", "bucket")
-            .agg(F.sum("df").alias("df"), F.sum("ctf").alias("ctf"))
-            .withColumn("term", term_str_expr(F.col("term_id")))
+        _lexicon_of(_read_segments(build, index_dir)).write.mode("overwrite").parquet(
+            os.path.join(index_dir, "lexicon")
         )
-        lex.write.mode("overwrite").parquet(os.path.join(index_dir, "lexicon"))
-        _mark("lexicon write")
     finally:
         encoded.unpersist()
-        spark.sparkContext.setJobDescription(prev_desc)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce
-        )
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-        spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
+        sc.setJobDescription(prev_desc)
 
-    meta = {
-        "n_docs": n_docs,
-        "n_buckets": n_buckets,
-        "n_shards": n_shards,
-        "fingerprint": fp,
-        "avgdl": avgdl,
-    }
+    meta = {"n_docs": stats.n_docs, "n_buckets": n_buckets, "n_shards": n_shards,
+            "fingerprint": stats.fingerprint, "avgdl": stats.sum_dl / max(stats.n_docs, 1)}
     write_meta(index_dir, meta)
     # Everything (doc store, segments, lexicon, manifest) is durable now:
     # release the doc-id assignment's persisted intermediates so repeated
@@ -619,7 +625,7 @@ def write_index(
     # Re-consuming the in-memory documents DF afterwards recomputes the
     # rank instead of reading cache — correct, just slower.
     release_assign_cache()
-    return IndexMeta(n_docs, n_buckets, n_shards, fp, avgdl)
+    return IndexMeta(**meta)
 
 
 def empty_result_df(spark: SparkSession) -> DataFrame:
@@ -697,14 +703,11 @@ class DiskIndex:
     meta: IndexMeta
 
     def __post_init__(self) -> None:
-        docs = self.spark.read.parquet(os.path.join(self.index_dir, "documents"))
-        if "gen" in docs.columns:  # streaming doc store: generation-keyed dirs
-            docs = docs.drop("gen")
-        self._documents = docs
+        # a streaming doc store has generation-keyed dirs (a gen column)
+        docs_path = os.path.join(self.index_dir, "documents")
+        self._documents = self.spark.read.parquet(docs_path).drop("gen")
         self._lexicon = self.spark.read.parquet(_lexicon_dir(self.index_dir))
-        self._segments = self.spark.read.option(
-            "basePath", os.path.join(self.index_dir, "segments")
-        ).parquet(os.path.join(self.index_dir, "segments"))
+        self._segments = _read_segments(self.spark, self.index_dir)
         self.segment_cache = LruCache(100_000)
         self.df_cache = LruCache(1_000_000)  # term_id -> df (metadata only)
         # term_id -> wand._TermMeta: block metadata for the executor top-k
@@ -771,52 +774,25 @@ class DiskIndex:
     def doc_length_df(self) -> DataFrame:
         """(doc_id, dl) as a DataFrame — the doc-partitioned BM25 length
         sidecar. This is what the EXECUTOR-SIDE scoring path joins against
-        (never collected); reads the ``dl`` column written by
-        ``write_index``, falling back to the token-count expression for
-        pre-dl index dirs."""
-        docs = self._documents
-        if "dl" in docs.columns:
-            return docs.select("doc_id", "dl")
-        return docs.select("doc_id", doc_length_expr())
+        (never collected)."""
+        return self._documents.select("doc_id", "dl")
 
     def doc_lengths(self):
         """(doc_ids sorted asc, dl) int64 arrays — BM25 length norm.
 
-        Reads the ``dl`` column written by ``write_index`` (falls back to
-        computing the token-count expression for pre-dl index dirs). The
-        whole column is held driver-side (16 bytes/doc) — which is why the
-        score-ordered query family only uses this below the
+        The whole ``dl`` column is held driver-side (16 bytes/doc) — which
+        is why the score-ordered query family only uses this below the
         ``wand.MAX_DRIVER_DOCS`` valve; above it the distributed twin
         joins ``doc_length_df`` executor-side and the driver never holds
         more than the k winners.
         """
         if self._dl is None:
-            import numpy as _np
-
-            docs = self._documents
-            if "dl" in docs.columns:
-                sel = docs.select("doc_id", "dl")
-            else:
-                sel = docs.select("doc_id", doc_length_expr())
-            rows = sel.collect()
-            ids = _np.array([r["doc_id"] for r in rows], _np.int64)
-            dl = _np.array([r["dl"] for r in rows], _np.int64)
-            order = _np.argsort(ids)
+            rows = self.doc_length_df().collect()
+            ids = np.array([r["doc_id"] for r in rows], np.int64)
+            dl = np.array([r["dl"] for r in rows], np.int64)
+            order = np.argsort(ids)
             self._dl = (ids[order], dl[order])
         return self._dl
-
-    def avgdl(self) -> float:
-        if self.meta.avgdl > 0:
-            return self.meta.avgdl
-        if self._dl is not None:  # driver sidecar already resident — free
-            dl = self._dl[1]
-            return float(dl.mean()) if dl.size else 0.0
-        # pre-avgdl meta dirs: ONE scalar to the driver. The old fallback
-        # went through doc_lengths(), collecting the whole dl column —
-        # exactly the O(n_docs) driver cost the distributed scoring route
-        # exists to avoid (ADVICE r3).
-        row = self.doc_length_df().agg(F.avg("dl").alias("_a")).collect()[0]
-        return float(row["_a"] or 0.0)
 
     def empty_result(self) -> DataFrame:
         """Shared empty (doc_id, score, rank).
@@ -841,17 +817,12 @@ class DiskIndex:
 
 
 def load_index(spark: SparkSession, index_dir: str) -> DiskIndex:
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        m = json.load(f)
+    m = read_meta(index_dir)
     return DiskIndex(
         spark,
         index_dir,
         IndexMeta(
-            m["n_docs"],
-            m["n_buckets"],
-            m["n_shards"],
-            m["fingerprint"],
-            float(m.get("avgdl", 0.0)),
+            m["n_docs"], m["n_buckets"], m["n_shards"], m["fingerprint"], float(m["avgdl"])
         ),
     )
 
@@ -864,8 +835,8 @@ def index_stats(di: DiskIndex) -> DataFrame:
 
     Everything is served off control-plane artifacts, never posting
     blobs: ``meta.json`` (n_docs, avgdl, layout), ``manifest.jsonl``
-    per-shard metrics (n_postings / blob_bytes, written by
-    ``write_index(collect_stats=True)``), and the lexicon table
+    per-shard metrics (n_postings / blob_bytes, observed on each shard's
+    write), and the lexicon table
     (n_terms / total_ctf / max_df — a parquet metadata-sized aggregate),
     plus one executor-side SUM over the doc store's ``dl`` column for
     total_dl. At 10^12 docs this is one column scan + three O(1) folds;
@@ -884,9 +855,9 @@ def index_stats(di: DiskIndex) -> DataFrame:
     if complete and all("n_postings" in m for m in complete):
         n_postings = sum(int(m["n_postings"]) for m in complete)
         blob_bytes = sum(int(m.get("blob_bytes", 0)) for m in complete)
-    else:  # collect_stats=False build, or a streaming index (generation
-        # rows, no shard rows): same number via the lexicon (df is
-        # salt-aggregated, a doc lives in exactly one salt)
+    else:  # a streaming index (generation rows, no shard rows): same
+        # number via the lexicon (df is salt-aggregated, a doc lives in
+        # exactly one salt)
         n_postings = int(
             di.lexicon.agg(F.sum("df").alias("s")).collect()[0]["s"] or 0
         )

@@ -912,7 +912,7 @@ class _Scorer:
     @staticmethod
     def of(di: DiskIndex, scorer: str) -> _Scorer:
         if scorer == "bm25":
-            return _Scorer(True, di.meta.n_docs, di.avgdl())
+            return _Scorer(True, di.meta.n_docs, di.meta.avgdl)
         return _Scorer(False, di.meta.n_docs)
 
     def idf(self, df: int) -> float:
@@ -1024,7 +1024,7 @@ def topk_bm25_exhaustive(
     if not segs:
         return []
     ids, dl = di.doc_lengths()
-    avgdl = di.avgdl()
+    avgdl = di.meta.avgdl
     n = di.meta.n_docs
     acc: dict[int, float] = {}
     for seg in segs.values():

@@ -14,8 +14,8 @@ is the Spark-idiomatic twin:
   generations on fetch, so the index is searchable at any moment without
   blocking ingest.
 - ``compact_index``: fold all generations into one (periodic maintenance
-  job — the analog of a full merge; bounded by groupBy(term_id) +
-  partition-local sort-merge, same kernel as the salted-segment merge).
+  job — the analog of a full merge: ``merge_salted`` over every
+  generation's rows, a partition-local sort-merge per term).
 - ``windowed_event_counts``: watermarked tumbling-window aggregation —
   the streaming twin of ``operators/events.hourly_event_stats`` (same
   output schema, late rows beyond the watermark dropped).
@@ -23,28 +23,43 @@ is the Spark-idiomatic twin:
   (``applyInPandasWithState`` + event-time timeout) — the streaming twin
   of ``operators/events.sessionize`` with O(active users) state.
 
+A micro-batch goes through the batch build's write core
+(``operators.segments``): ``_write_doc_store`` (adds ``dl``, observes the
+count, fingerprint and Σdl), ``_write_segments`` over ``build_segments``
+output as is (no fuse: salted sub-segments are read-merged), and
+``_lexicon_of``.
+
 Exactly-once notes: foreachBatch gives at-least-once; the per-generation
-directory is keyed by ``batch_id``, so a replayed batch OVERWRITES its own
-generation (idempotent), and ``meta.json`` is recomputed from the
-manifest rather than incremented (no double counting).
+directories are keyed by ``batch_id``, so a replayed batch OVERWRITES its
+own generation (idempotent), and ``meta.json`` is recomputed from the
+manifest rather than incremented (no double counting). A batch commits
+``documents/gen=N`` first, then ``segments/gen=N``, its manifest row,
+``meta.json`` and the lexicon. A crash after the doc-store commit leaves
+documents that no posting or count refers to, visible in ``documents``
+until the replay rewrites both generations and publishes them.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.postings import build_postings_packed
 from ..operators.segments import (
+    _lexicon_of,
+    _read_segments,
+    _write_doc_store,
+    _write_segments,
     append_manifest,
     build_segments,
-    corpus_fingerprint,
     manifest_rows,
-    may_salt,
     merge_salted,
+    read_meta,
     write_meta,
 )
 
@@ -80,6 +95,7 @@ def _write_meta(index_dir: str, n_buckets: int) -> None:
         "fingerprint": "streaming:" + ":".join(
             g.get("fingerprint", "?") for _, g in sorted(gens.items())
         ),
+        "avgdl": sum(g["sum_dl"] for g in gens.values()) / max(n_docs, 1),
     }
     write_meta(index_dir, meta)
 
@@ -132,78 +148,55 @@ def ingest_batch(
     already folded into the base. 0/None disables the trigger.
     """
     _check_doc_store_layout(index_dir)
+    if os.path.exists(os.path.join(index_dir, "meta.json")):
+        read_meta(index_dir)  # an index without avgdl is rejected here
     spark = batch_df.sparkSession
     _heal_compaction(index_dir)
     if compact_every and _live_gens(index_dir, exclude=batch_id) >= compact_every:
         compact_index(spark, index_dir, exclude_gen=batch_id)
     t0 = time.time()
+    docs_dir = os.path.join(index_dir, "documents", f"gen={batch_id}")
+    # the doc-store write fills the cache the tokenizer then reads
     batch_df = batch_df.cache()
-    n = batch_df.count()
-    if n == 0:
+    try:
+        stats = _write_doc_store(batch_df, docs_dir)
+        if stats.n_docs == 0:
+            shutil.rmtree(docs_dir, ignore_errors=True)
+            return
+        seg = build_segments(
+            build_postings_packed(batch_df), n_buckets, n_salts, salt_threshold,
+            n_docs=stats.n_docs,
+        )
+        seg_stats = _write_segments(
+            seg, os.path.join(index_dir, "segments", f"gen={batch_id}")
+        )
+    finally:
         batch_df.unpersist()
-        return
-    fp = corpus_fingerprint(batch_df)
-    from pyspark import StorageLevel
-
-    from ..operators.postings import build_postings_packed
-
-    encoded = build_segments(
-        build_postings_packed(batch_df), n_buckets, n_salts, salt_threshold, n_docs=n
-    )
-    if may_salt(salt_threshold, n):
-        # persist between encode and merge — merge_salted references its
-        # input 3x; without this the encode kernel runs per branch
-        encoded = encoded.persist(StorageLevel.MEMORY_AND_DISK)
-        seg = merge_salted(encoded)
-    else:
-        seg = encoded  # every term is one salt-0 row: nothing to merge
-    gen_dir = os.path.join(index_dir, "segments", f"gen={batch_id}")
-    from pyspark.sql import Observation
-
-    obs = Observation(f"seg_stats_{batch_id}")
-    # manifest stats ride the segment write (no separate re-read job)
-    seg.observe(
-        obs, F.count(F.lit(1)).alias("n_terms"), F.sum("df").alias("n_postings")
-    ).write.mode("overwrite").parquet(gen_dir)  # replay-idempotent
-    encoded.unpersist()
-    # doc store is generation-keyed like the segments: a replayed batch
-    # OVERWRITES its own generation instead of appending duplicate rows
-    # (exactly-once for the doc store too; readers drop the gen column)
-    batch_df.write.mode("overwrite").parquet(
-        os.path.join(index_dir, "documents", f"gen={batch_id}")
-    )
-    stats = obs.get
-    os.makedirs(index_dir, exist_ok=True)
-    append_manifest(
-        index_dir,
-        {
-            "gen": batch_id,
-            "status": "complete",
-            "fingerprint": fp,
-            "n_docs": n,
-            "n_terms": stats["n_terms"],
-            "n_postings": int(stats["n_postings"] or 0),
-            "wall_ms": int((time.time() - t0) * 1000),
-        },
-    )
+    wall_ms = int((time.time() - t0) * 1000)
+    append_manifest(index_dir, {"gen": batch_id, "status": "complete",
+                                "fingerprint": stats.fingerprint, "n_docs": stats.n_docs,
+                                "sum_dl": stats.sum_dl, **seg_stats, "wall_ms": wall_ms})
     _write_meta(index_dir, n_buckets)
     _write_gen_lexicon(spark, index_dir)
-    batch_df.unpersist()
+
+
+def _gen_ids(index_dir: str, exclude: int | None = None) -> list[int]:
+    """Live segment generation ids, ascending (optionally without one
+    batch's own gen)."""
+    seg_root = os.path.join(index_dir, "segments")
+    if not os.path.isdir(seg_root):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(seg_root)
+        if d.startswith("gen=") and d != f"gen={exclude}"
+        and os.path.isdir(os.path.join(seg_root, d))
+    )
 
 
 def _live_gens(index_dir: str, exclude: int | None = None) -> int:
-    """Count live segment generation directories (optionally excluding
-    one batch's own gen — the auto-compaction trigger predicate)."""
-    seg_root = os.path.join(index_dir, "segments")
-    if not os.path.isdir(seg_root):
-        return 0
-    n = 0
-    for d in os.listdir(seg_root):
-        if d.startswith("gen=") and os.path.isdir(os.path.join(seg_root, d)):
-            if exclude is not None and d == f"gen={exclude}":
-                continue
-            n += 1
-    return n
+    """The auto-compaction trigger predicate's generation count."""
+    return len(_gen_ids(index_dir, exclude))
 
 
 def _heal_compaction(index_dir: str) -> None:
@@ -214,8 +207,6 @@ def _heal_compaction(index_dir: str) -> None:
     Runs at the top of every ``ingest_batch`` (single-writer assumption:
     readers between a crash and the next ingest may double-merge — the
     documented recovery window)."""
-    import shutil
-
     folded: set[int] = set()
     for row in manifest_rows(index_dir):
         if "compact" in row:
@@ -229,37 +220,19 @@ def _heal_compaction(index_dir: str) -> None:
 
 
 def _write_gen_lexicon(spark: SparkSession, index_dir: str) -> None:
-    """Global lexicon = per-term sum over generations (small: one row per
-    distinct term).
+    """Publish the global lexicon: ``_lexicon_of`` every live generation.
 
-    Scale note: this rescans every generation's segment METADATA columns
-    (term_id/bucket/df/ctf — parquet-pruned, blobs untouched) per batch,
-    so per-batch cost grows with the number of live generations, not with
-    index bytes — and the ``compact_every`` trigger in ``ingest_batch``
-    bounds that number (the standard LSM answer). A replayed batch
-    overwrites its own gen and the recompute stays exactly-once (an
-    incremental old⊕new merge would double-count replays, which is why
-    the full fold is the replay-safe choice).
+    The fold rescans every generation's segment METADATA columns (blobs
+    untouched), so per-batch cost grows with the live generations, which
+    ``compact_every`` bounds; a full fold stays exactly-once under replay,
+    where an incremental old⊕new merge would double-count.
 
-    Snapshot-safe publication (VERDICT r3 next-round #5): each publish
-    writes a NEW ``lexicon_v<N>`` directory and atomically flips the
-    ``LEXICON`` pointer file (``os.replace``). A reader holding a
-    DataFrame over the previous version keeps scanning real files — the
-    previous version is retained for one more publish cycle before GC —
-    instead of racing the old rmtree+rename. ``DiskIndex`` resolves the
-    pointer at load (falling back to the legacy flat ``lexicon`` dir)."""
-    import shutil
-
-    from ..operators.postings import term_str_expr
-
-    seg_all = spark.read.option(
-        "basePath", os.path.join(index_dir, "segments")
-    ).parquet(os.path.join(index_dir, "segments"))
-    lex = (
-        seg_all.groupBy("term_id", "bucket")
-        .agg(F.sum("df").alias("df"), F.sum("ctf").alias("ctf"))
-        .withColumn("term", term_str_expr(F.col("term_id")))
-    )
+    Snapshot-safe publication: each publish writes a NEW ``lexicon_v<N>``
+    directory and atomically flips the ``LEXICON`` pointer file. A reader
+    holding the previous version keeps scanning real files: it is kept
+    one more publish cycle before GC. ``DiskIndex`` resolves the pointer
+    at load (falling back to the legacy flat ``lexicon`` dir)."""
+    lex = _lexicon_of(_read_segments(spark, index_dir))
     versions = sorted(
         int(d.split("_v")[-1])
         for d in os.listdir(index_dir)
@@ -313,9 +286,11 @@ def compact_index(
 ) -> None:
     """Fold segment generations into one base generation (LSM compaction).
 
-    groupBy(term_id) → partition-local sort-merge re-encode (the same
-    kernel as the salted merge). Afterward every folded term has exactly
-    one segment row, so query fetches stop paying the read-merge.
+    ``merge_salted`` over every folded generation's rows: a term with
+    more than one row (several generations or salts) is sort-merged and
+    re-encoded, a one-row term passes through. Afterward every folded
+    term has exactly one segment row, so query fetches stop paying the
+    read-merge.
 
     ``exclude_gen`` leaves that generation out of the fold — the
     auto-compaction path passes the in-flight batch id so an at-least-once
@@ -330,26 +305,15 @@ def compact_index(
     A crash mid-removal leaves both the base and some folded dirs — the
     ``compact`` record lets ``_heal_compaction`` finish the removals at
     the next ingest instead of double-counting forever."""
-    import shutil
-
-    from ..operators.segments import SEGMENT_SCHEMA, _merge_kernel
-
     seg_root = os.path.join(index_dir, "segments")
-    gens = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(seg_root)
-        if d.startswith("gen=") and os.path.isdir(os.path.join(seg_root, d))
-    )
-    fold = [g for g in gens if exclude_gen is None or g != exclude_gen]
+    fold = _gen_ids(index_dir, exclude_gen)
     if len(fold) <= 1:
         return
     base = min(fold + [0]) - 1  # -1, then -2, ... — never a batch_id
     seg_all = spark.read.option("basePath", seg_root).parquet(
         *[os.path.join(seg_root, f"gen={g}") for g in fold]
     )
-    merged = seg_all.drop("gen").groupBy("term_id").applyInPandas(
-        _merge_kernel, SEGMENT_SCHEMA
-    )
+    merged = merge_salted(seg_all.drop("gen"))
     tmp = os.path.join(index_dir, "_segments_tmp")
     shutil.rmtree(tmp, ignore_errors=True)
     merged.write.mode("overwrite").parquet(os.path.join(tmp, f"gen={base}"))

@@ -20,8 +20,9 @@ from search_engine_spark.operators.postings import (
     build_postings_packed,
 )
 from search_engine_spark.operators.segments import (
+    _read_doc_stats,
+    _write_doc_store,
     build_segments,
-    corpus_fingerprint,
     load_index,
     may_salt,
     merge_salted,
@@ -202,9 +203,14 @@ def test_manifest_malformed_middle_line_raises(tmp_path):
 
 
 def test_fingerprint_invalidates_on_input_change(spark, docs, tmp_path):
-    fp1 = corpus_fingerprint(docs)
-    fp2 = corpus_fingerprint(docs.limit(100))
-    assert fp1 != fp2
+    """The fingerprint observed on a doc-store commit changes with the
+    input, and the resume aggregate over the written store reads back the
+    same stats."""
+    a = _write_doc_store(docs, str(tmp_path / "a"))
+    b = _write_doc_store(docs.limit(100), str(tmp_path / "b"))
+    assert a.fingerprint != b.fingerprint
+    assert (a.n_docs, b.n_docs) == (docs.count(), 100)
+    assert _read_doc_stats(spark.read.parquet(str(tmp_path / "a"))) == a
 
 
 def test_search_segments_cached(spark, index_dir):
@@ -272,7 +278,7 @@ def test_bm25_length_normalization_direction(spark, index_dir, docs):
     ids, dl = di.doc_lengths()
     assert ids.size == di.meta.n_docs
     assert dl.min() >= 0 and dl.max() > dl.min()  # lengths vary
-    assert abs(di.avgdl() - dl.mean()) < 1e-9
+    assert abs(di.meta.avgdl - dl.mean()) < 1e-9
 
 
 def test_merge_hot_build_rank_identical(spark, docs, tmp_path):
@@ -329,12 +335,16 @@ def test_index_stats_gauges(spark, docs, index_dir):
 
 
 def test_index_stats_without_manifest_stats(spark, docs, tmp_path):
-    """collect_stats=False indexes fall back to the lexicon fold for
-    n_postings and report blob_bytes=0 rather than failing."""
+    """A streaming index has generation rows and no shard rows in its
+    manifest: index_stats falls back to the lexicon fold for n_postings
+    and reports blob_bytes=0 rather than failing."""
     from search_engine_spark.operators.segments import index_stats
+    from search_engine_spark.streaming.ingest import ingest_batch
 
     d = str(tmp_path / "nostats")
-    write_index(docs, d, n_buckets=8, n_shards=1, n_salts=2, collect_stats=False)
+    ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, d, n_buckets=8, n_salts=2)
+    ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, d, n_buckets=8, n_salts=2)
+    assert not read_manifest(d)
     di = load_index(spark, d)
     row = index_stats(di).collect()[0]
     sdf = int(di.lexicon.agg(F.sum("df").alias("s")).collect()[0]["s"])
@@ -447,6 +457,35 @@ def test_write_index_restores_job_description(spark, docs, tmp_path):
         assert sc.getLocalProperty("spark.job.description") == "caller label"
     finally:
         sc.setJobDescription(None)
+
+
+def test_write_index_leaves_caller_session_conf(spark, docs, tmp_path):
+    """The build's shuffle-partition and coalescing settings live on a
+    session of its own: a thread polling the caller's session all through
+    a build never sees them, so queries planned there meanwhile keep the
+    caller's settings."""
+    import threading
+    import time
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    caller = tuple(spark.conf.get(k) for k in keys)
+    seen: set[tuple] = set()
+    stop = threading.Event()
+
+    def poll() -> None:
+        while not stop.is_set():
+            seen.add(tuple(spark.conf.get(k) for k in keys))
+            time.sleep(0.002)
+
+    t = threading.Thread(target=poll)
+    t.start()
+    try:
+        write_index(docs, str(tmp_path / "idx"), n_buckets=16, n_shards=2, n_salts=4)
+    finally:
+        stop.set()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert seen == {caller}
 
 
 def test_build_segments_threshold_shortcut_byte_identical(spark, docs):

@@ -219,6 +219,141 @@ def test_lexicon_snapshot_survives_next_publish(spark, sf_dir, tmp_root):
     ).collect()[0][0]
 
 
+@pytest.fixture(scope="module")
+def thirds(spark, sf_dir, tmp_root):
+    """The testdata corpus as three micro-batches (doc_id mod 3), each
+    read from its own parquet file as a file-source stream's batch is."""
+    docs = build_documents_from_testdata(spark, sf_dir)
+    paths = [os.path.join(tmp_root, "thirds", str(i)) for i in range(3)]
+    for i, path in enumerate(paths):
+        docs.filter(F.col("doc_id") % 3 == i).write.parquet(path)
+    return [spark.read.parquet(path) for path in paths]
+
+
+def _ingest(parts, index_dir, first_gen=0):
+    from search_engine_spark.streaming.ingest import ingest_batch
+
+    for i, part in enumerate(parts, first_gen):
+        ingest_batch(part, i, index_dir, n_buckets=8, n_salts=2, compact_every=0)
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs launched by one call, counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_batch_job_budget(spark, thirds, tmp_root):
+    """A micro-batch is one doc-store write (which observes the count,
+    fingerprint and Σdl and fills the cache the tokenizer reads), one
+    encode + segment write, and the lexicon publish: at most 6 jobs, with
+    no count, fingerprint or salted-merge job of its own."""
+    from search_engine_spark.streaming.ingest import ingest_batch
+
+    d = os.path.join(tmp_root, "job_budget_idx")
+    for i, part in enumerate(thirds):
+        n = _jobs_of(spark, lambda: ingest_batch(part, i, d, n_buckets=8, n_salts=2))
+        assert n <= 6, (i, n)
+
+
+@pytest.mark.parametrize("query", ["table", "table spark", "customer query"])
+def test_stream_bm25_topk_equals_batch(spark, built, query):
+    """BM25 top-k over the streaming index equals the batch index over
+    the same corpus on the driver and the forced-executor route: same
+    avgdl (from meta.json on both), same ranks, scores within 1e-9. The
+    executor route reads dl from both doc stores, so a fresh handle on
+    either index launches the same number of jobs."""
+    from search_engine_spark.operators.wand import topk_bm25_wand
+
+    stream_dir, batch_dir = built
+    s, b = load_index(spark, stream_dir), load_index(spark, batch_dir)
+    assert s.meta.avgdl == b.meta.avgdl > 0
+    for kw in ({}, {"max_driver_postings": 0}):
+        got, exp = topk_bm25_wand(s, query, 10, **kw), topk_bm25_wand(b, query, 10, **kw)
+        assert got and [d for d, _ in got] == [d for d, _ in exp], kw
+        assert all(abs(x - y) < 1e-9 for (_, x), (_, y) in zip(got, exp)), kw
+
+    def executor_jobs(index_dir: str) -> int:
+        di = load_index(spark, index_dir)
+        return _jobs_of(spark, lambda: topk_bm25_wand(di, query, 10, max_driver_postings=0))
+
+    assert executor_jobs(stream_dir) == executor_jobs(batch_dir)
+
+
+def test_empty_micro_batch_writes_nothing(spark, thirds, tmp_root):
+    """An empty micro-batch leaves no generation directory, no manifest
+    row and an unchanged meta.json."""
+    from search_engine_spark.streaming.ingest import ingest_batch
+
+    d = os.path.join(tmp_root, "empty_batch_idx")
+    _ingest(thirds[:1], d)
+
+    def snapshot():
+        with open(os.path.join(d, "meta.json"), "rb") as f, open(
+            os.path.join(d, "manifest.jsonl"), "rb"
+        ) as g:
+            return f.read(), g.read()
+
+    before = snapshot()
+    ingest_batch(thirds[1].limit(0), 1, d, n_buckets=8, n_salts=2)
+    assert not os.path.exists(os.path.join(d, "documents", "gen=1"))
+    assert not os.path.exists(os.path.join(d, "segments", "gen=1"))
+    assert snapshot() == before
+
+
+def test_meta_without_avgdl_rejected(spark, thirds, tmp_root):
+    """An index whose meta.json has no avgdl predates dl in every doc
+    store: loading it and ingesting into it both fail with a rebuild
+    message instead of scoring BM25 against a missing length norm."""
+    import json
+
+    from search_engine_spark.streaming.ingest import ingest_batch
+
+    d = os.path.join(tmp_root, "no_avgdl_idx")
+    _ingest(thirds[:1], d)
+    meta_path = os.path.join(d, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["avgdl"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="no avgdl.*Rebuild"):
+        load_index(spark, d)
+    with pytest.raises(ValueError, match="no avgdl.*Rebuild"):
+        ingest_batch(thirds[1], 1, d, n_buckets=8, n_salts=2)
+    assert not os.path.exists(os.path.join(d, "documents", "gen=1"))
+
+
+def test_replay_after_doc_store_commit(spark, thirds, tmp_root):
+    """A batch killed after its doc-store commit (documents/gen=N written,
+    no segments/gen=N, no manifest row) replays to exactly the index of a
+    clean run: same meta.json, documents and results."""
+    from search_engine_spark.operators.segments import _write_doc_store, manifest_rows
+    from search_engine_spark.operators.wand import topk_bm25_wand
+
+    clean = os.path.join(tmp_root, "clean_idx")
+    _ingest(thirds, clean)
+    torn = os.path.join(tmp_root, "torn_idx")
+    _ingest(thirds[:2], torn)
+    _write_doc_store(thirds[2], os.path.join(torn, "documents", "gen=2"))
+    assert not os.path.exists(os.path.join(torn, "segments", "gen=2"))
+    assert [r["gen"] for r in manifest_rows(torn)] == [0, 1]
+    _ingest(thirds[2:], torn, first_gen=2)  # the replay
+
+    a, b = load_index(spark, clean), load_index(spark, torn)
+    assert a.meta == b.meta
+    assert a.documents.count() == b.documents.count() == a.meta.n_docs
+    for query in QUERIES:
+        assert _results(spark, torn, query) == _results(spark, clean, query)
+    assert topk_bm25_wand(b, "table spark", 10) == topk_bm25_wand(a, "table spark", 10)
+
+
 def test_windowed_event_stream_matches_batch(spark, sf_dir, tmp_root):
     from search_engine_spark.operators.events import hourly_event_stats
 

@@ -153,7 +153,6 @@ def main() -> None:
         n_shards=1,
         n_salts=8,
         salt_threshold=args.salt_threshold,
-        collect_stats=False,
     )
     build_sec = time.time() - t0
     cs1 = _cpu_stat()
