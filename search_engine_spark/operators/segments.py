@@ -20,7 +20,10 @@ Disk layout (all parquet + a JSON manifest):
     index_dir/meta.json            n_docs, n_buckets, n_shards, fingerprint,
                                    avgdl
     index_dir/documents/           doc store, with a per-doc token count dl
-    index_dir/lexicon/             term_id, term, df, ctf, bucket
+    index_dir/lexicon/             term_id, term, df, ctf, bucket: a batch
+                                   export; the engine derives its lexicon
+                                   from segment metadata (``DiskIndex.
+                                   lexicon``) and never reads this
     index_dir/segments/shard=K/    bucket, term_id, df, ctf, n_docs, blob,
                                    block_last, block_max_tf, block_offsets
     index_dir/manifest.jsonl       one row per completed shard: lineage
@@ -28,9 +31,12 @@ Disk layout (all parquet + a JSON manifest):
 
 Batch builds (``write_index``) and streaming micro-batches
 (``streaming.ingest.ingest_batch``) share one write core:
-``_write_doc_store``, ``_write_segments`` and ``_lexicon_of``. So every
-doc store has ``dl`` and every ``meta.json`` has ``avgdl``; ``load_index``
-rejects an older directory without them (rebuild it).
+``_write_doc_store`` and ``_write_segments``. So every doc store has
+``dl`` and every ``meta.json`` has ``avgdl``; ``load_index`` rejects an
+older directory without them (rebuild it). Every index reads term
+statistics one way: ``_lexicon_of`` its segment rows, which already
+carry df and ctf per term (as the reference stores them beside each
+posting list).
 
 Shards are the resume unit: ``write_index`` skips shards whose manifest
 row is complete AND matches the input fingerprint, so an interrupted
@@ -678,19 +684,6 @@ class LruCache:
                 self._d.popitem(last=False)
 
 
-def _lexicon_dir(index_dir: str) -> str:
-    """Resolve the live lexicon directory. Streaming indexes publish
-    snapshot-safe versioned dirs (``lexicon_v<N>``) behind an atomically
-    flipped ``LEXICON`` pointer file (``streaming.ingest.
-    _write_gen_lexicon``); batch ``write_index`` dirs keep the flat
-    ``lexicon`` layout (single writer, written once)."""
-    ptr = os.path.join(index_dir, "LEXICON")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            return os.path.join(index_dir, f.read().strip())
-    return os.path.join(index_dir, "lexicon")
-
-
 @dataclass
 class DiskIndex:
     """Handle to a persisted index. DataFrame handles are created once
@@ -706,8 +699,8 @@ class DiskIndex:
         # a streaming doc store has generation-keyed dirs (a gen column)
         docs_path = os.path.join(self.index_dir, "documents")
         self._documents = self.spark.read.parquet(docs_path).drop("gen")
-        self._lexicon = self.spark.read.parquet(_lexicon_dir(self.index_dir))
         self._segments = _read_segments(self.spark, self.index_dir)
+        self._lexicon = None
         self.segment_cache = LruCache(100_000)
         self.df_cache = LruCache(1_000_000)  # term_id -> df (metadata only)
         # term_id -> wand._TermMeta: block metadata for the executor top-k
@@ -716,22 +709,20 @@ class DiskIndex:
         self.prune_meta_cache = LruCache(4_096)
         self.site_cache = LruCache(10_000)
         self.site_count_cache = LruCache(100_000)  # site -> doc count (one long)
-        self.result_cache = LruCache(10_000)
         self._empty_result = None
         self._dl = None
 
     def clear_caches(self) -> None:
         """Drop the per-query LRUs (segments, df and prune metadata, site
-        filters, results) so the next query pays the cold fetch path.
-        Load-time state survives: the DataFrame handles, meta, and the dl
-        sidecar (``_dl``) are index-load costs, not per-query costs. Used
-        by bench.py to time COLD queries between reps (ADVICE r2)."""
+        filters) so the next query pays the cold fetch path. Load-time
+        state survives: the DataFrame handles, meta, and the dl sidecar
+        (``_dl``) are index-load costs, not per-query costs. Used by
+        bench.py to time COLD queries between reps (ADVICE r2)."""
         self.segment_cache = LruCache(100_000)
         self.df_cache = LruCache(1_000_000)
         self.prune_meta_cache = LruCache(4_096)
         self.site_cache = LruCache(10_000)
         self.site_count_cache = LruCache(100_000)
-        self.result_cache = LruCache(10_000)
 
     def prime(self, term_ids: list[int] | None = None) -> int:
         """Prefetch term metadata into the driver LRUs at index-load time
@@ -749,24 +740,21 @@ class DiskIndex:
         term_ids of the serving query log at a 100-TB lexicon.
 
         ``term_ids=None`` primes the ENTIRE lexicon's (term_id, df)
-        pairs — one groupBy over the segment METADATA columns (the
-        parquet reader never touches blob bytes), TWO jobs (the
-        aggregate's shuffle map stage, then the collect). It fills the
-        df LRU only: an executor top-k on such a handle still runs the
-        metadata scan once for its terms. Viable while the lexicon fits
-        the 1M-entry LRU (sf0.1: ~100k bigrams; the CJK bigram space
-        itself is bounded). Returns the number of terms primed. Absent
-        terms still miss (only present terms have metadata rows);
-        ``clear_caches`` drops primed state like any other cache."""
+        pairs — read from the ``lexicon`` view, a groupBy over the
+        segment METADATA columns (the parquet reader never touches blob
+        bytes), TWO jobs (the aggregate's shuffle map stage, then the
+        collect). It fills the df LRU only: an executor top-k on such a
+        handle still runs the metadata scan once for its terms. Viable
+        while the lexicon fits the 1M-entry LRU (sf0.1: ~100k bigrams;
+        the CJK bigram space itself is bounded). Returns the number of
+        terms primed. Absent terms still miss (only present terms have
+        metadata rows); ``clear_caches`` drops primed state like any
+        other cache."""
         if term_ids is not None:
             from .wand import _df_of_terms
 
             return len(_df_of_terms(self, term_ids))
-        rows = (
-            self._segments.groupBy("term_id")
-            .agg(F.sum("df").alias("df"))
-            .collect()
-        )
+        rows = self.lexicon.select("term_id", "df").collect()
         for r in rows:
             self.df_cache.put(int(r["term_id"]), int(r["df"]))
         return len(rows)
@@ -809,6 +797,11 @@ class DiskIndex:
 
     @property
     def lexicon(self) -> DataFrame:
+        """(term_id, bucket, df, ctf, term): ``_lexicon_of`` this handle's
+        segment listing, so it always agrees with ``segments``. Built on
+        first access — planning it costs load time a query never needs."""
+        if self._lexicon is None:
+            self._lexicon = _lexicon_of(self._segments)
         return self._lexicon
 
     @property
@@ -835,12 +828,12 @@ def index_stats(di: DiskIndex) -> DataFrame:
 
     Everything is served off control-plane artifacts, never posting
     blobs: ``meta.json`` (n_docs, avgdl, layout), ``manifest.jsonl``
-    per-shard metrics (n_postings / blob_bytes, observed on each shard's
-    write), and the lexicon table
-    (n_terms / total_ctf / max_df — a parquet metadata-sized aggregate),
-    plus one executor-side SUM over the doc store's ``dl`` column for
-    total_dl. At 10^12 docs this is one column scan + three O(1) folds;
-    nothing scales with postings size.
+    shard rows (shards_complete, and blob_bytes observed on each shard's
+    write; a streaming index has no shard rows and reports 0), and one
+    aggregate over the lexicon view (n_terms / n_postings / total_ctf /
+    max_df — segment metadata columns only), plus one executor-side SUM
+    over the doc store's ``dl`` column for total_dl. At 10^12 docs this
+    is one column scan + O(1) folds; nothing scales with postings size.
 
     Returns a single row:
       n_docs, n_terms, n_postings, total_ctf, max_df, total_dl  (BIGINT —
@@ -850,20 +843,14 @@ def index_stats(di: DiskIndex) -> DataFrame:
         (layout/codec facts — asserted internally by pytest instead:
         blob_bytes matches the manifest, avgdl == total_dl / n_docs).
     """
-    man = read_manifest(di.index_dir)
-    complete = [m for m in man.values() if m.get("status") == "complete"]
-    if complete and all("n_postings" in m for m in complete):
-        n_postings = sum(int(m["n_postings"]) for m in complete)
-        blob_bytes = sum(int(m.get("blob_bytes", 0)) for m in complete)
-    else:  # a streaming index (generation rows, no shard rows): same
-        # number via the lexicon (df is salt-aggregated, a doc lives in
-        # exactly one salt)
-        n_postings = int(
-            di.lexicon.agg(F.sum("df").alias("s")).collect()[0]["s"] or 0
-        )
-        blob_bytes = 0
+    complete = [
+        m for m in read_manifest(di.index_dir).values() if m.get("status") == "complete"
+    ]
+    # n_postings is the df fold: a doc lives in exactly one salt and one
+    # generation, so it counts distinct (doc, term) pairs
     lex = di.lexicon.agg(
         F.count("*").alias("n_terms"),
+        F.sum("df").alias("n_postings"),
         F.sum("ctf").alias("total_ctf"),
         F.max("df").alias("max_df"),
     ).collect()[0]
@@ -873,7 +860,7 @@ def index_stats(di: DiskIndex) -> DataFrame:
     row = (
         int(di.meta.n_docs),
         int(lex["n_terms"]),
-        int(n_postings),
+        int(lex["n_postings"] or 0),
         int(lex["total_ctf"] or 0),
         int(lex["max_df"] or 0),
         total_dl,
@@ -881,7 +868,7 @@ def index_stats(di: DiskIndex) -> DataFrame:
         int(di.meta.n_buckets),
         int(di.meta.n_shards),
         len(complete),
-        blob_bytes,
+        sum(int(m.get("blob_bytes", 0)) for m in complete),
     )
     return di.spark.createDataFrame(
         [row],

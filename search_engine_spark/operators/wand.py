@@ -553,8 +553,8 @@ def _search_segments_distributed(
     - truncation: orderBy(doc_id).limit(50) — Catalyst plans TakeOrdered,
       each partition contributes its 50 lowest, no global sort;
     - scoring: only the ≤50 winners' positions are decoded (second pruned
-      pass) and collected; the TF-IDF + phrase/title math is the same
-      numpy code path as the driver route.
+      pass) and collected, then scored by the driver route's
+      ``_score_docs`` with the metadata df.
 
     Driver memory is O(candidates + winners' positions), never O(df).
     """
@@ -617,8 +617,7 @@ def _search_segments_distributed(
     if docs.size == 0:
         return empty()
 
-    k0 = kw_tokens[0]
-    k0_tids = sorted({t for t, _ in k0})
+    k0_tids = sorted({t for t, _ in kw_tokens[0]})
     k0_buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in k0_tids})
     pos_rows = _decode_positions_for(
         di.segments.filter(
@@ -626,36 +625,25 @@ def _search_segments_distributed(
         ),
         docs,
     ).collect()
-    pos_map: dict[tuple[int, int], tuple[int, np.ndarray]] = {
-        (r["term_id"], r["doc_id"]): (r["title_end"], np.array(r["positions"], np.int64))
-        for r in pos_rows
-    }
-
-    n_corpus = di.meta.n_docs
-    S = np.zeros(docs.size)
-    for tid in k0_tids:
-        tf = np.array(
-            [pos_map[(tid, int(d))][1].size for d in docs], np.float64
+    # every winner holds every first-keyword term, so each term's winner
+    # postings, doc-sorted, are a decoded segment that covers ``docs``
+    by_term: dict[int, list] = {t: [] for t in k0_tids}
+    for r in sorted(pos_rows, key=lambda r: r["doc_id"]):
+        by_term[r["term_id"]].append(r)
+    no_blocks = np.empty(0, np.int64)
+    segs: dict[int, TermSegment] = {}
+    for tid, rows in by_term.items():
+        positions = [np.array(r["positions"], np.int64) for r in rows]
+        decoded = (
+            np.array([r["doc_id"] for r in rows], np.int64),
+            np.array([r["title_end"] for r in rows], np.int64),
+            np.array([p.size for p in positions], np.int64),
+            np.concatenate(positions),
         )
-        S += (1.0 + np.log(tf)) * math.log(n_corpus / dfs[tid])
-    cursors = [(tid, b) for tid, bases in k0 for b in bases]
-    scores = np.zeros(docs.size)
-    for i, d in enumerate(docs.tolist()):
-        for title in (True, False):
-            aligned = None
-            for tid, base_off in cursors:
-                te, pos = pos_map[(tid, d)]
-                fpos = (pos[:te] if title else pos[te:]) - base_off
-                aligned = fpos if aligned is None else np.intersect1d(aligned, fpos)
-                if aligned.size == 0:
-                    break
-            pc = aligned.size if aligned is not None else 0
-            part = S[i]
-            if pc > 0:
-                part *= 3.0 + math.log(pc)
-            if title:
-                part *= 3.0
-            scores[i] += part
+        segs[tid] = TermSegment(
+            tid, dfs[tid], b"", no_blocks, no_blocks, no_blocks, _decoded=decoded
+        )
+    scores = _score_docs(segs, pq.keywords[0], docs, di.meta.n_docs)
     order = np.lexsort((docs, -scores))
     import pandas as pd
 
@@ -1511,18 +1499,3 @@ def topk_scores_many(
         )
     return plan.withColumn("score", F.round("score", 6))
 
-
-def search_segments_cached(
-    di: DiskIndex, query: str, per_shard: int = PER_SHARD_LIMIT
-) -> DataFrame:
-    """``search_segments`` behind a query-result LRU — the Spark analog of
-    the reference's Redis result cache (web/service/search.go:92-108,
-    12 h TTL). No TTL here: a DiskIndex handle is immutable, so a cached
-    result can never go stale (reload the index => fresh handle => fresh
-    cache)."""
-    key = (query, per_shard)
-    hit = di.result_cache.get(key)
-    if hit is None:
-        hit = search_segments(di, query, per_shard)
-        di.result_cache.put(key, hit)
-    return hit

@@ -26,17 +26,18 @@ is the Spark-idiomatic twin:
 A micro-batch goes through the batch build's write core
 (``operators.segments``): ``_write_doc_store`` (adds ``dl``, observes the
 count, fingerprint and Σdl), ``_write_segments`` over ``build_segments``
-output as is (no fuse: salted sub-segments are read-merged), and
-``_lexicon_of``.
+output as is (no fuse: salted sub-segments are read-merged). No lexicon
+is written: ``DiskIndex.lexicon`` derives it from the segment rows'
+df/ctf, so a reader's lexicon always matches the generations it lists.
 
 Exactly-once notes: foreachBatch gives at-least-once; the per-generation
 directories are keyed by ``batch_id``, so a replayed batch OVERWRITES its
 own generation (idempotent), and ``meta.json`` is recomputed from the
 manifest rather than incremented (no double counting). A batch commits
-``documents/gen=N`` first, then ``segments/gen=N``, its manifest row,
-``meta.json`` and the lexicon. A crash after the doc-store commit leaves
-documents that no posting or count refers to, visible in ``documents``
-until the replay rewrites both generations and publishes them.
+``documents/gen=N`` first, then ``segments/gen=N``, its manifest row and
+``meta.json``. A crash after the doc-store commit leaves documents that
+no posting or count refers to, visible in ``documents`` until the replay
+rewrites both generations and publishes them.
 """
 
 from __future__ import annotations
@@ -51,8 +52,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.postings import build_postings_packed
 from ..operators.segments import (
-    _lexicon_of,
-    _read_segments,
     _write_doc_store,
     _write_segments,
     append_manifest,
@@ -139,9 +138,8 @@ def ingest_batch(
     counting this batch's own) reaches this many, fold them into one base
     generation before writing the new one — the LSM compaction trigger
     (the analog of the reference flusher's continuous fold,
-    /root/reference/index/core/indexer.go:263-283). Keeps both the
-    per-term read-merge at fetch and the per-batch lexicon metadata
-    rescan O(compact_every) instead of O(total batches ever ingested)
+    index/core/indexer.go:263-283). Keeps the per-term read-merge at
+    fetch O(compact_every) instead of O(total batches ever ingested)
     (VERDICT r3 "what's missing" #2). Replay-safe because the fold runs
     BEFORE this batch's generation is (re)written and always EXCLUDES
     gen=batch_id: a replayed batch can never find its own postings
@@ -177,7 +175,6 @@ def ingest_batch(
                                 "fingerprint": stats.fingerprint, "n_docs": stats.n_docs,
                                 "sum_dl": stats.sum_dl, **seg_stats, "wall_ms": wall_ms})
     _write_meta(index_dir, n_buckets)
-    _write_gen_lexicon(spark, index_dir)
 
 
 def _gen_ids(index_dir: str, exclude: int | None = None) -> list[int]:
@@ -217,39 +214,6 @@ def _heal_compaction(index_dir: str) -> None:
         d = os.path.join(seg_root, f"gen={g}")
         if os.path.isdir(d):
             shutil.rmtree(d)
-
-
-def _write_gen_lexicon(spark: SparkSession, index_dir: str) -> None:
-    """Publish the global lexicon: ``_lexicon_of`` every live generation.
-
-    The fold rescans every generation's segment METADATA columns (blobs
-    untouched), so per-batch cost grows with the live generations, which
-    ``compact_every`` bounds; a full fold stays exactly-once under replay,
-    where an incremental old⊕new merge would double-count.
-
-    Snapshot-safe publication: each publish writes a NEW ``lexicon_v<N>``
-    directory and atomically flips the ``LEXICON`` pointer file. A reader
-    holding the previous version keeps scanning real files: it is kept
-    one more publish cycle before GC. ``DiskIndex`` resolves the pointer
-    at load (falling back to the legacy flat ``lexicon`` dir)."""
-    lex = _lexicon_of(_read_segments(spark, index_dir))
-    versions = sorted(
-        int(d.split("_v")[-1])
-        for d in os.listdir(index_dir)
-        if d.startswith("lexicon_v") and d.split("_v")[-1].isdigit()
-    )
-    nxt = (versions[-1] + 1) if versions else 0
-    vname = f"lexicon_v{nxt}"
-    lex.write.mode("overwrite").parquet(os.path.join(index_dir, vname))
-    ptr_tmp = os.path.join(index_dir, "_LEXICON.tmp")
-    with open(ptr_tmp, "w") as f:
-        f.write(vname)
-    os.replace(ptr_tmp, os.path.join(index_dir, "LEXICON"))  # atomic flip
-    # GC: keep current + previous; the legacy flat dir counts as oldest
-    for v in versions[:-1]:
-        shutil.rmtree(os.path.join(index_dir, f"lexicon_v{v}"), ignore_errors=True)
-    if versions and os.path.isdir(os.path.join(index_dir, "lexicon")):
-        shutil.rmtree(os.path.join(index_dir, "lexicon"), ignore_errors=True)
 
 
 def start_incremental_index(
@@ -322,7 +286,6 @@ def compact_index(
     append_manifest(index_dir, {"compact": base, "folded": fold})
     for g in fold:
         shutil.rmtree(os.path.join(seg_root, f"gen={g}"), ignore_errors=True)
-    _write_gen_lexicon(spark, index_dir)
 
 
 def windowed_event_counts(

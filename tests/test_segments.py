@@ -213,20 +213,6 @@ def test_fingerprint_invalidates_on_input_change(spark, docs, tmp_path):
     assert _read_doc_stats(spark.read.parquet(str(tmp_path / "a"))) == a
 
 
-def test_search_segments_cached(spark, index_dir):
-    from search_engine_spark.operators.wand import (
-        search_segments,
-        search_segments_cached,
-    )
-
-    di = load_index(spark, index_dir)
-    a = search_segments_cached(di, "table")
-    b = search_segments_cached(di, "table")
-    assert a is b  # LRU returns the identical immutable DataFrame
-    exp = [(r.doc_id, r.rank) for r in search_segments(di, "table").collect()]
-    assert [(r.doc_id, r.rank) for r in a.collect()] == exp
-
-
 @pytest.mark.parametrize("query", QUERIES)
 def test_distributed_path_rank_identical(spark, index_dir, query):
     """Executor-side hot-term path == driver path for every query shape
@@ -320,12 +306,14 @@ def test_index_stats_gauges(spark, docs, index_dir):
         F.max("df").alias("mdf"),
     ).collect()[0]
     assert row.n_terms == lex["nt"]
-    # manifest per-shard n_postings fold == lexicon df fold (a doc lives
-    # in exactly one salt, so both count distinct (doc, term) pairs)
     assert row.n_postings == lex["sdf"]
     assert row.total_ctf == lex["sctf"]
     assert row.max_df == lex["mdf"]
     man = read_manifest(index_dir)
+    # lexicon df fold == per-shard n_postings observed on each write (a
+    # doc lives in exactly one salt, so both count distinct (doc, term)
+    # pairs)
+    assert row.n_postings == sum(m["n_postings"] for m in man.values())
     assert row.shards_complete == len(man)
     assert row.blob_bytes == sum(m["blob_bytes"] for m in man.values()) > 0
     assert row.avgdl == pytest.approx(row.total_dl / row.n_docs)
@@ -336,8 +324,8 @@ def test_index_stats_gauges(spark, docs, index_dir):
 
 def test_index_stats_without_manifest_stats(spark, docs, tmp_path):
     """A streaming index has generation rows and no shard rows in its
-    manifest: index_stats falls back to the lexicon fold for n_postings
-    and reports blob_bytes=0 rather than failing."""
+    manifest: index_stats reads n_postings off the lexicon fold like any
+    index and reports blob_bytes=0 rather than failing."""
     from search_engine_spark.operators.segments import index_stats
     from search_engine_spark.streaming.ingest import ingest_batch
 
