@@ -187,47 +187,38 @@ def build_segments(
     )
 
 
-def merge_decoded_parts(
-    parts: list[tuple],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Sort-merge several decoded postings parts of ONE term by doc_id.
-
-    Each part is ``(doc_ids, title_ends, npos, positions_flat)`` (the
-    ``codec.decode_term_postings`` shape). Returns the same shape, merged.
-    Used by the salted-segment merge and by the multi-generation read path
-    of the streaming index (LSM-style read-merge).
-    """
+def merge_term_rows(term_id: int, blobs: list[bytes]) -> codec.EncodedBucket:
+    """Read-merge ONE term's segment rows (salts or generations) into one
+    encoded row: decode each blob, sort-merge the postings by doc_id and
+    re-encode them, so block-max metadata stays consistent. The merge
+    kernel of ``merge_salted`` (compaction) and the driver fetch of a
+    multi-row term (``wand.fetch_term_segments``) both call it."""
+    parts = [codec.decode_term_postings(b) for b in blobs]
     doc_ids = np.concatenate([p[0] for p in parts])
-    te = np.concatenate([p[1] for p in parts])
-    npos = np.concatenate([p[2] for p in parts])
     order = np.argsort(doc_ids, kind="mergesort")
-    pos_parts = []
-    starts_all = []
-    off = 0
-    for p in parts:
-        s = np.zeros(p[2].size, np.int64)
-        np.cumsum(p[2][:-1], out=s[1:])
-        starts_all.append(s + off)
-        off += p[3].size
-        pos_parts.append(p[3])
-    flat = np.concatenate(pos_parts) if pos_parts else np.empty(0, np.int64)
-    starts = np.concatenate(starts_all)
-    gather = (
-        np.concatenate([flat[starts[i] : starts[i] + npos[i]] for i in order])
-        if flat.size
-        else flat
+    npos = np.concatenate([p[2] for p in parts])
+    flat = np.concatenate([p[3] for p in parts])
+    starts = np.zeros(npos.size, np.int64)
+    np.cumsum(npos[:-1], out=starts[1:])
+    merged_starts = np.zeros(npos.size, np.int64)
+    np.cumsum(npos[order][:-1], out=merged_starts[1:])
+    merged = np.empty(flat.size, np.int64)
+    codec._scatter_spans(merged, merged_starts, flat, starts[order], npos[order])
+    return codec.encode_bucket(
+        np.full(doc_ids.size, term_id, np.int64),
+        doc_ids[order],
+        np.concatenate([p[1] for p in parts])[order],
+        npos[order],
+        merged,
     )
-    return doc_ids[order], te[order], npos[order], gather
 
 
 def _merge_kernel(table: pa.Table) -> pa.Table:
     """applyInArrow kernel: merge one term's segment rows (salts or
-    generations) into one salt-0 row — decode each, argsort-merge by
-    doc_id, re-encode."""
-    parts = [codec.decode_term_postings(b) for b in table.column("blob").to_pylist()]
-    doc_ids, te, npos, gather = merge_decoded_parts(parts)
-    term = np.full(doc_ids.size, table.column("term_id")[0].as_py(), np.int64)
-    eb = codec.encode_bucket(term, doc_ids, te, npos, gather)
+    generations) into one salt-0 row (``merge_term_rows``)."""
+    eb = merge_term_rows(
+        table.column("term_id")[0].as_py(), table.column("blob").to_pylist()
+    )
     return _segment_table(eb, table.column("bucket")[0].as_py(), 0)
 
 
@@ -711,6 +702,14 @@ class DiskIndex:
         self.site_count_cache = LruCache(100_000)  # site -> doc count (one long)
         self._empty_result = None
         self._dl = None
+        # blocks the executor tf decode (``wand._decode_tf``) reads and
+        # varint-decodes, summed over every plan on this handle: a plan's
+        # counts are the deltas around its collect. Created once per
+        # handle, because the driver keeps every accumulator for the life
+        # of the app.
+        sc = self.spark.sparkContext
+        self.blocks_read = sc.accumulator(0)
+        self.blocks_decoded = sc.accumulator(0)
 
     def clear_caches(self) -> None:
         """Drop the per-query LRUs (segments, df and prune metadata, site

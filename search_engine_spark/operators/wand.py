@@ -25,7 +25,16 @@ Two query families over one ``DiskIndex``:
   remaining bound cannot beat the running k-th score. Above the driver
   valves they run ``topk_scores_many``'s executor plan on a one-query
   set — the one executor top-k plan, which prunes blocks before the
-  varint decode (``_decode_tf_pruned_many_df``).
+  varint decode.
+
+Every executor plan decodes term frequencies with one kernel,
+``_decode_tf``: the scoring plan (block-max pruned when a theta allows),
+the theta probe and the executor ``search_segments`` candidates. It
+counts the blocks it reads and decodes on the handle's accumulators
+(``DiskIndex.blocks_read`` / ``blocks_decoded``), and the executor route
+of ``topk_wand`` / ``topk_bm25_wand`` reports the deltas around its own
+collect in ``last_stats``. Concurrent queries on one handle mix their
+deltas, just as they race on ``last_stats``.
 """
 
 from __future__ import annotations
@@ -40,7 +49,7 @@ from pyspark.sql import functions as F
 from ..functions import codec
 from ..functions.tokenizer import tokenize_query
 from .search import parse_query
-from .segments import DiskIndex
+from .segments import DiskIndex, merge_term_rows
 
 PER_SHARD_LIMIT = 50
 
@@ -81,8 +90,6 @@ def fetch_term_segments(di: DiskIndex, term_ids: list[int]) -> dict[int, TermSeg
     (boltdb-index.go:130-132)."""
     if not term_ids:
         return {}
-    from ..functions.xxhash import bucket_of_term
-
     # LRU in front of the segment store — the reference fronts BoltDB with
     # 100k-entry LRUs (boltdb-index.go:82-113, util/buffer.go:13-49). Ours
     # needs no TTL: segments are immutable for a given DiskIndex handle.
@@ -90,11 +97,8 @@ def fetch_term_segments(di: DiskIndex, term_ids: list[int]) -> dict[int, TermSeg
     cache = di.segment_cache
     missing = [t for t in term_ids if t not in cache]
     if missing:
-        buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in missing})
         rows = (
-            di.segments.filter(
-                F.col("bucket").isin(buckets) & F.col("term_id").isin(missing)
-            )
+            _term_rows(di, missing)
             .select(
                 "term_id", "df", "blob", "block_last", "block_max_tf", "block_offsets"
             )
@@ -108,6 +112,17 @@ def fetch_term_segments(di: DiskIndex, term_ids: list[int]) -> dict[int, TermSeg
     return {
         t: seg for t in term_ids if (seg := cache.get(t)) is not None
     }
+
+
+def _term_rows(di: DiskIndex, term_ids: list[int]) -> DataFrame:
+    """The segment rows of ``term_ids``: a scan pruned to their buckets
+    (computed driver-side) with the term_id filter pushed down."""
+    from ..functions.xxhash import bucket_of_term
+
+    buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in term_ids})
+    return di.segments.filter(
+        F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
+    )
 
 
 def _rows_to_segment(tid: int, rs: list) -> TermSegment | None:
@@ -124,16 +139,8 @@ def _rows_to_segment(tid: int, rs: list) -> TermSegment | None:
             np.array(r["block_max_tf"], np.int64),
             np.array(r["block_offsets"], np.int64),
         )
-    # streaming index: one row per generation — LSM-style read-merge of
-    # the (few, query-term-only) parts, re-encoded so block-max pruning
-    # metadata stays consistent.
-    from .segments import merge_decoded_parts
-
-    parts = [codec.decode_term_postings(bytes(r["blob"])) for r in rs]
-    doc_ids, te, npos, flat = merge_decoded_parts(parts)
-    eb = codec.encode_bucket(
-        np.full(doc_ids.size, tid, np.int64), doc_ids, te, npos, flat
-    )
+    # salts or generations: the (few, query-term-only) parts read-merged
+    eb = merge_term_rows(tid, [bytes(r["blob"]) for r in rs])
     return TermSegment(
         tid,
         int(eb.dfs[0]),
@@ -194,14 +201,9 @@ def _scan_term_meta(di: DiskIndex, term_ids: list[int]) -> dict[int, _TermMeta]:
     aggregate, hence no shuffle: the driver folds a term's rows itself.
     The parquet reader never touches blob bytes. Fills ``di.df_cache``
     and ``di.prune_meta_cache``; absent terms cache as df = 0."""
-    from ..functions.xxhash import bucket_of_term
-
-    buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in term_ids})
     small = F.col("df") <= SMALL_TERM_POSTINGS
     rows = (
-        di.segments.filter(
-            F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
-        )
+        _term_rows(di, term_ids)
         .select(
             "term_id",
             "df",
@@ -242,39 +244,6 @@ def _df_of_terms(di: DiskIndex, term_ids: list[int]) -> dict[int, int]:
     if missing:
         got.update((t, m.df) for t, m in _scan_term_meta(di, missing).items())
     return got
-
-
-def _decode_tf_df(seg_rows: DataFrame) -> DataFrame:
-    """Executor-side blob decode → (term_id, doc_id, tf) rows (mapInArrow).
-
-    tf = the doc's position count for the term (title+body combined —
-    the reference's tf, search.go:423). No blob is shipped to the
-    driver; each task decodes its own scan split's rows."""
-    import pyarrow as pa
-
-    def kernel(batches):
-        for batch in batches:
-            tids = batch.column("term_id").to_numpy(zero_copy_only=False)
-            blobs = batch.column("blob")
-            out_t, out_d, out_f = [], [], []
-            for i in range(batch.num_rows):
-                doc_ids, _, npos, _ = codec.decode_term_postings(blobs[i].as_py())
-                out_t.append(np.full(doc_ids.size, tids[i], np.int64))
-                out_d.append(doc_ids)
-                out_f.append(npos.astype(np.int64))
-            if out_t:
-                yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(out_t), pa.int64()),
-                        pa.array(np.concatenate(out_d), pa.int64()),
-                        pa.array(np.concatenate(out_f), pa.int64()),
-                    ],
-                    names=["term_id", "doc_id", "tf"],
-                )
-
-    return seg_rows.select("term_id", "blob").mapInArrow(
-        kernel, "term_id long, doc_id long, tf long"
-    )
 
 
 # Pruning margin protecting the oracle's 6-dp tie ordering: a block is
@@ -318,9 +287,9 @@ def _keep_rule(
     helpers: list[_OverlapMeta],
     theta: float,
 ) -> np.ndarray:
-    """The block keep rule of the pruned decode (and of its stats mode)
-    and of the void-probe check: block [lo, hi] of term t, with
-    single-posting bound ``ub``, is kept iff::
+    """The block keep rule of the pruned decode and of the void-probe
+    check: block [lo, hi] of term t, with single-posting bound ``ub``,
+    is kept iff::
 
         ub + rest + Σ_{h ∈ helpers, h has a block overlapping [lo, hi]} h.ub
           >= theta − PRUNE_EPS
@@ -339,43 +308,18 @@ def _keep_rule(
     return (ub + helpv) >= theta - PRUNE_EPS
 
 
-def _decode_kept_blocks(blob, boff_scalar, df_i: int, keep: np.ndarray):
-    """Decode only the kept blocks of one segment blob → (doc_ids, tf).
-
-    Kept blocks are decoded in contiguous runs via ``codec.slice_blocks``
-    — skipped blocks' bytes are never varint-decoded. ``boff_scalar`` is
-    the Arrow block_offsets scalar, converted only on the partial path
-    (the keep-all fast path never touches it). ``keep`` must have ≥1
-    True."""
-    if keep.all():
-        doc_ids, _, npos, _ = codec.decode_term_postings(blob)
-        return doc_ids, npos
-    boff = np.asarray(boff_scalar.as_py(), np.int64)
-    kidx = np.flatnonzero(keep)
-    runs = np.split(kidx, np.flatnonzero(np.diff(kidx) > 1) + 1)
-    parts = [
-        codec.slice_blocks(blob, boff, df_i, int(run[0]), int(run[-1]) + 1)
-        for run in runs
-    ]
-    return (
-        np.concatenate([p[0] for p in parts]),
-        np.concatenate([p[2] for p in parts]),
-    )
-
-
-def _decode_tf_pruned_many_df(
-    seg_rows: DataFrame,
+def _block_keeper(
     sc: _Scorer,
     idfs: dict[int, float],
     term_specs: dict[int, list[dict]],
     overlap: dict[int, _OverlapMeta],
-    stats_only: bool = False,
-) -> DataFrame:
-    """Executor-side BLOCK-MAX-PRUNED blob decode → (term_id, doc_id, tf)
-    for a set of queries (one or many): each term is decoded once, and
-    block b of term t (doc range [lo_b, hi_b] from the block_last
-    sidecar, lo widened by ``_block_lo``) is kept iff ANY query using t
-    still needs it::
+):
+    """The block selection of the pruned tf decode for a set of queries
+    (one or many): a function of one segment row's (term_id, block_last,
+    block_max_tf) Arrow values → its keep mask, or None to keep every
+    block. Each term is decoded once, and block b of term t (doc range
+    [lo_b, hi_b] from the block_last sidecar, lo widened by
+    ``_block_lo``) is kept iff ANY query using t still needs it::
 
         keep_t[b] = ∨_{q ∋ t} [ ub_t(b) + big_rest_q[t]
                       + Σ_{t' ∈ small(q), t'≠t, t' overlaps [lo_b, hi_b]} ub_{t'}
@@ -404,81 +348,103 @@ def _decode_tf_pruned_many_df(
     < theta_q − ε and sorts (and 6-dp-rounds) strictly below q's k-th
     winner even on its partial sum. Blocks kept only because ANOTHER
     query needs them add candidates to q, but only ones that rank below
-    q's winners: the OR is a superset of each query's own keep set.
-    Kept blocks are decoded in contiguous runs via
-    ``codec.slice_blocks`` — skipped blocks' bytes are never
-    varint-decoded (the reference read path, search.go:187-273, scores
-    exhaustively; the pruning is the north-rule upgrade at cluster
-    scale).
-
-    ``stats_only=True`` returns (term_id, blocks_total, blocks_decoded)
-    per segment row instead — the same selection code path, observable
-    without shipping postings (``batched_pruning_stats``).
+    q's winners: the OR is a superset of each query's own keep set. (The
+    reference read path, search.go:187-273, scores exhaustively; the
+    pruning is the north-rule upgrade at cluster scale.)
     """
+
+    def keeper(tid: int, blast_value, bmax_value) -> np.ndarray | None:
+        specs = term_specs.get(tid)
+        if not specs or any(not math.isfinite(s["theta"]) for s in specs):
+            return None
+        blast = np.asarray(blast_value.as_py(), np.int64)
+        ub = sc.block_bound(np.asarray(bmax_value.as_py(), np.int64), idfs[tid])
+        lo = _block_lo(blast)
+        keep = np.zeros(blast.size, bool)
+        for spec in specs:
+            keep |= _keep_rule(
+                ub,
+                lo,
+                blast,
+                spec["big_rest"][tid],
+                [overlap[t2] for t2 in spec["small"] if t2 != tid],
+                spec["theta"],
+            )
+            if keep.all():
+                break
+        return keep
+
+    return keeper
+
+
+def _decode_kept_blocks(blob: bytes, boff_value, df_i: int, keep: np.ndarray):
+    """Decode the kept blocks of one segment blob → (doc_ids, tf), in
+    contiguous ``codec.slice_blocks`` runs: skipped blocks' bytes are
+    never varint-decoded. ``keep`` has ≥1 True and ≥1 False."""
+    boff = np.asarray(boff_value.as_py(), np.int64)
+    kidx = np.flatnonzero(keep)
+    runs = np.split(kidx, np.flatnonzero(np.diff(kidx) > 1) + 1)
+    parts = [
+        codec.slice_blocks(blob, boff, df_i, int(run[0]), int(run[-1]) + 1)
+        for run in runs
+    ]
+    return (
+        np.concatenate([p[0] for p in parts]),
+        np.concatenate([p[2] for p in parts]),
+    )
+
+
+def _decode_tf(di: DiskIndex, seg_rows: DataFrame, keeper=None) -> DataFrame:
+    """The executor tf decode: segment rows → (term_id, doc_id, tf) in one
+    mapInArrow. tf = the doc's position count for the term (title+body
+    combined — the reference's tf, search.go:423). No blob is shipped to
+    the driver; each task decodes its own scan split's rows. The scoring
+    plan, the theta probe and the executor ``search_segments``
+    candidates all run it.
+
+    With a ``keeper`` (``_block_keeper``) the decode is block-max pruned
+    and also reads the block sidecar columns; without one it reads only
+    ``term_id, df, blob`` and decodes whole blobs. Each row adds its
+    blocks (ceil(df / BLOCK_SIZE)) to ``di.blocks_read`` and the blocks
+    it varint-decodes to ``di.blocks_decoded``, so a caller reads a
+    plan's counts as the deltas around its collect; concurrent plans on
+    one handle mix theirs."""
     import pyarrow as pa
 
-    def _q_keep(
-        tid: int, ub: np.ndarray, lo: np.ndarray, blast: np.ndarray, spec: dict
-    ) -> np.ndarray:
-        return _keep_rule(
-            ub,
-            lo,
-            blast,
-            spec["big_rest"][tid],
-            [overlap[t2] for t2 in spec["small"] if t2 != tid],
-            spec["theta"],
-        )
+    n_read, n_decoded = di.blocks_read, di.blocks_decoded
+    sidecar = ["block_last", "block_max_tf", "block_offsets"] if keeper else []
 
     def kernel(batches):
         for batch in batches:
-            tids_c = batch.column("term_id").to_numpy(zero_copy_only=False)
-            dfs_c = batch.column("df").to_numpy(zero_copy_only=False)
+            tids = batch.column("term_id").to_numpy(zero_copy_only=False)
+            dfs = batch.column("df").to_numpy(zero_copy_only=False)
             blobs = batch.column("blob")
-            blasts = batch.column("block_last")
-            bmaxs = batch.column("block_max_tf")
-            boffs = batch.column("block_offsets")
+            blasts, bmaxs, boffs = (
+                [batch.column(c) for c in sidecar] if keeper else (None, None, None)
+            )
             out_t, out_d, out_f = [], [], []
-            st = ([], [], [])
+            read = decoded = 0
             for i in range(batch.num_rows):
-                tid = int(tids_c[i])
-                blast = np.asarray(blasts[i].as_py(), np.int64)
-                specs = term_specs.get(tid)
-                if not specs or any(
-                    not math.isfinite(s["theta"]) for s in specs
-                ):
-                    keep = np.ones(blast.size, bool)
+                tid, df_i = int(tids[i]), int(dfs[i])
+                n_blocks = -(-df_i // codec.BLOCK_SIZE)
+                read += n_blocks
+                keep = keeper(tid, blasts[i], bmaxs[i]) if keeper else None
+                if keep is None or keep.all():
+                    doc_ids, _, npos, _ = codec.decode_term_postings(blobs[i].as_py())
+                    decoded += n_blocks
+                elif keep.any():
+                    doc_ids, npos = _decode_kept_blocks(
+                        blobs[i].as_py(), boffs[i], df_i, keep
+                    )
+                    decoded += int(keep.sum())
                 else:
-                    bmax = np.asarray(bmaxs[i].as_py(), np.int64)
-                    ub = sc.block_bound(bmax, idfs[tid])
-                    lo = _block_lo(blast)
-                    keep = np.zeros(blast.size, bool)
-                    for spec in specs:
-                        keep |= _q_keep(tid, ub, lo, blast, spec)
-                        if keep.all():
-                            break
-                if stats_only:
-                    st[0].append(tid)
-                    st[1].append(int(blast.size))
-                    st[2].append(int(keep.sum()))
                     continue
-                if not keep.any():
-                    continue
-                doc_ids, npos = _decode_kept_blocks(
-                    blobs[i].as_py(), boffs[i], int(dfs_c[i]), keep
-                )
                 out_t.append(np.full(doc_ids.size, tid, np.int64))
                 out_d.append(doc_ids)
                 out_f.append(npos.astype(np.int64))
-            if stats_only and st[0]:
-                yield pa.record_batch(
-                    [
-                        pa.array(st[0], pa.int64()),
-                        pa.array(st[1], pa.int64()),
-                        pa.array(st[2], pa.int64()),
-                    ],
-                    names=["term_id", "blocks_total", "blocks_decoded"],
-                )
-            elif out_t:
+            n_read.add(read)
+            n_decoded.add(decoded)
+            if out_t:
                 yield pa.record_batch(
                     [
                         pa.array(np.concatenate(out_t), pa.int64()),
@@ -488,14 +454,9 @@ def _decode_tf_pruned_many_df(
                     names=["term_id", "doc_id", "tf"],
                 )
 
-    cols = seg_rows.select(
-        "term_id", "df", "blob", "block_last", "block_max_tf", "block_offsets"
+    return seg_rows.select("term_id", "df", "blob", *sidecar).mapInArrow(
+        kernel, "term_id long, doc_id long, tf long"
     )
-    if stats_only:
-        return cols.mapInArrow(
-            kernel, "term_id long, blocks_total long, blocks_decoded long"
-        )
-    return cols.mapInArrow(kernel, "term_id long, doc_id long, tf long")
 
 
 def _decode_positions_for(seg_rows: DataFrame, doc_ids: np.ndarray) -> DataFrame:
@@ -545,8 +506,9 @@ def _search_segments_distributed(
     """Executor-side twin of the driver query path — identical semantics,
     different physical plan:
 
-    - candidate sets per keyword: blob decode (mapInArrow) → groupBy
-      (doc_id) HAVING count = m — the shuffle is on doc_id, skew-free;
+    - candidate sets per keyword or exclusion: its own pruned scan → tf
+      decode (``_decode_tf``) → groupBy(doc_id) HAVING count = m — the
+      shuffle is on doc_id, skew-free;
     - AND / NOT folds: left_semi / left_anti joins;
     - ``site:``: pruned semi join against the doc store's parsed host
       (no driver-side doc-id collect);
@@ -558,8 +520,6 @@ def _search_segments_distributed(
 
     Driver memory is O(candidates + winners' positions), never O(df).
     """
-    from ..functions.xxhash import bucket_of_term
-
     empty = di.empty_result
     kw_tokens = [tokenize_query(kw) for kw in pq.keywords]
     ex_tokens = [tokenize_query(ex) for ex in pq.exclusions]
@@ -569,17 +529,13 @@ def _search_segments_distributed(
     ex_tokens = [
         qt for qt in ex_tokens if qt and all(dfs.get(t, 0) > 0 for t, _ in qt)
     ]
-    need = sorted({t for qt in kw_tokens + ex_tokens for t, _ in qt})
-    buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in need})
-    seg_rows = di.segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(need)
-    )
-    posting_docs = _decode_tf_df(seg_rows)
 
     def cand(qt) -> DataFrame:
+        # each side decodes its own pruned scan: a filter above the decode
+        # would not push down, and every side would decode every term
         tids = sorted({t for t, _ in qt})
         return (
-            posting_docs.filter(F.col("term_id").isin(tids))
+            _decode_tf(di, _term_rows(di, tids))
             .groupBy("doc_id")
             .agg(F.count("*").alias("_nt"))
             .filter(F.col("_nt") == len(tids))
@@ -618,13 +574,7 @@ def _search_segments_distributed(
         return empty()
 
     k0_tids = sorted({t for t, _ in kw_tokens[0]})
-    k0_buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in k0_tids})
-    pos_rows = _decode_positions_for(
-        di.segments.filter(
-            F.col("bucket").isin(k0_buckets) & F.col("term_id").isin(k0_tids)
-        ),
-        docs,
-    ).collect()
+    pos_rows = _decode_positions_for(_term_rows(di, k0_tids), docs).collect()
     # every winner holds every first-keyword term, so each term's winner
     # postings, doc-sorted, are a decoded segment that covers ``docs``
     by_term: dict[int, list] = {t: [] for t in k0_tids}
@@ -970,64 +920,41 @@ def _route_distributed(di: DiskIndex, term_ids: list[int], max_driver_postings: 
     return sum(dfs.values()) > max_driver_postings
 
 
-def topk_exhaustive(
-    di: DiskIndex,
-    query: str,
-    k: int = 10,
-    max_driver_postings: int = MAX_DRIVER_POSTINGS,
-) -> list[tuple[int, float]]:
-    """Exhaustive disjunctive top-k by S — the oracle for topk_wand.
-    Routes to the executor-side plan above the driver valves."""
-    qtokens = tokenize_query(query)
-    if _route_distributed(di, sorted({t for t, _ in qtokens}), max_driver_postings):
-        return _executor_topk(di, query, k, "tfidf")
-    segs = fetch_term_segments(di, [t for t, _ in qtokens])
-    acc: dict[int, float] = {}
-    for tid in segs:
-        seg = segs[tid]
-        doc_ids, _, npos, _ = seg.decode()
-        idf = math.log(di.meta.n_docs / seg.df)
-        contrib = (1.0 + np.log(npos.astype(np.float64))) * idf
-        for d, c in zip(doc_ids.tolist(), contrib.tolist()):
-            acc[d] = acc.get(d, 0.0) + c
-    return sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
-
-
-def topk_bm25_exhaustive(
-    di: DiskIndex,
-    query: str,
-    k: int = 10,
-    max_driver_postings: int = MAX_DRIVER_POSTINGS,
-) -> list[tuple[int, float]]:
-    """Exhaustive disjunctive BM25 top-k: [(doc_id, score)].
-
-    score(d) = Σ_t idf_t · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)).
-    The expression tree matches the DuckDB oracle term-for-term so float64
-    results agree bit-for-bit. Routes to the executor-side plan above the
-    driver valves (dl then stays a joined sidecar, never collected)."""
-    qtokens = tokenize_query(query)
-    if _route_distributed(di, sorted({t for t, _ in qtokens}), max_driver_postings):
-        return _executor_topk(di, query, k, "bm25")
-    segs = fetch_term_segments(di, sorted({t for t, _ in qtokens}))
+def _exhaustive(di: DiskIndex, query: str, k: int, scorer: str) -> list[tuple[int, float]]:
+    """Exhaustive disjunctive top-k on the driver: every posting of every
+    query term, summed per doc, sorted by (−S, doc_id)."""
+    segs = fetch_term_segments(di, sorted({t for t, _ in tokenize_query(query)}))
     if not segs:
         return []
-    ids, dl = di.doc_lengths()
-    avgdl = di.meta.avgdl
-    n = di.meta.n_docs
+    sc = _Scorer.of(di, scorer)
+    if sc.bm25:
+        ids, dl = di.doc_lengths()
     acc: dict[int, float] = {}
     for seg in segs.values():
         doc_ids, _, npos, _ = seg.decode()
-        idf = _bm25_idf(n, seg.df)
-        d_idx = np.searchsorted(ids, doc_ids)
-        dld = dl[d_idx].astype(np.float64)
-        tf = npos.astype(np.float64)
-        contrib = idf * (
-            tf * (BM25_K1 + 1.0)
-            / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * (dld / avgdl)))
-        )
+        dld = dl[np.searchsorted(ids, doc_ids)].astype(np.float64) if sc.bm25 else 0.0
+        contrib = sc.contrib(npos, sc.idf(seg.df), dld)
         for d, c in zip(doc_ids.tolist(), contrib.tolist()):
             acc[d] = acc.get(d, 0.0) + c
     return sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
+
+
+def topk_exhaustive(di: DiskIndex, query: str, k: int = 10) -> list[tuple[int, float]]:
+    """Exhaustive disjunctive TF-IDF top-k by S — the oracle for
+    topk_wand, always summed on the driver."""
+    return _exhaustive(di, query, k, "tfidf")
+
+
+def topk_bm25_exhaustive(
+    di: DiskIndex, query: str, k: int = 10
+) -> list[tuple[int, float]]:
+    """Exhaustive disjunctive BM25 top-k: [(doc_id, score)], the oracle
+    for topk_bm25_wand, always summed on the driver.
+
+    score(d) = Σ_t idf_t · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)).
+    The expression tree matches the DuckDB oracle term-for-term so float64
+    results agree bit-for-bit."""
+    return _exhaustive(di, query, k, "bm25")
 
 
 def _topk_blockmax(
@@ -1046,8 +973,7 @@ def _topk_blockmax(
     result, driver memory O(k)."""
     tids = sorted({t for t, _ in tokenize_query(query)})
     if _route_distributed(di, tids, max_driver_postings):
-        stats = {"blocks_total": 0, "blocks_decoded": 0, "path": "distributed"}
-        return _executor_topk(di, query, k, scorer), stats
+        return _executor_topk(di, query, k, scorer)
     segs = fetch_term_segments(di, tids)
     if not segs:
         return [], {"blocks_total": 0, "blocks_decoded": 0}
@@ -1123,7 +1049,9 @@ def topk_wand(
 ) -> list[tuple[int, float]]:
     """Block-max pruned TF-IDF top-k: [(doc_id, S)] — equals
     topk_exhaustive. Records pruning stats on the function attribute
-    ``last_stats`` (``"path": "distributed"`` on the executor route)."""
+    ``last_stats``: blocks_total / blocks_decoded on either route, plus
+    ``"path": "distributed"`` and the query's ``theta`` on the executor
+    route (``_executor_topk``)."""
     top, topk_wand.last_stats = _topk_blockmax(
         di, query, k, max_driver_postings, "tfidf"
     )
@@ -1257,7 +1185,7 @@ def _theta_probe_many(
     so the window needs no exchange."""
     from pyspark.sql import Window
 
-    tf_rows = _decode_tf_df(seg_rows.filter(F.col("term_id").isin(probe_tids)))
+    tf_rows = _decode_tf(di, seg_rows.filter(F.col("term_id").isin(probe_tids)))
     scored = sc.scored_rows(di, tf_rows, {t: idfs[t] for t in probe_tids})
     if len(probe_tids) == 1:
         scored = scored.orderBy(F.desc("c")).limit(k)
@@ -1279,20 +1207,17 @@ def _batched_prune_setup(
     k: int,
     sc: _Scorer,
 ):
-    """Front half of the executor top-k and of ``batched_pruning_stats``:
-    tokenize every query, resolve df/idf for the UNION of terms from ONE
-    metadata scan (none when cached), build the pruned scan, and assemble
-    the per-query prune specs (shared metadata, one theta probe job for
-    the queries ``_plan_probe`` cannot rule out; none when it rules out
-    all).
+    """Front half of the executor top-k plan: tokenize every query,
+    resolve df/idf for the UNION of terms from ONE metadata scan (none
+    when cached), build the pruned scan, and assemble the per-query prune
+    specs (shared metadata, one theta probe job for the queries
+    ``_plan_probe`` cannot rule out; none when it rules out all).
 
     Returns None when no query has an indexed term, else
-    (per_q, idfs, seg_rows, term_specs, overlap, thetas_by_qid) where
-    ``term_specs[t]`` feeds ``_decode_tf_pruned_many_df`` and is empty
-    when nothing can be pruned (every query single-term, void or thinner
-    than k)."""
-    from ..functions.xxhash import bucket_of_term
-
+    (per_q, idfs, seg_rows, keeper, thetas) where ``keeper`` is the
+    pruned decode's ``_block_keeper``, or None when nothing can be pruned
+    (every query single-term, void or thinner than k), and ``thetas``
+    maps each qid to its theta (−inf where it keeps every block)."""
     per_q = {
         qid: sorted({t for t, _ in tokenize_query(q)}) for qid, q in queries
     }
@@ -1302,16 +1227,12 @@ def _batched_prune_setup(
     if not union:
         return None
     idfs = {t: sc.idf(meta[t].df) for t in union}
-    buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in union})
-    seg_rows = di.segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(union)
-    )
+    seg_rows = _term_rows(di, union)
     # single-term queries keep all their blocks (theta = -inf): their
     # probe WOULD be the whole job
     multi = {qid: tids for qid, tids in per_q.items() if len(tids) > 1}
-    term_specs: dict[int, list[dict]] = {}
-    overlap: dict[int, _OverlapMeta] = {}
-    thetas_by_qid: dict[str, float] = {qid: -math.inf for qid in per_q}
+    thetas: dict[str, float] = {qid: -math.inf for qid in per_q}
+    keeper = None
     if multi:
         ub, overlap = _collect_prune_meta(meta, union, idfs, sc)
         plans = {
@@ -1319,72 +1240,37 @@ def _batched_prune_setup(
             for qid, tids in multi.items()
         }
         probes = sorted({p for _, p in plans.values() if p is not None})
-        thetas = (
-            _theta_probe_many(di, sc, seg_rows, probes, idfs, k) if probes else {}
-        )
+        probed = _theta_probe_many(di, sc, seg_rows, probes, idfs, k) if probes else {}
+        term_specs: dict[int, list[dict]] = {}
         for qid, tids in per_q.items():
             big_rest, probe = plans.get(qid, ({}, None))
-            theta = -math.inf if probe is None else thetas[probe]
-            thetas_by_qid[qid] = theta
+            thetas[qid] = -math.inf if probe is None else probed[probe]
             spec = {
-                "theta": theta,
+                "theta": thetas[qid],
                 "big_rest": big_rest,
                 "small": [t for t in tids if t in overlap],
             }
             for t in tids:
                 term_specs.setdefault(t, []).append(spec)
-        if all(not math.isfinite(s["theta"]) for ss in term_specs.values() for s in ss):
-            term_specs = {}  # nothing prunable: skip the pruned kernel
-    return per_q, idfs, seg_rows, term_specs, overlap, thetas_by_qid
-
-
-def batched_pruning_stats(
-    di: DiskIndex,
-    queries: list[tuple[str, str]],
-    k: int = 10,
-    scorer: str = "bm25",
-) -> dict:
-    """Block-selection stats of the executor top-k plan (no postings
-    shipped): {"blocks_total", "blocks_decoded", "theta": {qid: theta}},
-    through the same selection code path as ``topk_scores_many``
-    (``_decode_tf_pruned_many_df(stats_only=True)``). Pass a one-query
-    set for the executor route of ``topk_wand`` / ``topk_bm25_wand``."""
-    sc = _Scorer.of(di, scorer)
-    setup = _batched_prune_setup(di, queries, k, sc)
-    if setup is None:
-        return {"blocks_total": 0, "blocks_decoded": 0, "theta": {}}
-    _, idfs, seg_rows, term_specs, overlap, thetas = setup
-    stats = _decode_tf_pruned_many_df(
-        seg_rows, sc, idfs, term_specs, overlap, stats_only=True
-    )
-    agg = stats.agg(
-        F.sum("blocks_total").alias("t"), F.sum("blocks_decoded").alias("d")
-    ).collect()[0]
-    return {
-        "blocks_total": int(agg["t"] or 0),
-        "blocks_decoded": int(agg["d"] or 0),
-        "theta": thetas,
-    }
+        if any(math.isfinite(theta) for theta in thetas.values()):
+            keeper = _block_keeper(sc, idfs, term_specs, overlap)
+    return per_q, idfs, seg_rows, keeper, thetas
 
 
 def _topk_plan(
     di: DiskIndex, queries: list[tuple[str, str]], k: int, scorer: str
-) -> DataFrame | None:
-    """The executor top-k plan with RAW scores: (qid, doc_id, score,
-    rank), or None when no query has an indexed term. See
-    ``topk_scores_many``."""
+) -> tuple[DataFrame | None, dict[str, float]]:
+    """The executor top-k plan with RAW scores, (qid, doc_id, score,
+    rank), and each qid's theta. The plan is None when no query has an
+    indexed term. See ``topk_scores_many``."""
     from pyspark.sql import Window
 
     sc = _Scorer.of(di, scorer)
     setup = _batched_prune_setup(di, queries, k, sc)
     if setup is None:
-        return None
-    per_q, idfs, seg_rows, term_specs, overlap, _ = setup
-    if term_specs:
-        tf_rows = _decode_tf_pruned_many_df(seg_rows, sc, idfs, term_specs, overlap)
-    else:
-        tf_rows = _decode_tf_df(seg_rows)
-    scored = sc.scored_rows(di, tf_rows, idfs)
+        return None, {}
+    per_q, idfs, seg_rows, keeper, thetas = setup
+    scored = sc.scored_rows(di, _decode_tf(di, seg_rows, keeper), idfs)
     # k-boundary ties are ordered by ROUND(score, 6) DESC, doc_id — the
     # oracle's tie semantics — not by raw float: partial-agg order in the
     # sum is nondeterministic, so raw scores can differ in the last ulp
@@ -1406,7 +1292,7 @@ def _topk_plan(
                 "score",
                 (F.monotonically_increasing_id() + 1).alias("rank"),
             )
-        )
+        ), thetas
     routes: dict[int, list[str]] = {}
     for qid, tids in per_q.items():
         for t in tids:
@@ -1430,20 +1316,27 @@ def _topk_plan(
     w = Window.partitionBy("qid").orderBy(*order)
     return agg.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= k
-    )
+    ), thetas
 
 
 def _executor_topk(
     di: DiskIndex, query: str, k: int, scorer: str
-) -> list[tuple[int, float]]:
+) -> tuple[list[tuple[int, float]], dict]:
     """The executor route of the driver entry points: the executor top-k
     plan on a one-query set, collected with RAW scores in rank order —
-    the driver holds k rows."""
-    plan = _topk_plan(di, [("q", query)], k, scorer)
-    if plan is None:
-        return []
-    rows = sorted(plan.collect(), key=lambda r: r["rank"])
-    return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+    the driver holds k rows. Its stats are the tf decode's block counts
+    over that collect (the theta probe's decode is not in them) and the
+    query's theta."""
+    plan, thetas = _topk_plan(di, [("q", query)], k, scorer)
+    read, decoded = di.blocks_read.value, di.blocks_decoded.value
+    rows = [] if plan is None else sorted(plan.collect(), key=lambda r: r["rank"])
+    stats = {
+        "blocks_total": di.blocks_read.value - read,
+        "blocks_decoded": di.blocks_decoded.value - decoded,
+        "theta": thetas.get("q", -math.inf),
+        "path": "distributed",
+    }
+    return [(int(r["doc_id"]), float(r["score"])) for r in rows], stats
 
 
 def topk_scores_many(
@@ -1469,9 +1362,9 @@ def topk_scores_many(
       term: each query q gets a theta_q from a rarest-term probe (one job
       for all queries; skipped when ``_plan_probe`` proves it cannot
       prune), and block b of term t is decoded iff ANY query using t
-      could still place a doc from b in its top k
-      (``_decode_tf_pruned_many_df`` — the result stays EXACT, see its
-      soundness note). Nothing to prune → the plain decode.
+      could still place a doc from b in its top k (``_decode_tf`` with a
+      ``_block_keeper`` — the result stays EXACT, see its soundness
+      note). Nothing to prune → the same kernel decodes whole blobs.
     - The contribution as one Column expression (``_Scorer.scored_rows``):
       BM25 joins the doc-partitioned dl sidecar ONCE, per posting, before
       any per-query fan-out.
@@ -1491,8 +1384,13 @@ def topk_scores_many(
     rounded to 6 dp. Queries whose tokens match no indexed term
     contribute no rows. Query operators (``-x``/``site:``) are not
     interpreted — the score-ordered family ranks the raw token bag, like
-    the driver ``topk_*`` entry points."""
-    plan = _topk_plan(di, queries, k, scorer)
+    the driver ``topk_*`` entry points.
+
+    Records ``last_stats = {"theta": {qid: theta}}`` on the function
+    attribute; the plan's block counts are the deltas of
+    ``di.blocks_read`` / ``di.blocks_decoded`` around its collect."""
+    plan, thetas = _topk_plan(di, queries, k, scorer)
+    topk_scores_many.last_stats = {"theta": thetas}
     if plan is None:
         return di.empty_result().select(
             F.lit("").alias("qid"), "doc_id", "score", "rank"

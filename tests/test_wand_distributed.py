@@ -42,10 +42,22 @@ def _assert_rank_identical(got, exp, tol=1e-9):
 
 
 def _one_query_stats(di, query, scorer="bm25", k=10):
-    """Block-selection stats of the executor route of one query: the
-    executor top-k plan on a one-query set, with that query's theta."""
-    st = wand.batched_pruning_stats(di, [(query, query)], k, scorer)
-    return {**st, "theta": st["theta"].get(query, -math.inf)}
+    """Block counts and theta of the executor route of one query: the
+    ``last_stats`` of a forced-executor driver entry point."""
+    fn = wand.topk_bm25_wand if scorer == "bm25" else wand.topk_wand
+    fn(di, query, k, max_driver_postings=0)
+    return fn.last_stats
+
+
+def _counted_collect(di, df):
+    """Rows of ``df`` and the tf decode's block counts over that collect:
+    the deltas of the handle's accumulators."""
+    read, decoded = di.blocks_read.value, di.blocks_decoded.value
+    rows = df.collect()
+    return rows, {
+        "blocks_total": di.blocks_read.value - read,
+        "blocks_decoded": di.blocks_decoded.value - decoded,
+    }
 
 
 @pytest.mark.parametrize("query", QUERIES)
@@ -64,12 +76,11 @@ def test_tfidf_distributed_parity(spark, index_dir, query):
     dist = wand.topk_wand(load_index(spark, index_dir), query, 10,
                           max_driver_postings=0)
     _assert_rank_identical(dist, driver)
-    ex = wand.topk_exhaustive(load_index(spark, index_dir), query, 10,
-                              max_driver_postings=0)
-    _assert_rank_identical(ex, driver)
-    bm_ex = wand.topk_bm25_exhaustive(load_index(spark, index_dir), query, 10,
-                                      max_driver_postings=0)
-    _assert_rank_identical(bm_ex, wand.topk_bm25_exhaustive(di, query, 10))
+    ex = wand.topk_exhaustive(load_index(spark, index_dir), query, 10)
+    _assert_rank_identical(dist, ex)
+    bm_dist = wand.topk_bm25_wand(load_index(spark, index_dir), query, 10,
+                                  max_driver_postings=0)
+    _assert_rank_identical(bm_dist, wand.topk_bm25_exhaustive(di, query, 10))
 
 
 def test_distributed_driver_holds_only_k(spark, index_dir):
@@ -79,7 +90,9 @@ def test_distributed_driver_holds_only_k(spark, index_dir):
     di = load_index(spark, index_dir)
     rows = wand.topk_bm25_wand(di, "table spark", 10, max_driver_postings=0)
     assert 0 < len(rows) <= 10
-    assert wand.topk_bm25_wand.last_stats["path"] == "distributed"
+    st = wand.topk_bm25_wand.last_stats
+    assert st["path"] == "distributed"
+    assert st["blocks_total"] > 0 and st["blocks_decoded"] > 0, st
     assert di._dl is None, "distributed route must not collect doc lengths"
     assert len(di.segment_cache._d) == 0, (
         "distributed route must not ship postings blobs to the driver"
@@ -219,22 +232,22 @@ def test_topk_many_empty_query_set(spark, index_dir):
 
 def test_topk_many_blockmax_prunes_hot_term(spark, hot_rare_index):
     """Verdict r4 #2: the BATCHED plan must skip blocks on a batch that
-    contains a hot+rare query — blocks_decoded < blocks_total via the
-    same selection code path topk_scores_many executes — while every
-    query in the batch stays row-identical to its single-query plan."""
+    contains a hot+rare query — blocks_decoded < blocks_total, counted by
+    the decode topk_scores_many runs — while every query in the batch
+    stays row-identical to its single-query plan."""
     di = load_index(spark, hot_rare_index)
     # "w3" is ONE bigram -> a genuinely single-term query in the batch
     qset = [("hot", "common needle"), ("lone", "w3")]
-    stats = wand.batched_pruning_stats(di, qset, k=10)
+    got = wand.topk_scores_many(di, qset, k=10)
+    thetas = wand.topk_scores_many.last_stats["theta"]
+    rows, stats = _counted_collect(di, got)
     assert stats["blocks_total"] > 20, stats
     assert 0 < stats["blocks_decoded"] < stats["blocks_total"], stats
     # the hot query got a finite theta; the single-term one pins keep-all
-    import math
-    assert math.isfinite(stats["theta"]["hot"])
-    assert stats["theta"]["lone"] == -math.inf
-    got = wand.topk_scores_many(di, qset, k=10)
+    assert math.isfinite(thetas["hot"])
+    assert thetas["lone"] == -math.inf
     by_q = {}
-    for r in got.collect():
+    for r in rows:
         by_q.setdefault(r["qid"], []).append((r["rank"], r["doc_id"], r["score"]))
     for qid, q in qset:
         exp = wand.topk_bm25_wand(load_index(spark, hot_rare_index), q, 10)
@@ -251,8 +264,8 @@ def test_topk_many_prune_or_is_superset_per_query(spark, hot_rare_index):
     blocks than the single-query plan, never fewer."""
     di = load_index(spark, hot_rare_index)
     single = _one_query_stats(di, "common needle")
-    batch = wand.batched_pruning_stats(
-        di, [("a", "common needle"), ("b", "common w3")], k=10
+    _, batch = _counted_collect(
+        di, wand.topk_scores_many(di, [("a", "common needle"), ("b", "common w3")], k=10)
     )
     assert batch["blocks_total"] >= single["blocks_total"]
     assert batch["blocks_decoded"] >= single["blocks_decoded"], (single, batch)
@@ -338,6 +351,54 @@ def test_scoring_plan_python_boundary(spark, hot_rare_index, qset):
     assert counts == {"MapInArrow": 1, "FlatMapGroupsInArrow": 0,
                       "ArrowEvalPython": 0, "BatchEvalPython": 0}, names
     assert not [n for n in names if "ExistingRDD" in n], names
+
+
+def _scan_under(node):
+    """The first node at or below ``node`` that scans a file source."""
+    while not node.nodeName().startswith("Scan"):
+        node = node.children().apply(0)
+    return node
+
+
+def test_executor_search_decodes_each_side_once(spark, index_dir, monkeypatch):
+    """The executor ``search_segments`` decodes each keyword or exclusion
+    side from its own pruned scan: the tf decode counts exactly the
+    blocks of each side's own segment rows, and each candidate scan
+    pushes down only its side's term ids."""
+    from search_engine_spark.functions.tokenizer import tokenize_query
+
+    di = load_index(spark, index_dir)
+    sides = [sorted({t for t, _ in tokenize_query(w)}) for w in ("table", "spark", "scan")]
+    blocks = [
+        sum(-(-r["df"] // 128)
+            for r in di.segments.filter(F.col("term_id").isin(tids)).select("df").collect())
+        for tids in sides
+    ]
+    assert all(blocks), blocks
+    frame = type(di.segments)
+    collect = frame.collect
+    collected = []
+
+    def spy(df):
+        collected.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", spy)
+    read, decoded = di.blocks_read.value, di.blocks_decoded.value
+    rows = wand.search_segments(di, "table spark -scan", max_driver_postings=0).collect()
+    assert rows
+    assert di.blocks_decoded.value - decoded == sum(blocks)
+    assert di.blocks_read.value - read == sum(blocks)
+    # the candidate plan: the one collect with a MapInArrow per side
+    (plan,) = [
+        nodes for df in collected
+        if len(nodes := [n for n in _executed_nodes(df) if n.nodeName() == "MapInArrow"]) == 3
+    ]
+    pushed = []
+    for node in plan:
+        m = re.search(r"In\(term_id, \[([^\]]*)\]\)", _scan_under(node).toString())
+        pushed.append(sorted(int(t) for t in m.group(1).split(",")))
+    assert sorted(pushed) == sorted(sides), (pushed, sides)
 
 
 def test_site_valve_never_collects_site_rows(spark, index_dir):
@@ -486,9 +547,9 @@ HOT_RARE_QUERIES = [
 def test_void_probe_check_is_sound(spark, monkeypatch, index_dir, hot_rare_index,
                                    stream_index):
     """Wherever ``_plan_probe`` rules the theta probe out, running the
-    probe anyway yields a theta at which the stats kernel keeps every
-    block — on a batch, the hot/rare and a multi-generation streaming
-    index, for both scorers on the hot/rare one."""
+    probe anyway yields a theta at which the executor route's decode
+    keeps every block — on a batch, the hot/rare and a multi-generation
+    streaming index, for both scorers on the hot/rare one."""
     verdicts = []
     plan_probe = wand._plan_probe
 

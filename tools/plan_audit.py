@@ -102,7 +102,16 @@ def main() -> None:
         plan = explain_collects(
             label, lambda: wand.topk_scores_many(index, qset, 10, "bm25")
         )
-        thetas = wand.batched_pruning_stats(index, qset, 10, "bm25")["theta"]
+        thetas = wand.topk_scores_many.last_stats["theta"]
+        cap(f"{label}, scoring plan", plan)
+        # the real run: the tf decode's block counts are the deltas of the
+        # handle's accumulators around the scoring plan's collect
+        read, decoded = index.blocks_read.value, index.blocks_decoded.value
+        plan.collect()
+        print(
+            f"\nblocks decoded / total: {index.blocks_decoded.value - decoded}"
+            f" / {index.blocks_read.value - read}"
+        )
         for qid, query in qset:
             theta = thetas.get(qid, float("-inf"))
             print(
@@ -111,7 +120,6 @@ def main() -> None:
                    if theta == float("-inf")
                    else f"ran, theta = {theta:.6f}")
             )
-        cap(f"{label}, scoring plan", plan)
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cap("simhash (bit-sliced, 1 Generate)", D.simhash(raw))
     cap("minhash band keys (1 shuffle, no distinct)", D.minhash_band_keys(raw))
