@@ -920,43 +920,6 @@ def _route_distributed(di: DiskIndex, term_ids: list[int], max_driver_postings: 
     return sum(dfs.values()) > max_driver_postings
 
 
-def _exhaustive(di: DiskIndex, query: str, k: int, scorer: str) -> list[tuple[int, float]]:
-    """Exhaustive disjunctive top-k on the driver: every posting of every
-    query term, summed per doc, sorted by (−S, doc_id)."""
-    segs = fetch_term_segments(di, sorted({t for t, _ in tokenize_query(query)}))
-    if not segs:
-        return []
-    sc = _Scorer.of(di, scorer)
-    if sc.bm25:
-        ids, dl = di.doc_lengths()
-    acc: dict[int, float] = {}
-    for seg in segs.values():
-        doc_ids, _, npos, _ = seg.decode()
-        dld = dl[np.searchsorted(ids, doc_ids)].astype(np.float64) if sc.bm25 else 0.0
-        contrib = sc.contrib(npos, sc.idf(seg.df), dld)
-        for d, c in zip(doc_ids.tolist(), contrib.tolist()):
-            acc[d] = acc.get(d, 0.0) + c
-    return sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
-
-
-def topk_exhaustive(di: DiskIndex, query: str, k: int = 10) -> list[tuple[int, float]]:
-    """Exhaustive disjunctive TF-IDF top-k by S — the oracle for
-    topk_wand, always summed on the driver."""
-    return _exhaustive(di, query, k, "tfidf")
-
-
-def topk_bm25_exhaustive(
-    di: DiskIndex, query: str, k: int = 10
-) -> list[tuple[int, float]]:
-    """Exhaustive disjunctive BM25 top-k: [(doc_id, score)], the oracle
-    for topk_bm25_wand, always summed on the driver.
-
-    score(d) = Σ_t idf_t · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)).
-    The expression tree matches the DuckDB oracle term-for-term so float64
-    results agree bit-for-bit."""
-    return _exhaustive(di, query, k, "bm25")
-
-
 def _topk_blockmax(
     di: DiskIndex, query: str, k: int, max_driver_postings: int, scorer: str
 ) -> tuple[list[tuple[int, float]], dict]:
@@ -1047,11 +1010,11 @@ def topk_wand(
     k: int = 10,
     max_driver_postings: int = MAX_DRIVER_POSTINGS,
 ) -> list[tuple[int, float]]:
-    """Block-max pruned TF-IDF top-k: [(doc_id, S)] — equals
-    topk_exhaustive. Records pruning stats on the function attribute
-    ``last_stats``: blocks_total / blocks_decoded on either route, plus
-    ``"path": "distributed"`` and the query's ``theta`` on the executor
-    route (``_executor_topk``)."""
+    """Block-max pruned TF-IDF top-k: [(doc_id, S)] — equals the
+    exhaustive sum in ``tests/exhaustive.py``. Records pruning stats on
+    the function attribute ``last_stats``: blocks_total / blocks_decoded
+    on either route, plus ``"path": "distributed"`` and the query's
+    ``theta`` on the executor route (``_executor_topk``)."""
     top, topk_wand.last_stats = _topk_blockmax(
         di, query, k, max_driver_postings, "tfidf"
     )
@@ -1064,10 +1027,10 @@ def topk_bm25_wand(
     k: int = 10,
     max_driver_postings: int = MAX_DRIVER_POSTINGS,
 ) -> list[tuple[int, float]]:
-    """Block-max pruned BM25 top-k — equals topk_bm25_exhaustive. The
-    block bound needs only the block_max_tf sidecar (``_Scorer.
-    block_bound``, dl → 0); on the executor route dl is joined
-    executor-side. Records ``last_stats`` like topk_wand."""
+    """Block-max pruned BM25 top-k — equals the exhaustive sum in
+    ``tests/exhaustive.py``. The block bound needs only the block_max_tf
+    sidecar (``_Scorer.block_bound``, dl → 0); on the executor route dl
+    is joined executor-side. Records ``last_stats`` like topk_wand."""
     top, topk_bm25_wand.last_stats = _topk_blockmax(
         di, query, k, max_driver_postings, "bm25"
     )

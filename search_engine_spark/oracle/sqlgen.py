@@ -325,7 +325,8 @@ FROM sc ORDER BY ROUND(score, 6) DESC, doc_id LIMIT {k}
 def tfidf_topk_sql(query: str, k: int = 10) -> str:
     """Disjunctive TF-IDF top-k oracle → (doc_id, score, rank).
 
-    Mirrors operators/wand.topk_wand / topk_exhaustive term-for-term:
+    Mirrors operators/wand.topk_wand (and the exhaustive sum in
+    tests/exhaustive.py) term-for-term:
     S(d) = Σ_t (1+ln tf_t)·ln(N/df_t) over the query's distinct matched
     terms, tf = combined title+body occurrence count (the reference's tf,
     search.go:423), no phrase/title boosts (the score-ordered family's

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -9,18 +10,28 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
 def _package_zip() -> str:
     """Zip this package so executors can import it regardless of cwd —
-    the in-process equivalent of ``spark-submit --py-files``."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "search_engine_spark_pyfiles.zip")
-    with zipfile.ZipFile(out, "w") as z:
-        for root, _dirs, files in os.walk(pkg_dir):
+    the in-process equivalent of ``spark-submit --py-files``.
+
+    The zip is named by a hash of the package's directory, so checkouts
+    running at once on one host never ship each other's code, and it is
+    written under a temp name and renamed into place, so a worker never
+    opens a half-written zip."""
+    tag = hashlib.sha1(PKG_DIR.encode()).hexdigest()[:16]
+    out = os.path.join(tempfile.gettempdir(), f"search_engine_spark_pyfiles_{tag}.zip")
+    tmp = f"{out}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w") as z:
+        for root, _dirs, files in os.walk(PKG_DIR):
             for f in files:
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                    rel = os.path.relpath(full, os.path.dirname(PKG_DIR))
                     z.write(full, rel)
+    os.replace(tmp, out)
     return out
 
 
@@ -36,6 +47,12 @@ def get_spark(
     join splitting is the backstop for hot bigram terms), Arrow on (every
     Python-side operator is a vectorized pandas/Arrow UDF), UTC timezone
     (oracle comparisons against DuckDB).
+
+    For a ``local[...]`` master the Python workers start from
+    ``worker_daemon`` (a zip's directory is re-read only when the zip
+    changed), imported from this package's own directory, which local
+    workers can read. Any other master keeps PySpark's daemon; README
+    gives the cluster form.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -58,6 +75,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master.startswith("local"):
+        b = b.config(
+            "spark.python.daemon.module", "search_engine_spark.worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", os.path.dirname(PKG_DIR))
     evlog = os.environ.get("SPARK_EVENTLOG_DIR")
     if evlog:  # stage/task-level profiling (tools/ event-log analysis)
         os.makedirs(evlog, exist_ok=True)

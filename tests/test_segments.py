@@ -30,6 +30,7 @@ from search_engine_spark.operators.segments import (
     read_manifest,
     write_index,
 )
+from tests.exhaustive import topk_bm25_exhaustive, topk_exhaustive
 from tests.test_search_e2e import assert_rank_identical, oracle_of
 
 QUERIES = ["table", "spark", "table spark", "table -dup", "dup", "spark site:src3"]
@@ -116,7 +117,7 @@ def test_blob_search_rank_identical(spark, index_dir, oracle, query):
 def test_wand_equals_exhaustive(spark, index_dir):
     di = load_index(spark, index_dir)
     for q, k in [("table", 10), ("spark", 25), ("dup", 5), ("customer query", 10)]:
-        exact = wand.topk_exhaustive(di, q, k)
+        exact = topk_exhaustive(di, q, k)
         pruned = wand.topk_wand(di, q, k)
         assert [d for d, _ in exact] == [d for d, _ in pruned], q
         for (d1, s1), (d2, s2) in zip(exact, pruned):
@@ -280,7 +281,7 @@ def test_bm25_wand_equals_exhaustive(spark, index_dir):
     di = load_index(spark, index_dir)
     for q, k in [("table", 10), ("spark", 25), ("dup", 5), ("customer query", 10)]:
         a = wand.topk_bm25_wand(di, q, k)
-        b = wand.topk_bm25_exhaustive(di, q, k)
+        b = topk_bm25_exhaustive(di, q, k)
         assert [(d, round(s, 9)) for d, s in a] == [(d, round(s, 9)) for d, s in b]
 
 

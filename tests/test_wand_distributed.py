@@ -1,12 +1,12 @@
 """Executor-side score-ordered query family (``topk_scores_many``, run
 on a one-query set by the driver entry points above their valves).
 
-The driver block-max routes (topk_wand / topk_bm25_wand / *_exhaustive)
-and the distributed plan must agree rank-identically, and the distributed
-route must keep the DRIVER at O(k): no doc-length collect (DiskIndex._dl
-stays None) and no postings blobs fetched into the driver LRU
-(segment_cache stays empty). Mirrors the reference read path
-(search.go:187-273) at cluster scale.
+The driver block-max routes (topk_wand / topk_bm25_wand, and the
+exhaustive sums in tests/exhaustive.py) and the distributed plan must
+agree rank-identically, and the distributed route must keep the DRIVER
+at O(k): no doc-length collect (DiskIndex._dl stays None) and no
+postings blobs fetched into the driver LRU (segment_cache stays empty).
+Mirrors the reference read path (search.go:187-273) at cluster scale.
 """
 
 import itertools
@@ -23,6 +23,7 @@ from search_engine_spark.streaming.ingest import (
     start_incremental_index,
     stream_documents,
 )
+from tests.exhaustive import topk_bm25_exhaustive, topk_exhaustive
 
 QUERIES = ["table", "table spark", "customer query", "dup", "qqqq"]
 
@@ -76,11 +77,11 @@ def test_tfidf_distributed_parity(spark, index_dir, query):
     dist = wand.topk_wand(load_index(spark, index_dir), query, 10,
                           max_driver_postings=0)
     _assert_rank_identical(dist, driver)
-    ex = wand.topk_exhaustive(load_index(spark, index_dir), query, 10)
+    ex = topk_exhaustive(load_index(spark, index_dir), query, 10)
     _assert_rank_identical(dist, ex)
     bm_dist = wand.topk_bm25_wand(load_index(spark, index_dir), query, 10,
                                   max_driver_postings=0)
-    _assert_rank_identical(bm_dist, wand.topk_bm25_exhaustive(di, query, 10))
+    _assert_rank_identical(bm_dist, topk_bm25_exhaustive(di, query, 10))
 
 
 def test_distributed_driver_holds_only_k(spark, index_dir):

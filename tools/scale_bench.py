@@ -3,10 +3,11 @@
 One COLD run = one JVM. Invoke once per (cores, repetition):
 
     spark-submit --master local[8] \
-        --py-files /tmp/search_engine_spark_pyfiles.zip \
+        --py-files search_engine_spark.zip \
         tools/scale_bench.py --cores 8 --n-docs 40000
 
-(or ``python tools/scale_bench.py --cores 8 ...`` — the session factory
+where ``search_engine_spark.zip`` is a zip of the package directory (or
+``python tools/scale_bench.py --cores 8 ...`` — the session factory
 ships the package zip itself, the --py-files equivalent).
 
 Prints ONE JSON line:
