@@ -24,9 +24,18 @@ struct-of-arrays so any block decodes independently and vectorized:
 Sidecar (parquet array columns, NOT in the blob — WAND prunes blocks
 without touching blob bytes):
 
-    block_last_doc: long[]  last doc_id per block
-    block_max_tf:   int[]   max tf per block
-    block_offsets:  long[]  byte offset of each block within the blob
+    block_last:    long[]  last doc_id per block
+    block_max_tf:  int[]   max tf per block
+    block_offsets: long[]  byte offset of each block within the blob
+
+One writer and its exact inverse. ``encode_postings`` is the only blob
+writer: it takes doc-level postings in any order, each with its doc's
+pdeltas as a packed byte span (``pack_position_deltas``, map-side), and
+splices those bytes untouched between the varint-encoded integer
+streams. ``unpack_postings`` turns a blob back into exactly that input,
+reading each doc's span off the varint end bits, so a merge of salts or
+generations re-writes blobs without rebuilding a position. Queries
+decode positions with ``decode_term_postings`` / ``slice_blocks``.
 """
 
 from __future__ import annotations
@@ -101,25 +110,6 @@ def _segmented_cumsum(deltas: np.ndarray, reset_starts: np.ndarray) -> np.ndarra
     return cs - offsets[seg_of]
 
 
-def _position_deltas(pos: np.ndarray, pos_starts: np.ndarray, title_ends: np.ndarray, npos: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Delta-encode flat positions (per-doc, per-field runs).
-
-    Returns (deltas, reset_starts) where reset indices hold absolutes.
-    """
-    out = pos.astype(np.int64, copy=True)
-    if pos.size > 1:
-        out[1:] = pos[1:] - pos[:-1]
-    body_starts = pos_starts + title_ends
-    valid = body_starts < pos_starts + npos
-    resets = np.unique(np.concatenate([pos_starts, body_starts[valid]]))
-    # a TRAILING zero-position doc has pos_starts == pos.size (out of
-    # bounds); mid-array empties point at the next doc's start, which is
-    # already an absolute-reset index, so dropping OOB entries is exact
-    resets = resets[resets < pos.size]
-    out[resets] = pos[resets]
-    return out, resets
-
-
 class EncodedBucket:
     """Per-term encoded postings for one bucket of terms."""
 
@@ -135,167 +125,135 @@ class EncodedBucket:
         self.block_offsets = block_offsets
 
 
-def encode_bucket(
+def encode_postings(
     term_ids: np.ndarray,
     doc_ids: np.ndarray,
     title_ends: np.ndarray,
-    pos_counts: np.ndarray,
-    positions_flat: np.ndarray,
+    npos: np.ndarray,
+    pd_starts: np.ndarray,
+    pd_lens: np.ndarray,
+    pd_bytes: np.ndarray,
 ) -> EncodedBucket:
-    """Encode ALL terms of a bucket in one vectorized pass.
+    """The blob writer: encode ALL terms of a bucket in one vectorized pass.
 
-    Inputs are doc-level arrays sorted by (term_id, doc_id);
-    ``positions_flat`` is the concatenation of each doc's positions.
-    One varint_encode call covers every term; per-term blobs are byte
-    slices of the shared buffer.
+    Rows are doc-level postings in any order; ``pd_bytes[pd_starts[i] :
+    pd_starts[i] + pd_lens[i]]`` is row i's packed pdelta section. Rows
+    are sorted by (term_id, doc_id), only the integer streams (header,
+    gaps, npos, title_end) are varint-encoded — one pass for every term —
+    and each doc's position bytes are spliced in untouched. Per-term blobs
+    are byte slices of the shared buffer.
     """
     N = doc_ids.size
     if N == 0:
         e = np.empty(0, np.int64)
         return EncodedBucket(e, e, e, [], [], [], [])
-    term_ids = term_ids.astype(np.int64, copy=False)
-    doc_ids = doc_ids.astype(np.int64, copy=False)
-    title_ends = title_ends.astype(np.int64, copy=False)
-    pos_counts = pos_counts.astype(np.int64, copy=False)
+    order = np.lexsort((doc_ids, term_ids))
+    term_ids, doc_ids, title_ends, npos, pd_starts, pd_lens = (
+        np.asarray(a, np.int64)[order]
+        for a in (term_ids, doc_ids, title_ends, npos, pd_starts, pd_lens)
+    )
 
-    # --- term boundaries ---------------------------------------------------
+    # --- term and block boundaries (a block is every BLOCK_SIZE docs) -----
     is_term_start = np.ones(N, bool)
     is_term_start[1:] = term_ids[1:] != term_ids[:-1]
     term_starts = np.flatnonzero(is_term_start)
-    uniq_terms = term_ids[term_starts]
-    T = term_starts.size
     term_doc_counts = np.diff(np.append(term_starts, N))
     term_of_doc = np.cumsum(is_term_start) - 1
-
-    pos_starts = np.zeros(N, np.int64)
-    np.cumsum(pos_counts[:-1], out=pos_starts[1:])
-
-    # --- block boundaries (per term, every BLOCK_SIZE docs) ----------------
-    rank_in_term = np.arange(N) - term_starts[term_of_doc]
-    is_block_start = (rank_in_term % BLOCK_SIZE) == 0
+    is_block_start = (np.arange(N) - term_starts[term_of_doc]) % BLOCK_SIZE == 0
     block_start_docs = np.flatnonzero(is_block_start)
     B = block_start_docs.size
     block_of_doc = np.cumsum(is_block_start) - 1
     nb = np.diff(np.append(block_start_docs, N))
     term_of_block = term_of_doc[block_start_docs]
-    sum_pos_b = np.add.reduceat(pos_counts, block_start_docs)
-
-    # --- value stream layout ------------------------------------------------
-    block_vlen = 3 * nb + sum_pos_b
-    block_vends = np.cumsum(block_vlen)
-    block_vrel = block_vends - block_vlen  # start rel. to first block, no headers
     first_block_of_term = block_of_doc[term_starts]
-    # headers: one per term, sitting before that term's first block
-    hdr_before = term_of_block + 1  # headers preceding-or-at this block's term
-    block_vstarts = block_vrel + hdr_before
-    term_vstarts = block_vrel[first_block_of_term] + term_of_block[first_block_of_term]
-    total_values = int(block_vends[-1]) + T
-    stream = np.empty(total_values, np.int64)
-    stream[term_vstarts] = term_doc_counts
 
-    # --- gaps (absolute at block starts) ------------------------------------
-    gaps = doc_ids.copy()
-    gaps[1:] = doc_ids[1:] - doc_ids[:-1]
+    # --- integer stream: [n_docs] before a term's first block, then per
+    # block gaps/npos/te --------------------------------------------------
+    block_vlen = 3 * nb
+    has_hdr = np.zeros(B, np.int64)
+    has_hdr[first_block_of_term] = 1
+    block_vstarts = np.cumsum(block_vlen + has_hdr) - block_vlen
+    stream = np.empty(int(block_vstarts[-1] + block_vlen[-1]), np.int64)
+    stream[block_vstarts[first_block_of_term] - 1] = term_doc_counts
+    gaps = np.diff(doc_ids, prepend=0)
     gaps[block_start_docs] = doc_ids[block_start_docs]
-    rank_in_block = np.arange(N) - block_start_docs[block_of_doc]
-    base = block_vstarts[block_of_doc]
-    stream[base + rank_in_block] = gaps
-    stream[base + nb[block_of_doc] + rank_in_block] = pos_counts
-    stream[base + 2 * nb[block_of_doc] + rank_in_block] = title_ends
+    at = block_vstarts[block_of_doc] + np.arange(N) - block_start_docs[block_of_doc]
+    stream[at] = gaps
+    stream[at + nb[block_of_doc]] = npos
+    stream[at + 2 * nb[block_of_doc]] = title_ends
+    ibuf, ilen = varint_encode(stream)
+    vbyte = np.zeros(stream.size + 1, np.int64)
+    np.cumsum(ilen, out=vbyte[1:])
 
-    # --- position deltas ----------------------------------------------------
-    P = positions_flat.size
-    if P:
-        pdeltas, _ = _position_deltas(positions_flat, pos_starts, title_ends, pos_counts)
-        doc_of_pos = np.repeat(np.arange(N), pos_counts)
-        k_in_doc = np.arange(P) - pos_starts[doc_of_pos]
-        blk = block_of_doc[doc_of_pos]
-        # offset of this doc's deltas inside its block's delta section
-        pos_before_doc_in_block = pos_starts[doc_of_pos] - pos_starts[block_start_docs[blk]]
-        didx = block_vstarts[blk] + 3 * nb[blk] + pos_before_doc_in_block + k_in_doc
-        stream[didx] = pdeltas
+    # --- splice: each block's integers (with its term's header if first),
+    # then its docs' position bytes ---------------------------------------
+    doc_pd_before = np.cumsum(pd_lens) - pd_lens  # position bytes of earlier docs
+    pd_before = doc_pd_before[block_start_docs]  # ... of earlier blocks
+    ib0 = vbyte[block_vstarts - has_hdr]
+    ib1 = vbyte[block_vstarts + block_vlen]
+    out = np.empty(ibuf.size + int(pd_lens.sum()), np.uint8)
+    _scatter_spans(out, ib0 + pd_before, ibuf, ib0, ib1 - ib0)
+    _scatter_spans(out, ib1[block_of_doc] + doc_pd_before, pd_bytes, pd_starts, pd_lens)
+    term_b0 = (ib0 + pd_before)[first_block_of_term]
+    term_b1 = np.append(term_b0[1:], out.size)
+    block_out_off = vbyte[block_vstarts] + pd_before - term_b0[term_of_block]
 
-    # --- one varint pass ------------------------------------------------------
-    buf, nbytes = varint_encode(stream)
-    byte_ends = np.cumsum(nbytes)
-    vstart_to_byte = np.zeros(total_values + 1, np.int64)
-    vstart_to_byte[1:] = byte_ends
-    term_byte_starts = vstart_to_byte[term_vstarts]
-    term_byte_ends = np.append(term_byte_starts[1:], int(byte_ends[-1]))
-    block_byte_starts = vstart_to_byte[block_vstarts]
-
-    # --- per-block metadata -----------------------------------------------
     block_last = doc_ids[np.append(block_start_docs[1:] - 1, N - 1)]
-    block_max = np.maximum.reduceat(pos_counts, block_start_docs)
-
-    # --- slice per term -------------------------------------------------------
-    raw = buf.tobytes()
-    blobs: list[bytes] = []
-    bl_last: list[np.ndarray] = []
-    bl_max: list[np.ndarray] = []
-    bl_off: list[np.ndarray] = []
+    block_max = np.maximum.reduceat(npos, block_start_docs).astype(np.int32)
+    raw = out.tobytes()
+    blobs, bl_last, bl_max, bl_off = [], [], [], []
     term_block_bounds = np.append(first_block_of_term, B)
-    for t in range(T):
+    for t in range(term_starts.size):
         b0, b1 = term_block_bounds[t], term_block_bounds[t + 1]
-        s, e = int(term_byte_starts[t]), int(term_byte_ends[t])
-        blobs.append(raw[s:e])
+        blobs.append(raw[int(term_b0[t]) : int(term_b1[t])])
         bl_last.append(block_last[b0:b1])
-        bl_max.append(block_max[b0:b1].astype(np.int32))
-        bl_off.append(block_byte_starts[b0:b1] - s)
-    ctfs = np.add.reduceat(pos_counts, term_starts)
-    return EncodedBucket(uniq_terms, term_doc_counts, ctfs, blobs, bl_last, bl_max, bl_off)
-
-
-def encode_term_postings(doc_ids, title_ends, positions_list):
-    """Convenience single-term encode (tests): positions_list is a list of
-    per-doc position arrays."""
-    pos_counts = np.array([len(p) for p in positions_list], np.int64)
-    flat = (
-        np.concatenate([np.asarray(p, np.int64) for p in positions_list])
-        if positions_list
-        else np.empty(0, np.int64)
+        bl_max.append(block_max[b0:b1])
+        bl_off.append(block_out_off[b0:b1])
+    ctfs = np.add.reduceat(npos, term_starts)
+    return EncodedBucket(
+        term_ids[term_starts], term_doc_counts, ctfs, blobs, bl_last, bl_max, bl_off
     )
-    term = np.zeros(len(doc_ids), np.int64)
-    eb = encode_bucket(term, np.asarray(doc_ids, np.int64), np.asarray(title_ends, np.int64), pos_counts, flat)
-    return eb.blobs[0], eb.block_last[0], eb.block_max_tf[0], eb.block_offsets[0]
 
 
-def _decode_values(body: np.ndarray, n_docs: int, first_block_absolute_doc: bool = True):
+def _blocks(body: np.ndarray, n_docs: int):
+    """Walk the value stream of >=1 consecutive blocks (no term header):
+    the one place the block layout is parsed.
+
+    Returns (doc_ids, title_ends, npos, pd_spans), where ``pd_spans``
+    holds each block's [lo, hi) range of position deltas in ``body``.
+    Loops only over blocks; all inner work is vectorized.
+    """
+    g_parts, np_parts, te_parts, pd_spans = [], [], [], []
+    s = 0
+    for first in range(0, n_docs, BLOCK_SIZE):
+        nb_ = min(BLOCK_SIZE, n_docs - first)
+        npos = body[s + nb_ : s + 2 * nb_]
+        g_parts.append(np.cumsum(body[s : s + nb_]))  # block-local: first gap absolute
+        np_parts.append(npos)
+        te_parts.append(body[s + 2 * nb_ : s + 3 * nb_])
+        pd_lo = s + 3 * nb_
+        s = pd_lo + int(npos.sum())
+        pd_spans.append((pd_lo, s))
+    if not g_parts:
+        z = np.empty(0, np.int64)
+        return z, z, z, []
+    return np.concatenate(g_parts), np.concatenate(te_parts), np.concatenate(np_parts), pd_spans
+
+
+def _decode_values(body: np.ndarray, n_docs: int):
     """Decode the value stream of >=1 consecutive blocks (no term header).
 
     Returns (doc_ids, title_ends, npos, positions_flat).
-    Loops only over blocks; all inner work is vectorized.
     """
-    g_parts, np_parts, te_parts, pd_parts = [], [], [], []
-    s = 0
-    remaining = n_docs
-    while remaining > 0:
-        nb_ = min(BLOCK_SIZE, remaining)
-        gaps = body[s : s + nb_]
-        npos = body[s + nb_ : s + 2 * nb_]
-        te = body[s + 2 * nb_ : s + 3 * nb_]
-        sp = int(npos.sum())
-        pd = body[s + 3 * nb_ : s + 3 * nb_ + sp]
-        g_parts.append(np.cumsum(gaps))  # block-local: first gap absolute
-        np_parts.append(npos)
-        te_parts.append(te)
-        pd_parts.append(pd)
-        s += 3 * nb_ + sp
-        remaining -= nb_
-    doc_ids = np.concatenate(g_parts) if g_parts else np.empty(0, np.int64)
-    npos = np.concatenate(np_parts) if np_parts else np.empty(0, np.int64)
-    te = np.concatenate(te_parts) if te_parts else np.empty(0, np.int64)
-    pdeltas = np.concatenate(pd_parts) if pd_parts else np.empty(0, np.int64)
-    if pdeltas.size:
-        pos_starts = np.zeros(npos.size, np.int64)
-        np.cumsum(npos[:-1], out=pos_starts[1:])
-        body_starts = pos_starts + te
-        valid = body_starts < pos_starts + npos
-        resets = np.unique(np.concatenate([pos_starts, body_starts[valid]]))
-        positions = _segmented_cumsum(pdeltas, resets)
-    else:
-        positions = np.empty(0, np.int64)
-    return doc_ids, te, npos, positions
+    doc_ids, te, npos, pd_spans = _blocks(body, n_docs)
+    pdeltas = np.concatenate([body[lo:hi] for lo, hi in pd_spans] or [body[:0]])
+    if not pdeltas.size:
+        return doc_ids, te, npos, np.empty(0, np.int64)
+    pos_starts = np.zeros(npos.size, np.int64)
+    np.cumsum(npos[:-1], out=pos_starts[1:])
+    body_starts = pos_starts + te
+    resets = np.unique(np.concatenate([pos_starts, body_starts[te < npos]]))
+    return doc_ids, te, npos, _segmented_cumsum(pdeltas, resets)
 
 
 def decode_term_postings(blob: bytes):
@@ -306,6 +264,31 @@ def decode_term_postings(blob: bytes):
         return z, z, z, z
     n = int(vals[0])
     return _decode_values(vals[1:], n)
+
+
+def unpack_postings(blob: bytes):
+    """Exact inverse of ``encode_postings`` for one term's blob.
+
+    Returns (doc_ids, title_ends, npos, pd_starts, pd_lens, raw): ``raw``
+    is the blob's bytes and ``raw[pd_starts[i] : pd_starts[i] + pd_lens[i]]``
+    doc i's packed pdelta section, found from the varint end bits — no
+    position is rebuilt.
+    """
+    raw = np.frombuffer(blob, np.uint8)
+    vals = varint_decode(raw).astype(np.int64)
+    if vals.size == 0:
+        z = np.empty(0, np.int64)
+        return z, z, z, z, z, raw
+    doc_ids, te, npos, pd_spans = _blocks(vals[1:], int(vals[0]))
+    # a block's deltas are contiguous: doc i's start is its block's start
+    # (+1 for the header) plus the positions of earlier docs in the block
+    pos_before = np.cumsum(npos) - npos
+    block_lo = np.array([lo for lo, _ in pd_spans]) + 1 - pos_before[::BLOCK_SIZE]
+    pd_at = block_lo[np.arange(npos.size) // BLOCK_SIZE] + pos_before
+    vbyte = np.zeros(vals.size + 1, np.int64)  # byte offset of each value
+    vbyte[1:] = np.flatnonzero((raw & _CONT) == 0) + 1
+    starts = vbyte[pd_at]
+    return doc_ids, te, npos, starts, vbyte[pd_at + npos] - starts, raw
 
 
 def slice_blocks(blob: bytes, block_offsets: np.ndarray, n_docs: int, lo_block: int, hi_block: int):
@@ -337,17 +320,21 @@ def pack_position_deltas(
     (title field first, each field ascending); ``starts`` the per-doc
     start offsets. Returns (bytes uint8, per-doc byte lengths) where each
     doc's slice is EXACTLY the pdelta section the block layout expects —
-    so the reduce side assembles blobs by byte concatenation and the
+    so ``encode_postings`` assembles blobs by byte splicing and the
     shuffle moves ~1-2 bytes per position instead of an int32.
     """
     if pos.size == 0:
         return np.empty(0, np.uint8), np.zeros(starts.size, np.int64)
-    deltas, _ = _position_deltas(
-        pos.astype(np.int64, copy=False),
-        starts.astype(np.int64, copy=False),
-        title_ends.astype(np.int64, copy=False),
-        npos.astype(np.int64, copy=False),
-    )
+    pos = pos.astype(np.int64, copy=False)
+    starts = starts.astype(np.int64, copy=False)
+    # each field's first position is absolute, the rest are gaps
+    deltas = np.diff(pos, prepend=0)
+    resets = np.concatenate([starts, (starts + title_ends)[title_ends < npos]])
+    # a TRAILING zero-position doc has starts == pos.size (out of bounds);
+    # mid-array empties point at the next doc's start, which is already a
+    # reset, so dropping OOB entries is exact
+    resets = resets[resets < pos.size]
+    deltas[resets] = pos[resets]
     buf, nbytes = varint_encode(deltas)
     # reduceat only over docs that HAVE positions: their starts are
     # strictly increasing and in-bounds (a trailing empty doc's start ==
@@ -359,120 +346,6 @@ def pack_position_deltas(
     if nz.any():
         doc_blen[nz] = np.add.reduceat(nbytes, starts[nz])
     return buf, doc_blen
-
-
-def encode_bucket_packed(
-    term_ids: np.ndarray,
-    doc_ids: np.ndarray,
-    title_ends: np.ndarray,
-    pos_counts: np.ndarray,
-    pd_offsets: np.ndarray,
-    pd_bytes: np.ndarray,
-) -> EncodedBucket:
-    """encode_bucket twin for PRE-PACKED per-doc position-delta bytes.
-
-    Inputs are sorted by (term_id, doc_id); ``pd_bytes[pd_offsets[i]:
-    pd_offsets[i+1]]`` is doc i's packed pdelta section (output of
-    ``pack_position_deltas``). Produces byte-identical blobs to
-    ``encode_bucket`` — only the integer streams (header, gaps, npos,
-    title_end) are varint-encoded here; the position bytes are spliced
-    in untouched.
-    """
-    N = doc_ids.size
-    if N == 0:
-        e = np.empty(0, np.int64)
-        return EncodedBucket(e, e, e, [], [], [], [])
-    term_ids = term_ids.astype(np.int64, copy=False)
-    doc_ids = doc_ids.astype(np.int64, copy=False)
-    title_ends = title_ends.astype(np.int64, copy=False)
-    pos_counts = pos_counts.astype(np.int64, copy=False)
-
-    is_term_start = np.ones(N, bool)
-    is_term_start[1:] = term_ids[1:] != term_ids[:-1]
-    term_starts = np.flatnonzero(is_term_start)
-    uniq_terms = term_ids[term_starts]
-    T = term_starts.size
-    term_doc_counts = np.diff(np.append(term_starts, N))
-    term_of_doc = np.cumsum(is_term_start) - 1
-
-    rank_in_term = np.arange(N) - term_starts[term_of_doc]
-    is_block_start = (rank_in_term % BLOCK_SIZE) == 0
-    block_start_docs = np.flatnonzero(is_block_start)
-    B = block_start_docs.size
-    block_of_doc = np.cumsum(is_block_start) - 1
-    nb = np.diff(np.append(block_start_docs, N))
-    term_of_block = term_of_doc[block_start_docs]
-    first_block_of_term = block_of_doc[term_starts]
-
-    # --- integer stream: headers + per-block gaps/npos/te (NO pdeltas) ----
-    block_vlen = 3 * nb
-    block_vends = np.cumsum(block_vlen)
-    block_vrel = block_vends - block_vlen
-    block_vstarts = block_vrel + term_of_block + 1  # + headers before
-    term_vstarts = block_vrel[first_block_of_term] + term_of_block[first_block_of_term]
-    total_values = int(block_vends[-1]) + T
-    stream = np.empty(total_values, np.int64)
-    stream[term_vstarts] = term_doc_counts
-    gaps = doc_ids.copy()
-    gaps[1:] = doc_ids[1:] - doc_ids[:-1]
-    gaps[block_start_docs] = doc_ids[block_start_docs]
-    rank_in_block = np.arange(N) - block_start_docs[block_of_doc]
-    base = block_vstarts[block_of_doc]
-    stream[base + rank_in_block] = gaps
-    stream[base + nb[block_of_doc] + rank_in_block] = pos_counts
-    stream[base + 2 * nb[block_of_doc] + rank_in_block] = title_ends
-
-    buf_i, nbytes_i = varint_encode(stream)
-    vstart_to_byte = np.zeros(total_values + 1, np.int64)
-    np.cumsum(nbytes_i, out=vstart_to_byte[1:])
-    hdr_b0 = vstart_to_byte[term_vstarts]
-    hdr_b1 = vstart_to_byte[term_vstarts + 1]
-    ints_b0 = vstart_to_byte[block_vstarts]
-    ints_b1 = vstart_to_byte[block_vstarts + block_vlen]
-
-    # --- per-block pdelta byte spans (docs contiguous in sorted order) ----
-    doc_blen = np.diff(pd_offsets)
-    pd_block_start = pd_offsets[:-1][block_start_docs]
-    pd_block_len = np.add.reduceat(doc_blen, block_start_docs) if N else np.empty(0, np.int64)
-
-    # --- assemble: [hdr_t][ints_b0][pd_b0][ints_b1][pd_b1]... ------------
-    ints_len = ints_b1 - ints_b0
-    hdr_len = hdr_b1 - hdr_b0
-    n_sec = T + 2 * B
-    sec_len = np.empty(n_sec, np.int64)
-    hdr_idx = np.arange(T) + 2 * first_block_of_term
-    ints_idx = term_of_block + 1 + 2 * np.arange(B)
-    pd_idx = ints_idx + 1
-    sec_len[hdr_idx] = hdr_len
-    sec_len[ints_idx] = ints_len
-    sec_len[pd_idx] = pd_block_len
-    sec_off = np.zeros(n_sec + 1, np.int64)
-    np.cumsum(sec_len, out=sec_off[1:])
-
-    out = np.empty(int(sec_off[-1]), np.uint8)
-    # contiguous span copies (vectorized per section via ragged scatter)
-    _scatter_spans(out, sec_off[hdr_idx], buf_i, hdr_b0, hdr_len)
-    _scatter_spans(out, sec_off[ints_idx], buf_i, ints_b0, ints_len)
-    _scatter_spans(out, sec_off[pd_idx], pd_bytes, pd_block_start, pd_block_len)
-
-    term_b0 = sec_off[hdr_idx]
-    term_b1 = np.append(term_b0[1:], sec_off[-1])
-    block_out_off = sec_off[ints_idx] - term_b0[term_of_block]
-
-    block_last = doc_ids[np.append(block_start_docs[1:] - 1, N - 1)]
-    block_max = np.maximum.reduceat(pos_counts, block_start_docs)
-
-    raw = out.tobytes()
-    blobs, bl_last, bl_max, bl_off = [], [], [], []
-    term_block_bounds = np.append(first_block_of_term, B)
-    for t in range(T):
-        b0, b1 = term_block_bounds[t], term_block_bounds[t + 1]
-        blobs.append(raw[int(term_b0[t]) : int(term_b1[t])])
-        bl_last.append(block_last[b0:b1])
-        bl_max.append(block_max[b0:b1].astype(np.int32))
-        bl_off.append(block_out_off[b0:b1])
-    ctfs = np.add.reduceat(pos_counts, term_starts)
-    return EncodedBucket(uniq_terms, term_doc_counts, ctfs, blobs, bl_last, bl_max, bl_off)
 
 
 def _scatter_spans(

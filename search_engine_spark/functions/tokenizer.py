@@ -138,7 +138,7 @@ def postings_batches_arrow_packed(batches, text_cols=("title", "body"), id_col="
     HERE (the exact per-doc pdelta section of the segment blob layout),
     so the index-build shuffle moves ~1-2 bytes per position, and the
     reduce-side encode splices bytes instead of re-encoding
-    (codec.encode_bucket_packed).
+    (codec.encode_postings).
     """
     import pyarrow as pa
 

@@ -8,12 +8,13 @@ Pipeline (SURVEY §3.1 re-architecture):
       → salt   = xxhash64(doc_id) % n_salts for hot terms (df > threshold)
                  else 0                            (skew defeat, north rule)
       → groupBy(bucket, salt).applyInArrow(encode kernel)
-           kernel sorts (term_id, doc_id), splices the packed position
-           bytes, and calls codec.encode_bucket_packed — ONE vectorized
-           varint pass per group
+           kernel: codec.encode_postings sorts (term_id, doc_id), splices
+           the packed position bytes, and varint-encodes the integer
+           streams in ONE vectorized pass per group
       → segments rows (term_id, salt, df, ctf, blob, block_* sidecar)
       → optional merge pass (``merge_salted``): a term's sub-segments
-        sort-merged into one blob
+        unpacked and written again as one blob by the same writer
+        (``merge_term_rows``), their position bytes spliced untouched
 
 Disk layout (all parquet + a JSON manifest):
 
@@ -24,8 +25,16 @@ Disk layout (all parquet + a JSON manifest):
                                    export; the engine derives its lexicon
                                    from segment metadata (``DiskIndex.
                                    lexicon``) and never reads this
-    index_dir/segments/shard=K/    bucket, term_id, df, ctf, n_docs, blob,
-                                   block_last, block_max_tf, block_offsets
+    index_dir/segments/shard=K/    bucket, term_id, salt, df, ctf, n_docs,
+                                   blob, block_last, block_max_tf,
+                                   block_offsets: a batch build's shards
+                                   (salt > 0 only on a hot term's unfused
+                                   sub-segments). ``n_docs`` is a copy of
+                                   df that nothing reads; dropping it
+                                   changes the on-disk format
+    index_dir/segments/gen=N/      the same columns: one streaming
+                                   micro-batch's generation, or the fold
+                                   of several after compaction
     index_dir/manifest.jsonl       one row per completed shard: lineage
                                    (input fingerprint) + metrics
 
@@ -73,18 +82,16 @@ def _encode_kernel_packed(table: pa.Table) -> pa.Table:
     postings (pos_blob binary).
 
     Positions arrived as per-doc delta+varint byte strings (packed
-    map-side in the tokenizer kernel), so this kernel only varint-encodes
-    the small integer streams and splices the position bytes — no
-    position re-encoding, no list materialization. Output blobs are
-    byte-identical to ``codec.encode_bucket`` over the same postings
-    (tested against the reference oracle's postings). Arrow-native on
-    purpose: the real type hints are REQUIRED — applyInArrow infers its
+    map-side in the tokenizer kernel), so ``codec.encode_postings`` only
+    varint-encodes the small integer streams and splices the position
+    bytes — no position re-encoding, no list materialization. Arrow-native
+    on purpose: the real type hints are REQUIRED — applyInArrow infers its
     eval type from them."""
     t = table.combine_chunks()
-    term = t.column("term_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    doc = t.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    te = t.column("title_end").to_numpy(zero_copy_only=False).astype(np.int64)
-    npos = t.column("npos").to_numpy(zero_copy_only=False).astype(np.int64)
+    term, doc, te, npos = (
+        t.column(c).to_numpy(zero_copy_only=False)
+        for c in ("term_id", "doc_id", "title_end", "npos")
+    )
     ba = t.column("pos_blob")
     ba = ba.combine_chunks() if isinstance(ba, pa.ChunkedArray) else ba
     bufs = ba.buffers()  # [validity, int32 offsets, data]
@@ -93,19 +100,7 @@ def _encode_kernel_packed(table: pa.Table) -> pa.Table:
     bvalues = (
         np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
     )
-
-    order = np.lexsort((doc, term))
-    # gather the per-doc byte strings into sorted order
-    src_starts = boffsets[:-1][order]
-    lens = (boffsets[1:] - boffsets[:-1])[order]
-    off_sorted = np.zeros(order.size + 1, np.int64)
-    np.cumsum(lens, out=off_sorted[1:])
-    sorted_bytes = np.empty(int(off_sorted[-1]), np.uint8)
-    codec._scatter_spans(sorted_bytes, off_sorted[:-1], bvalues, src_starts, lens)
-
-    eb = codec.encode_bucket_packed(
-        term[order], doc[order], te[order], npos[order], off_sorted, sorted_bytes
-    )
+    eb = codec.encode_postings(term, doc, te, npos, boffsets[:-1], np.diff(boffsets), bvalues)
     n_terms = len(eb.term_ids)
     bucket = int(t.column("bucket")[0].as_py()) if n_terms else 0
     salt = int(t.column("salt")[0].as_py()) if n_terms else 0
@@ -189,28 +184,19 @@ def build_segments(
 
 def merge_term_rows(term_id: int, blobs: list[bytes]) -> codec.EncodedBucket:
     """Read-merge ONE term's segment rows (salts or generations) into one
-    encoded row: decode each blob, sort-merge the postings by doc_id and
-    re-encode them, so block-max metadata stays consistent. The merge
-    kernel of ``merge_salted`` (compaction) and the driver fetch of a
-    multi-row term (``wand.fetch_term_segments``) both call it."""
-    parts = [codec.decode_term_postings(b) for b in blobs]
-    doc_ids = np.concatenate([p[0] for p in parts])
-    order = np.argsort(doc_ids, kind="mergesort")
-    npos = np.concatenate([p[2] for p in parts])
-    flat = np.concatenate([p[3] for p in parts])
-    starts = np.zeros(npos.size, np.int64)
-    np.cumsum(npos[:-1], out=starts[1:])
-    merged_starts = np.zeros(npos.size, np.int64)
-    np.cumsum(npos[order][:-1], out=merged_starts[1:])
-    merged = np.empty(flat.size, np.int64)
-    codec._scatter_spans(merged, merged_starts, flat, starts[order], npos[order])
-    return codec.encode_bucket(
-        np.full(doc_ids.size, term_id, np.int64),
-        doc_ids[order],
-        np.concatenate([p[1] for p in parts])[order],
-        npos[order],
-        merged,
-    )
+    encoded row: unpack each blob, concatenate, and write them again with
+    ``codec.encode_postings``, which sorts by doc_id and splices each
+    doc's position bytes untouched, so block-max metadata stays
+    consistent and no position is decoded. The merge kernel of
+    ``merge_salted`` (compaction) and the driver fetch of a multi-row term
+    (``wand.fetch_term_segments``) both call it."""
+    parts = [codec.unpack_postings(b) for b in blobs]
+    doc, te, npos, starts, lens = (np.concatenate([p[i] for p in parts]) for i in range(5))
+    # span starts index each part's own bytes: shift them into the joined buffer
+    base = np.cumsum([0] + [p[5].size for p in parts[:-1]])
+    starts += np.repeat(base, [p[0].size for p in parts])
+    raw = np.concatenate([p[5] for p in parts])
+    return codec.encode_postings(np.full(doc.size, term_id), doc, te, npos, starts, lens, raw)
 
 
 def _merge_kernel(table: pa.Table) -> pa.Table:

@@ -1,12 +1,51 @@
 """Codec unit tests: varint + delta roundtrip, block metadata, block
 slicing. Mirrors the reference's roundtrip property test
 (index/core/indexer_test.go:24-44) on the upgraded delta+varint format.
-No Spark needed."""
+The engine's one writer (``codec.encode_postings``) and its inverse
+(``codec.unpack_postings``) are checked against the plain-Python writer
+in ``tests/codec_reference.py``. No Spark needed, except for the two
+real-build tests."""
 
 import numpy as np
 import pytest
 
 from search_engine_spark.functions import codec
+from search_engine_spark.operators.segments import merge_term_rows
+from tests.codec_reference import reference_encode
+
+
+def _write(term_ids, doc_ids, title_ends, positions, seed=None):
+    """The engine's path from absolute positions: each doc's pdeltas
+    packed as the tokenizer packs them, then the one writer, fed the rows
+    in a shuffled order when ``seed`` is given."""
+    npos = np.array([len(p) for p in positions], np.int64)
+    flat = np.concatenate([np.asarray(p, np.int64) for p in positions] + [np.empty(0, np.int64)])
+    starts = np.cumsum(npos) - npos
+    te = np.asarray(title_ends, np.int64)
+    buf, blen = codec.pack_position_deltas(flat, starts, te, npos)
+    order = np.arange(npos.size)
+    if seed is not None:
+        order = np.random.default_rng(seed).permutation(npos.size)
+    return codec.encode_postings(
+        np.asarray(term_ids, np.int64)[order],
+        np.asarray(doc_ids, np.int64)[order],
+        te[order],
+        npos[order],
+        (np.cumsum(blen) - blen)[order],
+        blen[order],
+        buf,
+    )
+
+
+def _assert_row(eb, k, ref):
+    """Row ``k`` of an engine encode equals a ``reference_encode`` result
+    in every field: blob, sidecar, df and ctf."""
+    blob, last, maxtf, offs, df, ctf = ref
+    assert bytes(eb.blobs[k]) == blob
+    assert eb.block_last[k].tolist() == last
+    assert eb.block_max_tf[k].tolist() == maxtf
+    assert eb.block_offsets[k].tolist() == offs
+    assert (int(eb.dfs[k]), int(eb.ctfs[k])) == (df, ctf)
 
 
 def test_varint_roundtrip_edges():
@@ -19,7 +58,7 @@ def test_varint_roundtrip_edges():
 def test_reference_fixture_roundtrip():
     # indexer_test.go:24-44: postings docIds {5,6,7} positions
     # [1,2,3],[4,6,8],[6,7,8] — titleEnd 0.
-    blob, last, maxtf, offs = codec.encode_term_postings(
+    blob, last, maxtf, offs, *_ = reference_encode(
         [5, 6, 7], [0, 0, 0], [[1, 2, 3], [4, 6, 8], [6, 7, 8]]
     )
     d, te, pc, pos = codec.decode_term_postings(blob)
@@ -27,13 +66,13 @@ def test_reference_fixture_roundtrip():
     assert te.tolist() == [0, 0, 0]
     assert pc.tolist() == [3, 3, 3]
     assert pos.tolist() == [1, 2, 3, 4, 6, 8, 6, 7, 8]
-    assert last.tolist() == [7] and maxtf.tolist() == [3]
+    assert last == [7] and maxtf == [3]
 
 
 def test_title_body_field_split():
     # title positions [0, 7] then body positions [0, 3] (not globally
     # sorted — sorted within each field, indexer.go:129-134)
-    blob, *_ = codec.encode_term_postings([42], [2], [[0, 7, 0, 3]])
+    blob, *_ = reference_encode([42], [2], [[0, 7, 0, 3]])
     d, te, pc, pos = codec.decode_term_postings(blob)
     assert d.tolist() == [42] and te.tolist() == [2]
     assert pos.tolist() == [0, 7, 0, 3]
@@ -55,16 +94,14 @@ def test_bucket_roundtrip_random(seed):
             tes.append(te)
             pcs.append(n)
             flat.extend(tp.tolist() + bp.tolist())
-    eb = codec.encode_bucket(
-        np.array(term_ids), np.array(doc_ids), np.array(tes),
-        np.array(pcs), np.array(flat),
-    )
     ti = np.array(term_ids)
     di = np.array(doc_ids)
     pcarr = np.array(pcs)
     ps = np.zeros(len(pcs), np.int64)
     np.cumsum(pcarr[:-1], out=ps[1:])
     flat = np.array(flat)
+    per_doc = [flat[ps[i] : ps[i] + pcarr[i]] for i in range(len(pcs))]
+    eb = _write(ti, di, tes, per_doc, seed=seed)
     for k, term in enumerate(eb.term_ids):
         m = ti == term
         d, te, pc, pos = codec.decode_term_postings(eb.blobs[k])
@@ -90,20 +127,18 @@ def test_bucket_roundtrip_random(seed):
 def test_compression_beats_absolute():
     # dense doc ids -> gaps of 1 -> one byte each regardless of magnitude
     docs = np.arange(10**6, 10**6 + 1000)
-    blob, *_ = codec.encode_term_postings(
-        docs.tolist(), [0] * 1000, [[5]] * 1000
-    )
+    blob = _write(np.zeros(1000), docs, [0] * 1000, [[5]] * 1000).blobs[0]
     # absolute varint of 1e6-range ids needs 3 bytes; gaps need 1
     assert len(blob) < 1000 * (1 + 1 + 1 + 1) + 50
 
 
 def test_packed_build_segments_byte_identical(spark, sf_dir):
     """Every blob of the packed build (map-side pos_blob, spliced in the
-    encode kernel) is byte-identical to the reference encoder,
-    ``codec.encode_bucket``, applied to that term's postings in the
-    pure-Python oracle — per salt for the hot (salted) terms, both where
-    the hot set needs a df count and where every term is hot."""
-    from search_engine_spark.functions.tokenizer import id_to_term
+    encode kernel) is byte-identical to the plain-Python reference writer
+    applied to that term's postings in the pure-Python oracle — per salt
+    for the hot (salted) terms, both where the hot set needs a df count
+    and where every term is hot."""
+    from search_engine_spark.functions.tokenizer import term_to_id
     from search_engine_spark.functions.xxhash import xxhash64_long
     from search_engine_spark.operators.postings import (
         build_documents_from_testdata,
@@ -117,12 +152,13 @@ def test_packed_build_segments_byte_identical(spark, sf_dir):
     n_docs = docs.count()
     oracle = oracle_of(docs)
 
-    def salt_of(term: str, doc_id: int, threshold: int) -> int:
-        hot = len(oracle.postings[term]) > threshold
-        return xxhash64_long(doc_id) % n_salts if hot else 0
-
     # 50 takes the df-count path; 0 salts every term without a count
     for threshold in (50, 0):
+
+        def salt_of(term: str, doc_id: int) -> int:
+            hot = len(oracle.postings[term]) > threshold
+            return xxhash64_long(doc_id) % n_salts if hot else 0
+
         rows = build_segments(
             build_postings_packed(docs),
             n_buckets=8,
@@ -130,34 +166,55 @@ def test_packed_build_segments_byte_identical(spark, sf_dir):
             salt_threshold=threshold,
             n_docs=n_docs,
         ).collect()
-        expected_keys = {
-            (term, salt_of(term, d, threshold)) for term, pl in oracle.postings.items() for d in pl
+        groups: dict[tuple[int, int], list] = {}
+        for term, pl in oracle.postings.items():
+            for d in sorted(pl):
+                groups.setdefault((term_to_id(term), salt_of(term, d)), []).append(pl[d])
+        expected = {
+            key: reference_encode(*zip(*[(p.doc_id, p.title_end, p.positions) for p in plist]))
+            for key, plist in groups.items()
         }
-        assert {(id_to_term(r.term_id), r.salt) for r in rows} == expected_keys
+        assert {(r.term_id, r.salt) for r in rows} == set(expected)
         for r in rows:
-            term = id_to_term(r.term_id)
-            pl = oracle.postings[term]
-            plist = [pl[d] for d in sorted(pl) if salt_of(term, d, threshold) == r.salt]
-            eb = codec.encode_bucket(
-                np.full(len(plist), r.term_id, np.int64),
-                np.array([p.doc_id for p in plist], np.int64),
-                np.array([p.title_end for p in plist], np.int64),
-                np.array([len(p.positions) for p in plist], np.int64),
-                np.array([x for p in plist for x in p.positions], np.int64),
-            )
-            assert bytes(r.blob) == eb.blobs[0], (term, r.salt)
-            assert list(r.block_last) == eb.block_last[0].tolist()
-            assert list(r.block_max_tf) == eb.block_max_tf[0].tolist()
-            assert list(r.block_offsets) == eb.block_offsets[0].tolist()
-            assert (r.df, r.ctf) == (int(eb.dfs[0]), int(eb.ctfs[0]))
+            blob, last, maxtf, offs, df, ctf = expected[(r.term_id, r.salt)]
+            assert bytes(r.blob) == blob, (r.term_id, r.salt)
+            assert list(r.block_last) == last
+            assert list(r.block_max_tf) == maxtf
+            assert list(r.block_offsets) == offs
+            assert (r.df, r.ctf) == (df, ctf)
     docs.unpersist()
 
 
+@pytest.mark.parametrize("threshold", [50, 0])
+def test_unpack_write_roundtrip_real_build(spark, sf_dir, threshold):
+    """Every segment row of a salted build of the sf0.001 fixture: unpack
+    its blob, write it again with the one writer, and get back the row's
+    blob, sidecar, df and ctf byte for byte."""
+    from search_engine_spark.operators.postings import (
+        build_documents_from_testdata,
+        build_postings_packed,
+    )
+    from search_engine_spark.operators.segments import build_segments
+
+    docs = build_documents_from_testdata(spark, sf_dir)
+    rows = build_segments(
+        build_postings_packed(docs),
+        n_buckets=8,
+        n_salts=4,
+        salt_threshold=threshold,
+        n_docs=docs.count(),
+    ).collect()
+    assert len({r.salt for r in rows}) == 4
+    for r in rows:
+        d, te, npos, starts, lens, raw = codec.unpack_postings(bytes(r.blob))
+        eb = codec.encode_postings(np.full(d.size, r.term_id), d, te, npos, starts, lens, raw)
+        ref = (bytes(r.blob), list(r.block_last), list(r.block_max_tf), list(r.block_offsets), r.df, r.ctf)
+        _assert_row(eb, 0, ref)
+
+
 def test_encode_bucket_packed_matches_reference():
-    import numpy as np
-
-    from search_engine_spark.functions import codec
-
+    """The one writer, fed a bucket's rows in any order, gives every term
+    the plain-Python reference writer's bytes and sidecar."""
     rng = np.random.default_rng(7)
     for _trial in range(10):
         rows = []
@@ -169,31 +226,17 @@ def test_encode_bucket_packed_matches_reference():
                 tpos = np.sort(rng.choice(500, te, replace=False))
                 bpos = np.sort(rng.choice(500, npos - te, replace=False))
                 rows.append((t * 7 + 1, d, te, np.concatenate([tpos, bpos])))
-        term = np.array([r[0] for r in rows], np.int64)
-        doc = np.array([r[1] for r in rows], np.int64)
-        te = np.array([r[2] for r in rows], np.int64)
-        counts = np.array([len(r[3]) for r in rows], np.int64)
-        flat = np.concatenate([r[3] for r in rows]).astype(np.int64)
-        eb1 = codec.encode_bucket(term, doc, te, counts, flat)
-        starts = np.zeros(counts.size, np.int64)
-        np.cumsum(counts[:-1], out=starts[1:])
-        buf, blen = codec.pack_position_deltas(flat, starts, te, counts)
-        off = np.zeros(counts.size + 1, np.int64)
-        np.cumsum(blen, out=off[1:])
-        eb2 = codec.encode_bucket_packed(term, doc, te, counts, off, buf)
-        assert list(eb1.term_ids) == list(eb2.term_ids)
-        for i in range(len(eb1.term_ids)):
-            assert eb1.blobs[i] == eb2.blobs[i]
-            assert list(eb1.block_offsets[i]) == list(eb2.block_offsets[i])
+        eb = _write(*zip(*rows), seed=_trial)
+        terms = sorted({r[0] for r in rows})
+        assert list(eb.term_ids) == terms
+        for i, term in enumerate(terms):
+            mine = [r for r in rows if r[0] == term]
+            _assert_row(eb, i, reference_encode(*zip(*[r[1:] for r in mine])))
 
 
 def test_pack_position_deltas_trailing_empty_docs():
     """Zero-position docs must pack to length 0 anywhere in the array —
     including at the TAIL (previously an out-of-bounds reduceat index)."""
-    import numpy as np
-
-    from search_engine_spark.functions import codec
-
     # docs: [3 pos][0 pos][2 pos][0 pos][0 pos]  (trailing empties)
     counts = np.array([3, 0, 2, 0, 0], np.int64)
     te = np.array([1, 0, 0, 0, 0], np.int64)
@@ -210,3 +253,92 @@ def test_pack_position_deltas_trailing_empty_docs():
     assert list(d0) == [4, 9, 6]
     d2 = codec.varint_decode(buf[off[2] : off[3]]).astype(np.int64)
     assert list(d2) == [100, 3]
+
+
+def _postings(n_docs, kind="mixed", seed=0):
+    """One term's postings (doc_ids, title_ends, positions) of ``n_docs``
+    docs: ``mixed`` title+body fields, ``title`` title-only docs, ``body``
+    body-only docs."""
+    rng = np.random.default_rng(seed + n_docs)
+    doc_ids = np.sort(rng.choice(50 * n_docs + 10, n_docs, replace=False)).tolist()
+    tes, positions = [], []
+    for _ in range(n_docs):
+        n = int(rng.integers(1, 6))
+        te = {"mixed": int(rng.integers(0, n + 1)), "title": n, "body": 0}[kind]
+        tes.append(te)
+        positions.append(
+            sorted(rng.choice(40, te, replace=False).tolist())
+            + sorted(rng.choice(2000, n - te, replace=False).tolist())
+        )
+    return doc_ids, tes, positions
+
+
+EDGE_CASES = {
+    # zero-position docs in the middle and at the tail
+    "zero_positions": ([3, 5, 9, 10, 11], [1, 0, 0, 0, 0], [[2, 7], [], [4], [], []]),
+    "title_only": _postings(40, "title"),
+    "body_only": _postings(40, "body"),
+    **{f"df_{n}": _postings(n) for n in (127, 128, 129, 257)},
+}
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_unpack_edge_cases(case):
+    """Unpack yields each doc's integers and exactly its packed pdelta
+    bytes, and writing them again gives the same blob and sidecar."""
+    from tests.codec_reference import leb128, position_deltas
+
+    doc_ids, tes, positions = EDGE_CASES[case]
+    ref = reference_encode(doc_ids, tes, positions)
+    d, te, npos, starts, lens, raw = codec.unpack_postings(ref[0])
+    assert d.tolist() == doc_ids and te.tolist() == tes
+    assert npos.tolist() == [len(p) for p in positions]
+    for i, (pl, t) in enumerate(zip(positions, tes)):
+        span = raw[starts[i] : starts[i] + lens[i]].tobytes()
+        assert span == b"".join(leb128(x) for x in position_deltas(pl, t))
+    eb = codec.encode_postings(np.zeros(d.size), d, te, npos, starts, lens, raw)
+    _assert_row(eb, 0, ref)
+
+
+def _split(case, how):
+    """Reference-encoded parts of an edge case: ``one_doc`` puts the first
+    doc in a part of its own; ``interleaved`` deals docs round-robin over
+    three parts, so their doc ranges interleave."""
+    doc_ids, tes, positions = EDGE_CASES[case]
+    n = len(doc_ids)
+    if how == "one_doc":
+        groups = [[0], list(range(1, n))]
+    else:
+        groups = [list(range(k, n, 3)) for k in range(3)]
+    return [
+        reference_encode(*([col[i] for i in g] for col in (doc_ids, tes, positions)))[0]
+        for g in groups
+        if g
+    ]
+
+
+@pytest.mark.parametrize("how", ["one_doc", "interleaved"])
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_merge_edge_cases(case, how):
+    """A read-merge of a term's parts equals the reference encode of all
+    its postings, in every field."""
+    parts = _split(case, how)
+    ref = reference_encode(*EDGE_CASES[case])
+    _assert_row(merge_term_rows(11, parts), 0, ref)
+    _assert_row(merge_term_rows(11, parts[::-1]), 0, ref)
+
+
+def test_merge_never_decodes_a_position(monkeypatch):
+    """With position decoding made to raise, every merge still returns
+    the same bytes: a merge splices position bytes, it never rebuilds
+    positions."""
+    cases = [(case, how) for case in sorted(EDGE_CASES) for how in ("one_doc", "interleaved")]
+    before = [merge_term_rows(11, _split(c, h)).blobs[0] for c, h in cases]
+
+    def no_positions(*_args):
+        raise AssertionError("a merge decoded a position")
+
+    monkeypatch.setattr(codec, "_segmented_cumsum", no_positions)
+    with pytest.raises(AssertionError):
+        codec.decode_term_postings(_split("df_127", "one_doc")[1])
+    assert [merge_term_rows(11, _split(c, h)).blobs[0] for c, h in cases] == before

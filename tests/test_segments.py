@@ -205,10 +205,12 @@ def test_manifest_malformed_middle_line_raises(tmp_path):
 
 
 def test_merge_term_rows_matches_loop_merge():
-    """The read-merge of one term's rows gathers positions with one
-    vectorized scatter; a per-doc loop over the same decoded parts, then
-    ``codec.encode_bucket``, is the reference, byte for byte."""
+    """The read-merge of one term's rows splices each doc's position
+    bytes in one vectorized writer; a per-doc loop over the same decoded
+    parts, then the plain-Python reference writer, is the reference, byte
+    for byte."""
     from search_engine_spark.functions import codec
+    from tests.codec_reference import reference_encode
 
     rng = np.random.default_rng(7)
     for _ in range(50):
@@ -221,20 +223,19 @@ def test_merge_term_rows_matches_loop_merge():
             npos = rng.integers(1, 5, size=d.size)
             pos = [np.sort(rng.choice(300, size=n, replace=False)) for n in npos]
             te = np.array([rng.integers(0, n + 1) for n in npos], np.int64)
-            blobs.append(bytes(codec.encode_term_postings(d, te, pos)[0]))
+            blobs.append(reference_encode(d, te, pos)[0])
         parts = [codec.decode_term_postings(b) for b in blobs]
         d, te, npos = (np.concatenate([p[i] for p in parts]) for i in range(3))
         flat = np.concatenate([p[3] for p in parts])
         starts = np.concatenate([[0], np.cumsum(npos)[:-1]])
         order = np.argsort(d, kind="mergesort")
-        gather = np.concatenate([flat[starts[i] : starts[i] + npos[i]] for i in order])
-        exp = codec.encode_bucket(
-            np.full(d.size, 9, np.int64), d[order], te[order], npos[order], gather
-        )
+        gather = [flat[starts[i] : starts[i] + npos[i]] for i in order]
+        exp_blob, *exp_meta = reference_encode(d[order], te[order], gather)
         got = merge_term_rows(9, blobs)
-        assert bytes(got.blobs[0]) == bytes(exp.blobs[0])
-        for field in ("dfs", "ctfs", "block_last", "block_max_tf", "block_offsets"):
-            assert np.array_equal(getattr(got, field)[0], getattr(exp, field)[0]), field
+        assert bytes(got.blobs[0]) == exp_blob
+        for field, exp in zip(("block_last", "block_max_tf", "block_offsets", "dfs", "ctfs"), exp_meta):
+            g = getattr(got, field)[0]
+            assert np.array_equal(g, exp), field
 
 
 def test_fingerprint_invalidates_on_input_change(spark, docs, tmp_path):

@@ -1,8 +1,11 @@
 """The package worker daemon (``search_engine_spark.worker_daemon``):
 inside the workers a zip's directory is re-read only when the zip
 changed, a zip shipped mid-session is still importable, a changed zip is
-re-read, and the daemon ends with its session."""
+re-read, and the daemon ends with its session. Without the daemon and
+the package directory on the executor path, as on a cluster, the workers
+import the package from the zip ``get_spark`` ships."""
 
+import json
 import os
 import subprocess
 import sys
@@ -162,3 +165,48 @@ def test_daemon_ends_with_session():
     while _session_daemons(sid) and time.monotonic() < deadline:
         time.sleep(0.2)
     assert _session_daemons(sid) == []
+
+
+def test_cluster_workers_import_the_shipped_zip(tmp_path):
+    """With PySpark's own daemon and nothing of the package on the
+    executor path (what a cluster master gets), the workers import the
+    package from the zip ``get_spark`` ships, and a read-merge there
+    returns the driver's bytes."""
+    script = textwrap.dedent(f"""
+        import json, sys
+        sys.path.insert(0, {REPO!r})
+        import pyarrow as pa
+        from search_engine_spark.operators.segments import merge_term_rows
+        from search_engine_spark.session import get_spark
+        from tests.codec_reference import reference_encode
+        spark = get_spark(master="local[1]", shuffle_partitions=1, extra_conf={{
+            "spark.python.daemon.module": "pyspark.daemon",
+            "spark.executorEnv.PYTHONPATH": "/nonexistent",
+            "spark.driver.memory": "1g"}})
+        blobs = [reference_encode(d, [1] * len(d), [[0, 3]] * len(d))[0]
+                 for d in ([2, 9, 40], [5, 6, 300])]
+        def merge(batches):
+            from search_engine_spark.functions import codec
+            from search_engine_spark.operators.segments import merge_term_rows
+            for _ in batches:
+                pass
+            blob = merge_term_rows(7, blobs).blobs[0]
+            yield pa.RecordBatch.from_pydict({{"file": [codec.__file__], "blob": [blob]}})
+        row = spark.range(1, numPartitions=1).mapInArrow(merge, "file string, blob binary").collect()[0]
+        same = bytes(row.blob) == merge_term_rows(7, blobs).blobs[0]
+        print("RESULT", json.dumps({{"file": row.file, "same": same}}), flush=True)
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        timeout=240, cwd=str(tmp_path), env=env, start_new_session=True,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    seen = [line.split(" ", 1)[1] for line in proc.stdout.splitlines() if line.startswith("RESULT ")]
+    assert seen, proc.stdout[-2000:]
+    result = json.loads(seen[0])
+    zip_dir, inner = result["file"].split(".zip" + os.sep, 1)
+    assert os.path.basename(zip_dir).startswith("search_engine_spark_pyfiles_")
+    assert inner == os.path.join("search_engine_spark", "functions", "codec.py")
+    assert result["same"]
