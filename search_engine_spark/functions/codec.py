@@ -253,6 +253,9 @@ def _decode_values(body: np.ndarray, n_docs: int):
     np.cumsum(npos[:-1], out=pos_starts[1:])
     body_starts = pos_starts + te
     resets = np.unique(np.concatenate([pos_starts, body_starts[te < npos]]))
+    # trailing zero-position docs start at pdeltas.size; an empty doc
+    # elsewhere starts where the next doc does, itself a reset
+    resets = resets[resets < pdeltas.size]
     return doc_ids, te, npos, _segmented_cumsum(pdeltas, resets)
 
 

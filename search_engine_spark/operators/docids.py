@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_map
+
 DOC_KEY = ["repo", "path", "commit"]
 
 # Ranked intermediates persisted by assign_doc_ids, newest last. They must
@@ -119,12 +121,7 @@ def assign_doc_ids(
     # that unreachable, but guard anyway — a NULL here would become a
     # NULL/colliding doc_id downstream, the silent failure mode.
     off_expr = F.coalesce(
-        F.element_at(
-            F.create_map(
-                *[F.lit(v) for pid_off in offsets.items() for v in pid_off]
-            ),
-            F.col("_pid"),
-        ),
+        F.expr(f"element_at({sql_map(offsets, 'int', 'bigint')}, _pid)"),
         F.raise_error(
             F.concat(
                 F.lit("assign_doc_ids: partition id "),

@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
+from ..functions.sqltext import sql_list, sql_literal
 from .docids import release_assign_cache
 
 SEGMENT_SCHEMA = (
@@ -535,8 +536,10 @@ def write_index(
     # pending shards' buckets before the encode exchange.
     postings = build_postings_packed(build.read.parquet(docs_path))
     if len(pending) < n_shards:
-        shard_of = F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)) % n_shards
-        postings = postings.filter(shard_of.isin(pending))
+        postings = postings.filter(
+            f"pmod(xxhash64(term_id), {sql_literal(n_buckets, 'int')})"
+            f" % {sql_literal(n_shards, 'int')} IN ({sql_list(pending, 'bigint')})"
+        )
     # NOT cached: the map-side tokenize recomputes in ~seconds, while
     # caching 10^7+ list-column rows costs far more than the recompute
     # (measured 21.5 s to fill vs 2.7 s to recompute at 320k docs) and

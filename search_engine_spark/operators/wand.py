@@ -39,6 +39,7 @@ deltas, just as they race on ``last_stats``.
 
 from __future__ import annotations
 
+import json
 import math
 from dataclasses import dataclass
 
@@ -47,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import codec
+from ..functions.sqltext import sql_list, sql_literal, sql_map
 from ..functions.tokenizer import tokenize_query
 from .search import parse_query
 from .segments import DiskIndex, merge_term_rows
@@ -116,12 +118,15 @@ def fetch_term_segments(di: DiskIndex, term_ids: list[int]) -> dict[int, TermSeg
 
 def _term_rows(di: DiskIndex, term_ids: list[int]) -> DataFrame:
     """The segment rows of ``term_ids``: a scan pruned to their buckets
-    (computed driver-side) with the term_id filter pushed down."""
+    (computed driver-side) with the term_id filter pushed down. Both
+    filters are one SQL text (``sqltext``), so the plan costs the same
+    few Py4J round trips however many terms it carries."""
     from ..functions.xxhash import bucket_of_term
 
     buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in term_ids})
     return di.segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
+        f"bucket IN ({sql_list(buckets, 'int')})"
+        f" AND term_id IN ({sql_list(term_ids, 'bigint')})"
     )
 
 
@@ -201,16 +206,16 @@ def _scan_term_meta(di: DiskIndex, term_ids: list[int]) -> dict[int, _TermMeta]:
     aggregate, hence no shuffle: the driver folds a term's rows itself.
     The parquet reader never touches blob bytes. Fills ``di.df_cache``
     and ``di.prune_meta_cache``; absent terms cache as df = 0."""
-    small = F.col("df") <= SMALL_TERM_POSTINGS
+    small = f"df <= {sql_literal(SMALL_TERM_POSTINGS, 'bigint')}"
     rows = (
         _term_rows(di, term_ids)
-        .select(
+        .selectExpr(
             "term_id",
             "df",
-            F.array_max("block_max_tf").alias("max_tf"),
-            F.array_min("block_max_tf").alias("min_tf"),
-            F.when(small, F.col("block_last")).alias("block_last"),
-            F.when(small, F.col("block_max_tf")).alias("block_max_tf"),
+            "array_max(block_max_tf) AS max_tf",
+            "array_min(block_max_tf) AS min_tf",
+            f"CASE WHEN {small} THEN block_last END AS block_last",
+            f"CASE WHEN {small} THEN block_max_tf END AS block_max_tf",
         )
         .collect()
     )
@@ -878,27 +883,29 @@ class _Scorer:
     def scored_rows(
         self, di: DiskIndex, tf_rows: DataFrame, idfs: dict[int, float]
     ) -> DataFrame:
-        """(term_id, doc_id, tf) rows → (term_id, doc_id, c), c as a
-        Column with idf a literal map over ``idfs``. BM25 first joins the
+        """(term_id, doc_id, tf) rows → (term_id, doc_id, c), c as one
+        SQL expression with idf a literal map over ``idfs`` (bit-exact
+        doubles, ``functions/sqltext.py``). BM25 first joins the
         doc-partitioned dl sidecar (``DiskIndex.doc_length_df``, never
-        collected)."""
-        idf = F.element_at(
-            F.create_map(
-                *[x for t, v in sorted(idfs.items()) for x in (F.lit(t).cast("long"), F.lit(v))]
-            ),
-            F.col("term_id"),
-        )
-        tf = F.col("tf").cast("double")
+        collected). The operands keep ``contrib``'s association, each
+        constant on the right of its operator, so the float64 results
+        match it bit for bit."""
+        idf = f"element_at({sql_map(idfs, 'bigint', 'double')}, term_id)"
+        tf = "CAST(tf AS DOUBLE)"
         if self.bm25:
             tf_rows = tf_rows.join(di.doc_length_df(), "doc_id")
-            dl = F.col("dl").cast("double")
-            c = idf * (
-                tf * (BM25_K1 + 1.0)
-                / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * (dl / self.avgdl)))
+            dl = "CAST(dl AS DOUBLE)"
+            k1, b, k1_1, one_b, avgdl = (
+                sql_literal(v, "double")
+                for v in (BM25_K1, BM25_B, BM25_K1 + 1.0, 1.0 - BM25_B, self.avgdl)
+            )
+            c = (
+                f"{idf} * (({tf} * {k1_1})"
+                f" / ({tf} + (((({dl} / {avgdl}) * {b}) + {one_b}) * {k1})))"
             )
         else:
-            c = (1.0 + F.log(tf)) * idf
-        return tf_rows.select("term_id", "doc_id", c.alias("c"))
+            c = f"(ln({tf}) + 1.0D) * {idf}"
+        return tf_rows.selectExpr("term_id", "doc_id", f"{c} AS c")
 
 
 def _bm25_idf(n_docs: int, df: int) -> float:
@@ -1148,7 +1155,9 @@ def _theta_probe_many(
     so the window needs no exchange."""
     from pyspark.sql import Window
 
-    tf_rows = _decode_tf(di, seg_rows.filter(F.col("term_id").isin(probe_tids)))
+    tf_rows = _decode_tf(
+        di, seg_rows.filter(f"term_id IN ({sql_list(probe_tids, 'bigint')})")
+    )
     scored = sc.scored_rows(di, tf_rows, {t: idfs[t] for t in probe_tids})
     if len(probe_tids) == 1:
         scored = scored.orderBy(F.desc("c")).limit(k)
@@ -1256,30 +1265,29 @@ def _topk_plan(
                 (F.monotonically_increasing_id() + 1).alias("rank"),
             )
         ), thetas
-    routes: dict[int, list[str]] = {}
-    for qid, tids in per_q.items():
+    # tf rows route by the query's INDEX in the set (a number the engine
+    # made, so the route map is SQL text); the qid strings come back from
+    # one JSON constant on the k rows per query that survive the window
+    qids = list(per_q)
+    routes: dict[int, list[int]] = {}
+    for qi, tids in enumerate(per_q.values()):
         for t in tids:
-            routes.setdefault(t, []).append(qid)
-    route = F.create_map(
-        *[
-            x
-            for t, qids in sorted(routes.items())
-            for x in (F.lit(t).cast("long"), F.array(*map(F.lit, qids)))
-        ]
+            routes.setdefault(t, []).append(qi)
+    route = F.expr(
+        f"explode(element_at({sql_map(routes, 'bigint', 'array<int>')}, term_id))"
     )
     agg = (
-        scored.select(
-            F.explode(F.element_at(route, F.col("term_id"))).alias("qid"),
-            "doc_id",
-            "c",
-        )
+        scored.select(route.alias("qid"), "doc_id", "c")
         .groupBy("qid", "doc_id")
         .agg(F.sum("c").alias("score"))
     )
     w = Window.partitionBy("qid").orderBy(*order)
+    qid = F.element_at(
+        F.from_json(F.lit(json.dumps(qids)), "array<string>"), F.col("qid") + 1
+    )
     return agg.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= k
-    ), thetas
+    ).select(qid.alias("qid"), "doc_id", "score", "rank"), thetas
 
 
 def _executor_topk(
@@ -1334,13 +1342,19 @@ def topk_scores_many(
     - One query: groupBy(doc_id).sum → orderBy(round(score,6) desc,
       doc_id).limit(k), a TakeOrdered: each partition emits its local k
       and the rank window sees k rows in one partition.
-    - Several queries: tf rows route to qids through a literal
-      term_id → [qid] map (explode, no routing table to broadcast), then
-      groupBy(qid, doc_id).sum — one shuffle keyed by the PRODUCT key, so
-      queries sharing a hot term don't concentrate on one reducer — and a
-      row_number ≤ k window per qid. Spark plans that limit as
-      WindowGroupLimit Partial below the qid exchange, so at most
-      k·partitions rows per qid reach the final window.
+    - Several queries: tf rows route to queries through a literal
+      term_id → [query index] map (explode, no routing table to
+      broadcast), then groupBy(qid, doc_id).sum — one shuffle keyed by
+      the PRODUCT key, so queries sharing a hot term don't concentrate on
+      one reducer — and a row_number ≤ k window per query. Spark plans
+      that limit as WindowGroupLimit Partial below the qid exchange, so at
+      most k·partitions rows per query reach the final window, where each
+      index turns back into its qid string.
+
+    Every literal collection of the plan (term and bucket filters, idf
+    and route maps) is one SQL expression (``functions/sqltext.py``), so
+    building the plan costs a fixed number of Py4J round trips however
+    many terms or queries it carries; qids never enter SQL text.
 
     No Python stage runs above the decode. Ties at the k boundary use the
     oracle's (round(score,6) DESC, doc_id) order, and scores come out

@@ -273,9 +273,18 @@ def _postings(n_docs, kind="mixed", seed=0):
     return doc_ids, tes, positions
 
 
+def _zero_at_block_end():
+    """130 docs; the last doc of the first 128-doc block has no position."""
+    positions = [[i % 7, 9 + i % 5] for i in range(130)]
+    positions[127] = []
+    return list(range(5, 5 + 3 * 130, 3)), [1] * 127 + [0] + [1, 1], positions
+
+
 EDGE_CASES = {
     # zero-position docs in the middle and at the tail
     "zero_positions": ([3, 5, 9, 10, 11], [1, 0, 0, 0, 0], [[2, 7], [], [4], [], []]),
+    "all_zero_positions": ([4, 8, 15], [0, 0, 0], [[], [], []]),
+    "zero_positions_at_block_end": _zero_at_block_end(),
     "title_only": _postings(40, "title"),
     "body_only": _postings(40, "body"),
     **{f"df_{n}": _postings(n) for n in (127, 128, 129, 257)},
@@ -342,3 +351,31 @@ def test_merge_never_decodes_a_position(monkeypatch):
     with pytest.raises(AssertionError):
         codec.decode_term_postings(_split("df_127", "one_doc")[1])
     assert [merge_term_rows(11, _split(c, h)).blobs[0] for c, h in cases] == before
+
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_decode_edge_cases(case):
+    """The full decode and every block range of ``slice_blocks`` give back
+    the reference encode's input, zero-position docs included wherever
+    they sit: mid-blob, last in the blob, in an all-empty term, last in a
+    128-doc block."""
+    doc_ids, tes, positions = EDGE_CASES[case]
+    blob, _, _, offs, df, _ = reference_encode(doc_ids, tes, positions)
+
+    def assert_docs(got, lo, hi):
+        d, te, npos, flat = got
+        assert d.tolist() == doc_ids[lo:hi]
+        assert te.tolist() == tes[lo:hi]
+        assert npos.tolist() == [len(p) for p in positions[lo:hi]]
+        assert flat.tolist() == [p for pl in positions[lo:hi] for p in pl]
+
+    assert_docs(codec.decode_term_postings(blob), 0, df)
+    offs = np.asarray(offs, np.int64)
+    for lo_b in range(offs.size):
+        for hi_b in range(lo_b + 1, offs.size + 1):
+            assert_docs(
+                codec.slice_blocks(blob, offs, df, lo_b, hi_b),
+                lo_b * codec.BLOCK_SIZE,
+                min(df, hi_b * codec.BLOCK_SIZE),
+            )

@@ -12,10 +12,15 @@ Mirrors the reference read path (search.go:187-273) at cluster scale.
 import itertools
 import math
 import re
+import struct
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from search_engine_spark.functions.sqltext import sql_list, sql_literal, sql_map
+from search_engine_spark.functions.tokenizer import tokenize_query
+from search_engine_spark.functions.xxhash import bucket_of_term
 from search_engine_spark.operators import wand
 from search_engine_spark.operators.postings import build_documents_from_testdata
 from search_engine_spark.operators.segments import load_index, write_index
@@ -576,3 +581,120 @@ def test_void_probe_check_is_sound(spark, monkeypatch, index_dir, hot_rare_index
                 voids[name] = voids.get(name, 0) + 1
                 assert st["blocks_decoded"] == st["blocks_total"] > 0, (name, q, st)
     assert sum(voids.values()) >= 20 and len(voids) == 3, voids
+
+
+# --------------------------------------------------------------------------
+# Plan literals as SQL text (functions/sqltext.py)
+# --------------------------------------------------------------------------
+
+
+def test_sql_double_literals_round_trip_bit_identical(spark):
+    """A double rendered as SQL text comes back from a one-row select with
+    the same bits: the idf map carries exact idfs."""
+    values = [0.1, 1 / 3, 5e-324, 2.220446049250313e-16, 1.7976931348623157e308,
+              -0.0, wand._bm25_idf(2000, 15)]
+    row = spark.range(1).select(
+        *[F.expr(sql_literal(v, "double")).alias(f"v{i}") for i, v in enumerate(values)]
+    ).head()
+    assert [struct.pack("<d", row[f"v{i}"]) for i in range(len(values))] == [
+        struct.pack("<d", v) for v in values
+    ]
+
+
+def test_sql_literal_takes_only_numbers():
+    """Only numbers the engine computed render: strings that are not
+    numbers, non-finite doubles and out-of-range ints raise."""
+    assert sql_list([3, 1], "bigint") == "3L, 1L"
+    assert sql_literal([1, 2], "array<int>") == "array(1, 2)"
+    assert sql_map({2: [1], 1: [0, 1]}, "bigint", "array<int>") == (
+        "map(1L, array(0, 1), 2L, array(1))"
+    )
+    for value, sql_type in [("1) OR (1", "int"), ("x", "double"), (math.inf, "double"),
+                            (math.nan, "double"), (2**31, "int"), (2**63, "bigint"),
+                            (1, "string")]:
+        with pytest.raises(ValueError):
+            sql_literal(value, sql_type)
+
+
+def test_fetch_pushes_typed_in_filters(spark, index_dir):
+    """The segment scan of several terms in several buckets pushes
+    ``In(bucket, …)`` and ``In(term_id, …)`` down, and no cast appears
+    anywhere in its plan: the SQL-text literals are typed for their
+    columns."""
+    di = load_index(spark, index_dir)
+    tids = sorted({t for q in ("table spark", "customer query") for t, _ in tokenize_query(q)})
+    assert len({bucket_of_term(t, di.meta.n_buckets) for t in tids}) > 1
+    plan = wand._term_rows(di, tids).select("term_id", "df", "blob")._jdf \
+        .queryExecution().executedPlan().toString()
+    pushed = plan[plan.index("PushedFilters:"):plan.index("ReadSchema:")]
+    assert "In(bucket, [" in pushed and "In(term_id, [" in pushed, plan
+    assert "cast" not in plan.lower(), plan
+
+
+@pytest.mark.parametrize("scorer", ["bm25", "tfidf"])
+def test_topk_many_unusual_qids(spark, index_dir, scorer):
+    """qids are user strings: quotes, backslashes, non-ASCII (an emoji
+    outside the BMP too), the empty string and a 1,000-character qid come
+    back unchanged from a batch, each with the rows of its one-query run."""
+    queries = ["table", "table spark", "customer query", "dup", "spark"]
+    qids = ["q'1", "a\\b", "ü😀", "", "x" * 999 + '"']
+    di = load_index(spark, index_dir)
+    got = {}
+    for r in wand.topk_scores_many(di, list(zip(qids, queries)), 10, scorer).collect():
+        got.setdefault(r["qid"], []).append((r["rank"], r["doc_id"], r["score"]))
+    assert set(got) == set(qids)
+    for qid, q in zip(qids, queries):
+        one = wand.topk_scores_many(di, [(qid, q)], 10, scorer).collect()
+        assert {r["qid"] for r in one} == {qid}
+        assert sorted(got[qid]) == sorted((r["rank"], r["doc_id"], r["score"]) for r in one)
+
+
+def _plan_round_trips(monkeypatch, di, build) -> int:
+    """Py4J commands this thread sends while ``build`` builds a plan on
+    cleared caches (its metadata and probe jobs included, the returned
+    plan not collected). py4j's finalizer thread, which releases freed
+    proxies whenever Python collects them, is not counted."""
+    import py4j.clientserver as cs
+
+    sent = [0]
+    send = cs.ClientServerConnection.send_command
+    builder = threading.get_ident()
+
+    def counted(self, command):
+        sent[0] += threading.get_ident() == builder
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    di.clear_caches()
+    build()
+    monkeypatch.undo()
+    return sent[0]
+
+
+def test_plan_round_trips_do_not_grow_with_work(spark, monkeypatch, hot_rare_index):
+    """Building an executor top-k plan costs a fixed number of Py4J round
+    trips: its term filters, idf map and query routes are each one SQL
+    expression. Four times the terms adds at most 10, eight times the
+    queries at most 40."""
+    di = load_index(spark, hot_rare_index)
+
+    def exec_plan(q):
+        return lambda: wand.topk_scores_many(di, [("q", q)], 10)
+
+    def batch_plan(n):
+        qs = [("q0", "common needle")] + [
+            (f"q{i}", f"w{i} x{i % 13} w{i + 40}") for i in range(1, n)
+        ]
+        return lambda: wand.topk_scores_many(di, qs, 10)
+
+    two, eight = "w3 x5", "w1 w2 w3 w4 w5 w6 w7 w8"
+    for q, n_terms in ((two, 2), (eight, 8)):
+        assert len({t for t, _ in tokenize_query(q)}) == n_terms
+        # both probe, so both plans run the same jobs
+        assert math.isfinite(_one_query_stats(di, q)["theta"]), q
+    assert _plan_round_trips(monkeypatch, di, exec_plan(eight)) <= (
+        _plan_round_trips(monkeypatch, di, exec_plan(two)) + 10
+    )
+    assert _plan_round_trips(monkeypatch, di, batch_plan(32)) <= (
+        _plan_round_trips(monkeypatch, di, batch_plan(4)) + 40
+    )

@@ -1,15 +1,38 @@
 """Reproduce the PLANS.md physical-plan audit.
 
 Run: python tools/plan_audit.py   (prints formatted plans for the key
-operators over the sf0.001 testdata)."""
+operators over the sf0.001 testdata, and for each query route a real run
+on cleared caches: its Spark jobs, the Py4J round trips the driver makes
+to build and collect it, and the blocks its tf decode reads)."""
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def count_round_trips() -> list[int]:
+    """Count the Py4J commands this thread sends from now on, in the
+    returned one-element list. py4j's finalizer thread, which releases
+    freed proxies whenever Python collects them, is not counted."""
+    import threading
+
+    import py4j.clientserver as cs
+
+    sent = [0]
+    send = cs.ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counted(self, command):
+        sent[0] += threading.get_ident() == caller
+        return send(self, command)
+
+    cs.ClientServerConnection.send_command = counted
+    return sent
 
 
 def main() -> None:
@@ -24,6 +47,34 @@ def main() -> None:
     from search_engine_spark.session import get_spark
 
     spark = get_spark(master="local[4]", shuffle_partitions=4)
+    sc = spark.sparkContext
+    sent = count_round_trips()
+    runs = itertools.count(1)
+
+    def real_run(index, build) -> None:
+        """Build a plan and collect it on cleared caches, outside any
+        explain, and print its jobs, Py4J round trips and blocks."""
+        index.clear_caches()
+        group = f"plan-audit-{next(runs)}"
+        sc.setJobGroup(group, group)
+        read, decoded = index.blocks_read.value, index.blocks_decoded.value
+        start = sent[0]
+        try:
+            df = build()
+            built = sent[0] - start
+            df.collect()
+            total = sent[0] - start
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        print(
+            f"\nreal run on cleared caches: "
+            f"{len(sc.statusTracker().getJobIdsForGroup(group))} jobs; "
+            f"Py4J round trips: {built} building the plan (its metadata and "
+            f"probe jobs included), {total} with the collect; blocks decoded "
+            f"/ read by every tf decode of the run, the theta probe's "
+            f"included: {index.blocks_decoded.value - decoded}"
+            f" / {index.blocks_read.value - read}"
+        )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     docs = build_documents_from_testdata(spark, sf_dir)
     d = tempfile.mkdtemp() + "/idx"
@@ -62,10 +113,11 @@ def main() -> None:
     # the executor route collects its plans inside the call (term metadata
     # scan, candidate decode -> intersect -> TakeOrdered, winners'
     # positions decode): print each one as it is collected
-    explain_collects(
-        "search_segments executor route",
-        lambda: search_segments(di, "table scan", max_driver_postings=0),
-    )
+    def executor_search():
+        return search_segments(di, "table scan", max_driver_postings=0)
+
+    explain_collects("search_segments executor route", executor_search)
+    real_run(di, executor_search)
     cap(
         "events hourly agg",
         E.hourly_event_stats(spark.read.parquet(f"{sf_dir}/events.parquet")),
@@ -98,20 +150,14 @@ def main() -> None:
         (hot_rare, four),
     ):
         label = f"executor BM25 top-k {[q for _, q in qset]}"
+
+        def topk():
+            return wand.topk_scores_many(index, qset, 10, "bm25")
+
         index.clear_caches()
-        plan = explain_collects(
-            label, lambda: wand.topk_scores_many(index, qset, 10, "bm25")
-        )
+        cap(f"{label}, scoring plan", explain_collects(label, topk))
+        real_run(index, topk)
         thetas = wand.topk_scores_many.last_stats["theta"]
-        cap(f"{label}, scoring plan", plan)
-        # the real run: the tf decode's block counts are the deltas of the
-        # handle's accumulators around the scoring plan's collect
-        read, decoded = index.blocks_read.value, index.blocks_decoded.value
-        plan.collect()
-        print(
-            f"\nblocks decoded / total: {index.blocks_decoded.value - decoded}"
-            f" / {index.blocks_read.value - read}"
-        )
         for qid, query in qset:
             theta = thetas.get(qid, float("-inf"))
             print(
