@@ -43,18 +43,20 @@ _DISK_CACHE: dict[str, DiskIndex] = {}
 
 
 def _disk_index(spark: SparkSession, sf_dir: str) -> DiskIndex:
-    """Compressed on-disk segment index (delta+varint blobs + manifest),
-    built once per sf_dir under /tmp."""
+    """Compressed on-disk segment index (columnar segment rows +
+    manifest), built once per sf_dir under /tmp, and built again over a
+    directory of an older segment format (its shards are not resumed)."""
     if sf_dir not in _DISK_CACHE:
         import hashlib
-        import os
 
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         path = f"/tmp/seg_index_{tag}"
-        docs = build_documents_from_testdata(spark, sf_dir)
-        if not os.path.exists(os.path.join(path, "meta.json")):
+        try:
+            _DISK_CACHE[sf_dir] = load_index(spark, path)
+        except (FileNotFoundError, ValueError):  # not built yet, or an older format
+            docs = build_documents_from_testdata(spark, sf_dir)
             write_index(docs, path, n_buckets=16, n_shards=2, n_salts=4, salt_threshold=1000)
-        _DISK_CACHE[sf_dir] = load_index(spark, path)
+            _DISK_CACHE[sf_dir] = load_index(spark, path)
     return _DISK_CACHE[sf_dir]
 
 
@@ -98,7 +100,7 @@ def _rounded_rank(r: DataFrame) -> DataFrame:
 
 def _search_q(query: str):
     """Reference-semantics search over the compressed disk index
-    (segment blobs + numpy intersection/scoring)."""
+    (segment arrays + numpy intersection/scoring)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _rounded_rank(search_segments(_disk_index(spark, sf_dir), query))
@@ -108,7 +110,7 @@ def _search_q(query: str):
 
 def _dist_search_q(query: str):
     """Same query FORCED through the executor-side hot-term plan
-    (max_driver_postings=0): mapInArrow blob decode, doc_id-grouped
+    (max_driver_postings=0): explode of the doc-id arrays, doc_id-grouped
     intersection, join folds, TakeOrdered truncation — checked against
     the SAME oracle SQL as the driver routes."""
 
@@ -153,9 +155,9 @@ def _index_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _postings_term_q(term: str):
-    """One term's decoded posting list: tf is the doc's position count,
-    first/last positions come from the doc's own slice of the flat
-    position array."""
+    """One term's posting list: doc ids and tf from the segment row's
+    arrays, first/last positions from the doc's own slice of the decoded
+    flat position array."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
@@ -166,8 +168,11 @@ def _postings_term_q(term: str):
         if seg is None:
             doc_ids = npos = first = last = np.empty(0, np.int64)
         else:
-            doc_ids, _te, npos, flat = seg.decode()
-            starts = seg.pos_starts()
+            from search_engine_spark.functions.codec import decode_positions
+
+            doc_ids, npos = seg.doc_ids, seg.tf.astype(np.int64)
+            flat = decode_positions(seg.blob, seg.tf, seg.title_end)
+            starts = np.cumsum(npos) - npos
             first, last = flat[starts], flat[starts + npos - 1]
         return spark.createDataFrame(
             pd.DataFrame(
@@ -183,7 +188,7 @@ def _bm25_topk_q(query: str, k: int = 10, force_distributed: bool = False):
     """Block-max-pruned BM25 top-k (north-rule scorer) — the pruned result
     is exact, so it value-checks against the exhaustive SQL oracle.
     ``force_distributed`` drops the driver-postings valve to 0, forcing
-    the executor-side plan (decode→dl-sidecar-join→sum→TakeOrdered) —
+    the executor-side plan (arrays→dl-sidecar-join→sum→TakeOrdered) —
     checked against the SAME oracle SQL."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,7 +258,7 @@ TOPK_MANY_QUERIES = [
 
 def _topk_many_q(scorer: str, k: int = 10):
     """All TOPK_MANY_QUERIES scored in ONE pass over the postings
-    (wand.topk_scores_many) — one pruned scan + one decode per term +
+    (wand.topk_scores_many) — one pruned scan + one read per term +
     one product-keyed shuffle for the whole query set; the oracle is the
     per-query exhaustive SQL UNION ALL'd, so the batched plan must match
     Q independent single-query folds row-for-row."""
@@ -368,7 +373,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pruning is lossless so the exhaustive SQL oracle value-checks it)
         "search_bm25_topk": _bm25_topk_q("table spark", k=10),
         # BM25 top-k FORCED through the executor-side plan (pruned scan →
-        # mapInArrow tf decode → dl sidecar join → sum → TakeOrdered; the
+        # doc-id/tf arrays zipped → dl sidecar join → sum → TakeOrdered; the
         # driver holds k rows) — same exhaustive SQL oracle
         "dist_search_bm25_topk": _bm25_topk_q(
             "table spark", k=10, force_distributed=True
@@ -381,7 +386,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "table spark", k=10, force_distributed=True
         ),
         # batched multi-query top-k: the whole query set in ONE pass over
-        # the postings (one scan, one decode per term, one product-keyed
+        # the postings (one scan, one read per term, one product-keyed
         # shuffle) — checked against Q independent single-query oracles
         "search_bm25_topk_many": _topk_many_q("bm25", k=10),
         "search_tfidf_topk_many": _topk_many_q("tfidf", k=10),

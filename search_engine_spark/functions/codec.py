@@ -1,41 +1,36 @@
-"""Delta + varint postings codec, fully vectorized (numpy — no per-value
-or per-doc Python loops; the only Python iteration is per 128-doc block
-and per term blob slice).
+"""Postings codec: sorted integer columns plus delta+varint position
+bytes, fully vectorized (numpy — no per-value or per-doc Python loops).
 
-The reference encodes postings as *absolute* signed varints
-(index/core/indexer.go:176-222). The north rule upgrades this to
-delta+varint (doc-id gaps, per-field position gaps) with a block-max
-sidecar for WAND pruning — a deliberate, documented divergence
-(SURVEY §2.5 E1).
+The reference stores each term's posting list as one opaque value
+beside its df (index/core/indexer.go:176-222, absolute signed varints).
+Here a term's segment row stores its postings as columns, so a query
+plan reads doc ids and tf as Parquet arrays without decoding anything,
+and only positions stay varint-encoded (a deliberate, documented
+divergence, SURVEY §2.5 E1):
 
-Blob layout for one term (all unsigned LEB128 varints), blocked
-struct-of-arrays so any block decodes independently and vectorized:
+    doc_ids:   long[]  ascending
+    tf:        int[]   positions per doc (title+body combined)
+    title_end: int[]   title positions per doc (indexer.go:132-134)
+    blob:      binary  each doc's position deltas, in doc order, as
+                       unsigned LEB128 varints: title-field gaps then
+                       body-field gaps, the first of each field absolute
+                       (per-field 0-based rune offsets)
 
-    header: n_docs
-    per block of BLOCK_SIZE docs (nb = docs in this block):
-        gaps[nb]        doc_id deltas; the block's FIRST gap is the
-                        absolute doc_id (blocks are self-contained)
-        npos[nb]        positions per doc (= tf, title+body combined)
-        te[nb]          title_end per doc (indexer.go:132-134)
-        pdeltas[sum(npos)]  position gaps; per doc: title-field gaps
-                        then body-field gaps, first of each field
-                        absolute (per-field 0-based rune offsets)
-
-Sidecar (parquet array columns, NOT in the blob — WAND prunes blocks
-without touching blob bytes):
+Sidecar (arrays over 128-doc blocks; WAND prunes blocks from them):
 
     block_last:    long[]  last doc_id per block
     block_max_tf:  int[]   max tf per block
-    block_offsets: long[]  byte offset of each block within the blob
+    block_offsets: long[]  byte offset of each block's first doc in blob
 
-One writer and its exact inverse. ``encode_postings`` is the only blob
-writer: it takes doc-level postings in any order, each with its doc's
-pdeltas as a packed byte span (``pack_position_deltas``, map-side), and
-splices those bytes untouched between the varint-encoded integer
-streams. ``unpack_postings`` turns a blob back into exactly that input,
-reading each doc's span off the varint end bits, so a merge of salts or
-generations re-writes blobs without rebuilding a position. Queries
-decode positions with ``decode_term_postings`` / ``slice_blocks``.
+Every byte of the blob belongs to a position, so doc i's bytes are the
+span between the end of its first ``sum(tf[:i])`` varints and the end
+of its first ``sum(tf[:i+1])``; ``position_spans`` finds them from the
+varint end bits alone. One writer, ``encode_postings``, sorts postings
+and splices each doc's position bytes (packed map-side by
+``pack_position_deltas``) untouched; a merge of salts or generations is
+the same writer over the concatenated rows and their spans, so nothing
+is varint-decoded. Only positions are ever decoded
+(``decode_positions``), and only for the docs a query scores.
 """
 
 from __future__ import annotations
@@ -111,18 +106,36 @@ def _segmented_cumsum(deltas: np.ndarray, reset_starts: np.ndarray) -> np.ndarra
 
 
 class EncodedBucket:
-    """Per-term encoded postings for one bucket of terms."""
+    """The segment rows of one bucket's terms, as flat arrays: row k's
+    postings are ``[doc_off[k], doc_off[k+1])`` of ``doc_ids``, ``tf`` and
+    ``title_end``, its blob ``blob[blob_off[k]:blob_off[k+1]]`` and its
+    blocks ``[block_off[k], block_off[k+1])`` of the block arrays."""
 
-    __slots__ = ("term_ids", "dfs", "ctfs", "blobs", "block_last", "block_max_tf", "block_offsets")
+    __slots__ = (
+        "term_ids", "dfs", "ctfs", "doc_ids", "tf", "title_end", "doc_off",
+        "blob", "blob_off", "block_last", "block_max_tf", "block_offsets", "block_off",
+    )
 
-    def __init__(self, term_ids, dfs, ctfs, blobs, block_last, block_max_tf, block_offsets):
-        self.term_ids = term_ids
-        self.dfs = dfs
-        self.ctfs = ctfs
-        self.blobs = blobs
-        self.block_last = block_last
-        self.block_max_tf = block_max_tf
-        self.block_offsets = block_offsets
+    def __init__(self, **cols):
+        for k, v in cols.items():
+            setattr(self, k, v)
+
+    def row(self, k: int) -> dict:
+        """Row ``k`` as a dict of its columns (arrays sliced, blob bytes)."""
+        d0, d1 = self.doc_off[k], self.doc_off[k + 1]
+        b0, b1 = self.block_off[k], self.block_off[k + 1]
+        return {
+            "term_id": int(self.term_ids[k]),
+            "df": int(self.dfs[k]),
+            "ctf": int(self.ctfs[k]),
+            "doc_ids": self.doc_ids[d0:d1],
+            "tf": self.tf[d0:d1],
+            "title_end": self.title_end[d0:d1],
+            "blob": self.blob[self.blob_off[k] : self.blob_off[k + 1]].tobytes(),
+            "block_last": self.block_last[b0:b1],
+            "block_max_tf": self.block_max_tf[b0:b1],
+            "block_offsets": self.block_offsets[b0:b1],
+        }
 
 
 def encode_postings(
@@ -134,184 +147,82 @@ def encode_postings(
     pd_lens: np.ndarray,
     pd_bytes: np.ndarray,
 ) -> EncodedBucket:
-    """The blob writer: encode ALL terms of a bucket in one vectorized pass.
+    """The one writer: the segment rows of ALL terms of a bucket in one
+    vectorized pass.
 
     Rows are doc-level postings in any order; ``pd_bytes[pd_starts[i] :
-    pd_starts[i] + pd_lens[i]]`` is row i's packed pdelta section. Rows
-    are sorted by (term_id, doc_id), only the integer streams (header,
-    gaps, npos, title_end) are varint-encoded — one pass for every term —
-    and each doc's position bytes are spliced in untouched. Per-term blobs
-    are byte slices of the shared buffer.
+    pd_starts[i] + pd_lens[i]]`` is row i's packed position bytes. Rows
+    are sorted by (term_id, doc_id), and each doc's position bytes are
+    spliced untouched in that order. Nothing is varint-encoded here.
     """
     N = doc_ids.size
-    if N == 0:
-        e = np.empty(0, np.int64)
-        return EncodedBucket(e, e, e, [], [], [], [])
     order = np.lexsort((doc_ids, term_ids))
     term_ids, doc_ids, title_ends, npos, pd_starts, pd_lens = (
         np.asarray(a, np.int64)[order]
         for a in (term_ids, doc_ids, title_ends, npos, pd_starts, pd_lens)
     )
-
-    # --- term and block boundaries (a block is every BLOCK_SIZE docs) -----
     is_term_start = np.ones(N, bool)
     is_term_start[1:] = term_ids[1:] != term_ids[:-1]
     term_starts = np.flatnonzero(is_term_start)
-    term_doc_counts = np.diff(np.append(term_starts, N))
     term_of_doc = np.cumsum(is_term_start) - 1
     is_block_start = (np.arange(N) - term_starts[term_of_doc]) % BLOCK_SIZE == 0
-    block_start_docs = np.flatnonzero(is_block_start)
-    B = block_start_docs.size
-    block_of_doc = np.cumsum(is_block_start) - 1
-    nb = np.diff(np.append(block_start_docs, N))
-    term_of_block = term_of_doc[block_start_docs]
-    first_block_of_term = block_of_doc[term_starts]
+    block_starts = np.flatnonzero(is_block_start)
 
-    # --- integer stream: [n_docs] before a term's first block, then per
-    # block gaps/npos/te --------------------------------------------------
-    block_vlen = 3 * nb
-    has_hdr = np.zeros(B, np.int64)
-    has_hdr[first_block_of_term] = 1
-    block_vstarts = np.cumsum(block_vlen + has_hdr) - block_vlen
-    stream = np.empty(int(block_vstarts[-1] + block_vlen[-1]), np.int64)
-    stream[block_vstarts[first_block_of_term] - 1] = term_doc_counts
-    gaps = np.diff(doc_ids, prepend=0)
-    gaps[block_start_docs] = doc_ids[block_start_docs]
-    at = block_vstarts[block_of_doc] + np.arange(N) - block_start_docs[block_of_doc]
-    stream[at] = gaps
-    stream[at + nb[block_of_doc]] = npos
-    stream[at + 2 * nb[block_of_doc]] = title_ends
-    ibuf, ilen = varint_encode(stream)
-    vbyte = np.zeros(stream.size + 1, np.int64)
-    np.cumsum(ilen, out=vbyte[1:])
-
-    # --- splice: each block's integers (with its term's header if first),
-    # then its docs' position bytes ---------------------------------------
-    doc_pd_before = np.cumsum(pd_lens) - pd_lens  # position bytes of earlier docs
-    pd_before = doc_pd_before[block_start_docs]  # ... of earlier blocks
-    ib0 = vbyte[block_vstarts - has_hdr]
-    ib1 = vbyte[block_vstarts + block_vlen]
-    out = np.empty(ibuf.size + int(pd_lens.sum()), np.uint8)
-    _scatter_spans(out, ib0 + pd_before, ibuf, ib0, ib1 - ib0)
-    _scatter_spans(out, ib1[block_of_doc] + doc_pd_before, pd_bytes, pd_starts, pd_lens)
-    term_b0 = (ib0 + pd_before)[first_block_of_term]
-    term_b1 = np.append(term_b0[1:], out.size)
-    block_out_off = vbyte[block_vstarts] + pd_before - term_b0[term_of_block]
-
-    block_last = doc_ids[np.append(block_start_docs[1:] - 1, N - 1)]
-    block_max = np.maximum.reduceat(npos, block_start_docs).astype(np.int32)
-    raw = out.tobytes()
-    blobs, bl_last, bl_max, bl_off = [], [], [], []
-    term_block_bounds = np.append(first_block_of_term, B)
-    for t in range(term_starts.size):
-        b0, b1 = term_block_bounds[t], term_block_bounds[t + 1]
-        blobs.append(raw[int(term_b0[t]) : int(term_b1[t])])
-        bl_last.append(block_last[b0:b1])
-        bl_max.append(block_max[b0:b1])
-        bl_off.append(block_out_off[b0:b1])
-    ctfs = np.add.reduceat(npos, term_starts)
+    out_starts = np.cumsum(pd_lens) - pd_lens
+    blob = np.empty(int(pd_lens.sum()), np.uint8)
+    _scatter_spans(blob, out_starts, pd_bytes, pd_starts, pd_lens)
+    term_b0 = out_starts[term_starts]
     return EncodedBucket(
-        term_ids[term_starts], term_doc_counts, ctfs, blobs, bl_last, bl_max, bl_off
+        term_ids=term_ids[term_starts],
+        dfs=np.diff(np.append(term_starts, N)),
+        ctfs=np.add.reduceat(npos, term_starts) if N else npos[:0],
+        doc_ids=doc_ids,
+        tf=npos.astype(np.int32),
+        title_end=title_ends.astype(np.int32),
+        doc_off=np.append(term_starts, N),
+        blob=blob,
+        blob_off=np.append(term_b0, blob.size),
+        block_last=doc_ids[np.append(block_starts[1:] - 1, N - 1)] if N else doc_ids,
+        block_max_tf=(
+            np.maximum.reduceat(npos, block_starts) if N else npos[:0]
+        ).astype(np.int32),
+        block_offsets=out_starts[block_starts] - term_b0[term_of_doc[block_starts]],
+        block_off=np.append(np.flatnonzero(is_term_start[block_starts]), block_starts.size),
     )
 
 
-def _blocks(body: np.ndarray, n_docs: int):
-    """Walk the value stream of >=1 consecutive blocks (no term header):
-    the one place the block layout is parsed.
-
-    Returns (doc_ids, title_ends, npos, pd_spans), where ``pd_spans``
-    holds each block's [lo, hi) range of position deltas in ``body``.
-    Loops only over blocks; all inner work is vectorized.
-    """
-    g_parts, np_parts, te_parts, pd_spans = [], [], [], []
-    s = 0
-    for first in range(0, n_docs, BLOCK_SIZE):
-        nb_ = min(BLOCK_SIZE, n_docs - first)
-        npos = body[s + nb_ : s + 2 * nb_]
-        g_parts.append(np.cumsum(body[s : s + nb_]))  # block-local: first gap absolute
-        np_parts.append(npos)
-        te_parts.append(body[s + 2 * nb_ : s + 3 * nb_])
-        pd_lo = s + 3 * nb_
-        s = pd_lo + int(npos.sum())
-        pd_spans.append((pd_lo, s))
-    if not g_parts:
-        z = np.empty(0, np.int64)
-        return z, z, z, []
-    return np.concatenate(g_parts), np.concatenate(te_parts), np.concatenate(np_parts), pd_spans
+def position_spans(raw: np.ndarray, tf: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, lens): each doc's byte span in ``raw``, the position bytes
+    of docs with these ``tf`` in order, from the varint end bits alone —
+    no value is decoded."""
+    tf = np.asarray(tf, np.int64)
+    vbyte = np.zeros(int(tf.sum()) + 1, np.int64)  # byte offset of each value
+    vbyte[1:] = np.flatnonzero((raw & _CONT) == 0) + 1
+    first = np.cumsum(tf) - tf
+    starts = vbyte[first]
+    return starts, vbyte[first + tf] - starts
 
 
-def _decode_values(body: np.ndarray, n_docs: int):
-    """Decode the value stream of >=1 consecutive blocks (no term header).
-
-    Returns (doc_ids, title_ends, npos, positions_flat).
-    """
-    doc_ids, te, npos, pd_spans = _blocks(body, n_docs)
-    pdeltas = np.concatenate([body[lo:hi] for lo, hi in pd_spans] or [body[:0]])
-    if not pdeltas.size:
-        return doc_ids, te, npos, np.empty(0, np.int64)
-    pos_starts = np.zeros(npos.size, np.int64)
-    np.cumsum(npos[:-1], out=pos_starts[1:])
-    body_starts = pos_starts + te
-    resets = np.unique(np.concatenate([pos_starts, body_starts[te < npos]]))
+def decode_positions(
+    blob: bytes, tf: np.ndarray, title_end: np.ndarray, idx: np.ndarray | None = None
+) -> np.ndarray:
+    """Positions of docs ``idx`` (default: all) of one segment row, flat,
+    doc by doc, title field first. Only those docs' bytes are decoded."""
+    raw = np.frombuffer(blob, np.uint8)
+    tf = np.asarray(tf, np.int64)
+    te = np.asarray(title_end, np.int64)
+    if idx is not None:
+        starts, lens = position_spans(raw, tf)
+        idx = np.asarray(idx, np.int64)
+        sel = np.empty(int(lens[idx].sum()), np.uint8)
+        _scatter_spans(sel, np.cumsum(lens[idx]) - lens[idx], raw, starts[idx], lens[idx])
+        raw, tf, te = sel, tf[idx], te[idx]
+    pdeltas = varint_decode(raw).astype(np.int64)
+    pos_starts = np.cumsum(tf) - tf
+    resets = np.unique(np.concatenate([pos_starts, (pos_starts + te)[te < tf]]))
     # trailing zero-position docs start at pdeltas.size; an empty doc
     # elsewhere starts where the next doc does, itself a reset
-    resets = resets[resets < pdeltas.size]
-    return doc_ids, te, npos, _segmented_cumsum(pdeltas, resets)
-
-
-def decode_term_postings(blob: bytes):
-    """Full decode -> (doc_ids, title_ends, pos_counts, positions_flat)."""
-    vals = varint_decode(np.frombuffer(blob, np.uint8)).astype(np.int64)
-    if vals.size == 0:
-        z = np.empty(0, np.int64)
-        return z, z, z, z
-    n = int(vals[0])
-    return _decode_values(vals[1:], n)
-
-
-def unpack_postings(blob: bytes):
-    """Exact inverse of ``encode_postings`` for one term's blob.
-
-    Returns (doc_ids, title_ends, npos, pd_starts, pd_lens, raw): ``raw``
-    is the blob's bytes and ``raw[pd_starts[i] : pd_starts[i] + pd_lens[i]]``
-    doc i's packed pdelta section, found from the varint end bits — no
-    position is rebuilt.
-    """
-    raw = np.frombuffer(blob, np.uint8)
-    vals = varint_decode(raw).astype(np.int64)
-    if vals.size == 0:
-        z = np.empty(0, np.int64)
-        return z, z, z, z, z, raw
-    doc_ids, te, npos, pd_spans = _blocks(vals[1:], int(vals[0]))
-    # a block's deltas are contiguous: doc i's start is its block's start
-    # (+1 for the header) plus the positions of earlier docs in the block
-    pos_before = np.cumsum(npos) - npos
-    block_lo = np.array([lo for lo, _ in pd_spans]) + 1 - pos_before[::BLOCK_SIZE]
-    pd_at = block_lo[np.arange(npos.size) // BLOCK_SIZE] + pos_before
-    vbyte = np.zeros(vals.size + 1, np.int64)  # byte offset of each value
-    vbyte[1:] = np.flatnonzero((raw & _CONT) == 0) + 1
-    starts = vbyte[pd_at]
-    return doc_ids, te, npos, starts, vbyte[pd_at + npos] - starts, raw
-
-
-def slice_blocks(blob: bytes, block_offsets: np.ndarray, n_docs: int, lo_block: int, hi_block: int):
-    """Decode only blocks [lo_block, hi_block) — for WAND block skipping.
-
-    Block b spans bytes [block_offsets[b], block_offsets[b+1]) (last block
-    to end of blob). Each block's first gap is absolute, so any slice
-    decodes standalone.
-    """
-    n_blocks = len(block_offsets)
-    lo_block = max(0, lo_block)
-    hi_block = min(n_blocks, hi_block)
-    if lo_block >= hi_block:
-        z = np.empty(0, np.int64)
-        return z, z, z, z
-    start = int(block_offsets[lo_block])
-    end = int(block_offsets[hi_block]) if hi_block < n_blocks else len(blob)
-    body = varint_decode(np.frombuffer(blob[start:end], np.uint8)).astype(np.int64)
-    n_in_slice = min(n_docs - lo_block * BLOCK_SIZE, (hi_block - lo_block) * BLOCK_SIZE)
-    return _decode_values(body, n_in_slice)
+    return _segmented_cumsum(pdeltas, resets[resets < pdeltas.size])
 
 
 def pack_position_deltas(
@@ -322,9 +233,9 @@ def pack_position_deltas(
     ``pos`` is the flat concatenation of per-(doc,term) position lists
     (title field first, each field ascending); ``starts`` the per-doc
     start offsets. Returns (bytes uint8, per-doc byte lengths) where each
-    doc's slice is EXACTLY the pdelta section the block layout expects —
-    so ``encode_postings`` assembles blobs by byte splicing and the
-    shuffle moves ~1-2 bytes per position instead of an int32.
+    doc's slice is EXACTLY that doc's bytes in the blob — so
+    ``encode_postings`` assembles blobs by byte splicing and the shuffle
+    moves ~1-2 bytes per position instead of an int32.
     """
     if pos.size == 0:
         return np.empty(0, np.uint8), np.zeros(starts.size, np.int64)

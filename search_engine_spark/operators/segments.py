@@ -8,49 +8,52 @@ Pipeline (SURVEY §3.1 re-architecture):
       → salt   = xxhash64(doc_id) % n_salts for hot terms (df > threshold)
                  else 0                            (skew defeat, north rule)
       → groupBy(bucket, salt).applyInArrow(encode kernel)
-           kernel: codec.encode_postings sorts (term_id, doc_id), splices
-           the packed position bytes, and varint-encodes the integer
-           streams in ONE vectorized pass per group
-      → segments rows (term_id, salt, df, ctf, blob, block_* sidecar)
+           kernel: codec.encode_postings sorts (term_id, doc_id) and
+           splices the packed position bytes in ONE vectorized pass per
+           group
+      → segments rows (term_id, salt, df, ctf, doc_ids/tf/title_end
+        arrays, blob of position bytes, block_* sidecar)
       → optional merge pass (``merge_salted``): a term's sub-segments
-        unpacked and written again as one blob by the same writer
+        concatenated and written again as one row by the same writer
         (``merge_term_rows``), their position bytes spliced untouched
 
 Disk layout (all parquet + a JSON manifest):
 
     index_dir/meta.json            n_docs, n_buckets, n_shards, fingerprint,
-                                   avgdl
+                                   avgdl, format (``SEGMENT_FORMAT``)
     index_dir/documents/           doc store, with a per-doc token count dl
     index_dir/lexicon/             term_id, term, df, ctf, bucket: a batch
                                    export; the engine derives its lexicon
                                    from segment metadata (``DiskIndex.
                                    lexicon``) and never reads this
-    index_dir/segments/shard=K/    bucket, term_id, salt, df, ctf, n_docs,
-                                   blob, block_last, block_max_tf,
-                                   block_offsets: a batch build's shards
-                                   (salt > 0 only on a hot term's unfused
-                                   sub-segments). ``n_docs`` is a copy of
-                                   df that nothing reads; dropping it
-                                   changes the on-disk format
+    index_dir/segments/shard=K/    bucket, term_id, salt, df, ctf,
+                                   doc_ids, tf, title_end (arrays in
+                                   doc-id order), blob (their position
+                                   bytes), block_last, block_max_tf,
+                                   block_offsets (``functions/codec.py``):
+                                   a batch build's shards (salt > 0 only
+                                   on a hot term's unfused sub-segments),
+                                   written by the Parquet v2 writer
     index_dir/segments/gen=N/      the same columns: one streaming
                                    micro-batch's generation, or the fold
                                    of several after compaction
     index_dir/manifest.jsonl       one row per completed shard: lineage
-                                   (input fingerprint) + metrics
+                                   (input fingerprint, format) + metrics
 
 Batch builds (``write_index``) and streaming micro-batches
 (``streaming.ingest.ingest_batch``) share one write core:
 ``_write_doc_store`` and ``_write_segments``. So every doc store has
-``dl`` and every ``meta.json`` has ``avgdl``; ``load_index`` rejects an
-older directory without them (rebuild it). Every index reads term
-statistics one way: ``_lexicon_of`` its segment rows, which already
-carry df and ctf per term (as the reference stores them beside each
-posting list).
+``dl`` and every ``meta.json`` has ``avgdl`` and ``format``;
+``load_index`` rejects an older directory without them (rebuild it).
+Every index reads term statistics one way: ``_lexicon_of`` its segment
+rows, which already carry df and ctf per term (as the reference stores
+them beside each posting list).
 
 Shards are the resume unit: ``write_index`` skips shards whose manifest
-row is complete AND matches the input fingerprint, so an interrupted
-build restarts without recomputing finished work (north rule:
-checkpointed per-partition segment manifests with lineage + metrics).
+row is complete AND matches the input fingerprint and the segment
+format, so an interrupted build restarts without recomputing finished
+work (north rule: checkpointed per-partition segment manifests with
+lineage + metrics).
 """
 
 from __future__ import annotations
@@ -72,10 +75,23 @@ from ..functions.sqltext import sql_list, sql_literal
 from .docids import release_assign_cache
 
 SEGMENT_SCHEMA = (
-    "bucket int, term_id long, salt int, df long, ctf long, n_docs long, "
-    "blob binary, block_last array<long>, block_max_tf array<int>, "
-    "block_offsets array<long>"
+    "bucket int, term_id long, salt int, df long, ctf long, doc_ids array<long>, "
+    "tf array<int>, title_end array<int>, blob binary, block_last array<long>, "
+    "block_max_tf array<int>, block_offsets array<long>"
 )
+
+# The segment row layout this engine reads and writes, stamped in
+# ``meta.json`` and in every manifest row: an index of another format is
+# rejected (``read_meta``) and a build does not resume over its shards.
+SEGMENT_FORMAT = 2
+
+# Parquet writer settings of every segment write. The v2 writer encodes
+# the doc-id arrays as DELTA_BINARY_PACKED; their dictionary would
+# overflow at corpus scale and fall back to plain int64, so it is off.
+_SEGMENT_WRITER = {
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary#doc_ids.list.element": "false",
+}
 
 
 def _encode_kernel_packed(table: pa.Table) -> pa.Table:
@@ -84,23 +100,15 @@ def _encode_kernel_packed(table: pa.Table) -> pa.Table:
 
     Positions arrived as per-doc delta+varint byte strings (packed
     map-side in the tokenizer kernel), so ``codec.encode_postings`` only
-    varint-encodes the small integer streams and splices the position
-    bytes — no position re-encoding, no list materialization. Arrow-native
-    on purpose: the real type hints are REQUIRED — applyInArrow infers its
-    eval type from them."""
+    sorts and splices the position bytes — no position re-encoding, no
+    list materialization. Arrow-native on purpose: the real type hints
+    are REQUIRED — applyInArrow infers its eval type from them."""
     t = table.combine_chunks()
     term, doc, te, npos = (
         t.column(c).to_numpy(zero_copy_only=False)
         for c in ("term_id", "doc_id", "title_end", "npos")
     )
-    ba = t.column("pos_blob")
-    ba = ba.combine_chunks() if isinstance(ba, pa.ChunkedArray) else ba
-    bufs = ba.buffers()  # [validity, int32 offsets, data]
-    raw_off = np.frombuffer(bufs[1], np.int32)
-    boffsets = raw_off[ba.offset : ba.offset + len(ba) + 1].astype(np.int64)
-    bvalues = (
-        np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
-    )
+    boffsets, bvalues = _binary_buffers(t.column("pos_blob"))
     eb = codec.encode_postings(term, doc, te, npos, boffsets[:-1], np.diff(boffsets), bvalues)
     n_terms = len(eb.term_ids)
     bucket = int(t.column("bucket")[0].as_py()) if n_terms else 0
@@ -108,10 +116,26 @@ def _encode_kernel_packed(table: pa.Table) -> pa.Table:
     return _segment_table(eb, bucket, salt)
 
 
+def _binary_buffers(col) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, data) of a binary Arrow column: row i's bytes are
+    ``data[offsets[i] : offsets[i + 1]]``."""
+    ba = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    bufs = ba.buffers()  # [validity, int32 offsets, data]
+    offsets = np.frombuffer(bufs[1], np.int32)[ba.offset : ba.offset + len(ba) + 1]
+    data = np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
+    return offsets.astype(np.int64), data
+
+
 def _segment_table(eb: codec.EncodedBucket, bucket: int, salt: int) -> pa.Table:
     """Segment rows (``SEGMENT_SCHEMA``) of the encoded terms of one
-    (bucket, salt) group."""
+    (bucket, salt) group, built from the flat arrays and their offsets."""
     n_terms = len(eb.term_ids)
+
+    def lists(offsets, values, typ):
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()), pa.array(values, typ)
+        )
+
     return pa.table(
         {
             "bucket": pa.array(np.full(n_terms, bucket, np.int32), pa.int32()),
@@ -119,11 +143,16 @@ def _segment_table(eb: codec.EncodedBucket, bucket: int, salt: int) -> pa.Table:
             "salt": pa.array(np.full(n_terms, salt, np.int32), pa.int32()),
             "df": pa.array(eb.dfs, pa.int64()),
             "ctf": pa.array(eb.ctfs, pa.int64()),
-            "n_docs": pa.array(eb.dfs, pa.int64()),
-            "blob": pa.array(eb.blobs, pa.binary()),
-            "block_last": pa.array([a.tolist() for a in eb.block_last], pa.list_(pa.int64())),
-            "block_max_tf": pa.array([a.tolist() for a in eb.block_max_tf], pa.list_(pa.int32())),
-            "block_offsets": pa.array([a.tolist() for a in eb.block_offsets], pa.list_(pa.int64())),
+            "doc_ids": lists(eb.doc_off, eb.doc_ids, pa.int64()),
+            "tf": lists(eb.doc_off, eb.tf, pa.int32()),
+            "title_end": lists(eb.doc_off, eb.title_end, pa.int32()),
+            "blob": pa.Array.from_buffers(
+                pa.binary(), n_terms,
+                [None, pa.py_buffer(eb.blob_off.astype(np.int32)), pa.py_buffer(eb.blob)],
+            ),
+            "block_last": lists(eb.block_off, eb.block_last, pa.int64()),
+            "block_max_tf": lists(eb.block_off, eb.block_max_tf, pa.int32()),
+            "block_offsets": lists(eb.block_off, eb.block_offsets, pa.int64()),
         }
     )
 
@@ -183,30 +212,34 @@ def build_segments(
     )
 
 
-def merge_term_rows(term_id: int, blobs: list[bytes]) -> codec.EncodedBucket:
+def merge_term_rows(
+    term_id: int, doc_ids: np.ndarray, tf: np.ndarray, title_end: np.ndarray, blobs: np.ndarray
+) -> codec.EncodedBucket:
     """Read-merge ONE term's segment rows (salts or generations) into one
-    encoded row: unpack each blob, concatenate, and write them again with
-    ``codec.encode_postings``, which sorts by doc_id and splices each
-    doc's position bytes untouched, so block-max metadata stays
-    consistent and no position is decoded. The merge kernel of
+    encoded row. The arguments are the rows' arrays and blob bytes, each
+    concatenated in row order; each doc's position bytes are found from
+    the varint end bits (``codec.position_spans``) and the one writer
+    sorts by doc_id and splices them untouched, so block-max metadata
+    stays consistent and nothing is varint-decoded. The merge kernel of
     ``merge_salted`` (compaction) and the driver fetch of a multi-row term
     (``wand.fetch_term_segments``) both call it."""
-    parts = [codec.unpack_postings(b) for b in blobs]
-    doc, te, npos, starts, lens = (np.concatenate([p[i] for p in parts]) for i in range(5))
-    # span starts index each part's own bytes: shift them into the joined buffer
-    base = np.cumsum([0] + [p[5].size for p in parts[:-1]])
-    starts += np.repeat(base, [p[0].size for p in parts])
-    raw = np.concatenate([p[5] for p in parts])
-    return codec.encode_postings(np.full(doc.size, term_id), doc, te, npos, starts, lens, raw)
+    starts, lens = codec.position_spans(blobs, tf)
+    return codec.encode_postings(
+        np.full(len(doc_ids), term_id), doc_ids, title_end, tf, starts, lens, blobs
+    )
 
 
 def _merge_kernel(table: pa.Table) -> pa.Table:
     """applyInArrow kernel: merge one term's segment rows (salts or
     generations) into one salt-0 row (``merge_term_rows``)."""
-    eb = merge_term_rows(
-        table.column("term_id")[0].as_py(), table.column("blob").to_pylist()
+    t = table.combine_chunks()
+    doc_ids, tf, title_end = (
+        t.column(c).chunk(0).flatten().to_numpy() for c in ("doc_ids", "tf", "title_end")
     )
-    return _segment_table(eb, table.column("bucket")[0].as_py(), 0)
+    offsets, data = _binary_buffers(t.column("blob"))
+    raw = data[offsets[0] : offsets[-1]]
+    eb = merge_term_rows(t.column("term_id")[0].as_py(), doc_ids, tf, title_end, raw)
+    return _segment_table(eb, t.column("bucket")[0].as_py(), 0)
 
 
 def merge_salted(segments: DataFrame) -> DataFrame:
@@ -354,18 +387,20 @@ def append_manifest(index_dir: str, row: dict) -> None:
 
 
 def write_meta(index_dir: str, meta: dict) -> None:
-    """Publish ``meta.json`` atomically (temp file + ``os.replace``): a
-    kill mid-write leaves the previous meta, never a truncated one."""
+    """Publish ``meta.json``, stamped with ``SEGMENT_FORMAT``, atomically
+    (temp file + ``os.replace``): a kill mid-write leaves the previous
+    meta, never a truncated one."""
     path = os.path.join(index_dir, "meta.json")
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(meta, f)
+        json.dump({**meta, "format": SEGMENT_FORMAT}, f)
     os.replace(tmp, path)
 
 
 def read_meta(index_dir: str) -> dict:
     """``meta.json`` of an index; one without ``avgdl`` predates the
-    ``dl`` column in every doc store and is rejected."""
+    ``dl`` column in every doc store, and one of another ``format`` has
+    other segment columns: both are rejected."""
     path = os.path.join(index_dir, "meta.json")
     with open(path) as f:
         meta = json.load(f)
@@ -373,6 +408,12 @@ def read_meta(index_dir: str) -> dict:
         raise ValueError(
             f"{path} has no avgdl: the index predates per-document lengths "
             "(dl) in its doc store. Rebuild the index directory."
+        )
+    if meta.get("format") != SEGMENT_FORMAT:
+        raise ValueError(
+            f"{path} has segment format {meta.get('format', 1)}, and this engine "
+            f"reads format {SEGMENT_FORMAT} (doc ids, tf and title_end as arrays). "
+            "Rebuild the index directory."
         )
     return meta
 
@@ -393,7 +434,7 @@ def _write_segments(seg: DataFrame, path: str) -> dict[str, int]:
         F.count(F.lit(1)).alias("n_terms"),
         F.sum("df").alias("n_postings"),
         F.sum(F.length("blob")).alias("blob_bytes"),
-    ).write.mode("overwrite").parquet(path)
+    ).write.mode("overwrite").options(**_SEGMENT_WRITER).parquet(path)
     return {k: int(v or 0) for k, v in obs.get.items()}
 
 
@@ -526,6 +567,7 @@ def write_index(
     done = {
         s: m for s, m in read_manifest(index_dir).items()
         if m.get("status") == "complete" and m.get("fingerprint") == stats.fingerprint
+        and m.get("format") == SEGMENT_FORMAT
     }
     pending = [s for s in range(n_shards) if s not in done]
 
@@ -593,6 +635,7 @@ def write_index(
             wall_ms = int((time.time() - t0) * 1000)
             append_manifest(index_dir, {"shard": shard, "status": "complete",
                                         "fingerprint": stats.fingerprint,
+                                        "format": SEGMENT_FORMAT,
                                         "wall_ms": wall_ms, **seg_stats})
         _phase("lexicon")
         _lexicon_of(_read_segments(build, index_dir)).write.mode("overwrite").parquet(
@@ -684,21 +727,14 @@ class DiskIndex:
         self.segment_cache = LruCache(100_000)
         self.df_cache = LruCache(1_000_000)  # term_id -> df (metadata only)
         # term_id -> wand._TermMeta: block metadata for the executor top-k
-        # prune setup, ≤ ~100 KB per term (see wand.SMALL_TERM_POSTINGS),
-        # so ≤ ~400 MB even if every entry were a near-limit term
+        # prune setup: ≤ ~160 KB for a small term (its rows' arrays and
+        # their sorted copy) and ~64 KB per shipped row of a bigger one
+        # (see wand.SMALL_TERM_POSTINGS)
         self.prune_meta_cache = LruCache(4_096)
         self.site_cache = LruCache(10_000)
         self.site_count_cache = LruCache(100_000)  # site -> doc count (one long)
         self._empty_result = None
         self._dl = None
-        # blocks the executor tf decode (``wand._decode_tf``) reads and
-        # varint-decodes, summed over every plan on this handle: a plan's
-        # counts are the deltas around its collect. Created once per
-        # handle, because the driver keeps every accumulator for the life
-        # of the app.
-        sc = self.spark.sparkContext
-        self.blocks_read = sc.accumulator(0)
-        self.blocks_decoded = sc.accumulator(0)
 
     def clear_caches(self) -> None:
         """Drop the per-query LRUs (segments, df and prune metadata, site

@@ -1,17 +1,18 @@
-"""Query execution over the compressed segment index.
+"""Query execution over the columnar segment index.
 
 Two query families over one ``DiskIndex``:
 
-- ``search_segments`` — the reference-semantics pipeline (SURVEY §3.2)
-  over delta+varint blobs: conjunctive intersection per keyword
-  (numpy ``intersect1d`` over sorted doc arrays — the vectorized
-  equivalent of the Go leapfrog, search.go:215-238), AND/NOT folds,
-  site filter, 50-lowest-docId truncation, TF-IDF + phrase/title
-  boosts (search.go:248-267, 419-429). Blob bytes for the query's
-  terms are fetched via a bucket-pruned + term-filtered parquet scan
-  (partition pruning on ``shard``/``bucket``; predicate pushdown on
-  ``term_id``), the Spark analog of the reference's point KV gets.
-  Above the driver valves the same semantics run as an executor plan
+- ``search_segments`` — the reference-semantics pipeline (SURVEY §3.2):
+  conjunctive intersection per keyword (numpy ``intersect1d`` over the
+  sorted ``doc_ids`` arrays — the vectorized equivalent of the Go
+  leapfrog, search.go:215-238), AND/NOT folds, site filter,
+  50-lowest-docId truncation, TF-IDF + phrase/title boosts
+  (search.go:248-267, 419-429), positions decoded only for the first
+  keyword's terms, the ones it scores. A query's segment rows are
+  fetched via a bucket-pruned + term-filtered parquet scan (partition
+  pruning on ``shard``/``bucket``; predicate pushdown on ``term_id``),
+  the Spark analog of the reference's point KV gets. Above the driver
+  valves the same semantics run as an executor plan
   (``_search_segments_distributed``).
 
 - the score-ordered top-k (north rule; ABSENT in the reference, which
@@ -20,31 +21,30 @@ Two query families over one ``DiskIndex``:
   (no phrase/title boosts — bounds for the boosted score are not tight
   enough to prune). ``topk_wand`` / ``topk_bm25_wand`` run one
   block-max loop on the driver: elementary doc ranges from all terms'
-  block boundaries, visited in descending bound order, decoding blocks
-  lazily (``codec.slice_blocks``) and stopping as soon as the best
-  remaining bound cannot beat the running k-th score. Above the driver
-  valves they run ``topk_scores_many``'s executor plan on a one-query
-  set — the one executor top-k plan, which prunes blocks before the
-  varint decode.
+  block boundaries, visited in descending bound order, reading blocks
+  lazily and stopping as soon as the best remaining bound cannot beat
+  the running k-th score. Above the driver valves they run
+  ``topk_scores_many``'s executor plan on a one-query set — the one
+  executor top-k plan, which prunes blocks before it explodes postings.
 
-Every executor plan decodes term frequencies with one kernel,
-``_decode_tf``: the scoring plan (block-max pruned when a theta allows),
-the theta probe and the executor ``search_segments`` candidates. It
-counts the blocks it reads and decodes on the handle's accumulators
-(``DiskIndex.blocks_read`` / ``blocks_decoded``), and the executor route
-of ``topk_wand`` / ``topk_bm25_wand`` reports the deltas around its own
-collect in ``last_stats``. Concurrent queries on one handle mix their
-deltas, just as they race on ``last_stats``.
+Every executor plan reads doc ids and tf as JVM expressions over the
+segment rows' arrays (``_postings``: ``inline(arrays_zip(doc_ids,
+tf))``, kept blocks as ``slice`` ranges): the scoring plan, the theta
+probe and, with ``explode(doc_ids)``, the executor ``search_segments``
+candidates. No Python runs in them; the one Python stage left is the
+executor search winners' position decode. Each top-k plan carries its
+own block counts (``_Pruning``), which the executor route of
+``topk_wand`` / ``topk_bm25_wand`` reports in ``last_stats``.
 """
 
 from __future__ import annotations
 
 import json
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions import codec
@@ -54,31 +54,39 @@ from .search import parse_query
 from .segments import DiskIndex, merge_term_rows
 
 PER_SHARD_LIMIT = 50
+BLOCK_SIZE = codec.BLOCK_SIZE
+
+_SEGMENT_COLUMNS = (
+    "term_id", "df", "doc_ids", "tf", "title_end", "blob", "block_last", "block_max_tf"
+)
 
 
 @dataclass
 class TermSegment:
+    """One term's postings on the driver: its segment rows merged, the
+    arrays as numpy, positions still varint bytes in ``blob``."""
+
     term_id: int
     df: int
+    doc_ids: np.ndarray
+    tf: np.ndarray
+    title_end: np.ndarray
     blob: bytes
     block_last: np.ndarray
     block_max_tf: np.ndarray
-    block_offsets: np.ndarray
-    _decoded: tuple | None = None
-    _pos_starts: np.ndarray | None = None
+    _positions: tuple | None = None
 
-    def decode(self):
-        if self._decoded is None:
-            self._decoded = codec.decode_term_postings(self.blob)
-        return self._decoded  # (doc_ids, title_ends, npos, positions_flat)
-
-    def pos_starts(self) -> np.ndarray:
-        if self._pos_starts is None:
-            npos = self.decode()[2]
-            s = np.zeros(npos.size, np.int64)
-            np.cumsum(npos[:-1], out=s[1:])
-            self._pos_starts = s
-        return self._pos_starts
+    def winners(self, docs: np.ndarray):
+        """(tf, title_end, positions per doc) of ``docs``, all of them
+        postings of this term. The term's positions are decoded once and
+        kept with the LRU-cached segment, so a warm query only slices."""
+        if self._positions is None:
+            flat = codec.decode_positions(self.blob, self.tf, self.title_end)
+            self._positions = (flat, np.cumsum(self.tf) - self.tf)
+        flat, starts = self._positions
+        idx = np.searchsorted(self.doc_ids, docs)
+        tf = self.tf[idx]
+        return tf, self.title_end[idx], [flat[s : s + n] for s, n in zip(starts[idx], tf)]
 
 
 def fetch_term_segments(di: DiskIndex, term_ids: list[int]) -> dict[int, TermSegment]:
@@ -89,7 +97,8 @@ def fetch_term_segments(di: DiskIndex, term_ids: list[int]) -> dict[int, TermSeg
     a single job whose parquet scan prunes to the query's buckets
     (partition/row-group pruning) and pushes the term_id filter down —
     the scan-S3 analog of the reference's point KV gets
-    (boltdb-index.go:130-132)."""
+    (boltdb-index.go:130-132). Rows come back as Arrow, so the arrays
+    reach numpy without a Python object per posting."""
     if not term_ids:
         return {}
     # LRU in front of the segment store — the reference fronts BoltDB with
@@ -99,21 +108,24 @@ def fetch_term_segments(di: DiskIndex, term_ids: list[int]) -> dict[int, TermSeg
     cache = di.segment_cache
     missing = [t for t in term_ids if t not in cache]
     if missing:
-        rows = (
-            _term_rows(di, missing)
-            .select(
-                "term_id", "df", "blob", "block_last", "block_max_tf", "block_offsets"
-            )
-            .collect()
-        )
+        table = _term_rows(di, missing).select(*_SEGMENT_COLUMNS).toArrow()
         fetched: dict[int, list] = {t: [] for t in missing}
-        for r in rows:
-            fetched[r["term_id"]].append(r)
+        for i, tid in enumerate(table.column("term_id").to_pylist()):
+            fetched[tid].append(
+                {c: _arrow_value(table.column(c)[i]) for c in _SEGMENT_COLUMNS}
+            )
         for t, rs in fetched.items():
             cache.put(t, _rows_to_segment(t, rs))
     return {
         t: seg for t in term_ids if (seg := cache.get(t)) is not None
     }
+
+
+def _arrow_value(scalar):
+    """A fetched Arrow cell as numpy (lists) or Python (scalars, bytes)."""
+    if hasattr(scalar, "values"):
+        return scalar.values.to_numpy(zero_copy_only=False).astype(np.int64)
+    return scalar.as_py()
 
 
 def _term_rows(di: DiskIndex, term_ids: list[int]) -> DataFrame:
@@ -130,42 +142,34 @@ def _term_rows(di: DiskIndex, term_ids: list[int]) -> DataFrame:
     )
 
 
-def _rows_to_segment(tid: int, rs: list) -> TermSegment | None:
-    """Collected segment rows of one term -> TermSegment (None if absent)."""
+def _rows_to_segment(tid: int, rs: list[dict]) -> TermSegment | None:
+    """Fetched segment rows of one term -> TermSegment (None if absent);
+    a term's salts or generations are read-merged (``merge_term_rows``)."""
     if not rs:
         return None
-    if len(rs) == 1:
-        r = rs[0]
-        return TermSegment(
+    r = rs[0]
+    if len(rs) > 1:
+        r = merge_term_rows(
             tid,
-            r["df"],
-            bytes(r["blob"]),
-            np.array(r["block_last"], np.int64),
-            np.array(r["block_max_tf"], np.int64),
-            np.array(r["block_offsets"], np.int64),
-        )
-    # salts or generations: the (few, query-term-only) parts read-merged
-    eb = merge_term_rows(tid, [bytes(r["blob"]) for r in rs])
-    return TermSegment(
-        tid,
-        int(eb.dfs[0]),
-        bytes(eb.blobs[0]),
-        eb.block_last[0].astype(np.int64),
-        eb.block_max_tf[0].astype(np.int64),
-        eb.block_offsets[0].astype(np.int64),
-    )
+            *(np.concatenate([x[c] for x in rs]) for c in ("doc_ids", "tf", "title_end")),
+            np.frombuffer(b"".join(x["blob"] for x in rs), np.uint8),
+        ).row(0)
+    return TermSegment(**{c: r[c] for c in _SEGMENT_COLUMNS})
 
 
 @dataclass
 class _TermMeta:
     """Query-independent metadata of one term, folded over its segment
-    rows (salts, generations). ``lo``/``hi``/``bmax`` hold every block of
-    the term, sorted by ``hi``, and are set only for SMALL terms
-    (df ≤ ``SMALL_TERM_POSTINGS``); an absent term has df = 0."""
+    rows (salts, generations); an absent term has df = 0. ``rows`` holds
+    the block arrays of every row with df ≤ ``SMALL_TERM_POSTINGS``;
+    ``lo``/``hi``/``bmax`` hold every block of the term, sorted by
+    ``hi``, and are set only for SMALL terms (total df ≤ the limit)."""
 
     df: int
     max_tf: int = 0  # largest block_max_tf: the term's single-posting bound
     min_tf: int = 0  # smallest block_max_tf: its weakest block's bound
+    blocks: int = 0  # blocks of all its rows
+    rows: list = field(default_factory=list)  # (block_last, block_max_tf) per small row
     lo: np.ndarray | None = None  # block start, widened (``_block_lo``)
     hi: np.ndarray | None = None  # block_last
     bmax: np.ndarray | None = None  # block_max_tf
@@ -173,8 +177,8 @@ class _TermMeta:
 
 def _block_lo(blast: np.ndarray) -> np.ndarray:
     """Block doc-range starts of one segment row: the previous block's end
-    + 1. The first block's true start is unknown without a decode, so it
-    widens to 0 (widening only weakens pruning)."""
+    + 1. The first block's true start is unknown without reading the
+    row's doc ids, so it widens to 0 (widening only weakens pruning)."""
     lo = np.empty_like(blast)
     if blast.size:
         lo[0] = 0
@@ -187,16 +191,24 @@ def _fold_term_meta(rs: list) -> _TermMeta:
     df = sum(int(r["df"]) for r in rs)
     if df == 0:
         return _TermMeta(0)
-    max_tf = max(int(r["max_tf"]) for r in rs)
-    min_tf = min(int(r["min_tf"]) for r in rs)
-    if df > SMALL_TERM_POSTINGS:
-        return _TermMeta(df, max_tf, min_tf)
-    his = [np.asarray(r["block_last"], np.int64) for r in rs]
-    lo = np.concatenate([_block_lo(h) for h in his])
-    hi = np.concatenate(his)
-    bmax = np.concatenate([np.asarray(r["block_max_tf"], np.int64) for r in rs])
-    order = np.argsort(hi, kind="mergesort")
-    return _TermMeta(df, max_tf, min_tf, lo[order], hi[order], bmax[order])
+    meta = _TermMeta(
+        df,
+        max(int(r["max_tf"]) for r in rs),
+        min(int(r["min_tf"]) for r in rs),
+        sum(-(-int(r["df"]) // BLOCK_SIZE) for r in rs),
+        [
+            (np.asarray(r["block_last"], np.int64), np.asarray(r["block_max_tf"], np.int64))
+            for r in rs
+            if r["block_last"] is not None
+        ],
+    )
+    if df <= SMALL_TERM_POSTINGS:
+        lo = np.concatenate([_block_lo(h) for h, _ in meta.rows])
+        hi = np.concatenate([h for h, _ in meta.rows])
+        bmax = np.concatenate([b for _, b in meta.rows])
+        order = np.argsort(hi, kind="mergesort")
+        meta.lo, meta.hi, meta.bmax = lo[order], hi[order], bmax[order]
+    return meta
 
 
 def _scan_term_meta(di: DiskIndex, term_ids: list[int]) -> dict[int, _TermMeta]:
@@ -204,8 +216,9 @@ def _scan_term_meta(di: DiskIndex, term_ids: list[int]) -> dict[int, _TermMeta]:
     collect of per-ROW metadata — df and the block_max_tf extremes, plus
     the block arrays of rows with df ≤ ``SMALL_TERM_POSTINGS``. No
     aggregate, hence no shuffle: the driver folds a term's rows itself.
-    The parquet reader never touches blob bytes. Fills ``di.df_cache``
-    and ``di.prune_meta_cache``; absent terms cache as df = 0."""
+    The parquet reader never touches posting arrays or blob bytes. Fills
+    ``di.df_cache`` and ``di.prune_meta_cache``; absent terms cache as
+    df = 0."""
     small = f"df <= {sql_literal(SMALL_TERM_POSTINGS, 'bigint')}"
     rows = (
         _term_rows(di, term_ids)
@@ -257,17 +270,18 @@ def _df_of_terms(di: DiskIndex, term_ids: list[int]) -> dict[int, int]:
 # the k-th winner's and can never tie into the oracle's top k.
 PRUNE_EPS = 1e-6
 
-# Terms with at most this many postings ship their block metadata
-# (block_last and block_max_tf) to the driver, and their block doc ranges
-# into the pruning kernel's closure, so hot terms' blocks only receive
-# "help" from a rare term where the rare term actually has postings.
-# Terms above the limit contribute their max help unconditionally (their
-# idf — hence their help — is small by construction). A segment row of
-# df postings has ceil(df/128) blocks, so a small term holds at most
-# 4096 + (rows − 1) blocks (rows = salts × generations), 24 bytes each
-# in ``_TermMeta``: ~100 KB per term at worst, independent of corpus
-# size. Only rows with df ≤ the limit ship arrays, so a big term's salted
-# rows cost at most the same per row.
+# Segment rows with at most this many postings ship their block metadata
+# (block_last and block_max_tf) to the driver, which computes their kept
+# block ranges; a term whose rows sum to at most this many is SMALL: its
+# block doc ranges gate its help to other terms' blocks, so hot terms'
+# blocks only receive "help" from a rare term where the rare term
+# actually has postings. Bigger terms contribute their max help
+# unconditionally (their idf — hence their help — is small by
+# construction), and bigger rows keep blocks by a SQL filter over their
+# own block_max_tf. A row of df postings has ceil(df/128) blocks, so its
+# arrays hold at most 4096 blocks, 16 bytes each in ``_TermMeta``: ~64 KB
+# per row (a small term also holds its sorted copy), bounded by the
+# rows per term (salts × generations), independent of corpus size.
 SMALL_TERM_POSTINGS = 524_288
 
 
@@ -292,9 +306,9 @@ def _keep_rule(
     helpers: list[_OverlapMeta],
     theta: float,
 ) -> np.ndarray:
-    """The block keep rule of the pruned decode and of the void-probe
-    check: block [lo, hi] of term t, with single-posting bound ``ub``,
-    is kept iff::
+    """The block keep rule of the pruned scoring plan and of the
+    void-probe check: block [lo, hi] of term t, with single-posting bound
+    ``ub``, is kept iff::
 
         ub + rest + Σ_{h ∈ helpers, h has a block overlapping [lo, hi]} h.ub
           >= theta − PRUNE_EPS
@@ -313,18 +327,42 @@ def _keep_rule(
     return (ub + helpv) >= theta - PRUNE_EPS
 
 
-def _block_keeper(
+@dataclass
+class _Pruning:
+    """One scoring plan's block selection and block counts. ``ranges``:
+    a partly kept small row, named by (term_id, block_last[0]) — a term's
+    rows hold disjoint doc sets — → its kept [1-based start, length]
+    posting ranges. ``min_tf``: term → the least block_max_tf its bigger
+    rows keep, in SQL. ``kept`` counts the kept blocks the driver knows:
+    every row's, or only the small rows' when ``observed`` counts the
+    bigger rows' as the plan runs."""
+
+    total: int
+    kept: int
+    ranges: dict = field(default_factory=dict)
+    min_tf: dict = field(default_factory=dict)
+    observed: Observation | None = None
+
+    def stats(self) -> dict:
+        """The plan's ``blocks_total`` / ``blocks_decoded`` (its kept
+        blocks); read once the plan has run."""
+        kept = self.kept
+        if self.observed is not None:
+            kept += int(self.observed.get["kept"] or 0)
+        return {"blocks_total": self.total, "blocks_decoded": kept}
+
+
+def _prune(
     sc: _Scorer,
+    meta: dict[int, _TermMeta],
     idfs: dict[int, float],
     term_specs: dict[int, list[dict]],
     overlap: dict[int, _OverlapMeta],
-):
-    """The block selection of the pruned tf decode for a set of queries
-    (one or many): a function of one segment row's (term_id, block_last,
-    block_max_tf) Arrow values → its keep mask, or None to keep every
-    block. Each term is decoded once, and block b of term t (doc range
-    [lo_b, hi_b] from the block_last sidecar, lo widened by
-    ``_block_lo``) is kept iff ANY query using t still needs it::
+) -> _Pruning:
+    """The block selection of the scoring plan for a set of queries (one
+    or many). Block b of term t (doc range [lo_b, hi_b] from the
+    block_last sidecar, lo widened by ``_block_lo``) is kept iff ANY
+    query using t still needs it::
 
         keep_t[b] = ∨_{q ∋ t} [ ub_t(b) + big_rest_q[t]
                       + Σ_{t' ∈ small(q), t'≠t, t' overlaps [lo_b, hi_b]} ub_{t'}
@@ -334,15 +372,15 @@ def _block_keeper(
     help actually available in its doc range: rare terms' help is gated
     on a metadata-only overlap test (``_OverlapMeta``), hot terms' (whose
     idf — hence help — is small) is granted unconditionally (big_rest).
+    The driver evaluates it on every row whose block arrays the metadata
+    scan shipped (df ≤ ``SMALL_TERM_POSTINGS``). A bigger row is filtered
+    in SQL over its own block_max_tf with every small co-term's help
+    granted: a superset of the rule's blocks.
 
-    ``term_specs[t]`` lists one spec per query using t:
-    ``{"theta": float, "big_rest": {t: float}, "small": [t, ...]}`` (small
-    in term-id order) — theta_q from the rarest-term probe
-    (``_theta_probe_many``), big_rest_q / small(q) from the SHARED
-    ``_collect_prune_meta`` pass (ub is query-independent, so metadata is
-    folded once for the union of terms). A spec with theta = −inf
-    (single-term query, or a probe ``_plan_probe`` rules out) keeps
-    every block of its terms.
+    ``term_specs[t]`` lists one spec per query using t: ``{"theta",
+    "big_rest": {t: float}, "small": [t, ...]}`` (small in term-id order).
+    A spec with theta = −inf (single-term query, or a probe
+    ``_plan_probe`` rules out) keeps every block of its terms.
 
     Soundness, per query: a doc's true total is bounded by its own
     block's term bound plus, per other term, that term's max
@@ -357,151 +395,126 @@ def _block_keeper(
     reference read path, search.go:187-273, scores exhaustively; the
     pruning is the north-rule upgrade at cluster scale.)
     """
-
-    def keeper(tid: int, blast_value, bmax_value) -> np.ndarray | None:
-        specs = term_specs.get(tid)
+    prune = _Pruning(sum(m.blocks for m in meta.values()), 0)
+    big_blocks = 0
+    for t, m in meta.items():
+        specs = term_specs.get(t, [])
+        big = m.blocks - sum(h.size for h, _ in m.rows)
+        big_blocks += big
         if not specs or any(not math.isfinite(s["theta"]) for s in specs):
-            return None
-        blast = np.asarray(blast_value.as_py(), np.int64)
-        ub = sc.block_bound(np.asarray(bmax_value.as_py(), np.int64), idfs[tid])
-        lo = _block_lo(blast)
-        keep = np.zeros(blast.size, bool)
-        for spec in specs:
-            keep |= _keep_rule(
-                ub,
-                lo,
-                blast,
-                spec["big_rest"][tid],
-                [overlap[t2] for t2 in spec["small"] if t2 != tid],
-                spec["theta"],
-            )
-            if keep.all():
-                break
-        return keep
+            prune.kept += m.blocks - big
+            continue
 
-    return keeper
-
-
-def _decode_kept_blocks(blob: bytes, boff_value, df_i: int, keep: np.ndarray):
-    """Decode the kept blocks of one segment blob → (doc_ids, tf), in
-    contiguous ``codec.slice_blocks`` runs: skipped blocks' bytes are
-    never varint-decoded. ``keep`` has ≥1 True and ≥1 False."""
-    boff = np.asarray(boff_value.as_py(), np.int64)
-    kidx = np.flatnonzero(keep)
-    runs = np.split(kidx, np.flatnonzero(np.diff(kidx) > 1) + 1)
-    parts = [
-        codec.slice_blocks(blob, boff, df_i, int(run[0]), int(run[-1]) + 1)
-        for run in runs
-    ]
-    return (
-        np.concatenate([p[0] for p in parts]),
-        np.concatenate([p[2] for p in parts]),
-    )
-
-
-def _decode_tf(di: DiskIndex, seg_rows: DataFrame, keeper=None) -> DataFrame:
-    """The executor tf decode: segment rows → (term_id, doc_id, tf) in one
-    mapInArrow. tf = the doc's position count for the term (title+body
-    combined — the reference's tf, search.go:423). No blob is shipped to
-    the driver; each task decodes its own scan split's rows. The scoring
-    plan, the theta probe and the executor ``search_segments``
-    candidates all run it.
-
-    With a ``keeper`` (``_block_keeper``) the decode is block-max pruned
-    and also reads the block sidecar columns; without one it reads only
-    ``term_id, df, blob`` and decodes whole blobs. Each row adds its
-    blocks (ceil(df / BLOCK_SIZE)) to ``di.blocks_read`` and the blocks
-    it varint-decodes to ``di.blocks_decoded``, so a caller reads a
-    plan's counts as the deltas around its collect; concurrent plans on
-    one handle mix theirs."""
-    import pyarrow as pa
-
-    n_read, n_decoded = di.blocks_read, di.blocks_decoded
-    sidecar = ["block_last", "block_max_tf", "block_offsets"] if keeper else []
-
-    def kernel(batches):
-        for batch in batches:
-            tids = batch.column("term_id").to_numpy(zero_copy_only=False)
-            dfs = batch.column("df").to_numpy(zero_copy_only=False)
-            blobs = batch.column("blob")
-            blasts, bmaxs, boffs = (
-                [batch.column(c) for c in sidecar] if keeper else (None, None, None)
-            )
-            out_t, out_d, out_f = [], [], []
-            read = decoded = 0
-            for i in range(batch.num_rows):
-                tid, df_i = int(tids[i]), int(dfs[i])
-                n_blocks = -(-df_i // codec.BLOCK_SIZE)
-                read += n_blocks
-                keep = keeper(tid, blasts[i], bmaxs[i]) if keeper else None
-                if keep is None or keep.all():
-                    doc_ids, _, npos, _ = codec.decode_term_postings(blobs[i].as_py())
-                    decoded += n_blocks
-                elif keep.any():
-                    doc_ids, npos = _decode_kept_blocks(
-                        blobs[i].as_py(), boffs[i], df_i, keep
-                    )
-                    decoded += int(keep.sum())
-                else:
-                    continue
-                out_t.append(np.full(doc_ids.size, tid, np.int64))
-                out_d.append(doc_ids)
-                out_f.append(npos.astype(np.int64))
-            n_read.add(read)
-            n_decoded.add(decoded)
-            if out_t:
-                yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(out_t), pa.int64()),
-                        pa.array(np.concatenate(out_d), pa.int64()),
-                        pa.array(np.concatenate(out_f), pa.int64()),
-                    ],
-                    names=["term_id", "doc_id", "tf"],
+        def keep_of(ub, lo, hi, t=t, specs=specs):
+            keep = np.zeros(hi.size, bool)
+            for spec in specs:
+                keep |= _keep_rule(
+                    ub, lo, hi, spec["big_rest"][t],
+                    [overlap[t2] for t2 in spec["small"] if t2 != t], spec["theta"],
                 )
+                if keep.all():
+                    break
+            return keep
 
-    return seg_rows.select("term_id", "df", "blob", *sidecar).mapInArrow(
-        kernel, "term_id long, doc_id long, tf long"
-    )
+        for blast, bmax in m.rows:
+            keep = keep_of(sc.block_bound(bmax, idfs[t]), _block_lo(blast), blast)
+            prune.kept += int(keep.sum())
+            if not keep.all():
+                edges = np.flatnonzero(np.diff(np.concatenate([[0], keep, [0]]).astype(np.int8)))
+                prune.ranges[(t, int(blast[0]))] = [
+                    [int(b0) * BLOCK_SIZE + 1, int(b1 - b0) * BLOCK_SIZE]
+                    for b0, b1 in zip(edges[::2], edges[1::2])
+                ] or [[1, 0]]
+        if big:
+            # every help granted: each helper overlaps [0, max]
+            tfs = np.arange(1, m.max_tf + 1)
+            ends = np.full(tfs.size, np.iinfo(np.int64).max)
+            keep = keep_of(sc.block_bound(tfs, idfs[t]), np.zeros_like(tfs), ends)
+            prune.min_tf[t] = int(np.argmax(keep)) + 1 if keep.any() else m.max_tf + 1
+    if not prune.min_tf:
+        prune.kept += big_blocks
+    return prune
 
 
-def _decode_positions_for(seg_rows: DataFrame, doc_ids: np.ndarray) -> DataFrame:
-    """Executor-side decode of title_end+positions for a FIXED small doc
-    set (the ≤50 truncation winners, shipped in the task closure) —
-    (term_id, doc_id, title_end, positions)."""
+def _postings(seg_rows: DataFrame, prune: _Pruning | None = None) -> DataFrame:
+    """Segment rows → (term_id, doc_id, tf) postings, as JVM expressions
+    over the rows' arrays: ``inline(arrays_zip(doc_ids, tf))``, tf being
+    the doc's position count for the term (the reference's tf,
+    search.go:423). With a ``prune``, each row's kept postings are
+    ``slice`` ranges of its arrays: the driver's ``ranges`` for a small
+    row; for a bigger one a range per block, empty where its block_max_tf
+    is below the term's ``min_tf``, counted by ``prune.observed``."""
+    zipped = "arrays_zip(doc_ids, tf)"
+    if prune is not None and (prune.ranges or prune.min_tf):
+        r = "array(array(1, size(doc_ids)))"
+        if prune.ranges:
+            ranges = "map({})".format(", ".join(
+                f"named_struct('t', {sql_literal(t, 'bigint')}, 'b', {sql_literal(b, 'bigint')}),"
+                f" {sql_literal(kept, 'array<array<int>>')}"
+                for (t, b), kept in sorted(prune.ranges.items())
+            ))
+            row = "named_struct('t', term_id, 'b', block_last[0])"
+            r = f"coalesce(element_at({ranges}, {row}), {r})"
+        big = f"df > {sql_literal(SMALL_TERM_POSTINGS, 'bigint')}"
+        if prune.min_tf:
+            min_tf = f"coalesce(element_at({sql_map(prune.min_tf, 'bigint', 'int')}, term_id), 0)"
+            r = (
+                f"CASE WHEN {big} THEN transform(block_max_tf, (m, b) -> array("
+                f"b * {BLOCK_SIZE} + 1, IF(m >= {min_tf}, {BLOCK_SIZE}, 0))) ELSE {r} END"
+            )
+        seg_rows = seg_rows.selectExpr("term_id", "df", "doc_ids", "tf", f"{r} AS _r")
+        if prune.min_tf:
+            prune.observed = Observation()
+            seg_rows = seg_rows.observe(
+                prune.observed,
+                F.expr(f"sum(IF({big}, size(filter(_r, r -> r[1] > 0)), 0))").alias("kept"),
+            )
+        zipped = "arrays_zip({})".format(", ".join(
+            f"flatten(transform(_r, r -> slice({c}, r[0], r[1])))" for c in ("doc_ids", "tf")
+        ))
+    return seg_rows.selectExpr("term_id", f"inline({zipped}) AS (doc_id, tf)")
+
+
+def _winner_positions(seg_rows: DataFrame, docs: np.ndarray) -> DataFrame:
+    """Executor-side positions of a FIXED small doc set (the ≤50
+    truncation winners) — (term_id, doc_id, title_end, positions). The
+    JVM keeps only the rows holding a winner (``arrays_overlap``); per
+    row, only the winners' position bytes are varint-decoded
+    (``codec.decode_positions``), found from tf and the varint end bits.
+    The one Python stage of executor search."""
     import pyarrow as pa
 
-    cand = np.asarray(doc_ids, np.int64)
+    cand = np.asarray(docs, np.int64)
 
     def kernel(batches):
         for batch in batches:
-            tids = batch.column("term_id").to_numpy(zero_copy_only=False)
-            blobs = batch.column("blob")
-            ts, ds, tes, poss = [], [], [], []
+            out = [[], [], [], []]
             for i in range(batch.num_rows):
-                docs, te, npos, flat = codec.decode_term_postings(blobs[i].as_py())
-                hit = np.isin(docs, cand, assume_unique=True)
-                if not hit.any():
-                    continue
-                starts = np.zeros(npos.size, np.int64)
-                np.cumsum(npos[:-1], out=starts[1:])
-                for j in np.flatnonzero(hit):
-                    ts.append(int(tids[i]))
-                    ds.append(int(docs[j]))
-                    tes.append(int(te[j]))
-                    poss.append(flat[starts[j] : starts[j] + npos[j]].tolist())
-            if ts:
+                docs_i, tf, te = (
+                    batch.column(c)[i].values.to_numpy(zero_copy_only=False)
+                    for c in ("doc_ids", "tf", "title_end")
+                )
+                idx = np.flatnonzero(np.isin(docs_i, cand, assume_unique=True))
+                flat = codec.decode_positions(batch.column("blob")[i].as_py(), tf, te, idx)
+                out[0] += [batch.column("term_id")[i].as_py()] * idx.size
+                out[1] += docs_i[idx].tolist()
+                out[2] += te[idx].tolist()
+                out[3] += np.split(flat, np.cumsum(tf[idx])[:-1]) if idx.size else []
+            if out[0]:
                 yield pa.record_batch(
                     [
-                        pa.array(ts, pa.int64()),
-                        pa.array(ds, pa.int64()),
-                        pa.array(tes, pa.int32()),
-                        pa.array(poss, pa.list_(pa.int64())),
+                        pa.array(values, typ)
+                        for values, typ in zip(
+                            out, (pa.int64(), pa.int64(), pa.int32(), pa.list_(pa.int64()))
+                        )
                     ],
                     names=["term_id", "doc_id", "title_end", "positions"],
                 )
 
-    return seg_rows.select("term_id", "blob").mapInArrow(
-        kernel, "term_id long, doc_id long, title_end int, positions array<long>"
+    return (
+        seg_rows.filter(f"arrays_overlap(doc_ids, array({sql_list(cand, 'bigint')}))")
+        .select("term_id", "doc_ids", "tf", "title_end", "blob")
+        .mapInArrow(kernel, "term_id long, doc_id long, title_end int, positions array<long>")
     )
 
 
@@ -511,17 +524,17 @@ def _search_segments_distributed(
     """Executor-side twin of the driver query path — identical semantics,
     different physical plan:
 
-    - candidate sets per keyword or exclusion: its own pruned scan → tf
-      decode (``_decode_tf``) → groupBy(doc_id) HAVING count = m — the
-      shuffle is on doc_id, skew-free;
+    - candidate sets per keyword or exclusion: its own pruned scan →
+      ``explode(doc_ids)`` → groupBy(doc_id) HAVING count = m — the
+      shuffle is on doc_id, skew-free, and no Python runs;
     - AND / NOT folds: left_semi / left_anti joins;
     - ``site:``: pruned semi join against the doc store's parsed host
       (no driver-side doc-id collect);
     - truncation: orderBy(doc_id).limit(50) — Catalyst plans TakeOrdered,
       each partition contributes its 50 lowest, no global sort;
-    - scoring: only the ≤50 winners' positions are decoded (second pruned
-      pass) and collected, then scored by the driver route's
-      ``_score_docs`` with the metadata df.
+    - scoring: only the ≤50 winners' positions are decoded
+      (``_winner_positions``) and collected, then scored by the driver
+      route's ``_score_docs`` with the metadata df.
 
     Driver memory is O(candidates + winners' positions), never O(df).
     """
@@ -536,11 +549,12 @@ def _search_segments_distributed(
     ]
 
     def cand(qt) -> DataFrame:
-        # each side decodes its own pruned scan: a filter above the decode
-        # would not push down, and every side would decode every term
+        # each side reads its own pruned scan: a filter above one shared
+        # explode would not push down, and every side would read every term
         tids = sorted({t for t, _ in qt})
         return (
-            _decode_tf(di, _term_rows(di, tids))
+            _term_rows(di, tids)
+            .selectExpr("explode(doc_ids) AS doc_id")
             .groupBy("doc_id")
             .agg(F.count("*").alias("_nt"))
             .filter(F.col("_nt") == len(tids))
@@ -579,38 +593,19 @@ def _search_segments_distributed(
         return empty()
 
     k0_tids = sorted({t for t, _ in kw_tokens[0]})
-    pos_rows = _decode_positions_for(_term_rows(di, k0_tids), docs).collect()
-    # every winner holds every first-keyword term, so each term's winner
-    # postings, doc-sorted, are a decoded segment that covers ``docs``
+    pos_rows = _winner_positions(_term_rows(di, k0_tids), docs).collect()
+    # every winner holds every first-keyword term: each term's rows,
+    # doc-sorted, line up with ``docs``
     by_term: dict[int, list] = {t: [] for t in k0_tids}
     for r in sorted(pos_rows, key=lambda r: r["doc_id"]):
         by_term[r["term_id"]].append(r)
-    no_blocks = np.empty(0, np.int64)
-    segs: dict[int, TermSegment] = {}
+    winners = {}
     for tid, rows in by_term.items():
         positions = [np.array(r["positions"], np.int64) for r in rows]
-        decoded = (
-            np.array([r["doc_id"] for r in rows], np.int64),
-            np.array([r["title_end"] for r in rows], np.int64),
-            np.array([p.size for p in positions], np.int64),
-            np.concatenate(positions),
-        )
-        segs[tid] = TermSegment(
-            tid, dfs[tid], b"", no_blocks, no_blocks, no_blocks, _decoded=decoded
-        )
-    scores = _score_docs(segs, pq.keywords[0], docs, di.meta.n_docs)
-    order = np.lexsort((docs, -scores))
-    import pandas as pd
-
-    return di.spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": docs[order],
-                "score": scores[order],
-                "rank": np.arange(1, order.size + 1, dtype=np.int64),
-            }
-        )
-    )
+        tf = np.array([p.size for p in positions], np.int64)
+        te = np.array([r["title_end"] for r in rows], np.int64)
+        winners[tid] = (dfs[tid], tf, te, positions)
+    return _score_docs(di, winners, pq.keywords[0], docs)
 
 
 def _keyword_candidates(segs: dict[int, TermSegment], keyword: str) -> np.ndarray | None:
@@ -622,7 +617,7 @@ def _keyword_candidates(segs: dict[int, TermSegment], keyword: str) -> np.ndarra
     for tid, _ in qtokens:
         if tid not in segs:
             return None
-        arrs.append(segs[tid].decode()[0])
+        arrs.append(segs[tid].doc_ids)
     arrs.sort(key=len)  # rarest-first (search.go:193-196)
     cand = arrs[0]
     for a in arrs[1:]:
@@ -632,37 +627,29 @@ def _keyword_candidates(segs: dict[int, TermSegment], keyword: str) -> np.ndarra
     return cand
 
 
-def _field_slices(seg: TermSegment, doc_idx: int):
-    _, te, npos, pos = seg.decode()
-    s, n, t = seg.pos_starts()[doc_idx], npos[doc_idx], te[doc_idx]
-    all_pos = pos[s : s + n]
-    return all_pos[:t], all_pos[t:]
-
-
 def _score_docs(
-    segs: dict[int, TermSegment], keyword: str, docs: np.ndarray, n_docs_corpus: int
-) -> np.ndarray:
-    """Reference scoring for the given docs (search.go:248-267, 419-429)."""
+    di: DiskIndex, winners: dict[int, tuple], keyword: str, docs: np.ndarray
+) -> DataFrame:
+    """Reference scoring for the given docs (search.go:248-267, 419-429),
+    as (doc_id, score, rank) ranked score desc / doc_id asc: a pandas →
+    Arrow LocalRelation, driver-local, no job. ``winners[t]`` is (df, tf,
+    title_end, positions per doc) of term t, aligned with ``docs``."""
     qtokens = tokenize_query(keyword)
     term_ids = [t for t, _ in qtokens]
     cursors = [(tid, b) for tid, bases in qtokens for b in bases]
     # S = sum over distinct terms
     S = np.zeros(docs.size)
-    idxs: dict[int, np.ndarray] = {}
     for tid in term_ids:
-        seg = segs[tid]
-        doc_ids, _, npos, _ = seg.decode()
-        idx = np.searchsorted(doc_ids, docs)
-        idxs[tid] = idx
-        tf = npos[idx].astype(np.float64)
-        S += (1.0 + np.log(tf)) * math.log(n_docs_corpus / seg.df)
+        df, tf, _, _ = winners[tid]
+        S += (1.0 + np.log(tf.astype(np.float64))) * math.log(di.meta.n_docs / df)
     scores = np.zeros(docs.size)
     for i in range(docs.size):
         for title in (True, False):
             aligned = None
             for tid, base in cursors:
-                tpos, bpos = _field_slices(segs[tid], idxs[tid][i])
-                fpos = (tpos if title else bpos) - base
+                _, _, te, positions = winners[tid]
+                p = positions[i]
+                fpos = (p[: te[i]] if title else p[te[i] :]) - base
                 aligned = fpos if aligned is None else np.intersect1d(aligned, fpos)
                 if aligned.size == 0:
                     break
@@ -673,7 +660,18 @@ def _score_docs(
             if title:
                 part *= 3.0
             scores[i] += part
-    return scores
+    import pandas as pd
+
+    order = np.lexsort((docs, -scores))
+    return di.spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": docs[order],
+                "score": scores[order],
+                "rank": np.arange(1, order.size + 1, dtype=np.int64),
+            }
+        )
+    )
 
 
 # Above this many total postings across the query's terms, the driver
@@ -738,7 +736,6 @@ def search_segments(
     site filter is an executor-side semi join; the driver path's
     O(site)-sized allowed-doc collect only runs for sites under the
     bound (or already LRU-resident)."""
-    spark = di.spark
     empty = di.empty_result
     pq = parse_query(query)
     if not pq.keywords:
@@ -809,20 +806,9 @@ def search_segments(
         base = np.sort(np.concatenate(parts)) if parts else base
     if base.size == 0:
         return empty()
-    scores = _score_docs(segs, pq.keywords[0], base, di.meta.n_docs)
-    order = np.lexsort((base, -scores))
-    import pandas as pd
-
-    # pandas -> Arrow LocalRelation: the result is driver-local, no job
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": base[order],
-                "score": scores[order],
-                "rank": np.arange(1, order.size + 1, dtype=np.int64),
-            }
-        )
-    )
+    k0_tids = {t for t, _ in tokenize_query(pq.keywords[0])}
+    winners = {t: (segs[t].df, *segs[t].winners(base)) for t in k0_tids}
+    return _score_docs(di, winners, pq.keywords[0], base)
 
 
 # --------------------------------------------------------------------------
@@ -845,8 +831,7 @@ class _Scorer:
       Lucene's idf (``_bm25_idf``).
 
     The expression trees match the DuckDB oracle's term for term, so
-    float64 results agree bit for bit. Plain data, so a decode kernel's
-    closure carries it to the executors."""
+    float64 results agree bit for bit."""
 
     bm25: bool
     n_docs: int
@@ -935,9 +920,9 @@ def _topk_blockmax(
 
     Elementary doc ranges come from all terms' block boundaries, each
     bounded by the sum of its overlapping blocks' ``block_bound``. Ranges
-    are visited in descending bound order, decoding blocks lazily, until
+    are visited in descending bound order, reading blocks lazily, until
     the best remaining bound cannot beat the running k-th score — every
-    skipped block's bytes are never touched. Above the driver valves (sum
+    skipped block's postings are never scored. Above the driver valves (sum
     df > ``max_driver_postings`` or corpus > ``MAX_DRIVER_DOCS``) the
     query runs as the executor plan instead (``_executor_topk``): same
     result, driver memory O(k)."""
@@ -972,8 +957,7 @@ def _topk_blockmax(
     order = np.argsort(-bounds, kind="mergesort")
     top: list[tuple[float, int]] = []  # (score, doc)
     theta = -math.inf
-    decoded: dict[tuple[int, int], tuple] = {}
-    blocks_decoded = 0
+    read: set[tuple[int, int]] = set()
     blocks_total = int(sum(s.block_last.size for s in term_list))
 
     for r in order:
@@ -985,13 +969,9 @@ def _topk_blockmax(
             b = int(blk_of[s.term_id][r])
             if b < 0:
                 continue
-            key = (s.term_id, b)
-            if key not in decoded:
-                decoded[key] = codec.slice_blocks(
-                    s.blob, s.block_offsets, int(s.df), b, b + 1
-                )
-                blocks_decoded += 1
-            doc_ids, _, npos, _ = decoded[key]
+            read.add((s.term_id, b))
+            doc_ids = s.doc_ids[b * BLOCK_SIZE : (b + 1) * BLOCK_SIZE]
+            npos = s.tf[b * BLOCK_SIZE : (b + 1) * BLOCK_SIZE]
             m = (doc_ids >= lo) & (doc_ids <= hi)
             if not m.any():
                 continue
@@ -1007,7 +987,7 @@ def _topk_blockmax(
         if len(top) >= k:
             theta = top[-1][0]
     top.sort(key=lambda x: (-x[0], x[1]))
-    stats = {"blocks_total": blocks_total, "blocks_decoded": blocks_decoded}
+    stats = {"blocks_total": blocks_total, "blocks_decoded": len(read)}
     return [(d, score) for score, d in top[:k]], stats
 
 
@@ -1155,9 +1135,7 @@ def _theta_probe_many(
     so the window needs no exchange."""
     from pyspark.sql import Window
 
-    tf_rows = _decode_tf(
-        di, seg_rows.filter(f"term_id IN ({sql_list(probe_tids, 'bigint')})")
-    )
+    tf_rows = _postings(seg_rows.filter(f"term_id IN ({sql_list(probe_tids, 'bigint')})"))
     scored = sc.scored_rows(di, tf_rows, {t: idfs[t] for t in probe_tids})
     if len(probe_tids) == 1:
         scored = scored.orderBy(F.desc("c")).limit(k)
@@ -1186,10 +1164,10 @@ def _batched_prune_setup(
     ``_plan_probe`` cannot rule out; none when it rules out all).
 
     Returns None when no query has an indexed term, else
-    (per_q, idfs, seg_rows, keeper, thetas) where ``keeper`` is the
-    pruned decode's ``_block_keeper``, or None when nothing can be pruned
-    (every query single-term, void or thinner than k), and ``thetas``
-    maps each qid to its theta (−inf where it keeps every block)."""
+    (per_q, idfs, seg_rows, prune, thetas) where ``prune`` is the scoring
+    plan's ``_Pruning`` (it keeps every block when every query is
+    single-term, void or thinner than k), and ``thetas`` maps each qid to
+    its theta (−inf where it keeps every block)."""
     per_q = {
         qid: sorted({t for t, _ in tokenize_query(q)}) for qid, q in queries
     }
@@ -1204,7 +1182,8 @@ def _batched_prune_setup(
     # probe WOULD be the whole job
     multi = {qid: tids for qid, tids in per_q.items() if len(tids) > 1}
     thetas: dict[str, float] = {qid: -math.inf for qid in per_q}
-    keeper = None
+    term_specs: dict[int, list[dict]] = {}
+    overlap: dict[int, _OverlapMeta] = {}
     if multi:
         ub, overlap = _collect_prune_meta(meta, union, idfs, sc)
         plans = {
@@ -1213,7 +1192,6 @@ def _batched_prune_setup(
         }
         probes = sorted({p for _, p in plans.values() if p is not None})
         probed = _theta_probe_many(di, sc, seg_rows, probes, idfs, k) if probes else {}
-        term_specs: dict[int, list[dict]] = {}
         for qid, tids in per_q.items():
             big_rest, probe = plans.get(qid, ({}, None))
             thetas[qid] = -math.inf if probe is None else probed[probe]
@@ -1224,25 +1202,25 @@ def _batched_prune_setup(
             }
             for t in tids:
                 term_specs.setdefault(t, []).append(spec)
-        if any(math.isfinite(theta) for theta in thetas.values()):
-            keeper = _block_keeper(sc, idfs, term_specs, overlap)
-    return per_q, idfs, seg_rows, keeper, thetas
+    prune = _prune(sc, {t: meta[t] for t in union}, idfs, term_specs, overlap)
+    return per_q, idfs, seg_rows, prune, thetas
 
 
 def _topk_plan(
     di: DiskIndex, queries: list[tuple[str, str]], k: int, scorer: str
-) -> tuple[DataFrame | None, dict[str, float]]:
+) -> tuple[DataFrame | None, dict[str, float], _Pruning | None]:
     """The executor top-k plan with RAW scores, (qid, doc_id, score,
-    rank), and each qid's theta. The plan is None when no query has an
-    indexed term. See ``topk_scores_many``."""
+    rank), each qid's theta and the plan's ``_Pruning`` (its block
+    counts). The plan is None when no query has an indexed term. See
+    ``topk_scores_many``."""
     from pyspark.sql import Window
 
     sc = _Scorer.of(di, scorer)
     setup = _batched_prune_setup(di, queries, k, sc)
     if setup is None:
-        return None, {}
-    per_q, idfs, seg_rows, keeper, thetas = setup
-    scored = sc.scored_rows(di, _decode_tf(di, seg_rows, keeper), idfs)
+        return None, {}, None
+    per_q, idfs, seg_rows, prune, thetas = setup
+    scored = sc.scored_rows(di, _postings(seg_rows, prune), idfs)
     # k-boundary ties are ordered by ROUND(score, 6) DESC, doc_id — the
     # oracle's tie semantics — not by raw float: partial-agg order in the
     # sum is nondeterministic, so raw scores can differ in the last ulp
@@ -1264,7 +1242,7 @@ def _topk_plan(
                 "score",
                 (F.monotonically_increasing_id() + 1).alias("rank"),
             )
-        ), thetas
+        ), thetas, prune
     # tf rows route by the query's INDEX in the set (a number the engine
     # made, so the route map is SQL text); the qid strings come back from
     # one JSON constant on the k rows per query that survive the window
@@ -1287,7 +1265,7 @@ def _topk_plan(
     )
     return agg.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= k
-    ).select(qid.alias("qid"), "doc_id", "score", "rank"), thetas
+    ).select(qid.alias("qid"), "doc_id", "score", "rank"), thetas, prune
 
 
 def _executor_topk(
@@ -1295,15 +1273,13 @@ def _executor_topk(
 ) -> tuple[list[tuple[int, float]], dict]:
     """The executor route of the driver entry points: the executor top-k
     plan on a one-query set, collected with RAW scores in rank order —
-    the driver holds k rows. Its stats are the tf decode's block counts
-    over that collect (the theta probe's decode is not in them) and the
-    query's theta."""
-    plan, thetas = _topk_plan(di, [("q", query)], k, scorer)
-    read, decoded = di.blocks_read.value, di.blocks_decoded.value
+    the driver holds k rows. Its stats are the scoring plan's own block
+    counts (``_Pruning.stats``; the theta probe's rows are not in them)
+    and the query's theta."""
+    plan, thetas, prune = _topk_plan(di, [("q", query)], k, scorer)
     rows = [] if plan is None else sorted(plan.collect(), key=lambda r: r["rank"])
     stats = {
-        "blocks_total": di.blocks_read.value - read,
-        "blocks_decoded": di.blocks_decoded.value - decoded,
+        **(prune.stats() if prune else {"blocks_total": 0, "blocks_decoded": 0}),
         "theta": thetas.get("q", -math.inf),
         "path": "distributed",
     }
@@ -1328,14 +1304,14 @@ def topk_scores_many(
       (``_scan_term_meta``) serves the df, idfs and prune metadata of the
       union of the queries' terms; none runs when they are cached.
     - Pruned segment scan (bucket isin ∪buckets + term_id isin ∪terms —
-      partition pruning + predicate pushdown) → ONE mapInArrow
-      BLOCK-MAX-PRUNED blob decode to (term_id, doc_id, tf), once per
-      term: each query q gets a theta_q from a rarest-term probe (one job
-      for all queries; skipped when ``_plan_probe`` proves it cannot
-      prune), and block b of term t is decoded iff ANY query using t
-      could still place a doc from b in its top k (``_decode_tf`` with a
-      ``_block_keeper`` — the result stays EXACT, see its soundness
-      note). Nothing to prune → the same kernel decodes whole blobs.
+      partition pruning + predicate pushdown) → BLOCK-MAX-PRUNED postings
+      (term_id, doc_id, tf) as JVM expressions over the rows' arrays
+      (``_postings``), once per term: each query q gets a theta_q from a
+      rarest-term probe (one job for all queries; skipped when
+      ``_plan_probe`` proves it cannot prune), and block b of term t is
+      kept iff ANY query using t could still place a doc from b in its
+      top k (``_prune`` — the result stays EXACT, see its soundness
+      note). Nothing to prune → every row's arrays are zipped whole.
     - The contribution as one Column expression (``_Scorer.scored_rows``):
       BM25 joins the doc-partitioned dl sidecar ONCE, per posting, before
       any per-query fan-out.
@@ -1356,18 +1332,19 @@ def topk_scores_many(
     building the plan costs a fixed number of Py4J round trips however
     many terms or queries it carries; qids never enter SQL text.
 
-    No Python stage runs above the decode. Ties at the k boundary use the
+    No Python stage runs in the plan. Ties at the k boundary use the
     oracle's (round(score,6) DESC, doc_id) order, and scores come out
     rounded to 6 dp. Queries whose tokens match no indexed term
     contribute no rows. Query operators (``-x``/``site:``) are not
     interpreted — the score-ordered family ranks the raw token bag, like
     the driver ``topk_*`` entry points.
 
-    Records ``last_stats = {"theta": {qid: theta}}`` on the function
-    attribute; the plan's block counts are the deltas of
-    ``di.blocks_read`` / ``di.blocks_decoded`` around its collect."""
-    plan, thetas = _topk_plan(di, queries, k, scorer)
-    topk_scores_many.last_stats = {"theta": thetas}
+    Records ``last_stats = {"theta": {qid: theta}, "blocks": prune}`` on
+    the function attribute: ``prune.stats()`` gives the plan's block
+    counts once it has been collected (``prune`` is None when no query has
+    an indexed term)."""
+    plan, thetas, prune = _topk_plan(di, queries, k, scorer)
+    topk_scores_many.last_stats = {"theta": thetas, "blocks": prune}
     if plan is None:
         return di.empty_result().select(
             F.lit("").alias("qid"), "doc_id", "score", "rank"

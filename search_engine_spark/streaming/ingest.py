@@ -147,7 +147,7 @@ def ingest_batch(
     """
     _check_doc_store_layout(index_dir)
     if os.path.exists(os.path.join(index_dir, "meta.json")):
-        read_meta(index_dir)  # an index without avgdl is rejected here
+        read_meta(index_dir)  # an older index (no avgdl, other format) is rejected here
     spark = batch_df.sparkSession
     _heal_compaction(index_dir)
     if compact_every and _live_gens(index_dir, exclude=batch_id) >= compact_every:
@@ -280,7 +280,7 @@ def compact_index(
     merged = merge_salted(seg_all.drop("gen"))
     tmp = os.path.join(index_dir, "_segments_tmp")
     shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, f"gen={base}"))
+    _write_segments(merged, os.path.join(tmp, f"gen={base}"))
     os.rename(os.path.join(tmp, f"gen={base}"), os.path.join(seg_root, f"gen={base}"))
     shutil.rmtree(tmp, ignore_errors=True)
     append_manifest(index_dir, {"compact": base, "folded": fold})

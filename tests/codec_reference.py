@@ -1,10 +1,15 @@
-"""A plain-Python per-term postings writer, written line by line from the
-blob layout in the ``search_engine_spark.functions.codec`` docstring. It
-shares no code with the engine, so the engine's one writer
+"""A plain-Python per-term segment row writer, written line by line from
+the row layout in the ``search_engine_spark.functions.codec`` docstring.
+It shares no code with the engine, so the engine's one writer
 (``codec.encode_postings``) and everything built on it are tested
-against an independent encoding, byte for byte."""
+against an independent encoding, column for column and byte for byte."""
 
 BLOCK_SIZE = 128
+
+COLUMNS = (
+    "doc_ids", "tf", "title_end", "blob", "block_last", "block_max_tf", "block_offsets",
+    "df", "ctf",
+)
 
 
 def leb128(v: int) -> bytes:
@@ -31,9 +36,9 @@ def position_deltas(positions: list[int], title_end: int) -> list[int]:
     return out
 
 
-def reference_encode(doc_ids, title_ends, positions):
-    """One term's postings -> (blob, block_last, block_max_tf,
-    block_offsets, df, ctf).
+def reference_encode(doc_ids, title_ends, positions) -> dict:
+    """One term's postings -> its segment row: {column: value} for every
+    name in ``COLUMNS`` (lists, bytes and ints).
 
     ``doc_ids`` ascending; ``title_ends[i]`` and the position list
     ``positions[i]`` (title field first, each field ascending) of doc i.
@@ -41,25 +46,23 @@ def reference_encode(doc_ids, title_ends, positions):
     doc_ids = [int(d) for d in doc_ids]
     title_ends = [int(t) for t in title_ends]
     positions = [[int(p) for p in ps] for ps in positions]
-    blob = bytearray(leb128(len(doc_ids)))  # header: n_docs
+    blob = bytearray()
     block_last, block_max_tf, block_offsets = [], [], []
-    for lo in range(0, len(doc_ids), BLOCK_SIZE):
-        docs = doc_ids[lo : lo + BLOCK_SIZE]
-        tes = title_ends[lo : lo + BLOCK_SIZE]
-        pls = positions[lo : lo + BLOCK_SIZE]
-        block_offsets.append(len(blob))
-        prev = None
-        for d in docs:  # gaps; the block's first is the absolute doc_id
-            blob += leb128(d if prev is None else d - prev)
-            prev = d
-        for pl in pls:  # npos
-            blob += leb128(len(pl))
-        for te in tes:  # title_end
-            blob += leb128(te)
-        for pl, te in zip(pls, tes):  # pdeltas
-            for x in position_deltas(pl, te):
-                blob += leb128(x)
-        block_last.append(docs[-1])
-        block_max_tf.append(max(len(pl) for pl in pls))
-    ctf = sum(len(pl) for pl in positions)
-    return bytes(blob), block_last, block_max_tf, block_offsets, len(doc_ids), ctf
+    for i, (pl, te) in enumerate(zip(positions, title_ends)):
+        if i % BLOCK_SIZE == 0:
+            block_offsets.append(len(blob))
+            block_last.append(doc_ids[min(i + BLOCK_SIZE, len(doc_ids)) - 1])
+            block_max_tf.append(max(len(p) for p in positions[i : i + BLOCK_SIZE]))
+        for x in position_deltas(pl, te):
+            blob += leb128(x)
+    return {
+        "doc_ids": doc_ids,
+        "tf": [len(pl) for pl in positions],
+        "title_end": title_ends,
+        "blob": bytes(blob),
+        "block_last": block_last,
+        "block_max_tf": block_max_tf,
+        "block_offsets": block_offsets,
+        "df": len(doc_ids),
+        "ctf": sum(len(pl) for pl in positions),
+    }

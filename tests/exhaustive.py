@@ -20,10 +20,9 @@ def _exhaustive(di: DiskIndex, query: str, k: int, scorer: str) -> list[tuple[in
         ids, dl = di.doc_lengths()
     acc: dict[int, float] = {}
     for seg in segs.values():
-        doc_ids, _, npos, _ = seg.decode()
-        dld = dl[np.searchsorted(ids, doc_ids)].astype(np.float64) if sc.bm25 else 0.0
-        contrib = sc.contrib(npos, sc.idf(seg.df), dld)
-        for d, c in zip(doc_ids.tolist(), contrib.tolist()):
+        dld = dl[np.searchsorted(ids, seg.doc_ids)].astype(np.float64) if sc.bm25 else 0.0
+        contrib = sc.contrib(seg.tf, sc.idf(seg.df), dld)
+        for d, c in zip(seg.doc_ids.tolist(), contrib.tolist()):
             acc[d] = acc.get(d, 0.0) + c
     return sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
 

@@ -1,17 +1,18 @@
 """Codec unit tests: varint + delta roundtrip, block metadata, block
 slicing. Mirrors the reference's roundtrip property test
-(index/core/indexer_test.go:24-44) on the upgraded delta+varint format.
-The engine's one writer (``codec.encode_postings``) and its inverse
-(``codec.unpack_postings``) are checked against the plain-Python writer
-in ``tests/codec_reference.py``. No Spark needed, except for the two
-real-build tests."""
+(index/core/indexer_test.go:24-44) on the columnar rows with delta+varint
+positions. The engine's one writer (``codec.encode_postings``), its
+span finder (``codec.position_spans``) and the position decode
+(``codec.decode_positions``) are checked against the plain-Python
+writer in ``tests/codec_reference.py``. No Spark needed, except for the
+two real-build tests."""
 
 import numpy as np
 import pytest
 
 from search_engine_spark.functions import codec
 from search_engine_spark.operators.segments import merge_term_rows
-from tests.codec_reference import reference_encode
+from tests.codec_reference import COLUMNS, reference_encode
 
 
 def _write(term_ids, doc_ids, title_ends, positions, seed=None):
@@ -37,15 +38,34 @@ def _write(term_ids, doc_ids, title_ends, positions, seed=None):
     )
 
 
-def _assert_row(eb, k, ref):
-    """Row ``k`` of an engine encode equals a ``reference_encode`` result
-    in every field: blob, sidecar, df and ctf."""
-    blob, last, maxtf, offs, df, ctf = ref
-    assert bytes(eb.blobs[k]) == blob
-    assert eb.block_last[k].tolist() == last
-    assert eb.block_max_tf[k].tolist() == maxtf
-    assert eb.block_offsets[k].tolist() == offs
-    assert (int(eb.dfs[k]), int(eb.ctfs[k])) == (df, ctf)
+def _as_lists(row) -> dict:
+    """A segment row (an ``EncodedBucket.row`` dict or a Spark Row) with
+    every array as a list and the blob as bytes."""
+    return {
+        c: bytes(row[c]) if c == "blob"
+        else int(row[c]) if c in ("df", "ctf")
+        else [int(x) for x in row[c]]
+        for c in COLUMNS
+    }
+
+
+def _assert_row(row, ref):
+    """A segment row equals a ``reference_encode`` result in every column:
+    the arrays, blob, sidecar, df and ctf."""
+    assert _as_lists(row) == ref
+
+
+def _merge(term_id, parts):
+    """``merge_term_rows`` over reference-encoded rows, concatenated in
+    the given order as a fetch or a merge kernel concatenates them."""
+    return merge_term_rows(
+        term_id,
+        *(
+            np.concatenate([np.asarray(p[c], np.int64) for p in parts])
+            for c in ("doc_ids", "tf", "title_end")
+        ),
+        np.frombuffer(b"".join(p["blob"] for p in parts), np.uint8),
+    )
 
 
 def test_varint_roundtrip_edges():
@@ -58,23 +78,18 @@ def test_varint_roundtrip_edges():
 def test_reference_fixture_roundtrip():
     # indexer_test.go:24-44: postings docIds {5,6,7} positions
     # [1,2,3],[4,6,8],[6,7,8] — titleEnd 0.
-    blob, last, maxtf, offs, *_ = reference_encode(
-        [5, 6, 7], [0, 0, 0], [[1, 2, 3], [4, 6, 8], [6, 7, 8]]
-    )
-    d, te, pc, pos = codec.decode_term_postings(blob)
-    assert d.tolist() == [5, 6, 7]
-    assert te.tolist() == [0, 0, 0]
-    assert pc.tolist() == [3, 3, 3]
+    ref = reference_encode([5, 6, 7], [0, 0, 0], [[1, 2, 3], [4, 6, 8], [6, 7, 8]])
+    pos = codec.decode_positions(ref["blob"], ref["tf"], ref["title_end"])
+    assert ref["doc_ids"] == [5, 6, 7] and ref["tf"] == [3, 3, 3]
     assert pos.tolist() == [1, 2, 3, 4, 6, 8, 6, 7, 8]
-    assert last == [7] and maxtf == [3]
+    assert ref["block_last"] == [7] and ref["block_max_tf"] == [3]
 
 
 def test_title_body_field_split():
     # title positions [0, 7] then body positions [0, 3] (not globally
     # sorted — sorted within each field, indexer.go:129-134)
-    blob, *_ = reference_encode([42], [2], [[0, 7, 0, 3]])
-    d, te, pc, pos = codec.decode_term_postings(blob)
-    assert d.tolist() == [42] and te.tolist() == [2]
+    ref = reference_encode([42], [2], [[0, 7, 0, 3]])
+    pos = codec.decode_positions(ref["blob"], ref["tf"], ref["title_end"])
     assert pos.tolist() == [0, 7, 0, 3]
 
 
@@ -104,40 +119,46 @@ def test_bucket_roundtrip_random(seed):
     eb = _write(ti, di, tes, per_doc, seed=seed)
     for k, term in enumerate(eb.term_ids):
         m = ti == term
-        d, te, pc, pos = codec.decode_term_postings(eb.blobs[k])
-        assert (d == di[m]).all()
-        assert (pc == pcarr[m]).all()
+        row = eb.row(k)
+        assert (row["doc_ids"] == di[m]).all()
+        assert (row["tf"] == pcarr[m]).all()
         exp_pos = np.concatenate(
             [flat[ps[i] : ps[i] + pcarr[i]] for i in np.flatnonzero(m)]
         )
+        pos = codec.decode_positions(row["blob"], row["tf"], row["title_end"])
         assert (pos == exp_pos).all()
-        # block metadata + independent block decode
-        nb = len(eb.block_offsets[k])
+        # block metadata + independent block decode from its byte offset
+        offs = row["block_offsets"]
+        nb = len(offs)
         assert nb == (m.sum() + codec.BLOCK_SIZE - 1) // codec.BLOCK_SIZE
         for b in range(nb):
-            d2, _, pc2, _ = codec.slice_blocks(
-                eb.blobs[k], eb.block_offsets[k], int(m.sum()), b, b + 1
-            )
             lo, hi = b * codec.BLOCK_SIZE, (b + 1) * codec.BLOCK_SIZE
-            assert (d2 == di[m][lo:hi]).all()
-            assert eb.block_max_tf[k][b] == pcarr[m][lo:hi].max()
-            assert eb.block_last[k][b] == di[m][lo:hi][-1]
+            end = offs[b + 1] if b + 1 < nb else len(row["blob"])
+            pos_b = codec.decode_positions(
+                row["blob"][offs[b] : end], row["tf"][lo:hi], row["title_end"][lo:hi]
+            )
+            assert pos_b.tolist() == [x for i in np.flatnonzero(m)[lo:hi] for x in per_doc[i]]
+            assert row["block_max_tf"][b] == pcarr[m][lo:hi].max()
+            assert row["block_last"][b] == di[m][lo:hi][-1]
 
 
 def test_compression_beats_absolute():
-    # dense doc ids -> gaps of 1 -> one byte each regardless of magnitude
+    # positions are field-relative gaps: three body positions near 10^6
+    # cost 3 + 1 + 1 bytes, where absolute varints would cost 3 each; the
+    # doc ids are not in the blob at all
     docs = np.arange(10**6, 10**6 + 1000)
-    blob = _write(np.zeros(1000), docs, [0] * 1000, [[5]] * 1000).blobs[0]
-    # absolute varint of 1e6-range ids needs 3 bytes; gaps need 1
-    assert len(blob) < 1000 * (1 + 1 + 1 + 1) + 50
+    row = _write(np.zeros(1000), docs, [0] * 1000, [[10**6, 10**6 + 1, 10**6 + 2]] * 1000).row(0)
+    assert len(row["blob"]) == 1000 * (3 + 1 + 1)
+    assert row["doc_ids"].tolist() == docs.tolist()
 
 
 def test_packed_build_segments_byte_identical(spark, sf_dir):
-    """Every blob of the packed build (map-side pos_blob, spliced in the
-    encode kernel) is byte-identical to the plain-Python reference writer
-    applied to that term's postings in the pure-Python oracle — per salt
-    for the hot (salted) terms, both where the hot set needs a df count
-    and where every term is hot."""
+    """Every row of the packed build (map-side pos_blob, spliced in the
+    encode kernel) equals the plain-Python reference writer applied to
+    that term's postings in the pure-Python oracle, in every column (the
+    arrays, blob, sidecar, df and ctf) — per salt for the hot (salted)
+    terms, both where the hot set needs a df count and where every term
+    is hot."""
     from search_engine_spark.functions.tokenizer import term_to_id
     from search_engine_spark.functions.xxhash import xxhash64_long
     from search_engine_spark.operators.postings import (
@@ -176,20 +197,15 @@ def test_packed_build_segments_byte_identical(spark, sf_dir):
         }
         assert {(r.term_id, r.salt) for r in rows} == set(expected)
         for r in rows:
-            blob, last, maxtf, offs, df, ctf = expected[(r.term_id, r.salt)]
-            assert bytes(r.blob) == blob, (r.term_id, r.salt)
-            assert list(r.block_last) == last
-            assert list(r.block_max_tf) == maxtf
-            assert list(r.block_offsets) == offs
-            assert (r.df, r.ctf) == (df, ctf)
+            assert _as_lists(r) == expected[(r.term_id, r.salt)], (r.term_id, r.salt)
     docs.unpersist()
 
 
 @pytest.mark.parametrize("threshold", [50, 0])
 def test_unpack_write_roundtrip_real_build(spark, sf_dir, threshold):
-    """Every segment row of a salted build of the sf0.001 fixture: unpack
-    its blob, write it again with the one writer, and get back the row's
-    blob, sidecar, df and ctf byte for byte."""
+    """Every segment row of a salted build of the sf0.001 fixture: split
+    its blob into per-doc spans from the varint end bits, write them
+    again with the one writer, and get back the row in every column."""
     from search_engine_spark.operators.postings import (
         build_documents_from_testdata,
         build_postings_packed,
@@ -206,15 +222,19 @@ def test_unpack_write_roundtrip_real_build(spark, sf_dir, threshold):
     ).collect()
     assert len({r.salt for r in rows}) == 4
     for r in rows:
-        d, te, npos, starts, lens, raw = codec.unpack_postings(bytes(r.blob))
-        eb = codec.encode_postings(np.full(d.size, r.term_id), d, te, npos, starts, lens, raw)
-        ref = (bytes(r.blob), list(r.block_last), list(r.block_max_tf), list(r.block_offsets), r.df, r.ctf)
-        _assert_row(eb, 0, ref)
+        raw = np.frombuffer(bytes(r.blob), np.uint8)
+        tf = np.array(r.tf, np.int64)
+        starts, lens = codec.position_spans(raw, tf)
+        d = np.array(r.doc_ids, np.int64)
+        eb = codec.encode_postings(
+            np.full(d.size, r.term_id), d, np.array(r.title_end), tf, starts, lens, raw
+        )
+        assert _as_lists(eb.row(0)) == _as_lists(r)
 
 
 def test_encode_bucket_packed_matches_reference():
     """The one writer, fed a bucket's rows in any order, gives every term
-    the plain-Python reference writer's bytes and sidecar."""
+    the plain-Python reference writer's row."""
     rng = np.random.default_rng(7)
     for _trial in range(10):
         rows = []
@@ -231,7 +251,7 @@ def test_encode_bucket_packed_matches_reference():
         assert list(eb.term_ids) == terms
         for i, term in enumerate(terms):
             mine = [r for r in rows if r[0] == term]
-            _assert_row(eb, i, reference_encode(*zip(*[r[1:] for r in mine])))
+            _assert_row(eb.row(i), reference_encode(*zip(*[r[1:] for r in mine])))
 
 
 def test_pack_position_deltas_trailing_empty_docs():
@@ -293,20 +313,22 @@ EDGE_CASES = {
 
 @pytest.mark.parametrize("case", sorted(EDGE_CASES))
 def test_unpack_edge_cases(case):
-    """Unpack yields each doc's integers and exactly its packed pdelta
-    bytes, and writing them again gives the same blob and sidecar."""
+    """The end bits and tf give each doc exactly its packed pdelta bytes,
+    and writing those spans again gives the same row."""
     from tests.codec_reference import leb128, position_deltas
 
     doc_ids, tes, positions = EDGE_CASES[case]
     ref = reference_encode(doc_ids, tes, positions)
-    d, te, npos, starts, lens, raw = codec.unpack_postings(ref[0])
-    assert d.tolist() == doc_ids and te.tolist() == tes
-    assert npos.tolist() == [len(p) for p in positions]
+    raw = np.frombuffer(ref["blob"], np.uint8)
+    starts, lens = codec.position_spans(raw, ref["tf"])
     for i, (pl, t) in enumerate(zip(positions, tes)):
         span = raw[starts[i] : starts[i] + lens[i]].tobytes()
         assert span == b"".join(leb128(x) for x in position_deltas(pl, t))
-    eb = codec.encode_postings(np.zeros(d.size), d, te, npos, starts, lens, raw)
-    _assert_row(eb, 0, ref)
+    d = np.array(doc_ids, np.int64)
+    eb = codec.encode_postings(
+        np.zeros(d.size), d, np.array(tes), np.array(ref["tf"]), starts, lens, raw
+    )
+    _assert_row(eb.row(0), ref)
 
 
 def _split(case, how):
@@ -320,7 +342,7 @@ def _split(case, how):
     else:
         groups = [list(range(k, n, 3)) for k in range(3)]
     return [
-        reference_encode(*([col[i] for i in g] for col in (doc_ids, tes, positions)))[0]
+        reference_encode(*([col[i] for i in g] for col in (doc_ids, tes, positions)))
         for g in groups
         if g
     ]
@@ -330,52 +352,53 @@ def _split(case, how):
 @pytest.mark.parametrize("case", sorted(EDGE_CASES))
 def test_merge_edge_cases(case, how):
     """A read-merge of a term's parts equals the reference encode of all
-    its postings, in every field."""
+    its postings, in every column."""
     parts = _split(case, how)
     ref = reference_encode(*EDGE_CASES[case])
-    _assert_row(merge_term_rows(11, parts), 0, ref)
-    _assert_row(merge_term_rows(11, parts[::-1]), 0, ref)
+    _assert_row(_merge(11, parts).row(0), ref)
+    _assert_row(_merge(11, parts[::-1]).row(0), ref)
 
 
 def test_merge_never_decodes_a_position(monkeypatch):
-    """With position decoding made to raise, every merge still returns
-    the same bytes: a merge splices position bytes, it never rebuilds
-    positions."""
+    """With varint decoding and position rebuilding made to raise, every
+    merge still returns the same rows: a merge splices position bytes
+    found from the end bits, it never decodes a varint."""
     cases = [(case, how) for case in sorted(EDGE_CASES) for how in ("one_doc", "interleaved")]
-    before = [merge_term_rows(11, _split(c, h)).blobs[0] for c, h in cases]
+    before = [_as_lists(_merge(11, _split(c, h)).row(0)) for c, h in cases]
 
-    def no_positions(*_args):
-        raise AssertionError("a merge decoded a position")
+    def no_decode(*_args):
+        raise AssertionError("a merge decoded a varint")
 
-    monkeypatch.setattr(codec, "_segmented_cumsum", no_positions)
+    monkeypatch.setattr(codec, "varint_decode", no_decode)
+    monkeypatch.setattr(codec, "_segmented_cumsum", no_decode)
+    part = _split("df_127", "one_doc")[1]
     with pytest.raises(AssertionError):
-        codec.decode_term_postings(_split("df_127", "one_doc")[1])
-    assert [merge_term_rows(11, _split(c, h)).blobs[0] for c, h in cases] == before
-
+        codec.decode_positions(part["blob"], part["tf"], part["title_end"])
+    assert [_as_lists(_merge(11, _split(c, h)).row(0)) for c, h in cases] == before
 
 
 @pytest.mark.parametrize("case", sorted(EDGE_CASES))
 def test_decode_edge_cases(case):
-    """The full decode and every block range of ``slice_blocks`` give back
-    the reference encode's input, zero-position docs included wherever
-    they sit: mid-blob, last in the blob, in an all-empty term, last in a
+    """The full position decode, the decode of every block range from its
+    byte offsets and the decode of every single doc give back the
+    reference encode's input, zero-position docs included wherever they
+    sit: mid-blob, last in the blob, in an all-empty term, last in a
     128-doc block."""
     doc_ids, tes, positions = EDGE_CASES[case]
-    blob, _, _, offs, df, _ = reference_encode(doc_ids, tes, positions)
+    ref = reference_encode(doc_ids, tes, positions)
+    blob, tf, te, offs = ref["blob"], np.array(ref["tf"]), np.array(tes), ref["block_offsets"]
 
-    def assert_docs(got, lo, hi):
-        d, te, npos, flat = got
-        assert d.tolist() == doc_ids[lo:hi]
-        assert te.tolist() == tes[lo:hi]
-        assert npos.tolist() == [len(p) for p in positions[lo:hi]]
-        assert flat.tolist() == [p for pl in positions[lo:hi] for p in pl]
+    def flat(lo, hi):
+        return [p for pl in positions[lo:hi] for p in pl]
 
-    assert_docs(codec.decode_term_postings(blob), 0, df)
-    offs = np.asarray(offs, np.int64)
-    for lo_b in range(offs.size):
-        for hi_b in range(lo_b + 1, offs.size + 1):
-            assert_docs(
-                codec.slice_blocks(blob, offs, df, lo_b, hi_b),
-                lo_b * codec.BLOCK_SIZE,
-                min(df, hi_b * codec.BLOCK_SIZE),
+    assert codec.decode_positions(blob, tf, te).tolist() == flat(0, len(doc_ids))
+    bs = codec.BLOCK_SIZE
+    for lo_b in range(len(offs)):
+        for hi_b in range(lo_b + 1, len(offs) + 1):
+            end = offs[hi_b] if hi_b < len(offs) else len(blob)
+            got = codec.decode_positions(
+                blob[offs[lo_b] : end], tf[lo_b * bs : hi_b * bs], te[lo_b * bs : hi_b * bs]
             )
+            assert got.tolist() == flat(lo_b * bs, hi_b * bs)
+    for i in range(len(doc_ids)):
+        assert codec.decode_positions(blob, tf, te, np.array([i])).tolist() == flat(i, i + 1)

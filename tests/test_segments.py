@@ -63,7 +63,8 @@ def _oracle_df_ctf(oracle) -> dict[str, tuple[int, int]]:
 
 
 def test_segments_match_postings(spark, docs, oracle):
-    """Merged segment blobs decode back to exactly the reference postings."""
+    """Merged segment rows hold exactly the reference postings: their
+    arrays, and their blobs' positions."""
     from search_engine_spark.functions import codec
 
     seg = merge_salted(
@@ -84,11 +85,13 @@ def test_segments_match_postings(spark, docs, oracle):
     hot = max(exp, key=lambda t: exp[t][0])
     rare = min(exp, key=lambda t: exp[t][0])
     for term in (hot, rare):
-        d, te, pc, pos = codec.decode_term_postings(bytes(rows[term]["blob"]))
+        r = rows[term]
+        d, te, pc = r["doc_ids"], r["title_end"], r["tf"]
+        pos = codec.decode_positions(bytes(r["blob"]), pc, te)
         plist = [oracle.postings[term][k] for k in sorted(oracle.postings[term])]
-        assert d.tolist() == [p.doc_id for p in plist]
-        assert te.tolist() == [p.title_end for p in plist]
-        assert pc.tolist() == [len(p.positions) for p in plist]
+        assert d == [p.doc_id for p in plist]
+        assert te == [p.title_end for p in plist]
+        assert pc == [len(p.positions) for p in plist]
         assert pos.tolist() == [x for p in plist for x in p.positions]
 
 
@@ -157,6 +160,32 @@ def test_resume_skips_completed_shards(spark, docs, oracle, tmp_path):
     assert_rank_identical(got, oracle.search("table"))
 
 
+def test_resume_rebuilds_shards_of_another_format(spark, docs, oracle, tmp_path):
+    """A shard whose manifest row carries no segment format (written
+    before the columnar rows) is not skipped on resume: it is rebuilt,
+    and the index answers like the reference."""
+    path = str(tmp_path / "idx")
+    kw = dict(n_buckets=8, n_shards=2, n_salts=2, salt_threshold=50)
+    write_index(docs, path, **kw)
+    man = os.path.join(path, "manifest.jsonl")
+    rows = [json.loads(x) for x in open(man)]
+    rows[1].pop("format")
+    with open(man, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
+
+    def success_mtime(shard: int) -> float:
+        return os.path.getmtime(os.path.join(path, "segments", f"shard={shard}", "_SUCCESS"))
+
+    old = rows[1]["shard"]
+    before = {s: success_mtime(s) for s in (0, 1)}
+    write_index(docs, path, **kw)
+    assert success_mtime(old) != before[old]
+    assert success_mtime(1 - old) == before[1 - old]
+    di = load_index(spark, path)
+    got = [(r.doc_id, r.score) for r in wand.search_segments(di, "table spark").collect()]
+    assert_rank_identical(got, oracle.search("table spark"))
+
+
 def test_torn_manifest_line_rebuilds_only_that_shard(spark, docs, oracle, tmp_path):
     """A build killed mid-append leaves a torn last manifest line: resume
     treats that shard as not written, rebuilds only it, and the result
@@ -206,9 +235,9 @@ def test_manifest_malformed_middle_line_raises(tmp_path):
 
 def test_merge_term_rows_matches_loop_merge():
     """The read-merge of one term's rows splices each doc's position
-    bytes in one vectorized writer; a per-doc loop over the same decoded
-    parts, then the plain-Python reference writer, is the reference, byte
-    for byte."""
+    bytes in one vectorized writer; a per-doc loop over the same parts'
+    decoded positions, then the plain-Python reference writer, is the
+    reference, column for column."""
     from search_engine_spark.functions import codec
     from tests.codec_reference import reference_encode
 
@@ -223,19 +252,22 @@ def test_merge_term_rows_matches_loop_merge():
             npos = rng.integers(1, 5, size=d.size)
             pos = [np.sort(rng.choice(300, size=n, replace=False)) for n in npos]
             te = np.array([rng.integers(0, n + 1) for n in npos], np.int64)
-            blobs.append(reference_encode(d, te, pos)[0])
-        parts = [codec.decode_term_postings(b) for b in blobs]
-        d, te, npos = (np.concatenate([p[i] for p in parts]) for i in range(3))
-        flat = np.concatenate([p[3] for p in parts])
+            blobs.append(reference_encode(d, te, pos))
+        d, te, npos = (
+            np.concatenate([b[c] for b in blobs]) for c in ("doc_ids", "title_end", "tf")
+        )
+        flat = np.concatenate(
+            [codec.decode_positions(b["blob"], b["tf"], b["title_end"]) for b in blobs]
+        )
         starts = np.concatenate([[0], np.cumsum(npos)[:-1]])
         order = np.argsort(d, kind="mergesort")
         gather = [flat[starts[i] : starts[i] + npos[i]] for i in order]
-        exp_blob, *exp_meta = reference_encode(d[order], te[order], gather)
-        got = merge_term_rows(9, blobs)
-        assert bytes(got.blobs[0]) == exp_blob
-        for field, exp in zip(("block_last", "block_max_tf", "block_offsets", "dfs", "ctfs"), exp_meta):
-            g = getattr(got, field)[0]
-            assert np.array_equal(g, exp), field
+        exp = reference_encode(d[order], te[order], gather)
+        raw = np.frombuffer(b"".join(b["blob"] for b in blobs), np.uint8)
+        got = merge_term_rows(9, d, npos, te, raw).row(0)
+        for c, v in exp.items():
+            g = got[c]
+            assert (bytes(g) == v) if c == "blob" else np.array_equal(g, v), c
 
 
 def test_fingerprint_invalidates_on_input_change(spark, docs, tmp_path):
@@ -528,8 +560,9 @@ def test_build_segments_threshold_shortcut_byte_identical(spark, docs):
 
     def rows(df: DataFrame) -> list[tuple]:
         return sorted(
-            (r.bucket, r.term_id, r.salt, r.df, r.ctf, r.n_docs, bytes(r.blob),
-             tuple(r.block_last), tuple(r.block_max_tf), tuple(r.block_offsets))
+            (r.bucket, r.term_id, r.salt, r.df, r.ctf, tuple(r.doc_ids), tuple(r.tf),
+             tuple(r.title_end), bytes(r.blob), tuple(r.block_last),
+             tuple(r.block_max_tf), tuple(r.block_offsets))
             for r in df.collect()
         )
 

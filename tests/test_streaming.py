@@ -349,6 +349,32 @@ def test_meta_without_avgdl_rejected(spark, thirds, tmp_root):
     assert not os.path.exists(os.path.join(d, "documents", "gen=1"))
 
 
+def test_older_segment_format_rejected(spark, thirds, tmp_root):
+    """An index whose segment rows predate the columnar format has no
+    ``format`` in its meta.json: loading it and ingesting into it both
+    fail with a rebuild message, and the ingest writes nothing."""
+    import json
+
+    from search_engine_spark.operators.segments import SEGMENT_FORMAT
+    from search_engine_spark.streaming.ingest import ingest_batch
+
+    d = os.path.join(tmp_root, "format_1_idx")
+    _ingest(thirds[:1], d)
+    meta_path = os.path.join(d, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["format"] == SEGMENT_FORMAT
+    del meta["format"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="segment format 1.*Rebuild"):
+        load_index(spark, d)
+    with pytest.raises(ValueError, match="segment format 1.*Rebuild"):
+        ingest_batch(thirds[1], 1, d, n_buckets=8, n_salts=2)
+    assert not os.path.exists(os.path.join(d, "documents", "gen=1"))
+    assert not os.path.exists(os.path.join(d, "segments", "gen=1"))
+
+
 def test_replay_after_doc_store_commit(spark, thirds, tmp_root):
     """A batch killed after its doc-store commit (documents/gen=N written,
     no segments/gen=N, no manifest row) replays to exactly the index of a

@@ -56,14 +56,11 @@ def _one_query_stats(di, query, scorer="bm25", k=10):
 
 
 def _counted_collect(di, df):
-    """Rows of ``df`` and the tf decode's block counts over that collect:
-    the deltas of the handle's accumulators."""
-    read, decoded = di.blocks_read.value, di.blocks_decoded.value
+    """Rows of ``df``, the plan the last ``topk_scores_many`` call
+    returned, and that plan's own block counts, read after the collect."""
+    blocks = wand.topk_scores_many.last_stats["blocks"]
     rows = df.collect()
-    return rows, {
-        "blocks_total": di.blocks_read.value - read,
-        "blocks_decoded": di.blocks_decoded.value - decoded,
-    }
+    return rows, blocks.stats()
 
 
 @pytest.mark.parametrize("query", QUERIES)
@@ -170,6 +167,35 @@ def test_distributed_blockmax_prunes_hot_term(spark, hot_rare_index, scorer):
     _assert_rank_identical(dist, driver)
 
 
+@pytest.mark.parametrize("scorer", ["bm25", "tfidf"])
+def test_big_rows_keep_blocks_in_sql(spark, hot_rare_index, monkeypatch, scorer):
+    """With ``SMALL_TERM_POSTINGS`` below the hot term's row size, its
+    rows ship no block arrays to the driver and keep blocks through the
+    SQL filter over their own block_max_tf, counted by the plan's
+    observation; the rarer rows keep the driver's ranges. The executor
+    top-k still equals the exhaustive sum, and the plan keeps some blocks
+    but not all."""
+    monkeypatch.setattr(wand, "SMALL_TERM_POSTINGS", 500)
+    query = "common needle x1"
+    di = load_index(spark, hot_rare_index)
+    fn = wand.topk_bm25_wand if scorer == "bm25" else wand.topk_wand
+    exhaustive = topk_bm25_exhaustive if scorer == "bm25" else topk_exhaustive
+    got = fn(di, query, 10, max_driver_postings=0)
+    st = fn.last_stats
+    assert math.isfinite(st["theta"]), st
+    assert 0 < st["blocks_decoded"] < st["blocks_total"], st
+    _assert_rank_identical(got, exhaustive(load_index(spark, hot_rare_index), query, 10))
+    # the hot term's rows took the SQL filter
+    df = wand.topk_scores_many(load_index(spark, hot_rare_index), [("q", query)], 10, scorer)
+    prune = wand.topk_scores_many.last_stats["blocks"]
+    df.collect()
+    common = {t for t, _ in tokenize_query("common")}
+    assert common <= set(prune.min_tf) and prune.observed is not None
+    assert prune.stats() == {k: st[k] for k in ("blocks_total", "blocks_decoded")}
+    rows = wand._term_rows(di, sorted(common)).select("df").collect()
+    assert min(r["df"] for r in rows) > 500
+
+
 def test_distributed_prune_keeps_scores_exact_on_scatter(spark, hot_rare_index):
     """Query where the rare term is NOT clustered: winners picked via the
     rare term must still carry their full hot-term contribution (a pruned
@@ -239,7 +265,7 @@ def test_topk_many_empty_query_set(spark, index_dir):
 def test_topk_many_blockmax_prunes_hot_term(spark, hot_rare_index):
     """Verdict r4 #2: the BATCHED plan must skip blocks on a batch that
     contains a hot+rare query — blocks_decoded < blocks_total, counted by
-    the decode topk_scores_many runs — while every query in the batch
+    the plan topk_scores_many returns — while every query in the batch
     stays row-identical to its single-query plan."""
     di = load_index(spark, hot_rare_index)
     # "w3" is ONE bigram -> a genuinely single-term query in the batch
@@ -345,17 +371,20 @@ PYTHON_NODES = ("MapInArrow", "FlatMapGroupsInArrow", "ArrowEvalPython", "BatchE
 @pytest.mark.parametrize("qset", [[("q", "common needle")], BATCH_OF_FOUR],
                          ids=["one_query", "four_queries"])
 def test_scoring_plan_python_boundary(spark, hot_rare_index, qset):
-    """The executed scoring plan evaluates Python exactly once — the
-    blob decode (one MapInArrow) — and scans no driver-built RDD: no
-    Python stage above the decode, no routing table shipped from the
-    driver."""
+    """The executed scoring plan evaluates no Python — doc ids and tf are
+    read as JVM expressions over the segment rows' arrays, block-max
+    pruned — and scans no driver-built RDD: no routing table shipped
+    from the driver."""
     di = load_index(spark, hot_rare_index)
     df = wand.topk_scores_many(di, qset, k=10)
     assert df.collect()
+    assert 0 < wand.topk_scores_many.last_stats["blocks"].stats()["blocks_decoded"]
     names = [n.nodeName() for n in _executed_nodes(df)]
     counts = {p: names.count(p) for p in PYTHON_NODES}
-    assert counts == {"MapInArrow": 1, "FlatMapGroupsInArrow": 0,
+    assert counts == {"MapInArrow": 0, "FlatMapGroupsInArrow": 0,
                       "ArrowEvalPython": 0, "BatchEvalPython": 0}, names
+    # the postings' inline, plus the batch's route explode
+    assert names.count("Generate") == (1 if len(qset) == 1 else 2), names
     assert not [n for n in names if "ExistingRDD" in n], names
 
 
@@ -367,20 +396,15 @@ def _scan_under(node):
 
 
 def test_executor_search_decodes_each_side_once(spark, index_dir, monkeypatch):
-    """The executor ``search_segments`` decodes each keyword or exclusion
-    side from its own pruned scan: the tf decode counts exactly the
-    blocks of each side's own segment rows, and each candidate scan
-    pushes down only its side's term ids."""
+    """The executor ``search_segments`` reads each keyword or exclusion
+    side from its own pruned scan, as a JVM ``explode(doc_ids)``: the
+    candidate collect holds no Python node and one Generate per side,
+    each over a scan that pushes down only its side's term ids. The
+    winners' positions collect holds at most one Python node."""
     from search_engine_spark.functions.tokenizer import tokenize_query
 
     di = load_index(spark, index_dir)
     sides = [sorted({t for t, _ in tokenize_query(w)}) for w in ("table", "spark", "scan")]
-    blocks = [
-        sum(-(-r["df"] // 128)
-            for r in di.segments.filter(F.col("term_id").isin(tids)).select("df").collect())
-        for tids in sides
-    ]
-    assert all(blocks), blocks
     frame = type(di.segments)
     collect = frame.collect
     collected = []
@@ -390,21 +414,29 @@ def test_executor_search_decodes_each_side_once(spark, index_dir, monkeypatch):
         return collect(df)
 
     monkeypatch.setattr(frame, "collect", spy)
-    read, decoded = di.blocks_read.value, di.blocks_decoded.value
     rows = wand.search_segments(di, "table spark -scan", max_driver_postings=0).collect()
     assert rows
-    assert di.blocks_decoded.value - decoded == sum(blocks)
-    assert di.blocks_read.value - read == sum(blocks)
-    # the candidate plan: the one collect with a MapInArrow per side
+    plans = [_executed_nodes(df) for df in collected]
+
+    def python_nodes(nodes):
+        return [n.nodeName() for n in nodes if n.nodeName() in PYTHON_NODES]
+
+    # the candidate plan: the one collect with a Generate per side
     (plan,) = [
-        nodes for df in collected
-        if len(nodes := [n for n in _executed_nodes(df) if n.nodeName() == "MapInArrow"]) == 3
+        nodes for nodes in plans
+        if len([n for n in nodes if n.nodeName() == "Generate"]) == 3
     ]
+    assert python_nodes(plan) == []
     pushed = []
     for node in plan:
+        if node.nodeName() != "Generate":
+            continue
         m = re.search(r"In\(term_id, \[([^\]]*)\]\)", _scan_under(node).toString())
         pushed.append(sorted(int(t) for t in m.group(1).split(",")))
     assert sorted(pushed) == sorted(sides), (pushed, sides)
+    # the winners' positions: the one Python stage of executor search
+    (positions,) = [nodes for nodes in plans if python_nodes(nodes)]
+    assert python_nodes(positions) == ["MapInArrow"]
 
 
 def test_site_valve_never_collects_site_rows(spark, index_dir):

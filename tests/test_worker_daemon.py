@@ -183,17 +183,21 @@ def test_cluster_workers_import_the_shipped_zip(tmp_path):
             "spark.python.daemon.module": "pyspark.daemon",
             "spark.executorEnv.PYTHONPATH": "/nonexistent",
             "spark.driver.memory": "1g"}})
-        blobs = [reference_encode(d, [1] * len(d), [[0, 3]] * len(d))[0]
+        import numpy as np
+        parts = [reference_encode(d, [1] * len(d), [[0, 3]] * len(d))
                  for d in ([2, 9, 40], [5, 6, 300])]
+        args = [np.array(sum((p[c] for p in parts), []), np.int64)
+                for c in ("doc_ids", "tf", "title_end")]
+        args.append(np.frombuffer(b"".join(p["blob"] for p in parts), np.uint8))
         def merge(batches):
             from search_engine_spark.functions import codec
             from search_engine_spark.operators.segments import merge_term_rows
             for _ in batches:
                 pass
-            blob = merge_term_rows(7, blobs).blobs[0]
+            blob = merge_term_rows(7, *args).row(0)["blob"]
             yield pa.RecordBatch.from_pydict({{"file": [codec.__file__], "blob": [blob]}})
         row = spark.range(1, numPartitions=1).mapInArrow(merge, "file string, blob binary").collect()[0]
-        same = bytes(row.blob) == merge_term_rows(7, blobs).blobs[0]
+        same = bytes(row.blob) == merge_term_rows(7, *args).row(0)["blob"]
         print("RESULT", json.dumps({{"file": row.file, "same": same}}), flush=True)
         spark.stop()
     """)

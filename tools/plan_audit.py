@@ -1,9 +1,12 @@
 """Reproduce the PLANS.md physical-plan audit.
 
 Run: python tools/plan_audit.py   (prints formatted plans for the key
-operators over the sf0.001 testdata, and for each query route a real run
+operators over the sf0.001 testdata, with the Python-evaluating nodes of
+every plan a query route collects, and for each query route a real run
 on cleared caches: its Spark jobs, the Py4J round trips the driver makes
-to build and collect it, and the blocks its tf decode reads)."""
+to build and collect it, and the blocks its scoring plan keeps). Exits
+non-zero if any collect of a query route other than the executor
+search's winners' positions has a Python node."""
 
 from __future__ import annotations
 
@@ -13,6 +16,28 @@ import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+PYTHON_NODES = ("MapInArrow", "FlatMapGroupsInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+def python_nodes(df) -> list[str]:
+    """Python-evaluating nodes of ``df``'s executed plan, query stages
+    opened (the final adaptive plan once ``df`` has run)."""
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        elif name == "ReusedExchange":
+            todo.append(node.child())
+        else:
+            found += [name] if name in PYTHON_NODES else []
+            children = node.children()
+            todo.extend(children.apply(i) for i in range(children.size()))
+    return found
 
 
 def count_round_trips() -> list[int]:
@@ -39,8 +64,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from search_engine_spark.functions.tokenizer import term_to_id
-    from search_engine_spark.functions.xxhash import bucket_of_term
     from search_engine_spark.operators import events as E
+    from search_engine_spark.operators import wand
     from search_engine_spark.operators.postings import build_documents_from_testdata
     from search_engine_spark.operators.segments import load_index, write_index
     from search_engine_spark.operators.wand import search_segments
@@ -51,13 +76,13 @@ def main() -> None:
     sent = count_round_trips()
     runs = itertools.count(1)
 
-    def real_run(index, build) -> None:
+    def real_run(index, build, blocks=None) -> None:
         """Build a plan and collect it on cleared caches, outside any
-        explain, and print its jobs, Py4J round trips and blocks."""
+        explain, and print its jobs, Py4J round trips and, for a top-k,
+        the blocks its scoring plan keeps (``blocks()``)."""
         index.clear_caches()
         group = f"plan-audit-{next(runs)}"
         sc.setJobGroup(group, group)
-        read, decoded = index.blocks_read.value, index.blocks_decoded.value
         start = sent[0]
         try:
             df = build()
@@ -70,10 +95,9 @@ def main() -> None:
             f"\nreal run on cleared caches: "
             f"{len(sc.statusTracker().getJobIdsForGroup(group))} jobs; "
             f"Py4J round trips: {built} building the plan (its metadata and "
-            f"probe jobs included), {total} with the collect; blocks decoded "
-            f"/ read by every tf decode of the run, the theta probe's "
-            f"included: {index.blocks_decoded.value - decoded}"
-            f" / {index.blocks_read.value - read}"
+            f"probe jobs included), {total} with the collect"
+            + (f"; blocks kept / read by the scoring plan: {st['blocks_decoded']}"
+               f" / {st['blocks_total']}" if blocks and (st := blocks()) else "")
         )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     docs = build_documents_from_testdata(spark, sf_dir)
@@ -85,24 +109,29 @@ def main() -> None:
         print(f"\n======== {tag} ========")
         df.explain("formatted")
 
-    tid = term_to_id("ta")
-    b = bucket_of_term(tid, 8)
     cap(
         "segment fetch (bucket+term pushdown)",
-        di.segments.filter(
-            F.col("bucket").isin([b]) & F.col("term_id").isin([tid])
-        ).select("term_id", "df", "blob"),
+        wand._term_rows(di, [term_to_id("ta")]).select(*wand._SEGMENT_COLUMNS),
     )
     frame = type(di.segments)  # the session's concrete DataFrame class
     collect = frame.collect
+    violations = []
 
-    def explain_collects(label: str, fn):
-        """Run ``fn``, printing the plan of every DataFrame it collects."""
+    def explain_collects(label: str, fn, python_ok: int | None = None):
+        """Run ``fn``, printing the plan of every DataFrame it collects and
+        its Python nodes; a Python node in any collect but the one
+        numbered ``python_ok`` is a violation."""
         step = iter(range(1, 10))
 
         def explain_then_collect(df):
-            cap(f"{label}, collect {next(step)}", df)
-            return collect(df)
+            n = next(step)
+            cap(f"{label}, collect {n}", df)
+            rows = collect(df)
+            found = python_nodes(df)
+            print(f"\nPython nodes in collect {n}: {found or 'none'}")
+            if found and n != python_ok:
+                violations.append(f"{label}, collect {n}: {found}")
+            return rows
 
         frame.collect = explain_then_collect
         try:
@@ -111,12 +140,13 @@ def main() -> None:
             frame.collect = collect
 
     # the executor route collects its plans inside the call (term metadata
-    # scan, candidate decode -> intersect -> TakeOrdered, winners'
-    # positions decode): print each one as it is collected
+    # scan, candidate explode -> intersect -> TakeOrdered, winners'
+    # positions decode, the one Python stage): print each one as it is
+    # collected
     def executor_search():
         return search_segments(di, "table scan", max_driver_postings=0)
 
-    explain_collects("search_segments executor route", executor_search)
+    explain_collects("search_segments executor route", executor_search, python_ok=3)
     real_run(di, executor_search)
     cap(
         "events hourly agg",
@@ -124,7 +154,6 @@ def main() -> None:
     )
 
     from search_engine_spark.operators import dedup as D
-    from search_engine_spark.operators import wand
 
     # the executor score-ordered top-k (PLANS.md "Score-ordered top-k
     # (executor route)"): one plan for one query or many. Print its
@@ -155,8 +184,8 @@ def main() -> None:
             return wand.topk_scores_many(index, qset, 10, "bm25")
 
         index.clear_caches()
-        cap(f"{label}, scoring plan", explain_collects(label, topk))
-        real_run(index, topk)
+        explain_collects(label, lambda: topk().collect())
+        real_run(index, topk, lambda: wand.topk_scores_many.last_stats["blocks"].stats())
         thetas = wand.topk_scores_many.last_stats["theta"]
         for qid, query in qset:
             theta = thetas.get(qid, float("-inf"))
@@ -169,6 +198,9 @@ def main() -> None:
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cap("simhash (bit-sliced, 1 Generate)", D.simhash(raw))
     cap("minhash band keys (1 shuffle, no distinct)", D.minhash_band_keys(raw))
+    if violations:
+        print("\nPython nodes where none may run:\n  " + "\n  ".join(violations))
+        sys.exit(1)
 
 
 if __name__ == "__main__":
